@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every registered query on SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout (BASELINE.md contract).
   *
@@ -12,23 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the box's cores, NOT a fixed small number: a fresh sbt
-    // shell without the env ran local[4] and read CPU-parallel verbs
-    // (bootstraps, md5 fan-outs) 3-4x slow while totals looked normal —
-    // a convincing phantom "selective regression" (round 17)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // partitions-∝-data engine law: key AQE's initial shuffle width to
-    // the bytes under the SF dir (no-op at local scales — the floor wins)
-    graft.util.Parallelize.tuneShuffle(spark, sfDir)
+    val spark = GraftSession(sfDir)
 
     // BASELINE.md's recorded numbers are steady-state ("after JIT warmup");
     // a one-shot cold pass lands codegen compilation + GC on arbitrary
@@ -114,7 +96,9 @@ object Bench {
     val sfJson = sfNum.getOrElse("\"" + sfDir + "\"")
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":$sfJson,"sf_dir":"$sfDir","n":${results.size},"queries":$fullQs,"q_order":"sorted_name","q_unit":"centisec","q_cs":$csArr,"detail_md5":"$md5"}"""
-    spark.stop()
+    // a shutdown failure must not swallow the contract line
+    try spark.stop()
+    catch { case e: Throwable => System.err.println(s"[bench] spark.stop failed: $e") }
     println(line)
   }
 }

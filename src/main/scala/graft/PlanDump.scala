@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
@@ -171,13 +170,7 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
     val onlyNames = args.drop(2).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(sfDir)
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the scale-critical operators\n\n")
     sb.append("Generated by `graft.PlanDump` at sf0.001 (plan SHAPE is scale-")

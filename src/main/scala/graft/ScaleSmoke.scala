@@ -68,22 +68,7 @@ object ScaleSmoke {
           else Some(l.substring(i + 8, l.indexOf('"', i + 8)))
         }.toSet
     }.getOrElse(Set.empty)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      // SPARK_GRAFT_SCALE_PARTS: shuffle partitions sized to the DATA,
-      // not the box — the knob a real 100 TB deployment turns (the
-      // round-14 30x control attributed its residual super-linearity to
-      // 15.4M distinct pairs hash-aggregating inside 32 fixed
-      // partitions; scaling partitions with reps is the cluster-shaped
-      // control for that attribution)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTS",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(src)
 
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/_DONE"))) {
       build(spark, src, out, reps)
@@ -91,15 +76,12 @@ object ScaleSmoke {
         Array.emptyByteArray)
     }
 
-    // partitions-∝-data as ENGINE behavior: unless the experiment pins
-    // SPARK_GRAFT_SCALE_PARTS explicitly (a leg-vs-leg control), key the
-    // initial shuffle width to the replica's actual bytes — the q239-class
-    // heavy aggregates inherit their scaled-partition numbers with no
-    // per-query edits, AQE coalesces everything else back to the floor.
-    if (!sys.env.contains("SPARK_GRAFT_SCALE_PARTS")) {
-      val w = graft.util.Parallelize.tuneShuffle(spark, out)
-      println(s"SCALE_SHUFFLE_WIDTH $w")
-    }
+    // partitions-∝-data as ENGINE behavior: key the initial shuffle width
+    // to the replica's actual bytes — the q239-class heavy aggregates
+    // inherit their scaled-partition numbers with no per-query edits, AQE
+    // coalesces everything else back to the floor.
+    val w = graft.util.Parallelize.tuneShuffle(spark, out)
+    println(s"SCALE_SHUFFLE_WIDTH $w")
 
     val results = names.filterNot(done).map { name =>
       val fn = SparkEntry.queries.getOrElse(name,

@@ -1,26 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional trailing args: run only these queries (iteration aid)
+    // optional trailing args: run only these queries (one-query dumps)
     val only = args.drop(2).toSet
-    // box's cores by default — see Bench.scala (fixed local[4] footgun)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // partitions-∝-data engine law (no-op at local scales)
-    graft.util.Parallelize.tuneShuffle(spark, sfDir)
+    val spark = GraftSession(sfDir)
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries

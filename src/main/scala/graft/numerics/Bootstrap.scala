@@ -247,7 +247,8 @@ object Bootstrap {
     * weights stay the same pure function of (row id, replicate) —
     * reprocessing either arm alone reproduces its exact weights.
     *
-    * @param isA boolean column selecting arm A (false ⇒ arm B)
+    * @param isA boolean column selecting arm A (false ⇒ arm B; a NULL
+    *            `isA` counts in arm B)
     * @return 1 row: (n_reps, diff_fp, lo_fp, hi_fp); diff_fp is the
     *         full-data mean_A − mean_B. */
   def diffMeansCI(df: DataFrame, id: Column, isA: Column, valueFp: Column,

@@ -2,33 +2,23 @@ package graft.tools
 
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Optimization-round evidence dumps: write the `.explain("formatted")`
-  * output of named registry queries to files.
+/** Plan evidence dumps: write the `.explain("formatted")` output of named
+  * registry queries to files.
   *
-  *   runMain graft.tools.ExplainTo plans/r17 before q154_lm_perplexity ...
+  *   runMain graft.tools.ExplainTo /tmp/plans before q154_lm_perplexity ...
   *
-  * writes `plans/r17/q154_lm_perplexity_before.txt` etc. The query is
+  * writes `/tmp/plans/q154_lm_perplexity_before.txt` etc. The query is
   * EXECUTED first (count) so the AQE-final plan is the one dumped, then
   * the pre-execution formatted plan is appended for the scan evidence
-  * (PushedFilters / ReadSchema). Session shape mirrors Bench
-  * (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS). */
+  * (PushedFilters / ReadSchema). The data directory is
+  * SPARK_GRAFT_SF_DIR, as for Bench. */
 object ExplainTo {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val tag = args(1)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    graft.util.Parallelize.tuneShuffle(spark, dir)
+    val spark = graft.GraftSession(dir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       graft.util.QueryCache.scoped {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * round-15/16 conclusion, promoted from per-call-site tuning):
   *
   *  - [[ensure]] widens narrow compute-heavy SCAN stages to
-  *    `max(defaultParallelism, inputBytes / targetPartitionBytes)` —
+  *    `max(defaultParallelism, inputBytes / EnsureTargetBytes)` —
   *    on a laptop-scale input the cluster-parallelism floor wins
   *    (identical to the old behavior); on a 100 TB scan the byte term
   *    wins and the width follows the data with no hand tuning.
@@ -22,26 +22,19 @@ import org.apache.spark.sql.catalyst.plans.logical._
   *    coalescing reach, so a data-keyed width would multiply their
   *    per-round task count for no benefit (measured 1.7–2.2× at 30×;
   *    BENCH_SCALE.md "Deployment guidance").
-  *
-  * All three knobs are runtime-tunable Spark confs:
-  * `spark.graft.ensure.targetPartitionBytes` (default 16 MiB on-disk —
-  * parquet text decompresses ~4×, so ≈64 MiB of in-flight rows per
-  * task), `spark.graft.shuffle.targetPartitionBytes` (default 8 MiB of
-  * scanned input per reduce partition — sized so the 30× replica lands
-  * at the empirically-best ~96-partition width), and
-  * `spark.graft.maxPartitions` (default 65536 — a 100 TB input keys to
-  * the cap, not to millions of tasks).
   */
 object Parallelize {
 
-  val EnsureTargetBytesKey = "spark.graft.ensure.targetPartitionBytes"
-  val ShuffleTargetBytesKey = "spark.graft.shuffle.targetPartitionBytes"
-  val MaxPartitionsKey = "spark.graft.maxPartitions"
+  /** On-disk bytes per widened scan partition: parquet text decompresses
+    * ~4×, so ≈64 MiB of in-flight rows per task. */
+  val EnsureTargetBytes: Long = 16L << 20
+  /** Scanned input bytes per reduce partition, sized so the 30× replica
+    * lands at the empirically-best ~96-partition width. */
+  val ShuffleTargetBytes: Long = 8L << 20
+  /** Width cap: a 100 TB input keys to the cap, not to millions of tasks. */
+  val MaxPartitions: Int = 65536
   val InitialPartitionNumKey =
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-
-  private def confLong(spark: SparkSession, key: String, dflt: Long): Long =
-    spark.conf.getOption(key).map(_.toLong).getOrElse(dflt)
 
   /** True iff the plan is narrow scan-shaped: no node that introduces an
     * exchange. Only such plans need (or can cheaply measure) a widen —
@@ -71,25 +64,22 @@ object Parallelize {
     }.map(b => if (b >= BigInt(Long.MaxValue) / 2) BigInt(0) else b)
       .sum.min(BigInt(Long.MaxValue)).toLong
 
-  /** The data-keyed width: `inputBytes / targetBytes`, floored at the
-    * cluster's default parallelism, capped at `spark.graft.maxPartitions`. */
-  def widthFor(spark: SparkSession, bytes: Long, targetKey: String,
-               targetDefault: Long): Int = {
-    val target = math.max(1L, confLong(spark, targetKey, targetDefault))
-    val cap = confLong(spark, MaxPartitionsKey, 65536L)
-    val floor = spark.sparkContext.defaultParallelism.toLong
-    math.max(floor, math.min(bytes / target, cap)).toInt
-  }
+  /** The data-keyed width: `bytes / target`, floored at `floor` (the
+    * cluster's default parallelism), capped at `cap`. */
+  def widthFor(floor: Int, bytes: Long, target: Long, cap: Int): Int =
+    math.max(floor.toLong, math.min(bytes / math.max(1L, target), cap.toLong))
+      .toInt
 
   /** `df`, repartitioned to the data-keyed width iff it is a narrow scan
     * whose partition count is lower. Frames that already contain an
     * exchange are returned untouched. At local test scale the byte term
     * is ~0 and this reduces to the old defaultParallelism floor. */
-  def ensure(df: DataFrame): DataFrame = {
+  def ensure(df: DataFrame): DataFrame = ensure(df, EnsureTargetBytes)
+
+  private[graft] def ensure(df: DataFrame, target: Long): DataFrame = {
     if (!scanShaped(df)) return df
-    val spark = df.sparkSession
-    val want = widthFor(spark, inputBytes(df),
-      EnsureTargetBytesKey, 16L << 20)
+    val want = widthFor(df.sparkSession.sparkContext.defaultParallelism,
+      inputBytes(df), target, MaxPartitions)
     if (df.rdd.getNumPartitions < want) df.repartition(want) else df
   }
 
@@ -141,9 +131,13 @@ object Parallelize {
     * frame coalesces to advisory-sized (not tiny) partitions, and
     * compute-heavy-tiny-byte frames keep their explicit
     * REPARTITION_BY_NUM pins, which AQE never coalesces. */
-  def tuneShuffle(spark: SparkSession, dir: String): Int = {
-    val width = widthFor(spark, dirBytes(dir),
-      ShuffleTargetBytesKey, 8L << 20)
+  def tuneShuffle(spark: SparkSession, dir: String): Int =
+    tuneShuffle(spark, dir, ShuffleTargetBytes)
+
+  private[graft] def tuneShuffle(spark: SparkSession, dir: String,
+                                 target: Long): Int = {
+    val width = widthFor(spark.sparkContext.defaultParallelism,
+      dirBytes(dir), target, MaxPartitions)
     spark.conf.set(InitialPartitionNumKey, width.toString)
     spark.conf.set(CachedPlanAqeKey, "true")
     width

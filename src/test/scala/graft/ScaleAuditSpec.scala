@@ -355,6 +355,14 @@ class ScaleAuditSpec extends SparkSpec {
 
   // ---- partitions-∝-data law (round-17: engine behavior, not docs) ----
 
+  /** Runs `body`, then puts `key` back to its value before: the shared
+    * session carries the shipped configuration, and later suites run on it. */
+  private def restoring[T](key: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("Parallelize.ensure widens a scan by input bytes, floored at parallelism") {
     import graft.util.Parallelize
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -365,32 +373,24 @@ class ScaleAuditSpec extends SparkSpec {
     // a small target makes the byte term dominate: width == bytes/target
     val bytes = Parallelize.inputBytes(docs)
     assert(bytes > 0)
-    spark.conf.set(Parallelize.EnsureTargetBytesKey, (bytes / 10).toString)
-    try {
-      val n = Parallelize.ensure(docs).rdd.getNumPartitions
-      assert(n >= 10 && n <= 11, s"expected ~10 data-keyed partitions, got $n")
-      // and the cap clamps it
-      spark.conf.set(Parallelize.MaxPartitionsKey, "6")
-      assert(Parallelize.ensure(docs).rdd.getNumPartitions ===
-        math.max(floor, 6))
-    } finally {
-      spark.conf.unset(Parallelize.EnsureTargetBytesKey)
-      spark.conf.unset(Parallelize.MaxPartitionsKey)
-    }
+    val n = Parallelize.ensure(docs, bytes / 10).rdd.getNumPartitions
+    assert(n >= 10 && n <= 11, s"expected ~10 data-keyed partitions, got $n")
+    // and the cap clamps it
+    assert(Parallelize.widthFor(floor, bytes, bytes / 10, 6) ===
+      math.max(floor, 6))
   }
 
   test("tuneShuffle keys the heavy-agg shuffle width to directory bytes") {
     import graft.util.Parallelize
     val bytes = Parallelize.dirBytes(sf)
     assert(bytes > 0)
-    // default 8 MiB target on the tiny fixture: floor wins (no local drift)
-    val floor = spark.sparkContext.defaultParallelism
-    assert(Parallelize.tuneShuffle(spark, sf) === floor)
-    // a 1/24-of-dir target must yield a ~24-wide initial shuffle, and a
-    // heavy aggregate's exchange must actually START at that width
-    spark.conf.set(Parallelize.ShuffleTargetBytesKey, (bytes / 24).toString)
-    try {
-      val w = Parallelize.tuneShuffle(spark, sf)
+    restoring(Parallelize.InitialPartitionNumKey) {
+      // default 8 MiB target on the tiny fixture: floor wins (no local drift)
+      val floor = spark.sparkContext.defaultParallelism
+      assert(Parallelize.tuneShuffle(spark, sf) === floor)
+      // a 1/24-of-dir target must yield a ~24-wide initial shuffle, and a
+      // heavy aggregate's exchange must actually START at that width
+      val w = Parallelize.tuneShuffle(spark, sf, bytes / 24)
       assert(w >= 24 && w <= 25, s"width $w")
       assert(spark.conf.get(Parallelize.InitialPartitionNumKey) === w.toString)
       val agg = spark.read.parquet(s"$sf/lineitem.parquet")
@@ -399,16 +399,13 @@ class ScaleAuditSpec extends SparkSpec {
       val plan = agg.queryExecution.executedPlan.toString
       assert(plan.contains(s"hashpartitioning") && plan.contains(s", $w)"),
         s"heavy-agg exchange did not start at the data-keyed width $w:\n$plan")
-    } finally {
-      spark.conf.unset(Parallelize.ShuffleTargetBytesKey)
-      spark.conf.unset(Parallelize.InitialPartitionNumKey)
     }
   }
 
   test("withFixedShuffle pins iterative-verb width and restores confs") {
     import graft.util.Parallelize
-    spark.conf.set(Parallelize.InitialPartitionNumKey, "99")
-    try {
+    restoring(Parallelize.InitialPartitionNumKey) {
+      spark.conf.set(Parallelize.InitialPartitionNumKey, "99")
       val inside = Parallelize.withFixedShuffle(spark, 3) {
         (spark.conf.get("spark.sql.shuffle.partitions"),
           spark.conf.get(Parallelize.InitialPartitionNumKey))
@@ -416,6 +413,6 @@ class ScaleAuditSpec extends SparkSpec {
       assert(inside === (("3", "3")))
       assert(spark.conf.get(Parallelize.InitialPartitionNumKey) === "99")
       assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
-    } finally spark.conf.unset(Parallelize.InitialPartitionNumKey)
+    }
   }
 }

@@ -3,17 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM-wide session, lazy). */
+/** Shared session for all suites (one JVM-wide session, lazy): the shipped
+  * [[GraftSession]] on the test fixture, at a fixed 4 cores. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  val sf = "/root/testdata/sf0.001"
+  lazy val spark: SparkSession = GraftSession(sf, cpus = 4)
 }
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
-  lazy val sf: String = "/root/testdata/sf0.001"
+  lazy val sf: String = TestSpark.sf
 }
