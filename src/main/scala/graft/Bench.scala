@@ -77,25 +77,16 @@ object Bench {
     //  (b) the line is printed AFTER spark.stop(), so no shutdown WARN
     //      can land between it and sbt's trailing "[success]" line;
     //  (c) the line carries the exact contract shape — "queries" as the
-    //      FULL-name-keyed seconds map and "sf" numeric — with the
-    //      compact centisecond array ("q_cs", sorted-full-name order,
-    //      tools/bench_decode.py) and the bench_detail.json md5 appended
-    //      LAST so a 2000-char tail still ends with the decodable array.
+    //      FULL-name-keyed seconds map and "sf" numeric.
     // Failed queries render as null, same contract as before.
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(detail.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-    val csArr = results.sortBy(_._1).map {
-      case (_, Some(v)) => Math.round(v * 100).toString
-      case (_, None)    => "null"
-    }.mkString("[", ",", "]")
+
     // numeric scale factor from the dir name ("/root/testdata/sf0.1" ->
     // 0.1); unparseable dirs fall back to the raw string
     val sfNum = "sf([0-9]+(?:\\.[0-9]+)?)".r.findFirstMatchIn(sfDir)
       .map(_.group(1))
     val sfJson = sfNum.getOrElse("\"" + sfDir + "\"")
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":$sfJson,"sf_dir":"$sfDir","n":${results.size},"queries":$fullQs,"q_order":"sorted_name","q_unit":"centisec","q_cs":$csArr,"detail_md5":"$md5"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":$sfJson,"sf_dir":"$sfDir","n":${results.size},"queries":$fullQs}"""
     // a shutdown failure must not swallow the contract line
     try spark.stop()
     catch { case e: Throwable => System.err.println(s"[bench] spark.stop failed: $e") }

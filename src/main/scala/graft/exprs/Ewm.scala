@@ -1,6 +1,6 @@
 package graft.exprs
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,49 +10,49 @@ import org.apache.spark.sql.types._
   * EWM is an order-dependent linear recurrence (y_t = (1-α)·y_{t-1} + α·x_t
   * in the adjust=False form; weighted-mean normalization when adjust=True),
   * so it cannot be a plain window aggregate. The Spark-native shape is a
-  * per-group sorted scan: `groupByKey(dims).flatMapGroups` — the same
+  * per-group sorted scan: `groupBy(dims).flatMapSortedGroups` — the same
   * contract as the reference's apply_ufunc with a preserved core dim
   * (SURVEY.md §2.12). Groups are bounded by the partition key, so the scan
   * parallelizes across groups at any scale.
   */
 object Ewm {
 
-  /** EWM mean per group (adjust=true, pandas/xarray default):
-    * y_t = Σ (1-α)^(t-i) x_i / Σ (1-α)^(t-i). NULLs are skipped (weights
-    * not advanced past NULLs — matching `ignore_na=False` semantics where
-    * relative positions still decay). Emits (id, ewm). */
+  /** The per-group sorted scan every verb below runs: `groupCols` groups,
+    * rows in `orderCols` order (ASC NULLS FIRST) within each group, and
+    * `fold` applied to each group with the row positions of
+    * `valueCols :+ idCol`. Emits (id, outCols...) with DOUBLE outputs. */
+  private def scan(df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
+                   valueCols: Seq[String], idCol: String, outCols: Seq[String])(
+      fold: Seq[Int] => Iterator[Row] => Iterator[Row]): DataFrame = {
+    val in = df.select((groupCols ++ orderCols ++ valueCols :+ idCol).distinct.map(col): _*)
+    val outSchema = StructType(
+      StructField("id", in.schema(idCol).dataType, nullable = false) +:
+        outCols.map(StructField(_, DoubleType, nullable = true)))
+    val f = fold((valueCols :+ idCol).map(in.columns.indexOf(_)))
+    in.groupBy(groupCols.map(col): _*)
+      .as[Row, Row](Encoders.row(StructType(groupCols.map(in.schema(_)))),
+        Encoders.row(in.schema))
+      .flatMapSortedGroups(orderCols.map(col): _*)((_, it) => f(it))(
+        Encoders.row(outSchema))
+  }
+
   /** EWM sum per group (ref `rolling_exp.py` RollingExp.sum):
     * s_t = (1-α)·s_{t-1} + x_t; NULLs contribute nothing but still decay
     * the state (same ignore_na=False positioning as the mean). */
   def ewmSum(df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
-             valueCol: String, idCol: String, alpha: Double): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions((groupCols ++ orderCols).map(col): _*)
-      .select((groupCols ++ orderCols :+ valueCol :+ idCol).distinct.map(col): _*)
-    val gIdx = groupCols.indices
-    val vIdx = sorted.columns.indexOf(valueCol)
-    val iIdx = sorted.columns.indexOf(idCol)
-    val outSchema = StructType(Seq(
-      StructField("id", sorted.schema(idCol).dataType, nullable = false),
-      StructField("ewm_sum", DoubleType, nullable = true)))
-    val rdd = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var acc = 0.0; var seen = false
-      val decay = 1.0 - alpha
-      it.map { r =>
-        val key = gIdx.map(r.get)
-        if (key != curKey) { curKey = key; acc = 0.0; seen = false }
-        acc *= decay
-        val out: Any =
-          if (r.isNullAt(vIdx)) { if (seen) acc else null }
-          else { acc += r.getDouble(vIdx); seen = true; acc }
-        Row(r.get(iIdx), out)
-      }
+             valueCol: String, idCol: String, alpha: Double): DataFrame =
+    scan(df, groupCols, orderCols, Seq(valueCol), idCol, Seq("ewm_sum")) {
+      case Seq(vIdx, iIdx) => it =>
+        var acc = 0.0; var seen = false
+        val decay = 1.0 - alpha
+        it.map { r =>
+          acc *= decay
+          val out: Any =
+            if (r.isNullAt(vIdx)) { if (seen) acc else null }
+            else { acc += r.getDouble(vIdx); seen = true; acc }
+          Row(r.get(iIdx), out)
+        }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** EWM variance per group (pandas `ewm.var(bias=False)` semantics,
     * adjust=true): with weights w_i = (1-α)^lag the four accumulators
@@ -61,42 +61,27 @@ object Ewm {
     * decay the state without contributing; rows with fewer than two
     * observations emit NULL (denominator A²−B is 0 at one point). */
   def ewmVar(df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
-             valueCol: String, idCol: String, alpha: Double): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions((groupCols ++ orderCols).map(col): _*)
-      .select((groupCols ++ orderCols :+ valueCol :+ idCol).distinct.map(col): _*)
-    val gIdx = groupCols.indices
-    val vIdx = sorted.columns.indexOf(valueCol)
-    val iIdx = sorted.columns.indexOf(idCol)
-    val outSchema = StructType(Seq(
-      StructField("id", sorted.schema(idCol).dataType, nullable = false),
-      StructField("ewm_var", DoubleType, nullable = true)))
-    val rdd = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var a = 0.0; var b = 0.0; var s1 = 0.0; var s2 = 0.0; var cnt = 0L
-      val decay = 1.0 - alpha
-      val decay2 = decay * decay
-      it.map { r =>
-        val key = gIdx.map(r.get)
-        if (key != curKey) { curKey = key; a = 0.0; b = 0.0; s1 = 0.0; s2 = 0.0; cnt = 0L }
-        a *= decay; b *= decay2; s1 *= decay; s2 *= decay
-        if (!r.isNullAt(vIdx)) {
-          val x = r.getDouble(vIdx)
-          a += 1.0; b += 1.0; s1 += x; s2 += x * x; cnt += 1
-        }
-        val out: Any =
-          if (cnt < 2) null
-          else {
-            val m = s1 / a
-            (s2 / a - m * m) * ((a * a) / (a * a - b))
+             valueCol: String, idCol: String, alpha: Double): DataFrame =
+    scan(df, groupCols, orderCols, Seq(valueCol), idCol, Seq("ewm_var")) {
+      case Seq(vIdx, iIdx) => it =>
+        var a = 0.0; var b = 0.0; var s1 = 0.0; var s2 = 0.0; var cnt = 0L
+        val decay = 1.0 - alpha
+        val decay2 = decay * decay
+        it.map { r =>
+          a *= decay; b *= decay2; s1 *= decay; s2 *= decay
+          if (!r.isNullAt(vIdx)) {
+            val x = r.getDouble(vIdx)
+            a += 1.0; b += 1.0; s1 += x; s2 += x * x; cnt += 1
           }
-        Row(r.get(iIdx), out)
-      }
+          val out: Any =
+            if (cnt < 2) null
+            else {
+              val m = s1 / a
+              (s2 / a - m * m) * ((a * a) / (a * a - b))
+            }
+          Row(r.get(iIdx), out)
+        }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** EWM covariance + correlation of two series per group (pandas
     * `ewm.cov(bias=False)` / `ewm.corr()` semantics, adjust=true): seven
@@ -108,60 +93,40 @@ object Ewm {
     * Emits (id, ewm_cov, ewm_corr). */
   def ewmCov(df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
              xCol: String, yCol: String, idCol: String,
-             alpha: Double): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions((groupCols ++ orderCols).map(col): _*)
-      .select((groupCols ++ orderCols :+ xCol :+ yCol :+ idCol).distinct.map(col): _*)
-    val gIdx = groupCols.indices
-    val xIdx = sorted.columns.indexOf(xCol)
-    val yIdx = sorted.columns.indexOf(yCol)
-    val iIdx = sorted.columns.indexOf(idCol)
-    val outSchema = StructType(Seq(
-      StructField("id", sorted.schema(idCol).dataType, nullable = false),
-      StructField("ewm_cov", DoubleType, nullable = true),
-      StructField("ewm_corr", DoubleType, nullable = true)))
-    val rdd = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var a = 0.0; var b = 0.0
-      var sx = 0.0; var sy = 0.0; var sxy = 0.0; var sxx = 0.0; var syy = 0.0
-      var cnt = 0L
-      val decay = 1.0 - alpha
-      val decay2 = decay * decay
-      it.map { r =>
-        val key = gIdx.map(r.get)
-        if (key != curKey) {
-          curKey = key
-          a = 0.0; b = 0.0; sx = 0.0; sy = 0.0; sxy = 0.0; sxx = 0.0; syy = 0.0
-          cnt = 0L
-        }
-        a *= decay; b *= decay2
-        sx *= decay; sy *= decay; sxy *= decay; sxx *= decay; syy *= decay
-        if (!r.isNullAt(xIdx) && !r.isNullAt(yIdx)) {
-          val x = r.getDouble(xIdx); val y = r.getDouble(yIdx)
-          a += 1.0; b += 1.0
-          sx += x; sy += y; sxy += x * y; sxx += x * x; syy += y * y
-          cnt += 1
-        }
-        val out: (Any, Any) =
-          if (cnt < 2) (null, null)
-          else {
-            val mx = sx / a; val my = sy / a
-            val covB = sxy / a - mx * my
-            val varx = sxx / a - mx * mx
-            val vary = syy / a - my * my
-            val c = covB * ((a * a) / (a * a - b))
-            val rr: Any =
-              if (varx <= 0.0 || vary <= 0.0) null
-              else covB / math.sqrt(varx * vary)
-            (c, rr)
+             alpha: Double): DataFrame =
+    scan(df, groupCols, orderCols, Seq(xCol, yCol), idCol,
+        Seq("ewm_cov", "ewm_corr")) {
+      case Seq(xIdx, yIdx, iIdx) => it =>
+        var a = 0.0; var b = 0.0
+        var sx = 0.0; var sy = 0.0; var sxy = 0.0; var sxx = 0.0; var syy = 0.0
+        var cnt = 0L
+        val decay = 1.0 - alpha
+        val decay2 = decay * decay
+        it.map { r =>
+          a *= decay; b *= decay2
+          sx *= decay; sy *= decay; sxy *= decay; sxx *= decay; syy *= decay
+          if (!r.isNullAt(xIdx) && !r.isNullAt(yIdx)) {
+            val x = r.getDouble(xIdx); val y = r.getDouble(yIdx)
+            a += 1.0; b += 1.0
+            sx += x; sy += y; sxy += x * y; sxx += x * x; syy += y * y
+            cnt += 1
           }
-        Row(r.get(iIdx), out._1, out._2)
-      }
+          val out: (Any, Any) =
+            if (cnt < 2) (null, null)
+            else {
+              val mx = sx / a; val my = sy / a
+              val covB = sxy / a - mx * my
+              val varx = sxx / a - mx * mx
+              val vary = syy / a - my * my
+              val c = covB * ((a * a) / (a * a - b))
+              val rr: Any =
+                if (varx <= 0.0 || vary <= 0.0) null
+                else covB / math.sqrt(varx * vary)
+              (c, rr)
+            }
+          Row(r.get(iIdx), out._1, out._2)
+        }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** EWM mean with the full pandas parameter matrix (ref `rolling_exp.py:49`
     * passes adjust/ignore_na straight to the numbagg/pandas kernel):
@@ -175,43 +140,28 @@ object Ewm {
     * num/den accumulation is bit-pinned by the q61 oracle. */
   def ewmMeanOpts(df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
                   valueCol: String, idCol: String, alpha: Double,
-                  adjust: Boolean, ignoreNa: Boolean): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions((groupCols ++ orderCols).map(col): _*)
-      .select((groupCols ++ orderCols :+ valueCol :+ idCol).distinct.map(col): _*)
-    val gIdx = groupCols.indices
-    val vIdx = sorted.columns.indexOf(valueCol)
-    val iIdx = sorted.columns.indexOf(idCol)
-    val outSchema = StructType(Seq(
-      StructField("id", sorted.schema(idCol).dataType, nullable = false),
-      StructField("ewm", DoubleType, nullable = true)))
-    val rdd = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var avg = 0.0; var avgValid = false; var oldWt = 1.0
-      val decay = 1.0 - alpha
-      val newWt = if (adjust) 1.0 else alpha
-      it.map { r =>
-        val key = gIdx.map(r.get)
-        if (key != curKey) { curKey = key; avgValid = false; oldWt = 1.0 }
-        val isNull = r.isNullAt(vIdx)
-        if (avgValid) {
-          if (!isNull || !ignoreNa) {
-            oldWt *= decay
-            if (!isNull) {
-              val x = r.getDouble(vIdx)
-              if (avg != x) avg = (oldWt * avg + newWt * x) / (oldWt + newWt)
-              if (adjust) oldWt += newWt else oldWt = 1.0
+                  adjust: Boolean, ignoreNa: Boolean): DataFrame =
+    scan(df, groupCols, orderCols, Seq(valueCol), idCol, Seq("ewm")) {
+      case Seq(vIdx, iIdx) => it =>
+        var avg = 0.0; var avgValid = false; var oldWt = 1.0
+        val decay = 1.0 - alpha
+        val newWt = if (adjust) 1.0 else alpha
+        it.map { r =>
+          val isNull = r.isNullAt(vIdx)
+          if (avgValid) {
+            if (!isNull || !ignoreNa) {
+              oldWt *= decay
+              if (!isNull) {
+                val x = r.getDouble(vIdx)
+                if (avg != x) avg = (oldWt * avg + newWt * x) / (oldWt + newWt)
+                if (adjust) oldWt += newWt else oldWt = 1.0
+              }
             }
-          }
-        } else if (!isNull) { avg = r.getDouble(vIdx); avgValid = true; oldWt = 1.0 }
-        val out: Any = if (avgValid) avg else null
-        Row(r.get(iIdx), out)
-      }
+          } else if (!isNull) { avg = r.getDouble(vIdx); avgValid = true; oldWt = 1.0 }
+          val out: Any = if (avgValid) avg else null
+          Row(r.get(iIdx), out)
+        }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** EWM mean with a TIME-based halflife over irregular observation times
     * (pandas `ewm(halflife=timedelta, times=...)`; ref `rolling_exp.py:49`
@@ -226,71 +176,43 @@ object Ewm {
     * recurrence bit-for-bit; fractional gaps are pinned in EwmSpec. */
   def ewmMeanTimes(df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
                    timeCol: String, valueCol: String, idCol: String,
-                   halflife: Double): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions((groupCols ++ orderCols).map(col): _*)
-      .select((groupCols ++ orderCols :+ timeCol :+ valueCol :+ idCol)
-        .distinct.map(col): _*)
-    val gIdx = groupCols.indices
-    val tIdx = sorted.columns.indexOf(timeCol)
-    val vIdx = sorted.columns.indexOf(valueCol)
-    val iIdx = sorted.columns.indexOf(idCol)
-    val outSchema = StructType(Seq(
-      StructField("id", sorted.schema(idCol).dataType, nullable = false),
-      StructField("ewm", DoubleType, nullable = true)))
-    val rdd = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var num = 0.0; var den = 0.0; var prevT = 0.0; var first = true
-      it.map { r =>
-        val key = gIdx.map(r.get)
-        if (key != curKey) { curKey = key; num = 0.0; den = 0.0; first = true }
-        val t = r.get(tIdx) match {
-          case l: java.lang.Long => l.toDouble
-          case i: java.lang.Integer => i.toDouble
-          case d: java.lang.Double => d.doubleValue()
-          case x => x.toString.toDouble
+                   halflife: Double): DataFrame =
+    scan(df, groupCols, orderCols, Seq(timeCol, valueCol), idCol, Seq("ewm")) {
+      case Seq(tIdx, vIdx, iIdx) => it =>
+        var num = 0.0; var den = 0.0; var prevT = 0.0; var first = true
+        it.map { r =>
+          val t = r.get(tIdx) match {
+            case l: java.lang.Long => l.toDouble
+            case i: java.lang.Integer => i.toDouble
+            case d: java.lang.Double => d.doubleValue()
+            case x => x.toString.toDouble
+          }
+          val d = if (first) 1.0 else math.pow(0.5, (t - prevT) / halflife)
+          prevT = t; first = false
+          num *= d; den *= d
+          val out: Any =
+            if (r.isNullAt(vIdx)) { if (den > 0) num / den else null }
+            else { num += r.getDouble(vIdx); den += 1.0; num / den }
+          Row(r.get(iIdx), out)
         }
-        val d = if (first) 1.0 else math.pow(0.5, (t - prevT) / halflife)
-        prevT = t; first = false
-        num *= d; den *= d
-        val out: Any =
-          if (r.isNullAt(vIdx)) { if (den > 0) num / den else null }
-          else { num += r.getDouble(vIdx); den += 1.0; num / den }
-        Row(r.get(iIdx), out)
-      }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
+  /** EWM mean per group (adjust=true, pandas/xarray default):
+    * y_t = Σ (1-α)^(t-i) x_i / Σ (1-α)^(t-i). NULLs are skipped (weights
+    * not advanced past NULLs — matching `ignore_na=False` semantics where
+    * relative positions still decay). Emits (id, ewm). */
   def ewmMean(df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
-              valueCol: String, idCol: String, alpha: Double): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions((groupCols ++ orderCols).map(col): _*)
-      .select((groupCols ++ orderCols :+ valueCol :+ idCol).distinct.map(col): _*)
-    val gIdx = groupCols.indices
-    val vIdx = sorted.columns.indexOf(valueCol)
-    val iIdx = sorted.columns.indexOf(idCol)
-    val outSchema = StructType(Seq(
-      StructField("id", sorted.schema(idCol).dataType, nullable = false),
-      StructField("ewm", DoubleType, nullable = true)))
-    val rdd = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var num = 0.0; var den = 0.0
-      val decay = 1.0 - alpha
-      it.map { r =>
-        val key = gIdx.map(r.get)
-        if (key != curKey) { curKey = key; num = 0.0; den = 0.0 }
-        num *= decay; den *= decay
-        val out: Any =
-          if (r.isNullAt(vIdx)) { if (den > 0) num / den else null }
-          else { num += r.getDouble(vIdx); den += 1.0; num / den }
-        Row(r.get(iIdx), out)
-      }
+              valueCol: String, idCol: String, alpha: Double): DataFrame =
+    scan(df, groupCols, orderCols, Seq(valueCol), idCol, Seq("ewm")) {
+      case Seq(vIdx, iIdx) => it =>
+        var num = 0.0; var den = 0.0
+        val decay = 1.0 - alpha
+        it.map { r =>
+          num *= decay; den *= decay
+          val out: Any =
+            if (r.isNullAt(vIdx)) { if (den > 0) num / den else null }
+            else { num += r.getDouble(vIdx); den += 1.0; num / den }
+          Row(r.get(iIdx), out)
+        }
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 }

@@ -142,7 +142,7 @@ object Bpe {
     val spark = docs.sparkSession
     val (merges, _) = trainLoop(docs, textCol, rounds)
     spark.createDataFrame(
-      spark.sparkContext.parallelize(merges, 1),
+      java.util.Arrays.asList(merges: _*),
       StructType(Seq(
         StructField("merge_rank", IntegerType, nullable = false),
         StructField("lhs", StringType, nullable = false),

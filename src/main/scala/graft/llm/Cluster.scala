@@ -112,8 +112,7 @@ object Cluster {
     // instead of an unresolvable slot-1 extraction
     if (cents.length < 2)
       return vecs.sparkSession.createDataFrame(
-        vecs.sparkSession.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row],
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("cluster",
             org.apache.spark.sql.types.IntegerType),

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -57,8 +57,7 @@ object Multimodal {
     * boundary crossings; the partition is the batch). Image payloads get
     * their REAL dimensions/band count; anything else the stub. */
   def decode(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id), col(media)).rdd.mapPartitions { it =>
+    df.select(col(id), col(media)).mapPartitions { (it: Iterator[Row]) =>
       it.map { r =>
         val bytes = r.getAs[Array[Byte]](1)
         val (w, h, c) = imageDecode(bytes) match {
@@ -68,8 +67,7 @@ object Multimodal {
         }
         Row(r.getLong(0), bytes.length, w, h, c)
       }
-    }
-    spark.createDataFrame(rdd, decodedSchema)
+    }(Encoders.row(decodedSchema))
   }
 
   val imageFeatureSchema: StructType = StructType(Seq(
@@ -85,8 +83,7 @@ object Multimodal {
     * mean intensity. Rows whose payload is not a decodable image are
     * dropped — the curation-filter contract. */
   def imageFeatures(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id), col(media)).rdd.mapPartitions { it =>
+    df.select(col(id), col(media)).mapPartitions { (it: Iterator[Row]) =>
       it.flatMap { r =>
         imageDecode(r.getAs[Array[Byte]](1)).map { img =>
           val (w, h) = (img.getWidth, img.getHeight)
@@ -107,8 +104,7 @@ object Multimodal {
             sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
         }
       }
-    }
-    spark.createDataFrame(rdd, imageFeatureSchema)
+    }(Encoders.row(imageFeatureSchema))
   }
 
   /** Encode `frames` as one ANIMATED GIF (the multi-frame container the
@@ -144,8 +140,7 @@ object Multimodal {
     * means — one row per (doc, frame). Executor-side; undecodable rows
     * are skipped (same contract as [[imageFeatures]]). */
   def gifFrames(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id), col(media)).rdd.mapPartitions { it =>
+    df.select(col(id), col(media)).mapPartitions { (it: Iterator[Row]) =>
       it.flatMap { r =>
         val bytes = r.getAs[Array[Byte]](1)
         val iis = javax.imageio.ImageIO.createImageInputStream(
@@ -190,19 +185,17 @@ object Multimodal {
           }
         }
       }
-    }
-    spark.createDataFrame(rdd, frameFeatureSchema)
+    }(Encoders.row(frameFeatureSchema))
   }
 
   /** Nearest-neighbor thumbnail resize (real decode): re-encodes each
     * image as a `tw`x`th` PNG. Executor-side, batch = partition. */
   def resize(df: DataFrame, id: String, media: String,
              tw: Int, th: Int): DataFrame = {
-    val spark = df.sparkSession
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("thumb", BinaryType, nullable = false)))
-    val rdd = df.select(col(id), col(media)).rdd.mapPartitions { it =>
+    df.select(col(id), col(media)).mapPartitions { (it: Iterator[Row]) =>
       it.flatMap { r =>
         imageDecode(r.getAs[Array[Byte]](1)).map { img =>
           val out = new java.awt.image.BufferedImage(tw, th,
@@ -222,8 +215,7 @@ object Multimodal {
           Row(r.getLong(0), bos.toByteArray)
         }
       }
-    }
-    spark.createDataFrame(rdd, schema)
+    }(Encoders.row(schema))
   }
 
   val wavSchema: StructType = StructType(Seq(
@@ -280,15 +272,13 @@ object Multimodal {
   /** Real audio decode: RIFF/WAVE PCM16 header + sample statistics.
     * Non-WAV payloads are dropped. */
   def decodeWav(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id), col(media)).rdd.mapPartitions { it =>
+    df.select(col(id), col(media)).mapPartitions { (it: Iterator[Row]) =>
       it.flatMap { r =>
         wavDecode(r.getAs[Array[Byte]](1)).map { case (sr, ch, bits, n, rms) =>
           Row(r.getLong(0), sr, ch, bits, n, rms)
         }
       }
-    }
-    spark.createDataFrame(rdd, wavSchema)
+    }(Encoders.row(wavSchema))
   }
 
   /** Audio frame features over decoded PCM16: per non-overlapping
@@ -302,8 +292,7 @@ object Multimodal {
   def wavFrameFeatures(df: DataFrame, id: String, media: String,
                        frameLen: Int): DataFrame = {
     require(frameLen > 0, s"frameLen must be positive: $frameLen")
-    val spark = df.sparkSession
-    val rdd = df.select(col(id), col(media)).rdd.mapPartitions { it =>
+    df.select(col(id), col(media)).mapPartitions { (it: Iterator[Row]) =>
       it.flatMap { r =>
         val bytes = r.getAs[Array[Byte]](1)
         val docId = r.getLong(0)
@@ -327,8 +316,7 @@ object Multimodal {
             }
         }
       }
-    }
-    spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
+    }(Encoders.row(org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("frame_no",
@@ -338,7 +326,7 @@ object Multimodal {
       org.apache.spark.sql.types.StructField("meansq",
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("zcr",
-        org.apache.spark.sql.types.LongType, nullable = false))))
+        org.apache.spark.sql.types.LongType, nullable = false)))))
   }
 
   /** PCM16 sample extraction from a RIFF/WAVE payload (mono stream
@@ -410,8 +398,7 @@ object Multimodal {
   /** 4x16-bit dHash bands per decodable image (rows with no decodable
     * payload drop out, the [[imageFeatures]] contract). */
   def dHashBands(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id), col(media)).rdd.mapPartitions { it =>
+    df.select(col(id), col(media)).mapPartitions { (it: Iterator[Row]) =>
       it.flatMap { r =>
         imageDecode(r.getAs[Array[Byte]](1)).map { img =>
           val w = img.getWidth; val h = img.getHeight
@@ -454,8 +441,7 @@ object Multimodal {
           Row(r.getLong(0), bands(0), bands(1), bands(2), bands(3))
         }
       }
-    }
-    spark.createDataFrame(rdd, dhashSchema)
+    }(Encoders.row(dhashSchema))
   }
 
   /** Near-dup image pairs from [[dHashBands]] output: candidates share
@@ -522,8 +508,7 @@ object Multimodal {
       math.round(math.cos((2.0 * math.Pi) * k * n / frameLen) * 1e8))
     val sin8 = Array.tabulate(nBins, frameLen)((k, n) =>
       math.round(math.sin((2.0 * math.Pi) * k * n / frameLen) * 1e8))
-    val spark = df.sparkSession
-    val rdd = df.select(col(id), col(media)).rdd.mapPartitions { it =>
+    df.select(col(id), col(media)).mapPartitions { (it: Iterator[Row]) =>
       it.flatMap { r =>
         samplesPcm16(r.getAs[Array[Byte]](1)).toSeq.flatMap { xs =>
           val nf = math.min(maxFrames, xs.length / frameLen)
@@ -563,8 +548,7 @@ object Multimodal {
           }
         }
       }
-    }
-    spark.createDataFrame(rdd, spectralSchema)
+    }(Encoders.row(spectralSchema))
   }
 
   /** Synthetic PNG fixture: one REAL 18x16 PNG per input id, pixel
@@ -579,11 +563,10 @@ object Multimodal {
     * derives from the same closed-form pixel function (PNG is lossless,
     * so the encode/decode round trip preserves every value). */
   def syntheticPngs(ids: DataFrame, id: String): DataFrame = {
-    val spark = ids.sparkSession
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("png", BinaryType, nullable = false)))
-    val rdd = ids.select(col(id)).rdd.mapPartitions { it =>
+    ids.select(col(id)).mapPartitions { (it: Iterator[Row]) =>
       it.map { r =>
         val d = r.getLong(0)
         val f = d / 10; val m = d % 10
@@ -606,7 +589,6 @@ object Multimodal {
         javax.imageio.ImageIO.write(img, "png", bos)
         Row(d, bos.toByteArray)
       }
-    }
-    spark.createDataFrame(rdd, schema)
+    }(Encoders.row(schema))
   }
 }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -124,44 +124,38 @@ object Packing {
     *
     * Greedy fill is a sequential recurrence (each placement depends on the
     * previous end position), so it cannot be a prefix sum. It runs as a
-    * per-shard sorted scan (repartition by shard + sortWithinPartitions +
-    * mapPartitions — the [[graft.exprs.Ewm]] contract): shards pack
+    * per-shard sorted scan (`flatMapSortedGroups` on the shard, in id
+    * order — the [[graft.exprs.Ewm]] shape): shards pack
     * independently, exactly as sharded corpus files do in production, and
     * the shard key bounds both the scan state (3 longs) and the skew.
     * Returns (id, shard, eff, seq, pos): sequence ordinal WITHIN the shard
     * and the doc's start offset inside it. */
   def packSequencesPadded(docs: DataFrame, id: String, tokenCount: Column,
                           seqLen: Int, shardCol: Column): DataFrame = {
-    val spark = docs.sparkSession
-    val sorted = docs
+    val in = docs
       .select(col(id), shardCol.cast(LongType).as("shard"),
         least(tokenCount.cast(LongType), lit(seqLen.toLong)).as("eff"))
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col(id))
     val outSchema = StructType(Seq(
-      StructField(id, sorted.schema(id).dataType, nullable = false),
+      StructField(id, in.schema(id).dataType, nullable = false),
       StructField("shard", LongType, nullable = false),
       StructField("eff", LongType, nullable = false),
       StructField("seq", LongType, nullable = false),
       StructField("pos", LongType, nullable = false)))
-    val rdd = sorted.rdd.mapPartitions { it =>
-      var curShard = Long.MinValue
-      var haveShard = false
-      var seq = 0L
-      var end = 0L
-      it.map { r =>
-        val shard = r.getLong(1); val eff = r.getLong(2)
-        if (!haveShard || shard != curShard) {
-          curShard = shard; haveShard = true; seq = 0L; end = 0L
+    in.groupBy(col("shard"))
+      .as[Row, Row](Encoders.row(StructType(Seq(in.schema("shard")))),
+        Encoders.row(in.schema))
+      .flatMapSortedGroups(col(id)) { (_, it) =>
+        var seq = 0L
+        var end = 0L
+        it.map { r =>
+          val shard = r.getLong(1); val eff = r.getLong(2)
+          // eff <= seqLen, so a fresh sequence (end == 0) always fits
+          if (end + eff > seqLen) { seq += 1L; end = 0L }
+          val pos = end
+          end += eff
+          Row(r.get(0), shard, eff, seq, pos)
         }
-        // eff <= seqLen, so a fresh sequence (end == 0) always fits
-        if (end + eff > seqLen) { seq += 1L; end = 0L }
-        val pos = end
-        end += eff
-        Row(r.get(0), shard, eff, seq, pos)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
+      }(Encoders.row(outSchema))
   }
 
   /** Pack documents into `seqLen`-token sequences in `id` order. Returns

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
@@ -232,9 +232,9 @@ object Retrieval {
     * The greedy step is inherently sequential PER PROBE, but the input is
     * an upstream top-n (bounded by contract, guarded by `maxCandidates`),
     * so it runs the [[Packing]] shape: one shuffle on the probe key, a
-    * partition-local scan that holds exactly one probe's candidate set,
-    * and an O(n²) in-memory greedy over it. Nothing global, nothing
-    * quadratic in the corpus.
+    * per-probe sorted group (`flatMapSortedGroups`) that holds exactly one
+    * probe's candidate set, and an O(n²) in-memory greedy over it.
+    * Nothing global, nothing quadratic in the corpus.
     *
     * Determinism: candidate-candidate cosines use EXACTLY the
     * [[graft.exprs.VectorExprs.cosineF32]] arithmetic (sequential double
@@ -246,35 +246,37 @@ object Retrieval {
   def mmrRerank(cands: DataFrame, probeId: String, id: String,
                 rel: String, vec: String, lambda: Double, k: Int,
                 maxCandidates: Int = 4096): DataFrame = {
-    val spark = cands.sparkSession
-    val sorted = cands
+    val in = cands
       .select(col(probeId).cast(LongType).as("__p"),
         col(id).cast(LongType).as("__i"),
         col(rel).cast("double").as("__r"), col(vec).as("__v"))
-      .repartition(col("__p"))
-      .sortWithinPartitions(col("__p"), col("__i"))
     val outSchema = StructType(Seq(
       StructField(probeId, LongType, nullable = false),
       StructField("rk", IntegerType, nullable = false),
       StructField(id, LongType, nullable = false),
       StructField("mmr", DoubleType, nullable = false)))
     val lam = lambda
-    val rdd = sorted.rdd.mapPartitions { it =>
-      // the cosineF32 fold, mirrored exactly (double acc over floats)
-      def dotf(a: Array[Float], b: Array[Float]): Double = {
-        val n = math.min(a.length, b.length)
-        var acc = 0.0; var i = 0
-        while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-        acc
-      }
-      val buf = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Double, Array[Float])]
-      var cur = Long.MinValue
-      var have = false
-      def flush(p: Long): Iterator[Row] = {
-        if (buf.isEmpty) return Iterator.empty
+    in.groupBy(col("__p"))
+      .as[Row, Row](Encoders.row(StructType(Seq(in.schema("__p")))),
+        Encoders.row(in.schema))
+      .flatMapSortedGroups(col("__i")) { (key, it) =>
+        // the cosineF32 fold, mirrored exactly (double acc over floats)
+        def dotf(a: Array[Float], b: Array[Float]): Double = {
+          val n = math.min(a.length, b.length)
+          var acc = 0.0; var i = 0
+          while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+          acc
+        }
+        val p = key.getLong(0)
+        val buf = scala.collection.mutable.ArrayBuffer
+          .empty[(Long, Double, Array[Float])]
+        it.foreach { r =>
+          buf += ((r.getLong(1), r.getDouble(2), r.getSeq[Float](3).toArray))
+          require(buf.length <= maxCandidates,
+            s"MMR candidate set for probe $p exceeds $maxCandidates — the " +
+              "input must be an upstream top-n, not a raw corpus")
+        }
         val items = buf.toArray // already id-sorted within the probe
-        buf.clear()
         val n = items.length
         val norm = items.map(c => math.sqrt(dotf(c._3, c._3)))
         // zero-norm guard: an all-zero embedding would make cos() NaN and
@@ -310,20 +312,7 @@ object Retrieval {
           out += Row(p, rk, items(best)._1, bestScore)
           rk += 1
         }
-        out.iterator
-      }
-      val main = it.flatMap { r =>
-        val p = r.getLong(0)
-        val pre = if (have && p != cur) flush(cur) else Iterator.empty
-        cur = p; have = true
-        buf += ((r.getLong(1), r.getDouble(2), r.getSeq[Float](3).toArray))
-        require(buf.length <= maxCandidates,
-          s"MMR candidate set for probe $p exceeds $maxCandidates — the " +
-            "input must be an upstream top-n, not a raw corpus")
-        pre
-      }
-      main ++ (if (have) flush(cur) else Iterator.empty)
-    }
-    spark.createDataFrame(rdd, outSchema)
+        out
+      }(Encoders.row(outSchema))
   }
 }

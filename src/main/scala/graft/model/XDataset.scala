@@ -251,7 +251,7 @@ final class XDataset(val df: DataFrame, val meta: DatasetMeta,
     * (small, broadcast) new-dimension label table. */
   def expandDims(dim: String, labels: Seq[Any]): XDataset = {
     val lt = spark.createDataFrame(
-      spark.sparkContext.parallelize(labels.map(org.apache.spark.sql.Row(_))),
+      java.util.Arrays.asList(labels.map(org.apache.spark.sql.Row(_)): _*),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(dim,
           org.apache.spark.sql.catalyst.expressions.Literal(labels.head).dataType))))
@@ -337,7 +337,7 @@ final class XDataset(val df: DataFrame, val meta: DatasetMeta,
   def mapBlocks(schema: org.apache.spark.sql.types.StructType)(
       f: Iterator[org.apache.spark.sql.Row] =>
         Iterator[org.apache.spark.sql.Row]): DataFrame =
-    spark.createDataFrame(df.rdd.mapPartitions(f), schema)
+    df.mapPartitions(f)(org.apache.spark.sql.Encoders.row(schema))
 }
 
 object XDataset {

@@ -1,6 +1,6 @@
 package graft.numerics
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,53 +10,52 @@ import org.apache.spark.sql.types._
   *
   * Spark shape: per-group iterative numerics cannot be a declarative plan;
   * the reference itself runs scipy per (remaining-dims) slice. Here each
-  * group's series is gathered in a `flatMapGroups`-style partition scan
-  * (bounded by group size, parallel across groups) and the LM loop runs in
-  * the executor — SURVEY.md §2.12 "core dims reduced away" contract.
+  * group's series is gathered by `flatMapSortedGroups` (bounded by group
+  * size, parallel across groups) and the LM loop runs in the executor —
+  * SURVEY.md §2.12 "core dims reduced away" contract.
   */
 object Curvefit {
 
   /** Fit `model(params, x)` per group.
     * @param model  (params, x) => y-hat
     * @param p0     initial parameter vector
-    * @return (groupCols..., p0..pk-1, n_iter, sse) one row per group */
+    * @return (groupCols..., p0..pk-1, n_iter, sse) one row per group; a
+    *         group with no non-NULL (x, y) pair gets NULL parameters and
+    *         sse and n_iter 0 */
   def fit(df: DataFrame, groupCols: Seq[String], xCol: String, yCol: String,
           model: (Array[Double], Double) => Double, p0: Array[Double],
           maxIter: Int = 50, tol: Double = 1e-10): DataFrame = {
-    val spark = df.sparkSession
     val k = p0.length
-    val sorted = df
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions((groupCols :+ xCol).map(col): _*)
-      .select((groupCols :+ xCol :+ yCol).map(col): _*)
-    val gIdx = groupCols.indices
+    val in = df.select((groupCols :+ xCol :+ yCol).map(col): _*)
+    val xIdx = groupCols.length
     val outSchema = StructType(
       groupCols.map(c => df.schema(c)) ++
         (0 until k).map(i => StructField(s"p$i", DoubleType)) ++
         Seq(StructField("n_iter", IntegerType), StructField("sse", DoubleType)))
-    // Streaming key-change scan over the sorted partition (same pattern as
-    // Ewm): only ONE group's series is resident at a time — partition-sized
-    // buffering here would be an OOM at scale, a group is bounded.
-    val rdd = sorted.rdd.mapPartitions { it =>
-      val buf = it.buffered
-      new Iterator[Row] {
-        override def hasNext: Boolean = buf.hasNext
-        override def next(): Row = {
-          val key = gIdx.map(buf.head.get)
-          val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
-          val ys = scala.collection.mutable.ArrayBuffer.empty[Double]
-          while (buf.hasNext && gIdx.map(buf.head.get) == key) {
-            val r = buf.next()
-            xs += r.getDouble(gIdx.length)
-            ys += r.getDouble(gIdx.length + 1)
+    // One group's series is resident at a time (a group is bounded; a
+    // partition is not). Rows with a NULL x or y are skipped (xarray's
+    // skipna=True default).
+    in.groupBy(groupCols.map(col): _*)
+      .as[Row, Row](Encoders.row(StructType(groupCols.map(in.schema(_)))),
+        Encoders.row(in.schema))
+      .flatMapSortedGroups(col(xCol)) { (key, it) =>
+        val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
+        val ys = scala.collection.mutable.ArrayBuffer.empty[Double]
+        it.foreach { r =>
+          if (!r.isNullAt(xIdx) && !r.isNullAt(xIdx + 1)) {
+            xs += r.getDouble(xIdx)
+            ys += r.getDouble(xIdx + 1)
           }
-          val (p, iters, sse) =
-            lm(model, p0.clone(), xs.toArray, ys.toArray, maxIter, tol)
-          Row.fromSeq(key ++ p.toSeq ++ Seq[Any](iters, sse))
         }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
+        val fitted: Seq[Any] =
+          if (xs.isEmpty) Seq.fill(k)(null) ++ Seq[Any](0, null)
+          else {
+            val (p, iters, sse) =
+              lm(model, p0.clone(), xs.toArray, ys.toArray, maxIter, tol)
+            p.toSeq ++ Seq[Any](iters, sse)
+          }
+        Iterator.single(Row.fromSeq(key.toSeq ++ fitted))
+      }(Encoders.row(outSchema))
   }
 
   /** Levenberg-Marquardt with forward-difference Jacobian. */

@@ -1,6 +1,6 @@
 package graft.numerics
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -23,9 +23,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * the recursion bit-for-bit (the q273 PageRank convention applied to a
   * sequential fold).
   *
-  * Distributed shape: entities are hash-partitioned and their rows
-  * sorted WITHIN partitions only (no global sort); the fold is one
-  * sequential pass per partition with O(1) state — the per-series
+  * Distributed shape: `flatMapSortedGroups` on the entity — one hash
+  * exchange, rows sorted within each entity only (no global sort); the
+  * fold is one sequential pass per entity with O(1) state — the per-series
   * recurrence is inherently sequential (same topology as the MMR
   * greedy), and series count, not series length, carries the
   * parallelism at scale. */
@@ -41,38 +41,36 @@ object Holt {
     require(alphaDen >= 2 && betaDen >= 2,
       s"alphaDen/betaDen must be >= 2 (alpha, beta in (0, 1/2]), " +
         s"got $alphaDen/$betaDen")
-    val spark = df.sparkSession
     // NULL values drop out of the series before the recursion (the
     // reference's skipna contract) — a null would otherwise NPE the
     // primitive fold mid-task
     val in = df.select(col(entity).cast("long"), col(ts), col(tiebreak),
         yFp.cast("long").as("__y"))
       .filter(col(entity).isNotNull && col("__y").isNotNull)
-      .repartition(col(entity))
-      .sortWithinPartitions(col(entity), col(ts), col(tiebreak))
-    val rdd = in.rdd.mapPartitions { it =>
-      var cur = 0L
-      var init = false
-      var l = 0L; var b = 0L; var rn = 0L
-      it.map { row =>
-        val e = row.getLong(0); val y = row.getLong(3)
-        if (!init || e != cur) {
-          cur = e; init = true; rn = 1L; l = y; b = 0L
-        } else {
-          rn += 1
-          val lPrev = l
-          l = (y + (alphaDen - 1) * (l + b)) / alphaDen
-          b = ((l - lPrev) + (betaDen - 1) * b) / betaDen
-        }
-        Row(e, rn, l, b, l + b)
-      }
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
+    val outSchema = StructType(Seq(
       StructField(entity, LongType, nullable = false),
       StructField("rn", LongType, nullable = false),
       StructField("level_e", LongType, nullable = false),
       StructField("trend_e", LongType, nullable = false),
-      StructField("fitted_e", LongType, nullable = false))))
+      StructField("fitted_e", LongType, nullable = false)))
+    in.groupBy(col(entity))
+      .as[Row, Row](Encoders.row(StructType(Seq(in.schema(entity)))),
+        Encoders.row(in.schema))
+      .flatMapSortedGroups(col(ts), col(tiebreak)) { (_, it) =>
+        var l = 0L; var b = 0L; var rn = 0L
+        it.map { row =>
+          val e = row.getLong(0); val y = row.getLong(3)
+          if (rn == 0L) {
+            rn = 1L; l = y; b = 0L
+          } else {
+            rn += 1
+            val lPrev = l
+            l = (y + (alphaDen - 1) * (l + b)) / alphaDen
+            b = ((l - lPrev) + (betaDen - 1) * b) / betaDen
+          }
+          Row(e, rn, l, b, l + b)
+        }
+      }(Encoders.row(outSchema))
   }
 
   /** Holt–Winters ADDITIVE seasonal smoothing (Winters 1960) — the
@@ -99,27 +97,27 @@ object Holt {
     require(m >= 2, s"season length m must be >= 2, got $m")
     require(alphaDen >= 2 && betaDen >= 2 && gammaDen >= 2,
       "smoothing denominators must be >= 2")
-    val spark = df.sparkSession
     val in = df.select(col(entity).cast("long"), col(ts),
         yFp.cast("long").as("__y"))
       .filter(col(entity).isNotNull && col("__y").isNotNull)
-      .repartition(col(entity))
-      .sortWithinPartitions(col(entity), col(ts))
-    val rdd = in.rdd.mapPartitions { it =>
-      var cur = 0L
-      var init = false
-      var rn = 0L
-      var l = 0L; var b = 0L
-      val buf = new scala.collection.mutable.ArrayBuffer[Long](m)
-      var ring: Array[Long] = null
-      var ringPos = 0
-      it.flatMap { row =>
-        val e = row.getLong(0); val y = row.getLong(2)
-        if (!init || e != cur) {
-          cur = e; init = true; rn = 1L
-          buf.clear(); buf += y; ring = null; ringPos = 0; l = 0L; b = 0L
-          Iterator.empty
-        } else {
+    val outSchema = StructType(Seq(
+      StructField(entity, LongType, nullable = false),
+      StructField("rn", LongType, nullable = false),
+      StructField("level_e", LongType, nullable = false),
+      StructField("trend_e", LongType, nullable = false),
+      StructField("season_e", LongType, nullable = false),
+      StructField("fitted_e", LongType, nullable = false)))
+    in.groupBy(col(entity))
+      .as[Row, Row](Encoders.row(StructType(Seq(in.schema(entity)))),
+        Encoders.row(in.schema))
+      .flatMapSortedGroups(col(ts)) { (_, it) =>
+        var rn = 0L
+        var l = 0L; var b = 0L
+        val buf = new scala.collection.mutable.ArrayBuffer[Long](m)
+        var ring: Array[Long] = null
+        var ringPos = 0
+        it.flatMap { row =>
+          val e = row.getLong(0); val y = row.getLong(2)
           rn += 1
           if (ring == null) {
             buf += y
@@ -142,14 +140,6 @@ object Holt {
             Iterator.single(Row(e, rn, l, b, sNew, fitted))
           }
         }
-      }
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField(entity, LongType, nullable = false),
-      StructField("rn", LongType, nullable = false),
-      StructField("level_e", LongType, nullable = false),
-      StructField("trend_e", LongType, nullable = false),
-      StructField("season_e", LongType, nullable = false),
-      StructField("fitted_e", LongType, nullable = false))))
+      }(Encoders.row(outSchema))
   }
 }

@@ -1,6 +1,6 @@
 package graft.numerics
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,33 +17,42 @@ object Spline {
 
   /** Natural cubic spline: interpolate `v` at `probes`' t values, per
     * `by` group. Probes outside the knot range get NULL (no extrapolation,
-    * matching the engine's interp convention). */
+    * matching the engine's interp convention), as does a probe with a
+    * NULL t. A group with any NULL knot t or v gets NULL at every probe:
+    * the cubic coupling spreads a gap across the whole series, as scipy's
+    * cubic `interp1d` does under xarray `interp`. */
   def interpCubic(series: DataFrame, probes: DataFrame, by: Seq[String],
                   t: String, v: String): DataFrame = {
-    val spark = series.sparkSession
     val tagged = series.select((by.map(col) :+ col(t).cast("double").as("__t") :+
       col(v).cast("double").as("__v") :+ lit(0).as("__probe")): _*)
       .unionByName(probes.select((by.map(col) :+ col(t).cast("double").as("__t") :+
         lit(null).cast("double").as("__v") :+ lit(1).as("__probe")): _*))
-      .repartition(by.map(col): _*)
-      .sortWithinPartitions((by.map(col) :+ col("__probe") :+ col("__t")): _*)
-    val gIdx = by.indices
+    val tIdx = by.length
     val outSchema = StructType(by.map(c => series.schema(c)) ++ Seq(
       StructField("t_probe", DoubleType), StructField("v_cubic", DoubleType)))
-    val rdd = tagged.rdd.mapPartitions { it =>
-      it.toSeq.groupBy(r => gIdx.map(r.get)).iterator.flatMap { case (key, rows) =>
-        val (obs, prb) = rows.partition(_.getInt(gIdx.length + 2) == 0)
-        val knots = obs.map(r => (r.getDouble(gIdx.length), r.getDouble(gIdx.length + 1)))
-          .sortBy(_._1).toArray
-        val coef = naturalSpline(knots)
-        prb.iterator.map { r =>
-          val tp = r.getDouble(gIdx.length)
-          val yv = evaluate(knots, coef, tp)
-          Row.fromSeq(key ++ Seq(tp, yv.map(java.lang.Double.valueOf).orNull))
+    // Each group streams its knots (ascending t) and then its probes.
+    tagged.groupBy(by.map(col): _*)
+      .as[Row, Row](Encoders.row(StructType(by.map(tagged.schema(_)))),
+        Encoders.row(tagged.schema))
+      .flatMapSortedGroups(col("__probe"), col("__t")) { (key, it) =>
+        val rows = it.buffered
+        val knots = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
+        var gap = false
+        while (rows.hasNext && rows.head.getInt(tIdx + 2) == 0) {
+          val r = rows.next()
+          if (r.isNullAt(tIdx) || r.isNullAt(tIdx + 1)) gap = true
+          else knots += ((r.getDouble(tIdx), r.getDouble(tIdx + 1)))
         }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
+        val kn = knots.toArray
+        val coef = naturalSpline(kn)
+        rows.map { r =>
+          val tp = r.get(tIdx)
+          val yv =
+            if (gap || tp == null) None
+            else evaluate(kn, coef, r.getDouble(tIdx))
+          Row.fromSeq(key.toSeq ++ Seq(tp, yv.map(java.lang.Double.valueOf).orNull))
+        }
+      }(Encoders.row(outSchema))
   }
 
   /** Second derivatives at knots (natural BC), via the Thomas algorithm. */

@@ -1,6 +1,6 @@
 package graft.numerics
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -46,7 +46,6 @@ object Survival {
     *         ascending duration, one row per distinct duration. */
   def kaplanMeier(df: DataFrame, duration: String,
                   event: String): DataFrame = {
-    val spark = df.sparkSession
     val agg = df
       .filter(col(duration).isNotNull && col(event).isNotNull)
       .groupBy(col(duration).cast("long").as("__t"))
@@ -57,7 +56,7 @@ object Survival {
       // per-distinct-duration AGGREGATE, never subject rows
       .coalesce(1)
       .sortWithinPartitions(col("__t"))
-    val rdd = agg.rdd.mapPartitions { it =>
+    agg.mapPartitions { (it: Iterator[Row]) =>
       val rows = it.toArray // duration-bounded (distinct times only)
       val total = rows.map(r => r.getLong(1) + r.getLong(2)).sum
       var atRisk = total
@@ -73,14 +72,13 @@ object Survival {
         atRisk -= d + c
         Row(t, n, d, c, s.longValueExact(), h.longValueExact())
       }
-    }
-    spark.createDataFrame(rdd, StructType(Seq(
+    }(Encoders.row(StructType(Seq(
       StructField("duration", LongType, nullable = false),
       StructField("n_risk", LongType, nullable = false),
       StructField("d_events", LongType, nullable = false),
       StructField("c_censored", LongType, nullable = false),
       StructField("survival_e", LongType, nullable = false),
-      StructField("hazard_cum_e", LongType, nullable = false))))
+      StructField("hazard_cum_e", LongType, nullable = false)))))
   }
 
   /** Two-sample log-rank test (Mantel 1966) — "do groups A and B have

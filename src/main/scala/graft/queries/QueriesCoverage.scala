@@ -285,7 +285,7 @@ object QueriesCoverage {
         Row(i, bos.toByteArray)
       }
       val media = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 4),
+        java.util.Arrays.asList(rows: _*),
         StructType(Seq(StructField("doc_id", LongType, nullable = false),
           StructField("media", BinaryType, nullable = false))))
       Multimodal.imageFeatures(media, "doc_id", "media")
@@ -313,7 +313,7 @@ object QueriesCoverage {
         Row(i, Multimodal.makeAnimatedGif(frames))
       }
       val media = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 4),
+        java.util.Arrays.asList(rows: _*),
         StructType(Seq(StructField("doc_id", LongType, nullable = false),
           StructField("media", BinaryType, nullable = false))))
       Multimodal.gifFrames(media, "doc_id", "media")
@@ -340,7 +340,7 @@ object QueriesCoverage {
         Row(i, bb.array())
       }
       val media = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 4),
+        java.util.Arrays.asList(rows: _*),
         StructType(Seq(StructField("doc_id", LongType, nullable = false),
           StructField("media", BinaryType, nullable = false))))
       Multimodal.decodeWav(media, "doc_id", "media")
@@ -375,7 +375,7 @@ object QueriesCoverage {
         Row(i, bb.array())
       }
       val media = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 4),
+        java.util.Arrays.asList(rows: _*),
         StructType(Seq(StructField("doc_id", LongType, nullable = false),
           StructField("media", BinaryType, nullable = false))))
       Multimodal.wavFrameFeatures(media, "doc_id", "media",
@@ -409,7 +409,7 @@ object QueriesCoverage {
         Row(i, bb.array())
       }
       val media = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 4),
+        java.util.Arrays.asList(rows: _*),
         StructType(Seq(StructField("doc_id", LongType, nullable = false),
           StructField("media", BinaryType, nullable = false))))
       Multimodal.spectralCentroid(media, "doc_id", "media",

@@ -225,11 +225,12 @@ object QueriesNumerics {
       val series = Tables.events(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), unix_micros(col("ts")).as("t"), col("value"))
-      val grid = s.sql(
-        """SELECT explode(sequence(timestamp'2024-01-05 00:00:00',
-             timestamp'2024-01-25 00:00:00', interval 1 day)) AS ts""")
+      // the daily probe grid, generated per user (no cross join)
       val probes = series.select("user_id").distinct()
-        .crossJoin(grid.select(unix_micros(col("ts")).as("t")))
+        .select(col("user_id"), explode(expr(
+          """sequence(timestamp'2024-01-05 00:00:00',
+             timestamp'2024-01-25 00:00:00', interval 1 day)""")).as("ts"))
+        .select(col("user_id"), unix_micros(col("ts")).as("t"))
       Numerics.interpPolynomial(series, probes, by = Seq("user_id"),
         t = "t", v = "value", order = 3)
         .withColumnRenamed("v_cubic", "v_poly")

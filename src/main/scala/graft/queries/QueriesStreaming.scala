@@ -52,7 +52,7 @@ object QueriesStreaming {
         buckets = 64, epochs = 2, lr = 0.1)
       val wRows = trained.collect()
       val w = s.createDataFrame(
-        s.sparkContext.parallelize(wRows.toSeq, 1), trained.schema)
+        java.util.Arrays.asList(wRows: _*), trained.schema)
       val wBias = wRows.find(_.getLong(0) == 64L).get.getDecimal(1)
       val toks = StreamOps.documentsStream(s, dir)
         .select(col("doc_id"),

@@ -42,6 +42,46 @@ class NumericsSpec extends SparkSpec {
     assert(knot.getDouble(2) === 8.0)
   }
 
+  test("curvefit skips rows with a NULL x or y; an all-NULL group fits nothing") {
+    val clean = (0 until 20).map(i => (1L, Option(i * 0.25), Option(3.0 + 2.0 * i * 0.25)))
+    val dirty = clean ++ Seq((1L, None, Some(100.0)), (1L, Some(1.1), None),
+      (2L, Some(0.0), None), (2L, None, Some(1.0)))
+    def fit(rows: Seq[(Long, Option[Double], Option[Double])]) =
+      Curvefit.fit(rows.toDF("g", "x", "y"), Seq("g"), "x", "y",
+        (p, x) => p(0) + p(1) * x, p0 = Array(0.0, 1.0))
+        .collect().map(r => r.getLong(0) -> r).toMap
+    val got = fit(dirty)
+    // the NULL rows drop out: the fit equals the clean series' fit exactly
+    assert(got(1L) === fit(clean)(1L))
+    assert(math.abs(got(1L).getDouble(1) - 3.0) < 1e-6 &&
+      math.abs(got(1L).getDouble(2) - 2.0) < 1e-6, got(1L).toString)
+    val none = got(2L)
+    assert(none.isNullAt(1) && none.isNullAt(2) && none.getInt(3) === 0 &&
+      none.isNullAt(4), none.toString)
+  }
+
+  test("cubic spline: a NULL knot t or v blanks its group; a NULL probe t gives NULL") {
+    val series = Seq[(Long, Option[Double], Option[Double])](
+      (1L, Some(0.0), Some(0.0)), (1L, Some(1.0), Some(1.0)),
+      (1L, Some(2.0), Some(8.0)), (1L, Some(3.0), Some(27.0)),
+      (2L, Some(0.0), Some(0.0)), (2L, Some(1.0), None), (2L, Some(2.0), Some(8.0)),
+      (3L, None, Some(5.0)), (3L, Some(0.0), Some(0.0)), (3L, Some(1.0), Some(1.0)))
+      .toDF("g", "t", "v")
+    val probes = Seq[(Long, Option[Double])]((1L, Some(0.5)), (1L, None),
+      (2L, Some(0.5)), (2L, Some(2.0)), (3L, Some(0.5))).toDF("g", "t")
+    val out = Spline.interpCubic(series, probes, Seq("g"), "t", "v").collect()
+      .map(r => (r.getLong(0), Option(r.get(1))) -> Option(r.get(2))).toMap
+    assert(out.size === 5)
+    val clean = Spline.interpCubic(series.filter(col("g") === 1L),
+      Seq((1L, 0.5)).toDF("g", "t"), Seq("g"), "t", "v").head
+    assert(out((1L, Some(0.5))) === Some(clean.getDouble(2)))
+    assert(out((1L, None)) === None)
+    // the cubic coupling spreads a gap across the whole series: even the
+    // exact knot hit at t = 2 is NULL
+    assert(out((2L, Some(0.5))) === None && out((2L, Some(2.0))) === None)
+    assert(out((3L, Some(0.5))) === None)
+  }
+
   test("pchip: reproduces linear data, preserves monotonicity, no overshoot") {
     import graft.numerics.Numerics
     // linear data: all slopes equal the secant -> Hermite reproduces the line

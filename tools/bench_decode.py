@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
-"""Re-key graft.Bench's compact stdout line into a full name->seconds map.
+"""Re-key a historical graft.Bench compact line into a name->seconds map.
 
-The driver keeps only the last 2000 chars of Bench stdout; query NAMES
-alone for the 385-entry registry exceed that, so the full-registry line
-carries per-query times as centisecond integers in sorted-full-name
-order ("q_cs") plus the md5 of the repo-side bench_detail.json (which
-holds the same data name-keyed at 3 dp).
+Only the historical BENCH_r01..r17*.json artifacts need this: their
+full-registry line carried per-query times as centisecond integers in
+sorted-full-name order ("q_cs") plus the md5 of the repo-side
+bench_detail.json (which held the same data name-keyed at 3 dp). The
+current line carries the full name-keyed "queries" map and nothing else,
+so there is nothing to decode; such a line is printed unchanged.
 
 Usage:
   python3 tools/bench_decode.py BENCH_r15.json            # driver artifact
