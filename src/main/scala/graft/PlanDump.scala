@@ -50,9 +50,10 @@ object PlanDump {
         "(BroadcastHashJoin); the corpus streams map-side, only the " +
         "per-doc hit counts shuffle."),
     "q135_zarr_roundtrip" ->
-      ("Zarr read: one task per chunk file via the binaryFile source, " +
-        "decode in the executors; the preceding write shuffled rows once " +
-        "by chunk id (sorted, one chunk box per task in memory)."),
+      ("Zarr read: the driver lists the chunk files; executors read and " +
+        "decode them into rows (one RDD scan shared with the HDF5 and " +
+        "NetCDF readers); the preceding write shuffled rows once by chunk " +
+        "id (sorted, one chunk box per task in memory)."),
     "q146_seq_packing" ->
       ("Sequence packing: distributed prefix sum — dense-id fast path " +
         "buckets by a PURE PROJECTION (no range-sampling job), windows " +

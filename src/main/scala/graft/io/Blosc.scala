@@ -113,7 +113,7 @@ object Blosc {
       val plain =
         if (bitShuffle && blocksize >= typesize)
           bitUnshuffle(block, typesize)
-        else if (byteShuffle) unshuffle(block, typesize)
+        else if (byteShuffle) ByteFilters.unshuffle(block, typesize)
         else block
       System.arraycopy(plain, 0, out, j * blocksize, bsize)
       j += 1
@@ -132,16 +132,8 @@ object Blosc {
         val n = org.xerial.snappy.Snappy.uncompress(src, off, clen, dst, dstOff)
         require(n == dlen, s"snappy stream decoded $n of $dlen bytes")
       case 3 =>
-        val inf = new java.util.zip.Inflater()
-        inf.setInput(src, off, clen)
-        var got = 0
-        while (got < dlen && !inf.finished()) {
-          val n = inf.inflate(dst, dstOff + got, dlen - got)
-          require(n > 0 || !inf.needsInput(),
-            "truncated zlib stream in a blosc block")
-          got += n
-        }
-        inf.end()
+        val got = ByteFilters.inflateInto(src, off, clen, dst, dstOff, dlen,
+          "a blosc block")
         require(got == dlen, s"zlib stream decoded $got of $dlen bytes")
       case 4 =>
         val n = com.github.luben.zstd.Zstd.decompressByteArray(
@@ -194,7 +186,7 @@ object Blosc {
       System.arraycopy(plain, j * blocksize, src, 0, bsize)
       val block =
         if (bitShuffle) bitShuffleBytes(src, ts)
-        else if (byteShuffle) shuffleBytes(src, ts)
+        else if (byteShuffle) ByteFilters.shuffle(src, ts)
         else src
       bstarts(j) = bodyBase + body.size()
       var s = 0
@@ -248,39 +240,13 @@ object Blosc {
         val n = org.xerial.snappy.Snappy.compress(src, off, len, out, 0)
         java.util.Arrays.copyOf(out, n)
       case 3 =>
-        val d = new java.util.zip.Deflater(math.min(math.max(level, 1), 9))
-        d.setInput(src, off, len); d.finish()
-        val bos = new java.io.ByteArrayOutputStream(len / 2 max 64)
-        val buf = new Array[Byte](8192)
-        while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
-        d.end()
-        bos.toByteArray
+        ByteFilters.deflate(src, off, len, math.min(math.max(level, 1), 9))
       case 4 =>
         val slice = java.util.Arrays.copyOfRange(src, off, off + len)
         com.github.luben.zstd.Zstd.compress(slice,
           math.min(math.max(level, 1), 22))
       case other => sys.error(s"unknown blosc inner codec code $other")
     }
-
-  /** Byte transpose within one block: all byte-0s, then all byte-1s, ...
-    * of the `es`-byte elements. zarr-python always shuffles blocks whose
-    * size is a multiple of the typesize, but c-blosc itself copies a
-    * `nbytes % typesize` leftover VERBATIM after the transposed region
-    * (shuffle.c leftover handling) — a foreign writer can produce such
-    * frames, so both directions carry the tail through unchanged. */
-  private def shuffleBytes(raw: Array[Byte], es: Int): Array[Byte] = {
-    val n = raw.length / es
-    val out = new Array[Byte](raw.length)
-    var j = 0
-    var b = 0
-    while (b < es) {
-      var r = 0
-      while (r < n) { out(j) = raw(r * es + b); j += 1; r += 1 }
-      b += 1
-    }
-    System.arraycopy(raw, n * es, out, n * es, raw.length - n * es)
-    out
-  }
 
   /** Bit transpose within one block (c-blosc's BITSHUFFLE, the kiyo-masui
     * bitshuffle algorithm): for the first `elems - elems % 8` elements,
@@ -349,20 +315,6 @@ object Blosc {
       b += 1
     }
     System.arraycopy(raw, size * es, out, size * es, raw.length - size * es)
-    out
-  }
-
-  private def unshuffle(raw: Array[Byte], es: Int): Array[Byte] = {
-    val n = raw.length / es
-    val out = new Array[Byte](raw.length)
-    var j = 0
-    var b = 0
-    while (b < es) {
-      var r = 0
-      while (r < n) { out(r * es + b) = raw(j); j += 1; r += 1 }
-      b += 1
-    }
-    System.arraycopy(raw, n * es, out, n * es, raw.length - n * es)
     out
   }
 }

@@ -3,8 +3,7 @@ package graft.io
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal netCDF-4 (HDF5 container) reader + fixture writer — the
   * missing-most-often real-data entry point (reference engine
@@ -42,9 +41,10 @@ import org.apache.spark.sql.types._
   * DIMENSION_LIST, chunked+deflate) so the roundtrip exercises every
   * reader path; it is the fixture/export path, bulk data goes to parquet.
   *
-  * 100 TB shape: like [[NetCDF.toLongDF]] — .nc4 files are bounded
-  * self-describing binaries; the converter decodes them one-per-task via
-  * the binaryFile source, with only a driver-side header parse for schema. */
+  * 100 TB shape: like [[NetCDF.toLongDF]] — the driver parses only
+  * metadata (headers, chunk indexes, coordinate scales); each stored
+  * chunk or contiguous row band is one executor task that preads and
+  * decodes exactly its bytes. */
 object HDF5 {
 
   private val UNDEF = -1L // 0xFFFFFFFFFFFFFFFF
@@ -367,8 +367,11 @@ object HDF5 {
     var k = active.length - 1
     while (k >= 0) {
       active(k) match {
-        case (1, _) => cur = inflate(cur, innerSize(k))
-        case (2, cd) => cur = unshuffle(cur, cd.headOption.getOrElse(1))
+        case (1, _) => // an upper bound when scale-offset sits inside
+          cur = ByteFilters.inflate(cur, innerSize(k), what,
+            exact = !soInner(k))
+        case (2, cd) =>
+          cur = ByteFilters.unshuffle(cur, cd.headOption.getOrElse(1))
         case (4, cd) => cur = Szip.hdf5Decode(cur, cd, what)
         case (5, cd) => cur = NbitSO.nbitDecode(cur, cd)
         case (6, cd) => cur = NbitSO.soDecode(cur, cd)
@@ -1555,19 +1558,9 @@ object HDF5 {
       val db = ByteBuffer.wrap(raw)
         .order(if (edt.littleEndian) ByteOrder.LITTLE_ENDIAN
                else ByteOrder.BIG_ENDIAN)
-      val strides = d.shape.scanRight(1L)(_ * _).tail
-      val cElems = chunkDims.map(_.toLong).product.toInt
-      val cStrides = chunkDims.scanRight(1)(_ * _).tail
-      var i = 0
-      while (i < cElems) {
-        val gIdx = chunkDims.indices.map { k =>
-          chunkOrigin(k) + (i / cStrides(k)) % chunkDims(k) }
+      LongGrid.foreachCell(d.shape, chunkOrigin, chunkDims) { (i, pos) =>
         db.position(i * stride + mOff)
-        val v = read(db, edt)
-        // edge chunks run past the shape; those cells are padding
-        if (gIdx.indices.forall(k => gIdx(k) < d.shape(k)))
-          out(gIdx.indices.map(k => (gIdx(k) * strides(k)).toInt).sum) = v
-        i += 1
+        out(pos.toInt) = read(db, edt)
       }
     }
     d.layout match {
@@ -1630,50 +1623,10 @@ object HDF5 {
     ((sum2 << 16) | sum1).toInt
   }
 
-  /** Undo the byte-shuffle filter (id 2): written data holds all byte-0s,
-    * then all byte-1s, ... of the `es`-byte elements; any tail shorter
-    * than one element is stored unshuffled. */
-  private def unshuffle(raw: Array[Byte], es: Int): Array[Byte] = {
-    if (es <= 1) return raw
-    val n = raw.length / es
-    val out = new Array[Byte](raw.length)
-    var j = 0
-    var b = 0
-    while (b < es) {
-      var r = 0
-      while (r < n) { out(r * es + b) = raw(j); j += 1; r += 1 }
-      b += 1
-    }
-    System.arraycopy(raw, n * es, out, n * es, raw.length - n * es)
-    out
-  }
-
-  private def inflate(raw: Array[Byte], expected: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(raw)
-    val out = new Array[Byte](expected)
-    var off = 0
-    while (!inf.finished() && off < expected) {
-      val n = inf.inflate(out, off, expected - off)
-      // a truncated deflate stream (or one demanding a preset dictionary)
-      // yields n == 0 with finished() still false — raise instead of
-      // spinning forever
-      require(n > 0,
-        s"truncated deflate stream: decoded $off of $expected bytes")
-      off += n
-    }
-    inf.end()
-    out
-  }
-
   // ------------------------------------------------------------------
-  // distributed converter (mirror of NetCDF.toLongDF)
+  // distributed converter
   // ------------------------------------------------------------------
 
-  /** Open a directory of .nc4/.h5 files as ONE long-format DataFrame for
-    * `varName`: a column per netCDF-4 dimension (the dimension-scale's
-    * values) plus the value column. Schema from one driver-side parse;
-    * decode runs in the executors (one task per file). */
   /** One unit of distributed read work: decode `cdims` cells at grid
     * `origin` from `stored` bytes at `addr` of `path`. Contiguous
     * layouts are split into row-band tasks (`mask` = 0, no filters). */
@@ -1685,17 +1638,17 @@ object HDF5 {
     * contiguous variable (chunked variables parallelize per chunk) */
   private val ContigBandBytes = 32L << 20
 
+  /** Open a directory of .nc4/.h5 files as ONE long-format DataFrame for
+    * `varName`: a column per netCDF-4 dimension (the dimension-scale's
+    * values) plus the value column. Schema from one driver-side parse;
+    * decode runs in the executors, one task per stored chunk or
+    * contiguous row band of about `bandBytesReq` decoded bytes. */
   def toLongDF(spark: SparkSession, dir: String, varName: String,
                bandBytesReq: Long = ContigBandBytes): DataFrame = {
     // clamp so a generous caller value can never overflow a task's
     // Int-sized pread (band * rowBytes stays well under 2 GiB)
     val bandBytes = math.min(math.max(1L, bandBytesReq), 1L << 30)
-    // listFiles() returns null (not empty) for a missing/unreadable dir
-    val files = Option(new java.io.File(dir).listFiles())
-      .getOrElse(sys.error(s"cannot list directory $dir"))
-      .filter(f => f.getName.endsWith(".nc4") || f.getName.endsWith(".h5")
-        || f.getName.endsWith(".nc")).sortBy(_.getName)
-    require(files.nonEmpty, s"no .nc4/.h5 files under $dir")
+    val files = LongGrid.listFiles(dir, ".nc4", ".h5", ".nc")
     // Driver pass: METADATA ONLY, through the paged pread source — the
     // object headers, B-trees and 1-D coordinate scales it touches are
     // kilobytes even when the file is not; the variable's payload is
@@ -1704,10 +1657,10 @@ object HDF5 {
     // chunk-granular parallelism and one-chunk peak memory per task,
     // independent of file count and file size.
     case class FilePlan(path: String, d: DatasetMetaH5, dims: Seq[String],
-                        coords: Seq[Array[Double]],
+                        labels: Array[Option[LongGrid.Labels]],
                         coordIntegral: Seq[Boolean],
                         tasks: Seq[ReadTask])
-    val plans = files.toSeq.map { file =>
+    val plans = files.map { file =>
       val src = new PreadSrc(file.getAbsolutePath)
       try {
         val f = parseFile(src)
@@ -1716,7 +1669,8 @@ object HDF5 {
         require(v.dtype.clazz != 6,
           s"$varName is compound — convert one member at a time")
         val dns = f.varDims(v)
-        val coords = dns.map(dn => readVar(src, f, dn))
+        val labels: Array[Option[LongGrid.Labels]] =
+          dns.map(dn => Some(LongGrid.Labels(readVar(src, f, dn)))).toArray
         val coordIntegral = dns.map(dn => f.byName(dn).dtype.clazz == 0)
         val tasks = v.layout match {
           case chunked @ (_: Chunked | _: ChunkedV4) =>
@@ -1745,23 +1699,16 @@ object HDF5 {
                 (rows +: sizes.tail).toArray)
             }
         }
-        FilePlan(file.getAbsolutePath, v, dns, coords, coordIntegral, tasks)
+        FilePlan(file.getAbsolutePath, v, dns, labels, coordIntegral, tasks)
       } finally src.close()
     }
     val p0 = plans.head
-    val fields = p0.dims.zipWithIndex.map { case (dn, k) =>
-      StructField(dn, if (p0.coordIntegral(k)) LongType else DoubleType)
-    } :+ StructField(varName,
-      if (p0.d.dtype.clazz == 0) LongType else DoubleType)
-    val schema = StructType(fields)
-    val metaByPath = plans.map(p =>
-      p.path -> (p.d, p.coords, p.coordIntegral)).toMap
-    val metaB = spark.sparkContext.broadcast(metaByPath)
-    val tasks = plans.flatMap(_.tasks)
-    val slices = math.max(1, math.min(tasks.size,
-      spark.sparkContext.defaultParallelism * 2))
-    val rdd = spark.sparkContext.parallelize(tasks, slices).flatMap { t =>
-      val (d, coords, coordIntegral) = metaB.value(t.path)
+    val schema = LongGrid.schema(p0.dims.zip(p0.coordIntegral.map(Some(_))),
+      varName, p0.d.dtype.clazz == 0)
+    val metaB = spark.sparkContext.broadcast(
+      plans.map(p => p.path -> (p.d, p.labels)).toMap)
+    LongGrid.read(spark, schema, plans.flatMap(_.tasks)) { t =>
+      val (d, labels) = metaB.value(t.path)
       val raw = {
         val ch = java.nio.channels.FileChannel.open(
           java.nio.file.Paths.get(t.path),
@@ -1770,33 +1717,19 @@ object HDF5 {
         finally ch.close()
       }
       val stride = d.dtype.size
-      val baseLen = t.cdims.map(_.toLong).product.toInt * stride
-      val plain = defilter(raw, d.filters, t.mask, baseLen,
+      val n = t.cdims.map(_.toLong).product.toInt
+      val plain = defilter(raw, d.filters, t.mask, n * stride,
         s"a chunk of ${d.name}")
       val db = ByteBuffer.wrap(plain)
         .order(if (d.dtype.littleEndian) ByteOrder.LITTLE_ENDIAN
                else ByteOrder.BIG_ENDIAN)
-      val cStrides = t.cdims.scanRight(1)(_ * _).tail
-      val valIntegral = d.dtype.clazz == 0
-      val rank = t.cdims.length
-      (0 until t.cdims.product).iterator.flatMap { i =>
-        val gIdx = (0 until rank).map(k =>
-          t.origin(k) + (i / cStrides(k)) % t.cdims(k))
-        // edge chunks run past the shape; those cells are padding
-        if (gIdx.indices.exists(k => gIdx(k) >= d.shape(k))) None
-        else {
-          db.position(i * stride)
-          val v = readScalar(db, d.dtype)
-          val coordVals: Seq[Any] = gIdx.zipWithIndex.map { case (gi, k) =>
-            if (coordIntegral(k)) coords(k)(gi.toInt).toLong
-            else coords(k)(gi.toInt)
-          }
-          Some(Row.fromSeq(coordVals :+
-            (if (valIntegral) v.toLong else v: Any)))
-        }
+      val values = new Array[Double](n)
+      LongGrid.foreachCell(d.shape, t.origin, t.cdims) { (i, _) =>
+        db.position(i * stride)
+        values(i) = readScalar(db, d.dtype)
       }
+      LongGrid.Block(d.shape.toArray, t.origin, t.cdims, values, labels)
     }
-    spark.createDataFrame(rdd, schema)
   }
 
   /** Converter job: .nc4 directory -> partitioned parquet. */
@@ -1805,30 +1738,17 @@ object HDF5 {
     Store.write(toLongDF(spark, inDir, varName), outDir, chunkCols)
 
   /** `open_dataset` over a .nc4/.h5 directory: EVERY data variable
-    * (mirror of `Zarr.openDataset` — same-dims requirement, full-outer
-    * join on the dim columns). Dimension scales become dim columns. */
+    * joined by [[LongGrid.openDataset]]. Dimension scales become dim
+    * columns. */
   def openDataset(spark: SparkSession, dir: String): DataFrame = {
-    // listFiles() returns null (not empty) for a missing/unreadable dir
-    val files = Option(new java.io.File(dir).listFiles())
-      .getOrElse(sys.error(s"cannot list directory $dir"))
-      .filter(f => f.getName.endsWith(".nc4") || f.getName.endsWith(".h5")
-        || f.getName.endsWith(".nc")).sortBy(_.getName)
-    require(files.nonEmpty, s"no .nc4/.h5 files under $dir")
-    val src = new PreadSrc(files.head.getAbsolutePath)
-    val (names, dims) = try {
+    val src = new PreadSrc(
+      LongGrid.listFiles(dir, ".nc4", ".h5", ".nc").head.getAbsolutePath)
+    val vars = try {
       val f = parseFile(src)
-      val dataVars = f.datasets
-        .filter(d => d.parseError.isEmpty && !d.isDimScale)
-      require(dataVars.nonEmpty, s"no data variables under $dir")
-      val dims = f.varDims(dataVars.head)
-      require(dataVars.forall(v => f.varDims(v) == dims),
-        "open_dataset requires all data vars on the same dims; got " +
-          dataVars.map(v => s"${v.name}:${f.varDims(v).mkString("x")}")
-            .mkString(", "))
-      (dataVars.map(_.name), dims)
+      f.datasets.filter(d => d.parseError.isEmpty && !d.isDimScale)
+        .map(v => v.name -> f.varDims(v))
     } finally src.close()
-    names.map(n => toLongDF(spark, dir, n))
-      .reduce(_.join(_, dims, "full_outer"))
+    LongGrid.openDataset(vars, dir)(toLongDF(spark, dir, _))
   }
 
   // ------------------------------------------------------------------
@@ -2024,7 +1944,6 @@ object HDF5 {
           cursor += shapeOf(v).map(_.toLong).product * elemSize(v)
         case Some(cd) =>
           val shape = shapeOf(v)
-          val strides = shape.scanRight(1)(_ * _).tail
           val grid = shape.zip(cd).map { case (s, c) => (s + c - 1) / c }
           // with an unlimited dim at u != 0 the EA element order is the
           // SWIZZLED chunk order (unlimited dim slowest-varying — see
@@ -2039,13 +1958,9 @@ object HDF5 {
           }
           val blobs = gridIdx.map { gi =>
             val origin = gi.zip(cd).map { case (g, c) => g.toLong * c }
-            val cElems = cd.product
-            val cStrides = cd.scanRight(1)(_ * _).tail
-            val slice = Array.tabulate(cElems) { i =>
-              val idx = cd.indices.map(k => origin(k) + (i / cStrides(k)) % cd(k))
-              if (idx.indices.forall(k => idx(k) < shape(k)))
-                v.data(idx.indices.map(k => (idx(k) * strides(k)).toInt).sum)
-              else 0.0
+            val slice = new Array[Double](cd.product) // padding stays 0
+            LongGrid.foreachCell(shape.map(_.toLong), origin, cd) { (i, pos) =>
+              slice(i) = v.data(pos.toInt)
             }
             val enc0 = encode(v, slice)
             // nbit / scale-offset run FIRST in pipeline (apply) order
@@ -2067,13 +1982,13 @@ object HDF5 {
             val summed =
               if (v.fletcher && !v.fletcherOuter) addSum(enc) else enc
             val filtered =
-              if (v.shuffle) shuffleBytes(summed, elemSize(v)) else summed
+              if (v.shuffle) ByteFilters.shuffle(summed, elemSize(v)) else summed
             val deflated =
               if (v.szip) Szip.hdf5Encode(filtered, v.szipCd(cd))
               else if (v.lzf) Lzf.compress(filtered)
               else if (v.zstd)
                 com.github.luben.zstd.Zstd.compress(filtered, 3)
-              else deflateBytes(filtered, deflateLevel)
+              else ByteFilters.deflate(filtered, deflateLevel)
             (origin,
               if (v.fletcher && v.fletcherOuter) addSum(deflated)
               else deflated)
@@ -2671,17 +2586,6 @@ object HDF5 {
     axes.foldLeft(Seq(Seq.empty[Int])) { (acc, ax) =>
       acc.flatMap(pfx => ax.map(pfx :+ _)) }
 
-  private def deflateBytes(raw: Array[Byte], level: Int): Array[Byte] = {
-    val d = new java.util.zip.Deflater(level)
-    d.setInput(raw); d.finish()
-    val buf = new Array[Byte](raw.length + 64)
-    val bos = new java.io.ByteArrayOutputStream()
-    while (!d.finished()) {
-      val n = d.deflate(buf); bos.write(buf, 0, n)
-    }
-    d.end(); bos.toByteArray
-  }
-
   // ---- v1 object header rendering --------------------------------------
 
   private def msg(typ: Int, body: Array[Byte]): Array[Byte] = {
@@ -2945,22 +2849,6 @@ object HDF5 {
     }
     if (fletcher && fletcherOuter) fletcherEntry()
     b.array()
-  }
-
-  /** The byte-shuffle filter (id 2), write direction. */
-  private def shuffleBytes(raw: Array[Byte], es: Int): Array[Byte] = {
-    if (es <= 1) return raw
-    val n = raw.length / es
-    val out = new Array[Byte](raw.length)
-    var j = 0
-    var b = 0
-    while (b < es) {
-      var r = 0
-      while (r < n) { out(j) = raw(r * es + b); j += 1; r += 1 }
-      b += 1
-    }
-    System.arraycopy(raw, n * es, out, n * es, raw.length - n * es)
-    out
   }
 
   private def messagesOf(v: WVar, shape: Seq[Int], elemSize: Int,

@@ -4,8 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** netCDF classic (CDF-1/2/5) reader/writer + the distributed .nc ->
   * parquet converter (the most common real-data entry point the engine was
@@ -397,12 +396,6 @@ object NetCDF {
       t == NC_UBYTE || t == NC_USHORT || t == NC_UINT ||
       t == NC_INT64 || t == NC_UINT64
 
-  /** Open a directory of .nc files as ONE long-format DataFrame for a
-    * data variable: one row per element, one column per dimension (the
-    * 1-D coordinate variable's values when present, else the 0-based
-    * index) plus the value column — `open_dataset(engine=
-    * "netcdf-converted")`. Schema from one driver-side header parse;
-    * decoding runs in the executors via the binaryFile source. */
   /** Parse just the header by reading a GROWING PREFIX of the file —
     * classic netCDF puts the whole header first, so a multi-gigabyte
     * archive file costs kilobytes of driver IO. A truncated prefix
@@ -455,12 +448,17 @@ object NetCDF {
   /** decoded bytes of the target variable per read task */
   private val BandBytes = 32L << 20
 
+  /** Open a directory of .nc files as ONE long-format DataFrame for a
+    * data variable: one row per element, one column per dimension (the
+    * 1-D coordinate variable's values when present, else the 0-based
+    * index) plus the value column — `open_dataset(engine=
+    * "netcdf-converted")`. Schema from one driver-side header parse;
+    * decoding runs in the executors, one task per band of about
+    * `bandBytesReq` bytes. */
   def toLongDF(spark: SparkSession, dir: String, varName: String,
                bandBytesReq: Long = BandBytes): DataFrame = {
     val bandBytes = math.min(math.max(1L, bandBytesReq), 1L << 30)
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".nc")).sortBy(_.getName)
-    require(files.nonEmpty, s"no .nc files under $dir")
+    val files = LongGrid.listFiles(dir, ".nc")
     // Driver pass: header-prefix parse + SMALL fixed-coordinate reads
     // only; the variable payload is banded into tasks that each pread
     // exactly one contiguous span. Record variables take their record
@@ -470,9 +468,9 @@ object NetCDF {
       w.name == d.name &&
         w.dimIds == Seq(h.dims.indexWhere(_.name == d.name)))
     case class FilePlan(path: String, h: Header, v: VarMeta,
-                        fixedCoords: Seq[Option[Array[Double]]],
+                        fixedLabels: Array[Option[LongGrid.Labels]],
                         tasks: Seq[NcTask])
-    val plans = files.toSeq.map { file =>
+    val plans = files.map { file =>
       val path = file.getAbsolutePath
       val h = parseHeaderFile(path)
       val v = h.vars.find(_.name == varName)
@@ -480,17 +478,17 @@ object NetCDF {
       val ds = v.dimIds.map(h.dims(_))
       val ch = java.nio.channels.FileChannel.open(
         Paths.get(path), java.nio.file.StandardOpenOption.READ)
-      val (fixedCoords, tasks) = try {
+      val (fixedLabels, tasks) = try {
         // 1-D fixed coordinates: contiguous, small — pread driver-side.
         // The record coordinate (if any) is dim 0 of a record var and is
         // read per task from the span; None here.
-        val fixedCoords = ds.zipWithIndex.map { case (d, k) =>
+        val fixedLabels = ds.zipWithIndex.map { case (d, k) =>
           coordOf(h, d).filter(c => !(h.isRecord(v) && k == 0)).map { c =>
             val n = d.size
             val b = pread(ch, c.begin, n * typeSize(c.ncType))
-            Array.fill(n)(get1(b, c.ncType))
+            LongGrid.Labels(Array.fill(n)(get1(b, c.ncType)))
           }
-        }
+        }.toArray
         val tasks = if (h.isRecord(v)) {
           val rec = h.recSize
           require(rec <= Int.MaxValue,
@@ -537,85 +535,71 @@ object NetCDF {
               v.begin + r0 * rowBytes, rows * rowBytes)
           }
         }
-        (fixedCoords, tasks)
+        (fixedLabels, tasks)
       } finally ch.close()
-      FilePlan(path, h, v, fixedCoords, tasks)
+      FilePlan(path, h, v, fixedLabels, tasks)
     }
     val p0 = plans.head
-    val vdims0 = p0.v.dimIds.map(p0.h.dims(_))
-    val fields = vdims0.map { d =>
-      val integral = coordOf(p0.h, d).forall(c => isIntegral(c.ncType))
-      StructField(d.name, if (integral) LongType else DoubleType)
-    } :+ StructField(varName,
-      if (isIntegral(p0.v.ncType)) LongType else DoubleType)
-    val schema = StructType(fields)
+    val schema = LongGrid.schema(
+      p0.v.dimIds.map(p0.h.dims(_)).map(d =>
+        d.name -> coordOf(p0.h, d).map(c => isIntegral(c.ncType))),
+      varName, isIntegral(p0.v.ncType))
     val metaB = spark.sparkContext.broadcast(plans.map(p =>
-      p.path -> (p.h, p.v, p.fixedCoords)).toMap)
-    val tasks = plans.flatMap(_.tasks)
-    val slices = math.max(1, math.min(tasks.size,
-      spark.sparkContext.defaultParallelism * 2))
-    val rdd = spark.sparkContext.parallelize(tasks, slices).flatMap { t =>
-      val (h, v, fixedCoords) = metaB.value(t.path)
-      val ds = v.dimIds.map(h.dims(_))
+      p.path -> (p.h, p.v, p.fixedLabels)).toMap)
+    LongGrid.read(spark, schema, plans.flatMap(_.tasks)) { t =>
+      val (h, v, fixedLabels) = metaB.value(t.path)
       val isRec = h.isRecord(v)
       val span = {
         val ch = java.nio.channels.FileChannel.open(
           Paths.get(t.path), java.nio.file.StandardOpenOption.READ)
         try pread(ch, t.spanPos, t.spanLen.toInt) finally ch.close()
       }
-      val slab = v.dimIds.tail.map(h.dims(_).size).product
-      val ts = typeSize(v.ncType)
+      val tail = v.dimIds.tail.map(h.dims(_).size)
+      val slab = tail.product
       // values of this band, leading-dim-major
-      val data = new Array[Double](t.count * math.max(1, slab))
+      val data = new Array[Double](t.count * slab)
       val recBegin = if (isRec) h.vars.filter(h.isRecord).map(_.begin).min
                      else 0L
-      if (isRec) {
-        val inRecOff = v.begin - recBegin
+      // the band's cells of a record variable, or of its record
+      // coordinate: `n` values per record, records `recSize` apart
+      def records(c: VarMeta, n: Int, out: Array[Double]): Unit =
         (0 until t.count).foreach { r =>
           val b = span.duplicate().order(span.order())
-          b.position((r * h.recSize + inRecOff).toInt)
-          (0 until slab).foreach(i => data(r * slab + i) = get1(b, v.ncType))
+          b.position((r * h.recSize + c.begin - recBegin).toInt)
+          (0 until n).foreach(i => out(r * n + i) = get1(b, c.ncType))
         }
-      } else {
+      if (isRec) records(v, slab, data)
+      else {
         val b = span.duplicate().order(span.order())
-        (0 until t.count * slab).foreach(i => data(i) = get1(b, v.ncType))
+        data.indices.foreach(i => data(i) = get1(b, v.ncType))
       }
-      // record coordinate cells, extracted from the same span
-      val recCoord: Option[(Array[Double], Int)] =
-        if (!isRec) None
-        else coordOf(h, ds.head).map { c =>
-          val off = c.begin - recBegin
-          val arr = (0 until t.count).map { r =>
-            val b = span.duplicate().order(span.order())
-            b.position((r * h.recSize + off).toInt)
-            get1(b, c.ncType)
-          }.toArray
-          (arr, c.ncType)
-        }
-      val coordTypes = ds.map(d =>
-        coordOf(h, d).map(_.ncType).getOrElse(NC_INT))
-      val sizes = v.dimIds.map(h.dimSize)
-      val tailSizes = sizes.tail
-      val tailStrides = tailSizes.scanRight(1)(_ * _).tail
-      data.indices.iterator.map { flat =>
-        val lead = t.first + flat / math.max(1, slab)
-        val rest = flat % math.max(1, slab)
-        val coordVals: Seq[Any] = (0 until sizes.length).map { k =>
-          val gi = if (k == 0) lead
-                   else (rest / tailStrides(k - 1)) % tailSizes(k - 1)
-          val raw =
-            if (k == 0 && isRec)
-              recCoord.map(_._1(flat / math.max(1, slab)))
-                .getOrElse(lead.toDouble)
-            else fixedCoords(k).map(_(gi.toInt)).getOrElse(gi.toDouble)
-          if (isIntegral(coordTypes(k))) raw.toLong else raw
-        }
-        val value: Any =
-          if (isIntegral(v.ncType)) data(flat).toLong else data(flat)
-        Row.fromSeq(coordVals :+ value)
-      }
+      // the record coordinate labels only this band's records
+      val labels =
+        if (!isRec) fixedLabels
+        else coordOf(h, h.dims(v.dimIds.head)).map { c =>
+          val recCoord = new Array[Double](t.count)
+          records(c, 1, recCoord)
+          LongGrid.Labels(recCoord, t.first)
+        } +: fixedLabels.tail
+      LongGrid.Block(v.dimIds.map(h.dimSize(_).toLong).toArray,
+        (t.first +: tail.map(_ => 0L)).toArray,
+        (t.count +: tail).toArray, data, labels)
     }
-    spark.createDataFrame(rdd, schema)
+  }
+
+  private def firstHeader(dir: String): Header =
+    parseHeaderFile(LongGrid.listFiles(dir, ".nc").head.getAbsolutePath)
+
+  /** `open_dataset` over a .nc directory: EVERY data variable joined by
+    * [[LongGrid.openDataset]]. Coordinate variables become the dim
+    * columns. */
+  def openDataset(spark: SparkSession, dir: String): DataFrame = {
+    val hdr = firstHeader(dir)
+    def isCoord(v: VarMeta): Boolean =
+      v.dimIds.length == 1 && hdr.dims(v.dimIds.head).name == v.name
+    LongGrid.openDataset(hdr.vars.filterNot(isCoord)
+      .map(v => v.name -> v.dimIds.map(hdr.dims(_).name)), dir)(
+      toLongDF(spark, dir, _))
   }
 
   /** `open_dataset(decode_cf=True)` over a directory of .nc files: the
@@ -623,34 +607,9 @@ object NetCDF {
     * missing_value masking and scale_factor/add_offset unpacking come
     * straight from the header's variable attributes (the packed-integer
     * convention real .nc archives use). */
-  /** `open_dataset` over a .nc directory: EVERY data variable (mirror
-    * of `Zarr.openDataset` — same-dims requirement, full-outer join on
-    * the dim columns). Coordinate variables become the dim columns. */
-  def openDataset(spark: SparkSession, dir: String): DataFrame = {
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".nc")).sortBy(_.getName)
-    require(files.nonEmpty, s"no .nc files under $dir")
-    val hdr = parseHeaderFile(files.head.getAbsolutePath)
-    def isCoord(v: VarMeta): Boolean =
-      v.dimIds.length == 1 && hdr.dims(v.dimIds.head).name == v.name
-    val dataVars = hdr.vars.filterNot(isCoord)
-    require(dataVars.nonEmpty, s"no data variables under $dir")
-    val dims = dataVars.head.dimIds.map(hdr.dims(_).name)
-    require(dataVars.forall(_.dimIds.map(hdr.dims(_).name) == dims),
-      "open_dataset requires all data vars on the same dims; got " +
-        dataVars.map(v =>
-          s"${v.name}:${v.dimIds.map(hdr.dims(_).name).mkString("x")}")
-          .mkString(", "))
-    dataVars.map(v => toLongDF(spark, dir, v.name))
-      .reduce(_.join(_, dims, "full_outer"))
-  }
-
   def openDecoded(spark: SparkSession, dir: String,
                   varName: String): graft.model.XDataset = {
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".nc")).sortBy(_.getName)
-    require(files.nonEmpty, s"no .nc files under $dir")
-    val hdr = parseHeaderFile(files.head.getAbsolutePath)
+    val hdr = firstHeader(dir)
     val v = hdr.vars.find(_.name == varName)
       .getOrElse(throw new NoSuchElementException(varName))
     val dims = v.dimIds.map(hdr.dims(_).name)

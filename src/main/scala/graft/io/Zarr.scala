@@ -2,12 +2,10 @@ package graft.io
 
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
-import java.util.zip.{Deflater, Inflater}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -36,14 +34,17 @@ import org.json4s.jackson.JsonMethods
   * sharding_indexed it is rejected with guidance).
   *
   * 100 TB shape: chunks are independently decodable, so the reader maps
-  * one Spark task per chunk file (`binaryFile` source — no driver
-  * bottleneck) and the writer shuffles rows once by chunk id and encodes
-  * each chunk entirely inside an executor; memory is bounded by one chunk
-  * box, never by the array. Only the tiny JSON metadata and the 1-D
+  * chunk files onto Spark tasks (the driver only lists them; executors
+  * read and decode the bytes) and the writer shuffles rows once by chunk
+  * id and encodes each chunk entirely inside an executor; memory is
+  * bounded by one chunk box, never by the array. Only the tiny JSON metadata and the 1-D
   * coordinate vectors touch the driver (the same contract as the
   * reference, which holds every coordinate index in memory).
   */
 object Zarr {
+
+  /** Coordinate labels a write may hold driver-side, across its dims. */
+  private[graft] val MaxCoordLabels = 50000000L
 
   /** Parsed array metadata — v2 `.zarray` + `.zattrs`, or a v3
     * `zarr.json` array node mapped onto the same fields. `dtype` is
@@ -401,21 +402,6 @@ object Zarr {
   // chunk codec
   // ------------------------------------------------------------------
 
-  private def inflate(b: Array[Byte], expect: Int): Array[Byte] = {
-    val inf = new Inflater()
-    inf.setInput(b)
-    val out = new Array[Byte](expect)
-    var off = 0
-    while (off < expect && !inf.finished()) {
-      val n = inf.inflate(out, off, expect - off)
-      require(n > 0 || !inf.needsInput(), "truncated zlib chunk")
-      off += n
-    }
-    inf.end()
-    require(off == expect, s"zlib chunk decoded $off of $expect bytes")
-    out
-  }
-
   /** zstd frame (numcodecs Zstd in v2; the v3 `zstd` codec — zarr-python
     * 3's default chain) via the zstd-jni Spark already bundles. */
   private def unzstd(b: Array[Byte], expect: Int): Array[Byte] = {
@@ -424,16 +410,6 @@ object Zarr {
       out, 0, expect, b, 0, b.length)
     require(n == expect, s"zstd chunk decoded $n of $expect bytes")
     out
-  }
-
-  private def deflate(b: Array[Byte], level: Int): Array[Byte] = {
-    val d = new Deflater(level)
-    d.setInput(b); d.finish()
-    val out = new ByteArrayOutputStream(b.length / 2 max 64)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
   }
 
   // v3's standard byte-stream codec is gzip (RFC 1952 framing), not v2's
@@ -507,7 +483,7 @@ object Zarr {
     }
     val n = m.chunkElems
     val plain = m.compressor match {
-      case Some(("zlib", _)) => inflate(raw, n * m.size)
+      case Some(("zlib", _)) => ByteFilters.inflate(raw, n * m.size, "a chunk")
       case Some(("gzip", _)) => gunzip(raw, n * m.size)
       case Some(("zstd", _)) => unzstd(raw, n * m.size)
       // the blosc frame header self-describes codec/shuffle/split — the
@@ -567,7 +543,7 @@ object Zarr {
       }
     }
     m.compressor match {
-      case Some(("zlib", lvl)) => deflate(buf.array(), lvl)
+      case Some(("zlib", lvl)) => ByteFilters.deflate(buf.array(), lvl)
       case Some(("gzip", lvl)) => gzip(buf.array(), lvl)
       case Some(("zstd", lvl)) =>
         com.github.luben.zstd.Zstd.compress(buf.array(), lvl)
@@ -715,38 +691,29 @@ object Zarr {
     out.toByteArray
   }
 
+  /** Chunk-grid indices in C order. */
+  private def gridIndices(m: ArrayMeta): Seq[Seq[Int]] =
+    m.chunkGrid.foldLeft(Seq(Seq.empty[Int])) { (acc, g) =>
+      acc.flatMap(p => (0 until g).map(p :+ _))
+    }
+
+  private def originOf(m: ArrayMeta, ci: Seq[Int]): Seq[Long] =
+    ci.zip(m.chunks).map { case (c, w) => c.toLong * w }
+
   /** Driver-side whole-array read (coordinate vectors — 1-D, small by the
     * xarray contract; data variables go through [[toLongDF]]). */
   def readArray(spark: SparkSession, store: String, name: String)
       : (ArrayMeta, Array[Double]) = {
     val m = openMetaAny(spark, store, name)
     val fs = fsFor(store, spark)
-    val out = new Array[Double](m.shape.product)
-    val grid = m.chunkGrid
-    val gridIdx = grid.foldLeft(Seq(Seq.empty[Int])) { (acc, g) =>
-      acc.flatMap(p => (0 until g).map(p :+ _))
-    }
-    val shapeStrides = m.shape.scanRight(1)(_ * _).tail
-    val chunkStrides = m.chunks.scanRight(1)(_ * _).tail
-    gridIdx.foreach { ci =>
+    // absent chunk = all fill_value (zarr contract)
+    val out = Array.fill(m.shape.product)(m.fillValue)
+    gridIndices(m).foreach { ci =>
       val p = new Path(store, s"$name/${m.chunkKey(ci)}")
       if (fs.exists(p)) {
         val vals = decodeChunk(readBytes(fs, p), m)
-        vals.indices.foreach { flat =>
-          val local = m.chunks.indices.map(k => (flat / chunkStrides(k)) % m.chunks(k))
-          val global = local.zip(ci).zip(m.chunks).map { case ((l, c), w) => c * w + l }
-          if (global.zip(m.shape).forall { case (g, s) => g < s })
-            out(global.zip(shapeStrides).map { case (g, st) => g * st }.sum) = vals(flat)
-        }
-      } else {
-        // absent chunk = all fill_value (zarr contract)
-        val local = Array.fill(m.chunkElems)(m.fillValue)
-        local.indices.foreach { flat =>
-          val li = m.chunks.indices.map(k => (flat / chunkStrides(k)) % m.chunks(k))
-          val global = li.zip(ci).zip(m.chunks).map { case ((l, c), w) => c * w + l }
-          if (global.zip(m.shape).forall { case (g, s) => g < s })
-            out(global.zip(shapeStrides).map { case (g, st) => g * st }.sum) = m.fillValue
-        }
+        LongGrid.foreachCell(m.shape.map(_.toLong), originOf(m, ci),
+          m.chunks) { (i, pos) => out(pos.toInt) = vals(i) }
       }
     }
     (m, out)
@@ -759,9 +726,9 @@ object Zarr {
   /** Open one data variable of a zarr store as a long-format DataFrame:
     * one row per element, one column per dimension (the 1-D coordinate
     * array's values when present in the store, else the 0-based index)
-    * plus the value column. Chunk decode runs in the executors (one task
-    * per chunk file via the binaryFile source); only metadata and coord
-    * vectors are read driver-side. */
+    * plus the value column. The driver lists the chunk files and parses
+    * their keys; executors read and decode the chunks. An absent chunk
+    * yields no rows. */
   def toLongDF(spark: SparkSession, store: String, varName: String): DataFrame = {
     val m = openMetaAny(spark, store, varName)
     require(m.dims.length == m.shape.length,
@@ -775,19 +742,16 @@ object Zarr {
           fs.exists(new Path(store, s"$d/zarr.json")))
         Some(readArray(spark, store, d)) else None
     }
-    val fields = m.dims.zip(coords).map { case (d, cv) =>
-      val integral = cv.forall(_._1.integral)
-      StructField(d, if (integral) LongType else DoubleType)
-    } :+ StructField(varName, if (m.integral) LongType else DoubleType)
-    val schema = StructType(fields)
+    val schema = LongGrid.schema(
+      m.dims.zip(coords.map(_.map(_._1.integral))), varName, m.integral)
 
+    val rank = m.shape.length
     val chunkFiles =
       if (m.separator == "/") {
         // nested chunk keys — v3's "c/i/j/..." and v2's NestedDirectoryStore
         // "i/j/..." — resolve with one glob of rank wildcards
         val base = if (m.v3) varName + "/c/" else varName + "/"
-        val pat = new Path(store,
-          base + Seq.fill(m.shape.length)("*").mkString("/"))
+        val pat = new Path(store, base + Seq.fill(rank)("*").mkString("/"))
         val hits = fs.globStatus(pat)
         if (hits == null) Array.empty[Path]
         else hits.map(_.getPath).filter(p => !p.getName.startsWith("."))
@@ -798,45 +762,29 @@ object Zarr {
         fs.listStatus(new Path(store, varName))
           .map(_.getPath).filter(p => !p.getName.startsWith(".") &&
             p.getName != "zarr.json")
-    if (chunkFiles.isEmpty) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-
-    val metaB = spark.sparkContext.broadcast(m)
-    val coordsB = spark.sparkContext.broadcast(coords.map(_.map(_._2)))
-    val coordIntegral = coords.map(_.forall(_._1.integral))
-    val binary = spark.read.format("binaryFile")
-      .load(chunkFiles.map(_.toString): _*)
-      .select(col("path"), col("content"))
-    val rdd = binary.rdd.flatMap { row =>
-      val mm = metaB.value
-      val cs = coordsB.value
-      val segs = row.getString(0).split('/')
+    // (path, chunk origin): the key's grid index is the last `rank` path
+    // segments (nested) or the "."-joined name, "c"-prefixed in v3
+    val tasks = chunkFiles.toSeq.map { p =>
       val ci =
-        if (mm.separator == "/")
-          segs.takeRight(mm.shape.length).map(_.toInt).toSeq
-        else if (mm.v3) // "c.0.0" -> drop the "c" prefix segment
-          segs.last.split(java.util.regex.Pattern.quote(mm.separator))
-            .drop(1).map(_.toInt).toSeq
-        else segs.last.split(java.util.regex.Pattern.quote(mm.separator))
-          .map(_.toInt).toSeq
-      val vals = decodeChunk(row.getAs[Array[Byte]](1), mm)
-      val chunkStrides = mm.chunks.scanRight(1)(_ * _).tail
-      vals.indices.iterator.flatMap { flat =>
-        val global = mm.chunks.indices.map { k =>
-          ci(k) * mm.chunks(k) + (flat / chunkStrides(k)) % mm.chunks(k)
-        }
-        if (global.zip(mm.shape).exists { case (g, s) => g >= s }) None // edge pad
-        else {
-          val coordVals: Seq[Any] = global.zipWithIndex.map { case (g, k) =>
-            val raw = cs(k).map(_(g)).getOrElse(g.toDouble)
-            if (coordIntegral(k)) raw.toLong else raw
-          }
-          val v: Any = if (mm.integral) vals(flat).toLong else vals(flat)
-          Some(Row.fromSeq(coordVals :+ v))
-        }
-      }
+        if (m.separator == "/")
+          Iterator.iterate(p)(_.getParent).take(rank).map(_.getName.toInt)
+            .toSeq.reverse
+        else p.getName.split(java.util.regex.Pattern.quote(m.separator))
+          .drop(if (m.v3) 1 else 0).map(_.toInt).toSeq
+      (p.toString, originOf(m, ci).toArray)
     }
-    spark.createDataFrame(rdd, schema)
+    val metaB = spark.sparkContext.broadcast(m)
+    val labels = coords.map(_.map(c => LongGrid.Labels(c._2))).toArray
+    val shape = m.shape.map(_.toLong).toArray
+    val box = m.chunks.toArray
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    LongGrid.read(spark, schema, tasks) { case (path, origin) =>
+      val p = new Path(path)
+      val vals = decodeChunk(readBytes(p.getFileSystem(conf.value), p),
+        metaB.value)
+      LongGrid.Block(shape, origin, box, vals, labels)
+    }
   }
 
   /** List the store's array names (subdirectories with a `.zarray`). */
@@ -856,13 +804,6 @@ object Zarr {
       .sorted
   }
 
-  /** `open_zarr` at dataset level (ref `backends/zarr.py:1222`): every
-    * data variable of the store (arrays that are not 1-D coordinate
-    * vectors named after their own dim) joined on the shared dimension
-    * columns into ONE long-format DataFrame. v1 contract: all data vars
-    * must share the same `_ARRAY_DIMENSIONS` tuple (the reference
-    * broadcasts mismatched dims; out of scope here). Outer join, so a
-    * var's missing chunks surface as NULLs rather than dropping cells. */
   /** The store's DATA variables (arrays that are not 1-D coord vectors
     * named after their own dim) with parsed metadata — the shared
     * classification for dataset- and tree-level opens. */
@@ -875,16 +816,15 @@ object Zarr {
     metas.filterNot { case (n, _) => coordNames(n) }
   }
 
-  def openDataset(spark: SparkSession, store: String): DataFrame = {
-    val dataVars = dataVarsOf(spark, store)
-    require(dataVars.nonEmpty, s"no data variables in $store")
-    val dims = dataVars.head._2.dims
-    require(dataVars.forall(_._2.dims == dims),
-      s"v1 open_zarr requires all data vars on the same dims; got " +
-        dataVars.map { case (n, m) => s"$n:${m.dims.mkString("x")}" }.mkString(", "))
-    dataVars.map { case (n, _) => toLongDF(spark, store, n) }
-      .reduce(_.join(_, dims, "full_outer"))
-  }
+  /** `open_zarr` at dataset level (ref `backends/zarr.py:1222`): every
+    * data variable of the store (arrays that are not 1-D coordinate
+    * vectors named after their own dim) joined on the shared dimension
+    * columns into ONE long-format DataFrame by [[LongGrid.openDataset]]:
+    * all data vars must share the same `_ARRAY_DIMENSIONS` tuple, and a
+    * var's missing chunks surface as NULLs rather than dropping cells. */
+  def openDataset(spark: SparkSession, store: String): DataFrame =
+    LongGrid.openDataset(dataVarsOf(spark, store).map { case (n, m) =>
+      n -> m.dims }, store)(toLongDF(spark, store, _))
 
   /** `to_zarr(append_dim=...)` (ref `backends/zarr.py:846` region/append
     * dispatch, `dataset.py:2204`): extend one dimension with new labels
@@ -1141,20 +1081,10 @@ object Zarr {
     val fs = fsFor(store, spark)
     fs.mkdirs(new Path(store, name))
     writeArrayMeta(fs, store, name, m)
-    val grid = m.chunkGrid
-    val gridIdx = grid.foldLeft(Seq(Seq.empty[Int])) { (acc, g) =>
-      acc.flatMap(p => (0 until g).map(p :+ _))
-    }
-    val shapeStrides = m.shape.scanRight(1)(_ * _).tail
-    val chunkStrides = m.chunks.scanRight(1)(_ * _).tail
-    gridIdx.foreach { ci =>
-      val vals = Array.fill(m.chunkElems)(m.fillValue)
-      vals.indices.foreach { flat =>
-        val local = m.chunks.indices.map(k => (flat / chunkStrides(k)) % m.chunks(k))
-        val global = local.zip(ci).zip(m.chunks).map { case ((l, c), w) => c * w + l }
-        if (global.zip(m.shape).forall { case (g, s) => g < s })
-          vals(flat) = data(global.zip(shapeStrides).map { case (g, st) => g * st }.sum)
-      }
+    gridIndices(m).foreach { ci =>
+      val vals = Array.fill(m.chunkElems)(m.fillValue) // edge padding
+      LongGrid.foreachCell(m.shape.map(_.toLong), originOf(m, ci),
+        m.chunks) { (i, pos) => vals(i) = data(pos.toInt) }
       writeBytes(fs, new Path(store, s"$name/${m.chunkKey(ci)}"),
         encodeChunk(vals, m))
     }
@@ -1185,14 +1115,12 @@ object Zarr {
     val spark = df.sparkSession
     // Coord vectors are driver-held and broadcast — metadata-scale by
     // contract (mirrors NetCDF.writeDataset's maxCells). A billion-label
-    // dim would OOM the driver; fail loudly with the knob to raise.
-    val maxLabels = spark.conf.getOption("graft.zarr.maxCoordLabels")
-      .map(_.toLong).getOrElse(50000000L)
+    // dim would OOM the driver; fail loudly instead.
     val nLabels = dimValues.map(_.length.toLong).sum
-    require(nLabels <= maxLabels,
+    require(nLabels <= MaxCoordLabels,
       s"$nLabels coordinate labels across ${dims.mkString(",")} exceed " +
-        s"the driver-side cap $maxLabels (set graft.zarr.maxCoordLabels " +
-        "to raise); dims this large need a chunked coord write path")
+        s"the driver-side cap $MaxCoordLabels; dims this large need a " +
+        "chunked coord write path")
     val shape = dimValues.map(_.length)
     val isV3 = zarrFormat == 3
     // v2's default byte codec is raw zlib; v3's standard one is gzip

@@ -287,8 +287,7 @@ object DataTree {
       // capped (limit cap+1, then require) — coords are metadata-scale
       // by contract and an unbounded distinct-collect would OOM the
       // driver on a degenerate billion-label dim.
-      val maxLabels = spark.conf.getOption("graft.zarr.maxCoordLabels")
-        .map(_.toLong).getOrElse(50000000L)
+      val maxLabels = Zarr.MaxCoordLabels
       val dimValues = dims.map { d =>
         val vs = ds.df.select(col(d).cast("double")).distinct()
           .orderBy(col(d))
@@ -296,7 +295,7 @@ object DataTree {
           .collect().map(_.getDouble(0))
         require(vs.length <= maxLabels,
           s"dim $d has more than $maxLabels distinct labels (driver-side" +
-            " cap; set graft.zarr.maxCoordLabels to raise)")
+            " cap)")
         vs
       }
       val dimIntegral = dims.forall { d =>

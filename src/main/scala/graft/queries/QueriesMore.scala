@@ -541,7 +541,7 @@ object QueriesMore {
     // netCDF classic -> parquet converter roundtrip (ref
     // `backends/api.py:395` engine dispatch, `backends/scipy_.py`):
     // a CDF-1 file is written with the in-repo writer, decoded
-    // distributedly (binaryFile source, executor-side parse), converted
+    // distributedly (banded preads, executor-side parse), converted
     // to a parquet store, and read back in long format. The fixture grid
     // is closed-form, so the oracle regenerates it from generate_series.
     // REAL zarr v2 store roundtrip (ref `backends/zarr.py:655` ZarrStore,
@@ -549,8 +549,8 @@ object QueriesMore {
     // array — .zarray/.zattrs JSON, C-order little-endian chunks, zlib,
     // edge chunks on both dims — by the distributed writer (one shuffle by
     // chunk id, one file per chunk), one chunk is region-overwritten
-    // (to_zarr(region=...)), and read back by the distributed reader (one
-    // task per chunk via binaryFile). Closed-form grid, so the oracle
+    // (to_zarr(region=...)), and read back by the distributed reader
+    // (chunks decoded in the executors). Closed-form grid, so the oracle
     // regenerates it from generate_series, independent of the format code.
     // open_datatree over a hierarchical zarr store: root group with a v2
     // child group and a v3 child group (format-transparent per node),
@@ -710,7 +710,7 @@ object QueriesMore {
     // netCDF-4 / HDF5 engine (ref `backends/netCDF4_.py:680`,
     // `backends/h5netcdf_.py`): write a dimension-scale .nc4 fixture
     // (chunked + deflate, edge chunks, DIMENSION_LIST via the global
-    // heap), then the distributed binaryFile read -> parquet convert.
+    // heap), then the distributed per-chunk read -> parquet convert.
     // The reader walks the real HDF5 structures — superblock, v1 group
     // B-tree, chunk B-tree, filter pipeline — not a replay of the writer.
     "q168_netcdf4_roundtrip" -> ((s, dir) => {

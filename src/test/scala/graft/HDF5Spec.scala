@@ -234,6 +234,32 @@ class HDF5Spec extends SparkSpec {
     assert(row.getDouble(2) === 3 * 100.0 + 2 * 1.5)
   }
 
+  test("deflate: a valid zlib stream shorter than its chunk raises") {
+    val dir = Files.createTempDirectory("graft_h5short").toString
+    val path = java.nio.file.Paths.get(s"$dir/part0.nc4")
+    HDF5.writeNc4(path.toString,
+      Seq("x" -> Array.tabulate(6)(_.toDouble),
+        "y" -> Array.tabulate(4)(_.toDouble)),
+      Seq(WVar("v", Seq(0, 1), Array.tabulate(24)(_ * 1.25),
+        chunk = Some(Seq(3, 4)))))
+    val bytes = Files.readAllBytes(path)
+    val ref = HDF5.chunkRefsOf(bytes, HDF5.parseFile(bytes).byName("v")).head
+    // a complete stream of 8 zero bytes, written over the start of a
+    // 96-byte chunk's stored bytes: it ends long before the chunk does
+    val d = new java.util.zip.Deflater(9)
+    d.setInput(new Array[Byte](8)); d.finish()
+    val short = new Array[Byte](64)
+    val n = d.deflate(short); d.end()
+    assert(n < ref.stored)
+    System.arraycopy(short, 0, bytes, ref.addr.toInt, n)
+    val e = intercept[IllegalArgumentException](
+      HDF5.readVar(bytes, HDF5.parseFile(bytes), "v"))
+    assert(e.getMessage.contains("decoded 8 of 96 bytes"))
+    Files.write(path, bytes)
+    val e2 = intercept[Exception](HDF5.toLongDF(spark, dir, "v").collect())
+    assert(e2.getMessage.contains("decoded 8 of 96 bytes"))
+  }
+
   test("fixed-length string dataset reads back as strings (class 3)") {
     val dir = Files.createTempDirectory("graft_h5s").toString
     val path = s"$dir/names.h5"

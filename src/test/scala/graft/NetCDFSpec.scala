@@ -63,6 +63,16 @@ class NetCDFSpec extends SparkSpec {
       (20L, 0L, 3.0), (20L, 1L, 4.0)))
   }
 
+  test("a missing directory raises 'cannot list directory' from every reader") {
+    val dir = java.nio.file.Files.createTempDirectory("nc").toString + "/absent"
+    Seq[() => Any](() => NetCDF.toLongDF(spark, dir, "v"),
+      () => NetCDF.openDataset(spark, dir),
+      () => NetCDF.openDecoded(spark, dir, "v")).foreach { read =>
+      val e = intercept[RuntimeException](read())
+      assert(String.valueOf(e.getMessage) === s"cannot list directory $dir")
+    }
+  }
+
   test("CDF-2 and CDF-5 containers roundtrip (64-bit offsets/sizes)") {
     val path = java.nio.file.Files.createTempDirectory("nc").toString
     val dims = Seq(Dim("a", 2), Dim("b", 3))
