@@ -53,9 +53,8 @@ object Store {
       }))
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(ds.df.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, MetaFile), true)
-    try out.write(JsonMethods.compact(JsonMethods.render(json)).getBytes("UTF-8"))
-    finally out.close()
+    StoreFiles.write(fs, new org.apache.hadoop.fs.Path(path, MetaFile),
+      JsonMethods.compact(JsonMethods.render(json)).getBytes("UTF-8"))
   }
 
   /** Open an XDataset written by [[writeDataset]], meta restored. */
@@ -64,10 +63,8 @@ object Store {
     import org.json4s.jackson.JsonMethods
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path, MetaFile))
-    val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val root = JsonMethods.parse(raw)
+    val root = JsonMethods.parse(new String(
+      StoreFiles.read(fs, new org.apache.hadoop.fs.Path(path, MetaFile)), "UTF-8"))
     def strs(v: JValue): Seq[String] =
       v.asInstanceOf[JArray].arr.collect { case JString(s) => s }
     def strMap(v: JValue): Map[String, String] = v match {

@@ -3,9 +3,13 @@ package graft.io
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -35,10 +39,11 @@ import org.json4s.jackson.JsonMethods
   *
   * 100 TB shape: chunks are independently decodable, so the reader maps
   * chunk files onto Spark tasks (the driver only lists them; executors
-  * read and decode the bytes) and the writer shuffles rows once by chunk
-  * id and encodes each chunk entirely inside an executor; memory is
-  * bounded by one chunk box, never by the array. Only the tiny JSON metadata and the 1-D
-  * coordinate vectors touch the driver (the same contract as the
+  * read and decode the bytes). The writer gathers each input partition's
+  * cells into per-chunk partials, shuffles the partials once by chunk id
+  * and encodes each chunk entirely inside an executor; memory is bounded
+  * by one chunk box, never by the array. Only the tiny JSON metadata and
+  * the 1-D coordinate vectors touch the driver (the same contract as the
   * reference, which holds every coordinate index in memory).
   */
 object Zarr {
@@ -85,22 +90,6 @@ object Zarr {
 
   private def fsFor(path: String, spark: SparkSession): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
-    val in = fs.open(p)
-    try {
-      val out = new ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
-  }
-
-  private def writeBytes(fs: FileSystem, p: Path, b: Array[Byte]): Unit = {
-    val out = fs.create(p, true)
-    try out.write(b) finally out.close()
-  }
 
   def parseDtype(s: String): (Char, Char, Int) = {
     require(s.length >= 3, s"bad dtype '$s'")
@@ -193,10 +182,10 @@ object Zarr {
 
   def openMeta(spark: SparkSession, store: String, name: String): ArrayMeta = {
     val fs = fsFor(store, spark)
-    val za = new String(readBytes(fs, new Path(store, s"$name/.zarray")), "UTF-8")
+    val za = new String(StoreFiles.read(fs, new Path(store, s"$name/.zarray")), "UTF-8")
     val attrsPath = new Path(store, s"$name/.zattrs")
     val zat = if (fs.exists(attrsPath))
-      Some(new String(readBytes(fs, attrsPath), "UTF-8")) else None
+      Some(new String(StoreFiles.read(fs, attrsPath), "UTF-8")) else None
     parseMeta(za, zat)
   }
 
@@ -394,7 +383,7 @@ object Zarr {
     val fs = fsFor(store, spark)
     val v3Path = new Path(store, s"$name/zarr.json")
     if (fs.exists(v3Path))
-      parseMetaV3(new String(readBytes(fs, v3Path), "UTF-8"))
+      parseMetaV3(new String(StoreFiles.read(fs, v3Path), "UTF-8"))
     else openMeta(spark, store, name)
   }
 
@@ -711,7 +700,7 @@ object Zarr {
     gridIndices(m).foreach { ci =>
       val p = new Path(store, s"$name/${m.chunkKey(ci)}")
       if (fs.exists(p)) {
-        val vals = decodeChunk(readBytes(fs, p), m)
+        val vals = decodeChunk(StoreFiles.read(fs, p), m)
         LongGrid.foreachCell(m.shape.map(_.toLong), originOf(m, ci),
           m.chunks) { (i, pos) => out(pos.toInt) = vals(i) }
       }
@@ -781,7 +770,7 @@ object Zarr {
       spark.sparkContext.hadoopConfiguration)
     LongGrid.read(spark, schema, tasks) { case (path, origin) =>
       val p = new Path(path)
-      val vals = decodeChunk(readBytes(p.getFileSystem(conf.value), p),
+      val vals = decodeChunk(StoreFiles.read(p.getFileSystem(conf.value), p),
         metaB.value)
       LongGrid.Block(shape, origin, box, vals, labels)
     }
@@ -798,7 +787,7 @@ object Zarr {
         fs.exists(new Path(store, s"$n/.zarray")) ||
           // a v3 zarr.json may also be a nested GROUP node — only arrays
           (fs.exists(v3p) &&
-            (JsonMethods.parse(new String(readBytes(fs, v3p), "UTF-8"))
+            (JsonMethods.parse(new String(StoreFiles.read(fs, v3p), "UTF-8"))
               \ "node_type") == JString("array"))
       }
       .sorted
@@ -912,16 +901,16 @@ object Zarr {
       .filter(n => fs.exists(new Path(store, s"$n/.zarray")))
       .foreach { n =>
       entries += s"$n/.zarray" -> JsonMethods.parse(new String(
-        readBytes(fs, new Path(store, s"$n/.zarray")), "UTF-8"))
+        StoreFiles.read(fs, new Path(store, s"$n/.zarray")), "UTF-8"))
       val ap = new Path(store, s"$n/.zattrs")
       if (fs.exists(ap))
         entries += s"$n/.zattrs" -> JsonMethods.parse(new String(
-          readBytes(fs, ap), "UTF-8"))
+          StoreFiles.read(fs, ap), "UTF-8"))
     }
     val doc = JObject(
       "zarr_consolidated_format" -> JInt(1),
       "metadata" -> JObject(entries.toList))
-    writeBytes(fs, new Path(store, ".zmetadata"),
+    StoreFiles.write(fs, new Path(store, ".zmetadata"),
       JsonMethods.compact(JsonMethods.render(doc)).getBytes("UTF-8"))
   }
 
@@ -1049,28 +1038,28 @@ object Zarr {
   private def writeArrayMeta(fs: FileSystem, store: String, name: String,
                              m: ArrayMeta): Unit =
     if (m.v3)
-      writeBytes(fs, new Path(store, s"$name/zarr.json"),
+      StoreFiles.write(fs, new Path(store, s"$name/zarr.json"),
         metaJsonV3(m).getBytes("UTF-8"))
     else {
-      writeBytes(fs, new Path(store, s"$name/.zarray"),
+      StoreFiles.write(fs, new Path(store, s"$name/.zarray"),
         metaJson(m).getBytes("UTF-8"))
-      writeBytes(fs, new Path(store, s"$name/.zattrs"),
+      StoreFiles.write(fs, new Path(store, s"$name/.zattrs"),
         attrsJson(m).getBytes("UTF-8"))
     }
 
   /** Initialise a store directory (`.zgroup`). */
   def initStore(spark: SparkSession, store: String): Unit = {
     val fs = fsFor(store, spark)
-    fs.mkdirs(new Path(store))
-    writeBytes(fs, new Path(store, ".zgroup"),
+    StoreFiles.mkdirs(fs, new Path(store))
+    StoreFiles.write(fs, new Path(store, ".zgroup"),
       """{"zarr_format":2}""".getBytes("UTF-8"))
   }
 
   /** Initialise a v3 store (root `zarr.json` group node). */
   def initStoreV3(spark: SparkSession, store: String): Unit = {
     val fs = fsFor(store, spark)
-    fs.mkdirs(new Path(store))
-    writeBytes(fs, new Path(store, "zarr.json"),
+    StoreFiles.mkdirs(fs, new Path(store))
+    StoreFiles.write(fs, new Path(store, "zarr.json"),
       """{"zarr_format":3,"node_type":"group"}""".getBytes("UTF-8"))
   }
 
@@ -1079,23 +1068,27 @@ object Zarr {
                  m: ArrayMeta, data: Array[Double]): Unit = {
     require(data.length == m.shape.product, "data length != shape product")
     val fs = fsFor(store, spark)
-    fs.mkdirs(new Path(store, name))
+    StoreFiles.mkdirs(fs, new Path(store, name))
     writeArrayMeta(fs, store, name, m)
     gridIndices(m).foreach { ci =>
       val vals = Array.fill(m.chunkElems)(m.fillValue) // edge padding
       LongGrid.foreachCell(m.shape.map(_.toLong), originOf(m, ci),
         m.chunks) { (i, pos) => vals(i) = data(pos.toInt) }
-      writeBytes(fs, new Path(store, s"$name/${m.chunkKey(ci)}"),
+      StoreFiles.write(fs, new Path(store, s"$name/${m.chunkKey(ci)}"),
         encodeChunk(vals, m))
     }
   }
 
-  /** Distributed `to_zarr` for a long-format DataFrame: rows are mapped
-    * to (chunk id, local offset), shuffled ONCE by chunk id, and each
-    * chunk box is materialised and encoded entirely inside an executor —
-    * memory bounded by one chunk, one output file per chunk. Cells absent
-    * from `df` get `fill_value`. Coordinate vectors (`dimValues`, the
-    * sorted per-dim labels) are written driver-side as 1-D arrays.
+  /** Distributed `to_zarr` for a long-format DataFrame. Each input
+    * partition makes one pass over its rows and emits, per chunk it
+    * touches, a partial: its cells' offsets in the chunk box and their
+    * values. The partials are shuffled ONCE by chunk id; a reducer
+    * scatters one chunk's partials into its box, then encodes and writes
+    * it — memory bounded by one chunk box, one output file per chunk, and
+    * the bytes do not depend on how `df` is partitioned or ordered. Cells
+    * absent from `df` get `fill_value`, as does a NULL value; two rows for
+    * one cell raise "duplicate cell". Coordinate vectors (`dimValues`,
+    * the sorted per-dim labels) are written driver-side as 1-D arrays.
     *
     * Region semantics (`to_zarr(region=...)` `backends/zarr.py:846`): with
     * `region=true` the store must already exist; metadata and coords are
@@ -1204,80 +1197,171 @@ object Zarr {
         }
       }
       val fs = fsFor(store, spark)
-      fs.mkdirs(new Path(store, varName))
+      StoreFiles.mkdirs(fs, new Path(store, varName))
       writeArrayMeta(fs, store, varName, m)
     }
-    // label -> index maps, broadcast (each is one dim's coord vector)
-    val idxMaps: Seq[Map[Double, Int]] =
-      dimValues.map(_.zipWithIndex.toMap)
     val mB = spark.sparkContext.broadcast(m)
-    val idxB = spark.sparkContext.broadcast(idxMaps)
-    val storeL = store; val varL = varName
+    val labelsB = spark.sparkContext.broadcast(dimValues.map(new LabelIndex(_)).toArray)
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val chunkStrides = m.chunks.scanRight(1)(_ * _).tail
-    val gridStrides = m.chunkGrid.scanRight(1)(_ * _).tail
-    val cols = dims.map(col) :+ col(varName)
-    val keyed = df.select(cols: _*).rdd.map { row =>
-      val mm = mB.value; val maps = idxB.value
-      val global = maps.indices.map { k =>
-        val label = row.get(k) match {
-          case l: Long => l.toDouble
-          case i: Int => i.toDouble
-          case d: Double => d
-          case f: Float => f.toDouble
-          case other => sys.error(s"non-numeric dim label $other")
-        }
-        maps(k).getOrElse(label, sys.error(s"label $label not in dim ${mm.dims(k)}"))
-      }
-      val chunkId = global.indices.map(k => (global(k) / mm.chunks(k)) * gridStrides(k)).sum
-      val local = global.indices.map(k => (global(k) % mm.chunks(k)) * chunkStrides(k)).sum
-      val v = row.get(maps.length) match {
-        case d: Double => d; case f: Float => f.toDouble
-        case l: Long => l.toDouble; case i: Int => i.toDouble
-        case null => mm.fillValue
-        case other => sys.error(s"non-numeric value $other")
-      }
-      (chunkId.toLong, local, v)
-    }
-    val nGrid = m.chunkGrid.product.toLong
+    val dir = new Path(store, varName).toString
+    val frame = df.select((dims :+ varName).map(col): _*)
+    val get = frame.schema.fields.zipWithIndex.map { case (f, k) => doubleAt(f, k) }
+    val nGrid = m.chunkGrid.map(_.toLong).product
     val parts = math.min(nGrid,
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong).toInt max 1
-    // one shuffle, sorted by (chunk, offset) with chunk-only partitioning:
-    // a partition streams its chunks contiguously, so only ONE chunk box
-    // is ever materialised per task regardless of chunks-per-partition
-    val chunkPartitioner = new org.apache.spark.Partitioner {
+      spark.conf.get("spark.sql.shuffle.partitions").toLong).toInt max 1
+    // partitioned by chunk id, sorted by it: a reducer meets each chunk's
+    // partials contiguously, so it holds ONE chunk box at a time
+    val byChunk = new org.apache.spark.Partitioner {
       def numPartitions: Int = parts
-      def getPartition(key: Any): Int = {
-        val c = key.asInstanceOf[(Long, Int)]._1
-        ((c % parts) + parts).toInt % parts
+      def getPartition(key: Any): Int = (key.asInstanceOf[Long] % parts).toInt
+    }
+    // InternalRows, read in place: no conversion to external Rows
+    frame.queryExecution.toRdd
+      .mapPartitions(rows => chunkPartials(rows, mB.value, labelsB.value, get))
+      .repartitionAndSortWithinPartitions(byChunk)
+      .foreachPartition { it =>
+        val mm = mB.value
+        val fs = new Path(dir).getFileSystem(conf.value)
+        val in = it.buffered
+        while (in.hasNext) {
+          val c = in.head._1
+          val box = Array.fill(mm.chunkElems)(mm.fillValue)
+          val filled = new java.util.BitSet(mm.chunkElems)
+          while (in.hasNext && in.head._1 == c) {
+            val (offs, vals) = in.next()._2
+            var i = 0
+            while (i < offs.length) {
+              val o = offs(i)
+              require(!filled.get(o), s"duplicate cell " +
+                s"${cellLabels(mm, labelsB.value, c, o)} in writeLongDF")
+              filled.set(o); box(o) = vals(i); i += 1
+            }
+          }
+          StoreFiles.write(fs, new Path(dir, mm.chunkKey(gridIndex(mm, c))),
+            encodeChunk(box, mm))
+        }
+      }
+  }
+
+  /** One dim's label -> index lookup, open-addressed on the label's bits
+    * over primitive arrays. As with `zipWithIndex.toMap`, a repeated label
+    * keeps its last index, -0.0 finds 0.0 and NaN finds nothing. */
+  private final class LabelIndex(val labels: Array[Double]) extends Serializable {
+    private val mask = {
+      var cap = 2
+      while (cap < 2 * labels.length) cap <<= 1
+      cap - 1
+    }
+    private val keys = new Array[Long](mask + 1)
+    private val slots = new Array[Int](mask + 1) // index + 1; 0 = empty
+    // + 0.0 turns -0.0 into 0.0
+    private def key(x: Double): Long = java.lang.Double.doubleToLongBits(x + 0.0)
+    private def home(k: Long): Int = ((k * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+    locally {
+      var i = 0
+      while (i < labels.length) {
+        val k = key(labels(i))
+        var h = home(k)
+        while (slots(h) != 0 && keys(h) != k) h = (h + 1) & mask
+        keys(h) = k; slots(h) = i + 1
+        i += 1
       }
     }
-    keyed.map { case (c, l, v) => ((c, l), v) }
-      .repartitionAndSortWithinPartitions(chunkPartitioner)
-      .mapPartitions { it =>
-        val mm = mB.value
-        val grid = mm.chunkGrid
-        val gStrides = grid.scanRight(1)(_ * _).tail
-        val fs = new Path(storeL).getFileSystem(conf.value)
-        def flush(c: Long, vals: Array[Double]): Unit = {
-          val ci = grid.indices.map(k => ((c / gStrides(k)) % grid(k)).toInt)
-          val p = new Path(new Path(storeL, varL), mm.chunkKey(ci))
-          val out = fs.create(p, true)
-          try out.write(encodeChunk(vals, mm)) finally out.close()
+
+    /** The index of label `x`, or -1. */
+    def apply(x: Double): Int =
+      if (x.isNaN) -1
+      else {
+        val k = key(x)
+        var h = home(k)
+        while (slots(h) != 0 && keys(h) != k) h = (h + 1) & mask
+        slots(h) - 1
+      }
+  }
+
+  /** Column `k` of a row as a Double, for the column types a label or a
+    * value may have. */
+  private def doubleAt(f: StructField, k: Int): InternalRow => Double =
+    f.dataType match {
+      case DoubleType => _.getDouble(k)
+      case FloatType => _.getFloat(k).toDouble
+      case LongType => _.getLong(k).toDouble
+      case IntegerType => _.getInt(k).toDouble
+      case t => throw new IllegalArgumentException(
+        s"non-numeric column ${f.name}: ${t.simpleString}")
+    }
+
+  /** Cells a map task buffers before it emits its partials. */
+  private[graft] val PartialCells = 1 << 18
+
+  /** A chunk's partial: (chunk id, (offsets in the chunk box, values)). */
+  private type Partial = (Long, (Array[Int], Array[Double]))
+
+  /** The map side of [[writeLongDF]]: one pass over a partition's
+    * (labels..., value) rows that appends each cell's offset in its chunk
+    * box and its value to that chunk's buffer, and emits one partial per
+    * touched chunk whenever [[PartialCells]] cells are buffered and at the
+    * partition's end. A NULL value is stored as `fill_value`. */
+  private def chunkPartials(rows: Iterator[InternalRow], m: ArrayMeta,
+                            labels: Array[LabelIndex],
+                            get: Array[InternalRow => Double]): Iterator[Partial] = {
+    val rank = labels.length
+    val chunks = m.chunks.toArray
+    val boxStride = m.chunks.scanRight(1)(_ * _).tail.toArray
+    val gridStride = m.chunkGrid.map(_.toLong).scanRight(1L)(_ * _).tail.toArray
+    type Cells = (mutable.ArrayBuilder.ofInt, mutable.ArrayBuilder.ofDouble)
+    val bufs = mutable.LongMap.empty[Cells]
+    def batch(): Iterator[Partial] = {
+      var lastChunk = -1L
+      var last: Cells = null
+      var n = 0
+      while (n < PartialCells && rows.hasNext) {
+        val row = rows.next()
+        var chunk = 0L
+        var off = 0
+        var k = 0
+        while (k < rank) {
+          require(!row.isNullAt(k), s"NULL label in dim ${m.dims(k)}")
+          val label = get(k)(row)
+          val g = labels(k)(label)
+          require(g >= 0, s"label $label not in dim ${m.dims(k)}")
+          chunk += g / chunks(k) * gridStride(k)
+          off += g % chunks(k) * boxStride(k)
+          k += 1
         }
-        var cur = -1L
-        var box: Array[Double] = null
-        var written = 0L
-        it.foreach { case ((c, l), v) =>
-          if (c != cur) {
-            if (box != null) { flush(cur, box); written += 1 }
-            cur = c; box = Array.fill(mm.chunkElems)(mm.fillValue)
-          }
-          box(l) = v
+        if (chunk != lastChunk) {
+          last = bufs.getOrElseUpdate(chunk,
+            (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofDouble))
+          lastChunk = chunk
         }
-        if (box != null) { flush(cur, box); written += 1 }
-        Iterator.single(written)
-      }.count() // materialise the writes
+        last._1 += off
+        last._2 += (if (row.isNullAt(rank)) m.fillValue else get(rank)(row))
+        n += 1
+      }
+      val out = bufs.iterator.map { case (c, (o, v)) => (c, (o.result(), v.result())) }
+        .toArray
+      bufs.clear()
+      out.iterator
+    }
+    Iterator.continually(rows.hasNext).takeWhile(identity).flatMap(_ => batch())
+  }
+
+  /** The chunk-grid index of chunk id `c` (C order over the chunk grid). */
+  private def gridIndex(m: ArrayMeta, c: Long): Seq[Int] = {
+    val grid = m.chunkGrid
+    val strides = grid.map(_.toLong).scanRight(1L)(_ * _).tail
+    grid.indices.map(k => ((c / strides(k)) % grid(k)).toInt)
+  }
+
+  /** "(dim=label, ...)" of the cell at box offset `off` in chunk `c`. */
+  private def cellLabels(m: ArrayMeta, labels: Array[LabelIndex], c: Long,
+                         off: Int): String = {
+    val ci = gridIndex(m, c)
+    val boxStride = m.chunks.scanRight(1)(_ * _).tail
+    ci.indices.map { k =>
+      val g = ci(k) * m.chunks(k) + off / boxStride(k) % m.chunks(k)
+      s"${m.dims(k)}=${labels(k).labels(g)}"
+    }.mkString("(", ", ", ")")
   }
 }

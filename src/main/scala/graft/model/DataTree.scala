@@ -331,12 +331,8 @@ object DataTree {
     def isGroup(p: Path): Boolean =
       fs.exists(new Path(p, ".zgroup")) || {
         val zj = new Path(p, "zarr.json")
-        fs.exists(zj) && {
-          val in = fs.open(zj)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          (JsonMethods.parse(txt) \ "node_type") == JString("group")
-        }
+        fs.exists(zj) && (JsonMethods.parse(new String(
+          graft.io.StoreFiles.read(fs, zj), "UTF-8")) \ "node_type") == JString("group")
       }
     def walk(p: Path): Seq[Path] =
       p +: fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)

@@ -4,8 +4,19 @@ import java.io.{ByteArrayInputStream, FileOutputStream}
 import java.nio.file.{Files, Paths}
 import java.util.zip.ZipInputStream
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{count, spark_partition_id, sum}
+
 import graft.io.Zarr
 import graft.io.Zarr.ArrayMeta
+
+/** The local filesystem under its own scheme, so store code that picks
+  * java.nio for `file` paths takes its Hadoop branch instead. */
+class OtherSchemeFS extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftlocal:///")
+}
 
 /** Real zarr v2 format (ref `backends/zarr.py:655`): interop pin against a
   * store produced by an INDEPENDENT implementation (python stdlib json/
@@ -667,5 +678,157 @@ class ZarrSpec extends SparkSpec {
          "dimension_names":["i","j"]}"""
     val e2 = intercept[IllegalArgumentException] { Zarr.parseMetaV3(stacked) }
     assert(e2.getMessage.contains("multiple transpose codecs"))
+  }
+
+  /** Every file under `dir`, by relative path. */
+  private def filesUnder(dir: String): Map[String, Seq[Byte]] = {
+    val root = Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
+  private val grid7x11 = Seq(Array.tabulate(7)(_.toDouble), Array.tabulate(11)(_.toDouble))
+
+  test("writeLongDF bytes do not depend on input partitioning or row order") {
+    import spark.implicits._
+    type Cells = Seq[(Long, Long, Option[Double])]
+    val cells: Cells = for (i <- 0 until 7; j <- 0 until 11) yield
+      (i.toLong, j.toLong, if (i == 2 && j == 3) None else Some(i * 100.0 + j))
+    // covers shard/chunk (1, 1) = rows 4-6 x cols 6-10 only partly
+    val region: Cells = for (i <- 4 until 6; j <- 6 until 9) yield (i.toLong, j.toLong, Option(-1.0))
+    def frame(cs: Cells, parts: Int): DataFrame =
+      spark.sparkContext.parallelize(cs, parts).toDF("row", "col", "v")
+    // 7 input partitions hold one row each: chunk (0, 0), rows 0-3, spans 4
+    assert(frame(cells, 7).where("row < 4 and col < 6")
+      .select(spark_partition_id()).distinct().count() >= 3)
+    def write(df: DataFrame, store: String, region: Boolean,
+              layout: String): Unit = layout match {
+      case "v2 zlib" => Zarr.writeLongDF(df, store, "v", Seq("row", "col"),
+        grid7x11, Seq(4, 6), region = region)
+      case "v2 blosc" => Zarr.writeLongDF(df, store, "v", Seq("row", "col"),
+        grid7x11, Seq(4, 6), compressor = Some(("blosc:lz4:1", 5)), region = region)
+      case "v3 sharded" => Zarr.writeLongDF(df, store, "v", Seq("row", "col"),
+        grid7x11, Seq(4, 6), zarrFormat = 3, shardInner = Some(Seq(2, 3)),
+        region = region)
+    }
+    Seq("v2 zlib", "v2 blosc", "v3 sharded").foreach { layout =>
+      val stores = Seq[(Cells => Cells, Int)]((identity, 1), (identity, 7), (_.reverse, 7))
+        .map { case (order, parts) =>
+          val store = Files.createTempDirectory("zinv").toString
+          write(frame(order(cells), parts), store, region = false, layout)
+          write(frame(order(region), parts), store, region = true, layout)
+          store
+        }
+      val files = stores.map(filesUnder)
+      assert(files.forall(_ == files.head), layout)
+      val back = Zarr.toLongDF(spark, stores.head, "v").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      for (i <- 4 until 7; j <- 6 until 11) {
+        val v = back((i.toLong, j.toLong))
+        if (i < 6 && j < 9) assert(v == -1.0, s"$layout ($i, $j)")
+        else assert(v.isNaN, s"$layout ($i, $j) = $v: uncovered cells read fill_value")
+      }
+      assert(back((0L, 0L)) == 0.0 && back((6L, 5L)) == 605.0 && back((2L, 3L)).isNaN,
+        layout)
+    }
+  }
+
+  test("writeLongDF: a partition holding more cells than the map-side buffer") {
+    val (ny, nx) = (530, 500) // the buffer fills mid-row, inside chunk row 4
+    assert(ny * nx > Zarr.PartialCells)
+    val coords = Seq(Array.tabulate(ny)(_.toDouble), Array.tabulate(nx)(_.toDouble))
+    val stores = Seq(1, 4).map { parts =>
+      val df = spark.range(0, ny * nx, 1, parts)
+        .selectExpr(s"id div $nx as y", s"id % $nx as x", "cast(id as double) / 4 as v")
+      val store = Files.createTempDirectory("zcap").toString
+      Zarr.writeLongDF(df, store, "v", Seq("y", "x"), coords, Seq(128, 128))
+      store
+    }
+    assert(filesUnder(stores(0)) == filesUnder(stores(1)))
+    val n = ny.toLong * nx
+    val r = Zarr.toLongDF(spark, stores(0), "v").agg(count("v"), sum("v")).head()
+    assert(r.getLong(0) == n && r.getDouble(1) == (n - 1) * n / 8.0)
+  }
+
+  test("writeLongDF: two rows for one cell raise 'duplicate cell' with its labels") {
+    import spark.implicits._
+    val cells = Seq((0L, 10L, 1.0), (1L, 11L, 2.0), (1L, 10L, 5.0), (1L, 11L, 3.0))
+    Seq(1, 2).foreach { parts => // the duplicates in one input partition, then two
+      val df = spark.sparkContext.parallelize(cells, parts).toDF("row", "col", "v")
+      val e = intercept[Exception] {
+        Zarr.writeLongDF(df, Files.createTempDirectory("zdup").toString, "v",
+          Seq("row", "col"), Seq(Array(0.0, 1.0), Array(10.0, 11.0)), chunks = Seq(2, 2))
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage)
+          .contains("duplicate cell (row=1.0, col=11.0) in writeLongDF")), e.getMessage)
+    }
+  }
+
+  test("a store on another Hadoop filesystem round-trips like the local store") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.graftlocal.impl",
+      classOf[OtherSchemeFS].getName)
+    val df = (for (i <- 0 until 7; j <- 0 until 11)
+      yield (i.toLong, j.toLong, i * 100.0 + j)).toDF("row", "col", "v")
+    val patch = (for (i <- 0 until 3; j <- 0 until 3)
+      yield (i.toLong, j.toLong, -1.0)).toDF("row", "col", "v")
+    Seq(2, 3).foreach { fmt =>
+      val stores = Seq("", "graftlocal:").map { scheme =>
+        val dir = Files.createTempDirectory("zfs").toString
+        val store = scheme + dir
+        Zarr.writeLongDF(df, store, "v", Seq("row", "col"), grid7x11, Seq(4, 6),
+          zarrFormat = fmt)
+        Zarr.writeLongDF(patch, store, "v", Seq("row", "col"), grid7x11, Seq(4, 6),
+          zarrFormat = fmt, region = true)
+        // value bits: the patched chunk holds NaN fill, and NaN != NaN
+        val bits = java.lang.Double.doubleToLongBits _
+        (dir, Zarr.toLongDF(spark, store, "v").collect()
+          .map(r => (r.getLong(0), r.getLong(1), bits(r.getDouble(2)))).toSet,
+          Zarr.readArray(spark, store, "v")._2.toSeq.map(bits))
+      }
+      assert(filesUnder(stores(0)._1) == filesUnder(stores(1)._1), s"v$fmt")
+      assert(stores(0)._2.size == 77 && stores(0)._2 == stores(1)._2, s"v$fmt")
+      assert(stores(0)._3 == stores(1)._3, s"v$fmt")
+    }
+  }
+
+  test("a local store with Hadoop .crc sidecars reads after a region rewrite") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val store = Files.createTempDirectory("zcrc").toString
+    val df = (for (i <- 0 until 7; j <- 0 until 11)
+      yield (i.toLong, j.toLong, i * 100.0 + j)).toDF("row", "col", "v")
+    Zarr.writeLongDF(df, store, "v", Seq("row", "col"), grid7x11, Seq(4, 6))
+    // rewrite every file through Hadoop's checksummed local filesystem, as
+    // a store written by Hadoop's local create carries a sidecar per file
+    val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    filesUnder(store).foreach { case (rel, bytes) =>
+      val out = local.create(new Path(store, rel), true)
+      try out.write(bytes.toArray) finally out.close()
+    }
+    val crc00 = Paths.get(store, "v", ".0.0.crc")
+    assert(Files.exists(crc00) && Files.exists(Paths.get(store, "v", ".1.1.crc")))
+    val patch = (for (i <- 0 until 4; j <- 0 until 6)
+      yield (i.toLong, j.toLong, -1.0)).toDF("row", "col", "v")
+    Zarr.writeLongDF(patch, store, "v", Seq("row", "col"), grid7x11, Seq(4, 6),
+      region = true)
+    // the rewritten chunk's sidecar is gone, so Hadoop readers still agree
+    assert(!Files.exists(crc00))
+    filesUnder(store).keys.filterNot(_.split('/').last.startsWith(".")).foreach { rel =>
+      val in = local.open(new Path(store, rel)); try in.readAllBytes() finally in.close()
+    }
+    def check(): Unit = {
+      val back = Zarr.toLongDF(spark, store, "v").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(back.size == 77)
+      assert(back((3L, 5L)) == -1.0 && back((4L, 5L)) == 405.0 && back((3L, 6L)) == 306.0)
+    }
+    check()
+    // a stale sidecar is never consulted by the local read
+    Files.copy(Paths.get(store, "v", ".1.1.crc"), crc00)
+    check()
   }
 }
