@@ -17,13 +17,12 @@ object Tables {
   def nation(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "region")
   /** events.ts has shipped as both parquet TIMESTAMP(NANOS) (older testdata
-    * drops — Spark only reads those as physical INT64 via
-    * `spark.sql.legacy.parquet.nanosAsLong`) and TIMESTAMP(MICROS) (current
-    * drops — read natively). Dispatch on the scanned dtype so both work;
-    * DuckDB truncates nanos to µs on the same file, so the oracle agrees
-    * either way. */
+    * drops — Spark only reads those as physical INT64, under
+    * `spark.sql.legacy.parquet.nanosAsLong`, which [[graft.GraftSession]]
+    * sets) and TIMESTAMP(MICROS) (current drops — read natively). Dispatch
+    * on the scanned dtype so both work; DuckDB truncates nanos to µs on the
+    * same file, so the oracle agrees either way. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampType}
     val raw = apply(spark, dir, "events")

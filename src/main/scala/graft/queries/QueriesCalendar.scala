@@ -35,9 +35,9 @@ object QueriesCalendar {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q119_cftime_calendars" -> ((s, dir) => {
-      // Tables.events, not the raw parquet read: events.ts is
-      // TIMESTAMP(NANOS) and needs the nanosAsLong conf set (the ts column
-      // itself is pruned away below).
+      // Tables.events, not the raw parquet read: in old drops events.ts
+      // is TIMESTAMP(NANOS), a raw INT64 until Tables.events decodes it
+      // (the ts column itself is pruned away below).
       val base = Tables.events(s, dir)
         .select((col("event_id") % 150000L).as("days")).distinct()
       // Materialize each decoded struct once, then project fields — avoids

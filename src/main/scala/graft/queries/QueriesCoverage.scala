@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{BinaryType, DecimalType, LongType,
   StructField, StructType}
 import graft.model.{MultiDataset, XDataset}
 import graft.model.XDataset.exactSum
+import graft.GraftSession.scratch
 import graft.io.Tables
 
 /** Driver-checked queries for operators that previously had only unit
@@ -128,7 +129,7 @@ object QueriesCoverage {
     // one store per year-slice, read back together and combined
     "q180_save_mfdataset" -> ((s, dir) => {
       import graft.io.Store
-      val base = "/tmp/graft_mf_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "mf", dir)
       val orders = Tables.orders(s, dir)
         .withColumn("o_year", year(col("o_orderdate")))
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_year")
@@ -230,7 +231,7 @@ object QueriesCoverage {
     // HDF5 spec "Fractal Heap"/"Version 2 B-trees"/filter id 2)
     "q169_netcdf4_dense" -> ((s, dir) => {
       import graft.io.HDF5
-      val base = "/tmp/graft_nc4d_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "nc4d", dir)
       new java.io.File(base).mkdirs()
       HDF5.writeNc4(base + "/part0.nc4",
         Seq("time" -> Array.tabulate(6)(_.toDouble),
@@ -252,7 +253,7 @@ object QueriesCoverage {
     "q169b_hdf5_compound" -> ((s, dir) => {
       import s.implicits._
       import graft.io.HDF5
-      val base = "/tmp/graft_h5comp_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "h5comp", dir)
       new java.io.File(base).mkdirs()
       val path = base + "/obs.h5"
       HDF5.writeCompoundFixture(path, "obs",
@@ -422,7 +423,7 @@ object QueriesCoverage {
     // engine that wraps the parquet reader — both through openDataset
     "q192_backend_dispatch" -> ((s, dir) => {
       import graft.io.{Backends, NetCDF}
-      val base = "/tmp/graft_beng_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "beng", dir)
       new java.io.File(base).mkdirs()
       NetCDF.write(base + "/part0.nc",
         Seq(NetCDF.Dim("time", 6), NetCDF.Dim("lat", 5)), Seq(
@@ -486,7 +487,7 @@ object QueriesCoverage {
     // absent grid cells come back NaN and are filtered on read
     "q195_to_netcdf" -> ((s, dir) => {
       import graft.io.NetCDF
-      val base = "/tmp/graft_nc_export_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "nc_export", dir)
       new java.io.File(base).mkdirs()
       val grid = Tables.lineitem(s, dir)
         .groupBy(month(col("l_shipdate")).as("m"),
@@ -507,7 +508,7 @@ object QueriesCoverage {
     // the read-back result must be byte-identical to a plain filter
     "q197_zorder" -> ((s, dir) => {
       import graft.io.ZOrder
-      val base = "/tmp/graft_zorder_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "zorder", dir)
       ZOrder.write(Tables.events(s, dir), base,
         Seq("user_id", "ts"), numFiles = 16)
       graft.io.Store.open(s, base)
@@ -521,16 +522,17 @@ object QueriesCoverage {
     // sides bucketed by the join key -> the sort-merge join reads
     // pre-bucketed files with NO exchange on either side at any scale
     "q187_bucketed_join" -> ((s, dir) => {
-      val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val ordersT = s"graft_bkt_orders_$tag"
-      val custT = s"graft_bkt_customer_$tag"
+      val ordersP = scratch(s, "bkt_orders", dir)
+      val custP = scratch(s, "bkt_customer", dir)
+      val ordersT = "graft_" + new java.io.File(ordersP).getName
+      val custT = "graft_" + new java.io.File(custP).getName
       Tables.orders(s, dir).write.mode("overwrite")
         .bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", s"/tmp/graft_bkt/$ordersT")
+        .option("path", ordersP)
         .saveAsTable(ordersT)
       Tables.customer(s, dir).write.mode("overwrite")
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", s"/tmp/graft_bkt/$custT")
+        .option("path", custP)
         .saveAsTable(custT)
       s.table(ordersT)
         .join(s.table(custT), col("o_custkey") === col("c_custkey"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import graft.model.{Positions, XDataset}
 import graft.model.XDataset.exactSum
+import graft.GraftSession.scratch
 import graft.io.{CFDecode, Tables}
 import graft.align.AsOf
 import graft.agg.Groupers
@@ -520,7 +521,7 @@ object QueriesMore {
     // overwrite one chunk (dynamic partition overwrite must leave the rest
     // intact), read back with a chunk predicate (-> partition pruning).
     "q97_store_roundtrip" -> ((s, dir) => {
-      val path = "/tmp/graft_store_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val path = scratch(s, "store", dir)
       val src = Tables.orders(s, dir)
         .withColumn("o_year", year(col("o_orderdate")))
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_year")
@@ -559,7 +560,7 @@ object QueriesMore {
       import graft.model.{DataTree, XDataset}
       import graft.io.Zarr
       import org.apache.spark.sql.types.DecimalType
-      val root = "/tmp/graft_ztree_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val root = scratch(s, "ztree", dir)
       val grid = s.range(0, 24).select(
         (col("id") / 4).cast("long").as("t"),
         (col("id") % 4).cast("long").as("x"))
@@ -587,7 +588,7 @@ object QueriesMore {
     // distributed (one task per chunk file).
     "q152_zarr_v3" -> ((s, dir) => {
       import graft.io.Zarr
-      val store = "/tmp/graft_zarr3_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val store = scratch(s, "zarr3", dir)
       val grid = s.range(0, 30).select(
         (col("id") / 5).cast("long").as("time"),
         (col("id") % 5).cast("long").as("lat"))
@@ -609,7 +610,7 @@ object QueriesMore {
     // inner-chunk granularity. Write + format-transparent read-back.
     "q205_zarr_sharded" -> ((s, dir) => {
       import graft.io.Zarr
-      val store = "/tmp/graft_zarr3s_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val store = scratch(s, "zarr3s", dir)
       val grid = s.range(0, 48).select(
         (col("id") / 6).cast("long").as("time"),
         (col("id") % 6).cast("long").as("lat"))
@@ -629,7 +630,7 @@ object QueriesMore {
     // the aggregate straight from the parquet — independent of the codec.
     "q222_zarr_blosc" -> ((s, dir) => {
       import graft.io.Zarr
-      val store = "/tmp/graft_zarrbl_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val store = scratch(s, "zarrbl", dir)
       val grid = Tables.orders(s, dir)
         .filter(year(col("o_orderdate")) === 1995)
         .groupBy(
@@ -654,7 +655,7 @@ object QueriesMore {
     // io/Blosc.scala end to end through the store machinery.
     "q296_zarr_bitshuffle" -> ((s, dir) => {
       import graft.io.Zarr
-      val store = "/tmp/graft_zarrbs_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val store = scratch(s, "zarrbs", dir)
       val grid = Tables.orders(s, dir)
         .filter(year(col("o_orderdate")) === 1996)
         .groupBy(
@@ -671,7 +672,7 @@ object QueriesMore {
 
     "q135_zarr_roundtrip" -> ((s, dir) => {
       import graft.io.Zarr
-      val store = "/tmp/graft_zarr_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val store = scratch(s, "zarr", dir)
       val grid = s.range(0, 30).select(
         (col("id") / 5).cast("long").as("time"),
         (col("id") % 5).cast("long").as("lat"))
@@ -691,7 +692,7 @@ object QueriesMore {
 
     "q115_netcdf_roundtrip" -> ((s, dir) => {
       import graft.io.NetCDF
-      val base = "/tmp/graft_nc_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "nc", dir)
       new java.io.File(base).mkdirs()
       val dims = Seq(NetCDF.Dim("time", 6), NetCDF.Dim("lat", 5))
       NetCDF.write(base + "/part0.nc", dims, Seq(
@@ -715,7 +716,7 @@ object QueriesMore {
     // B-tree, chunk B-tree, filter pipeline — not a replay of the writer.
     "q168_netcdf4_roundtrip" -> ((s, dir) => {
       import graft.io.HDF5
-      val base = "/tmp/graft_nc4_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "nc4", dir)
       new java.io.File(base).mkdirs()
       HDF5.writeNc4(base + "/part0.nc4",
         Seq("time" -> Array.tabulate(6)(_.toDouble),
@@ -739,7 +740,7 @@ object QueriesMore {
     // the hash. Counts are < 2^24, exact in the f32 samples szip codes.
     "q231_hdf5_szip" -> ((s, dir) => {
       import graft.io.HDF5
-      val base = "/tmp/graft_h5sz_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "h5sz", dir)
       new java.io.File(base).mkdirs()
       val cells = Tables.orders(s, dir)
         .filter(year(col("o_orderdate")) === 1995)
@@ -770,7 +771,7 @@ object QueriesMore {
     // with every block's lookup3 checksum verified.
     "q295_hdf5_extensible_array" -> ((s, dir) => {
       import graft.io.HDF5
-      val base = "/tmp/graft_h5ea_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "h5ea", dir)
       new java.io.File(base).mkdirs()
       val cells = Tables.lineitem(s, dir)
         .groupBy((col("l_linenumber") - 1).cast("int").as("ln"),
@@ -796,7 +797,7 @@ object QueriesMore {
     // scale-offset leg, but through the swizzled EA index.
     "q389_hdf5_swizzled_ea" -> ((s, dir) => {
       import graft.io.HDF5
-      val base = "/tmp/graft_h5swz_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "h5swz", dir)
       new java.io.File(base).mkdirs()
       val od = Tables.orders(s, dir)
         .filter(year(col("o_orderdate")).between(1995, 2001))
@@ -827,7 +828,7 @@ object QueriesMore {
     // order, span walk, header layout) breaks the hash
     "q354_hdf5_nbit_scaleoffset" -> ((s, dir) => {
       import graft.io.HDF5
-      val base = "/tmp/graft_h5nb_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "h5nb", dir)
       new java.io.File(base).mkdirs()
       val li = Tables.lineitem(s, dir)
         .filter(year(col("l_shipdate")).between(1995, 2001))
@@ -868,7 +869,7 @@ object QueriesMore {
     // span extraction, or sign extension breaks the hash
     "q371_hdf5_nbit_bigendian" -> ((s, dir) => {
       import graft.io.HDF5
-      val base = "/tmp/graft_h5benb_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "h5benb", dir)
       new java.io.File(base).mkdirs()
       val od = Tables.orders(s, dir)
         .filter(year(col("o_orderdate")).between(1995, 2001))
@@ -928,8 +929,7 @@ object QueriesMore {
         val i = r.getInt(0) * 4 + r.getInt(1)
         cnt(i) = r.getLong(2).toDouble; rev(i) = r.getLong(3).toDouble
       }
-      val path = java.nio.file.Paths.get("/tmp/graft_npz_" +
-        dir.replaceAll("[^a-zA-Z0-9]", "_") + ".npz")
+      val path = java.nio.file.Paths.get(scratch(s, "npz", dir) + ".npz")
       java.nio.file.Files.write(path, Npy.writeNpz(
         Seq(("rev_c", Seq(7, 4), rev), ("n_ord", Seq(7, 4), cnt)),
         integral = true))
@@ -947,7 +947,7 @@ object QueriesMore {
     // of the parquet path (per-segment aggregate out, read back) — the
     // oracle recomputes straight from parquet
     "q384_orc_roundtrip" -> ((s, dir) => {
-      val base = "/tmp/graft_orc_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "orc", dir)
       Tables.customer(s, dir)
         .groupBy(col("c_mktsegment").as("seg"))
         .agg(count(lit(1)).as("n_cust"),
@@ -980,7 +980,7 @@ object QueriesMore {
     // come back byte-faithful (doubles round-trip via shortest repr)
     "q359_csv_roundtrip" -> ((s, dir) => {
       import org.apache.spark.sql.types._
-      val base = "/tmp/graft_csv_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "csv", dir)
       Tables.customer(s, dir).select(col("c_custkey"),
           concat(col("c_name"), lit(", \""), col("c_mktsegment"),
             lit("\" x")).as("memo"),
@@ -1004,7 +1004,7 @@ object QueriesMore {
     // libLZF codec in io/Lzf.scala and the chunk-granular convert
     "q232_hdf5_lzf" -> ((s, dir) => {
       import graft.io.HDF5
-      val base = "/tmp/graft_h5lzf_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "h5lzf", dir)
       new java.io.File(base).mkdirs()
       val cells = Tables.orders(s, dir)
         .groupBy((year(col("o_orderdate")) - 1995).cast("int").as("y"),
@@ -1027,7 +1027,7 @@ object QueriesMore {
     // walk — 5x5 supplier counts by nation, deflate-filtered entries
     "q233_hdf5_v4fixed" -> ((s, dir) => {
       import graft.io.HDF5
-      val base = "/tmp/graft_h5v4_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "h5v4", dir)
       new java.io.File(base).mkdirs()
       val cells = Tables.supplier(s, dir)
         .groupBy((col("s_nationkey") / 5).cast("int").as("r"),
@@ -1050,7 +1050,7 @@ object QueriesMore {
     // through the nested-key glob + zstd frame decode
     "q234_zarr_nested_zstd" -> ((s, dir) => {
       import graft.io.Zarr
-      val store = "/tmp/graft_zarrnz_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val store = scratch(s, "zarrnz", dir)
       val grid = Tables.orders(s, dir)
         .filter(year(col("o_orderdate")) === 1996)
         .groupBy(
@@ -1073,7 +1073,7 @@ object QueriesMore {
     // derivational oracle recomputes from parquet, layout-independent
     "q247_zarr_transpose" -> ((s, dir) => {
       import graft.io.Zarr
-      val store = "/tmp/graft_zarrtp_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val store = scratch(s, "zarrtp", dir)
       val grid = Tables.orders(s, dir)
         .filter(year(col("o_orderdate")) === 1995)
         .groupBy(
@@ -1098,7 +1098,7 @@ object QueriesMore {
     // derivational oracle recomputes both from the parquet
     "q235_h5_open_dataset" -> ((s, dir) => {
       import graft.io.HDF5
-      val base = "/tmp/graft_h5od_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "h5od", dir)
       new java.io.File(base).mkdirs()
       val cells = Tables.orders(s, dir)
         .filter(year(col("o_orderdate")) === 1995)
@@ -1128,7 +1128,7 @@ object QueriesMore {
     // through NetCDF.openDataset's banded reads + dim join
     "q236_nc_open_dataset" -> ((s, dir) => {
       import graft.io.NetCDF
-      val base = "/tmp/graft_ncod_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "ncod", dir)
       new java.io.File(base).mkdirs()
       val cells = Tables.customer(s, dir)
         .groupBy((col("c_nationkey") / 5).cast("int").as("r"),
@@ -1157,7 +1157,7 @@ object QueriesMore {
     // INT64 variable): proves the version-5 header/offset path end to end
     "q115b_netcdf_cdf5" -> ((s, dir) => {
       import graft.io.NetCDF
-      val base = "/tmp/graft_nc5_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val base = scratch(s, "nc5", dir)
       new java.io.File(base).mkdirs()
       val dims = Seq(NetCDF.Dim("time", 6), NetCDF.Dim("lat", 5))
       NetCDF.write(base + "/part0.nc", dims, Seq(
@@ -1430,7 +1430,7 @@ object QueriesMore {
     // integrity aggregate whose oracle reads the ORIGINAL parquet —
     // the md5-key sum proves text survived JSON escaping byte-exactly
     "q311_jsonl_roundtrip" -> ((s, dir) => {
-      val path = "/tmp/graft_jsonl_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val path = scratch(s, "jsonl", dir)
       val docs = Tables.documents(s, dir)
         .select("doc_id", "text", "lang", "source", "n_chars")
       graft.io.JsonLines.write(docs, path)

@@ -2,12 +2,16 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession.scratch
 import graft.io.Tables
 import graft.streaming.StreamOps
 
 /** Streaming extension queries (SURVEY.md §2.11). The streaming result over
   * the finite file source must equal the batch aggregation — which is
-  * exactly what the DuckDB oracle checks. */
+  * exactly what the DuckDB oracle checks. Stateful streams take their
+  * state-store shard count ([[StreamOps.StateShards]]) from the
+  * `StreamOps` runners, and scratch files (stream fixtures, sink output,
+  * checkpoints) live under [[graft.GraftSession.scratch]]. */
 object QueriesStreaming {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -27,8 +31,6 @@ object QueriesStreaming {
         .select(col("window.start").as("w_start"), col("event_type"), col("n"))
     }),
 
-    // the same sliding windows over the STREAM source: watermarked
-    // stateful agg; over the finite source it equals q64's batch result
     // batch-train -> STREAM-serve: the q219 classifier trained on the
     // static table broadcasts onto the document stream; per-doc margin is
     // ONE streaming agg over the token-level weight join plus the bias
@@ -38,11 +40,6 @@ object QueriesStreaming {
     "q220_stream_classify" -> ((s, dir) => {
       import graft.llm.{Classifier, TextAnalysis}
       import org.apache.spark.sql.types.DecimalType
-      // stateful streaming agg: scope the state-store shard count down
-      // (fixed per checkpoint at start), like q127/q208
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
       val docs = Tables.documents(s, dir)
       // materialize the 65-row model ONCE (bounded driver state, the
       // k-means-centroid pattern) — leaving it lazy would re-run the
@@ -71,7 +68,6 @@ object QueriesStreaming {
           (col("ms") + lit(wBias)).cast("double").as("margin"),
           ((col("ms") + lit(wBias)) >= 0).cast("int").as("pred"))
       StreamOps.runToCompletion(s, agg, s"stream_clf_${System.nanoTime}")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     }),
 
     // LEFT OUTER stream-stream interval join: unmatched error events emit
@@ -83,24 +79,20 @@ object QueriesStreaming {
     // unmatched left rows older than that; later unmatched rows stay in
     // state, never emitted — the documented outer-join watermark contract.
     "q208_stream_outer_join" -> ((s, dir) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val ev = StreamOps.eventsStream(s, dir).withWatermark("ts", "1 hour")
-        val errors = ev.filter(col("event_type") === "error")
-          .select(col("user_id").as("e_user"), col("ts").as("e_ts"),
-            col("event_id").as("e_id"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-            col("event_id").as("p_id"), col("value").as("p_value"))
-        val joined = StreamOps.intervalJoin(errors, purchases,
-            "e_user", "p_user", "e_ts", "p_ts", "1 hour",
-            joinType = "leftOuter")
-          .select(col("e_id").as("event_id"), col("p_id").as("purchase_id"),
-            col("p_value"))
-        StreamOps.runToCompletion(s, joined,
-          s"stream_outer_${System.nanoTime}", mode = "append")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val ev = StreamOps.eventsStream(s, dir).withWatermark("ts", "1 hour")
+      val errors = ev.filter(col("event_type") === "error")
+        .select(col("user_id").as("e_user"), col("ts").as("e_ts"),
+          col("event_id").as("e_id"))
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+          col("event_id").as("p_id"), col("value").as("p_value"))
+      val joined = StreamOps.intervalJoin(errors, purchases,
+          "e_user", "p_user", "e_ts", "p_ts", "1 hour",
+          joinType = "leftOuter")
+        .select(col("e_id").as("event_id"), col("p_id").as("purchase_id"),
+          col("p_value"))
+      StreamOps.runToCompletion(s, joined,
+        s"stream_outer_${System.nanoTime}", mode = "append")
     }),
 
     // FULL OUTER stream-stream interval join, gated on a CONSTRUCTED
@@ -117,52 +109,48 @@ object QueriesStreaming {
     // it exactly.
     "q355_stream_full_outer" -> ((s, dir) => {
       import org.apache.spark.sql.types._
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val base = "/tmp/graft_fo_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val ev = Tables.events(s, dir)
-        val mx = ev.agg(max(col("ts")).as("m")) // 1-row bound
-        val old = col("ts") <= col("m") - expr("INTERVAL 6 HOURS")
-        ev.crossJoin(broadcast(mx))
-          .filter(col("event_type") === "error" && old)
-          .select(col("user_id").as("k"), col("ts").as("e_ts"),
-            col("event_id").as("e_id"))
-          .unionByName(mx.select(lit(-1L).as("k"), col("m").as("e_ts"),
-            lit(-1L).as("e_id")))
-          .write.mode("overwrite").parquet(base + "/left")
-        ev.crossJoin(broadcast(mx))
-          .filter(col("event_type") === "purchase" && old)
-          .select(col("user_id").as("k"), col("ts").as("p_ts"),
-            col("event_id").as("p_id"), col("value").as("p_value"))
-          .unionByName(mx.select(lit(-1L).as("k"), col("m").as("p_ts"),
-            lit(-2L).as("p_id"), lit(0.0).as("p_value")))
-          .write.mode("overwrite").parquet(base + "/right")
-        val lSchema = StructType(Seq(StructField("k", LongType),
-          StructField("e_ts", TimestampType), StructField("e_id", LongType)))
-        val rSchema = StructType(Seq(StructField("k", LongType),
-          StructField("p_ts", TimestampType), StructField("p_id", LongType),
-          StructField("p_value", DoubleType)))
-        val lhs = s.readStream.schema(lSchema).parquet(base + "/left")
-          .withWatermark("e_ts", "1 hour")
-          .select(col("k").as("lk"), col("e_ts"), col("e_id"))
-        val rhs = s.readStream.schema(rSchema).parquet(base + "/right")
-          .withWatermark("p_ts", "1 hour")
-          .select(col("k").as("rk"), col("p_ts"), col("p_id"),
-            col("p_value"))
-        val joined = StreamOps.intervalJoin(lhs, rhs, "lk", "rk",
-            "e_ts", "p_ts", "30 minutes", joinType = "fullOuter")
-          .select(col("e_id"), col("p_id"), col("p_value"))
-        StreamOps.runToCompletion(s, joined,
-          s"stream_fo_${System.nanoTime}", mode = "append")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val base = scratch(s, "fo", dir)
+      val ev = Tables.events(s, dir)
+      val mx = ev.agg(max(col("ts")).as("m")) // 1-row bound
+      val old = col("ts") <= col("m") - expr("INTERVAL 6 HOURS")
+      ev.crossJoin(broadcast(mx))
+        .filter(col("event_type") === "error" && old)
+        .select(col("user_id").as("k"), col("ts").as("e_ts"),
+          col("event_id").as("e_id"))
+        .unionByName(mx.select(lit(-1L).as("k"), col("m").as("e_ts"),
+          lit(-1L).as("e_id")))
+        .write.mode("overwrite").parquet(base + "/left")
+      ev.crossJoin(broadcast(mx))
+        .filter(col("event_type") === "purchase" && old)
+        .select(col("user_id").as("k"), col("ts").as("p_ts"),
+          col("event_id").as("p_id"), col("value").as("p_value"))
+        .unionByName(mx.select(lit(-1L).as("k"), col("m").as("p_ts"),
+          lit(-2L).as("p_id"), lit(0.0).as("p_value")))
+        .write.mode("overwrite").parquet(base + "/right")
+      val lSchema = StructType(Seq(StructField("k", LongType),
+        StructField("e_ts", TimestampType), StructField("e_id", LongType)))
+      val rSchema = StructType(Seq(StructField("k", LongType),
+        StructField("p_ts", TimestampType), StructField("p_id", LongType),
+        StructField("p_value", DoubleType)))
+      val lhs = s.readStream.schema(lSchema).parquet(base + "/left")
+        .withWatermark("e_ts", "1 hour")
+        .select(col("k").as("lk"), col("e_ts"), col("e_id"))
+      val rhs = s.readStream.schema(rSchema).parquet(base + "/right")
+        .withWatermark("p_ts", "1 hour")
+        .select(col("k").as("rk"), col("p_ts"), col("p_id"),
+          col("p_value"))
+      val joined = StreamOps.intervalJoin(lhs, rhs, "lk", "rk",
+          "e_ts", "p_ts", "30 minutes", joinType = "fullOuter")
+        .select(col("e_id"), col("p_id"), col("p_value"))
+      StreamOps.runToCompletion(s, joined,
+        s"stream_fo_${System.nanoTime}", mode = "append")
     }),
 
     // streaming parquet FILE SINK (exactly-once manifest): purchases
     // stream into a parquet directory via AvailableNow; the committed
     // output re-reads to exactly the batch filter's rows
     "q209_stream_file_sink" -> ((s, dir) => {
-      val out = "/tmp/graft_sink_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val out = scratch(s, "sink", dir)
       val ev = StreamOps.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
         .select("event_id", "user_id", "value")
@@ -187,19 +175,17 @@ object QueriesStreaming {
         s"stream_static_${System.nanoTime}")
     }),
 
+    // the same sliding windows over the STREAM source: watermarked
+    // stateful agg; over the finite source it equals q64's batch result
     "q64b_stream_sliding" -> ((s, dir) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val agg = StreamOps.eventsStream(s, dir)
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("window.start").as("w_start"), col("event_type"),
-            col("n"))
-        StreamOps.runToCompletion(s, agg,
-          s"stream_sliding_${System.nanoTime}", availableNow = true)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val agg = StreamOps.eventsStream(s, dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("w_start"), col("event_type"),
+          col("n"))
+      StreamOps.runToCompletion(s, agg,
+        s"stream_sliding_${System.nanoTime}", availableNow = true)
     }),
 
     // streaming exact dedup: per-user daily first-event stream. State is
@@ -226,14 +212,10 @@ object QueriesStreaming {
     // streaming sessionization: 30-min-gap session windows per user ==
     // the batch lag/cumsum islands (break at diff >= gap, end-exclusive)
     "q139_stream_sessions" -> ((s, dir) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val agg = StreamOps.sessionize(
-          StreamOps.eventsStream(s, dir), "user_id", "ts", "30 minutes")
-        StreamOps.runToCompletion(s, agg,
-          s"stream_sessions_${System.nanoTime}", availableNow = true)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val agg = StreamOps.sessionize(
+        StreamOps.eventsStream(s, dir), "user_id", "ts", "30 minutes")
+      StreamOps.runToCompletion(s, agg,
+        s"stream_sessions_${System.nanoTime}", availableNow = true)
     }),
 
     // streaming curation pipeline: quality-gate + keep-first dedup over a
@@ -246,14 +228,10 @@ object QueriesStreaming {
     // StreamingSpec asserts the eviction actually happens in update mode.
     // Over the finite source the result equals the batch filter+group.
     "q158_stream_curation" -> ((s, dir) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val agg = StreamOps.curationDedup(
-          StreamOps.documentsStream(s, dir), "1 day", "1 hour")
-        StreamOps.runToCompletion(s, agg,
-          s"stream_curation_${System.nanoTime}", availableNow = true)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val agg = StreamOps.curationDedup(
+        StreamOps.documentsStream(s, dir), "1 day", "1 hour")
+      StreamOps.runToCompletion(s, agg,
+        s"stream_curation_${System.nanoTime}", availableNow = true)
     }),
 
     // custom per-key state (mapGroupsWithState): longest strictly-
@@ -261,41 +239,29 @@ object QueriesStreaming {
     // sequential recurrence no built-in streaming aggregation expresses;
     // over the finite source it equals the batch gaps-and-islands window
     "q196_stream_state" -> ((s, dir) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val out = StreamOps.increasingStreaks(StreamOps.eventsStream(s, dir))
-        StreamOps.runToCompletion(s, out,
-          s"stream_state_${System.nanoTime}", mode = "update",
-          availableNow = true)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val out = StreamOps.increasingStreaks(StreamOps.eventsStream(s, dir))
+      StreamOps.runToCompletion(s, out,
+        s"stream_state_${System.nanoTime}", mode = "update",
+        availableNow = true)
     }),
 
     // stream-stream interval join (streaming as-of analog): purchases in
     // the hour before each error, per user; == the batch interval join
     "q127_stream_join" -> ((s, dir) => {
-      // A stream-stream join keeps TWO state stores, each sharded into
-      // spark.sql.shuffle.partitions tasks per micro-batch; at this volume
-      // the wall time is task-count bound, so scope the partition count
-      // down for the stateful query (it is fixed per checkpoint at start).
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val ev = StreamOps.eventsStream(s, dir).withWatermark("ts", "1 hour")
-        val errors = ev.filter(col("event_type") === "error")
-          .select(col("user_id").as("e_user"), col("ts").as("e_ts"),
-            col("event_id").as("e_id"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-            col("event_id").as("p_id"), col("value").as("p_value"))
-        val joined = StreamOps.intervalJoin(errors, purchases,
-            "e_user", "p_user", "e_ts", "p_ts", "1 hour")
-          .select(col("e_id").as("event_id"), col("p_id").as("purchase_id"),
-            col("p_value"))
-        StreamOps.runToCompletion(s, joined,
-          s"stream_join_${System.nanoTime}", mode = "append",
-          availableNow = true)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val ev = StreamOps.eventsStream(s, dir).withWatermark("ts", "1 hour")
+      val errors = ev.filter(col("event_type") === "error")
+        .select(col("user_id").as("e_user"), col("ts").as("e_ts"),
+          col("event_id").as("e_id"))
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+          col("event_id").as("p_id"), col("value").as("p_value"))
+      val joined = StreamOps.intervalJoin(errors, purchases,
+          "e_user", "p_user", "e_ts", "p_ts", "1 hour")
+        .select(col("e_id").as("event_id"), col("p_id").as("purchase_id"),
+          col("p_value"))
+      StreamOps.runToCompletion(s, joined,
+        s"stream_join_${System.nanoTime}", mode = "append",
+        availableNow = true)
     }),
 
     // streaming near-dup filter: the document STREAM (mirrored ids — the
@@ -306,30 +272,23 @@ object QueriesStreaming {
     // (16 bands x 4 rows) miss with probability < 1e-7 and the planted
     // mirrors are exact (J = 1), the same argument q51 rests on.
     "q238_stream_lsh_filter" -> ((s, dir) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val ref = Tables.documents(s, dir).select("doc_id", "text")
-        val stream = StreamOps.documentsStream(s, dir)
-          .select((-col("doc_id") - 1L).as("doc_id"), col("text"))
-        val out = StreamOps.streamNearDup(stream, ref, "doc_id", "text",
-          k = 3, numHashes = 64, bands = 16, threshold = 0.9)
-        StreamOps.runToCompletion(s, out,
-          s"stream_lsh_${System.nanoTime}", availableNow = true)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val ref = Tables.documents(s, dir).select("doc_id", "text")
+      val stream = StreamOps.documentsStream(s, dir)
+        .select((-col("doc_id") - 1L).as("doc_id"), col("text"))
+      val out = StreamOps.streamNearDup(stream, ref, "doc_id", "text",
+        k = 3, numHashes = 64, bands = 16, threshold = 0.9)
+      StreamOps.runToCompletion(s, out,
+        s"stream_lsh_${System.nanoTime}", availableNow = true)
     }),
 
     // streaming exact heavy hitters: hourly tumbling counts per
     // event_type maintained as watermarked streaming state, top-3 per
     // window elected over the result table (ties by type)
     "q268_stream_topk" -> ((s, dir) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try StreamOps.windowedTopK(s, StreamOps.eventsStream(s, dir),
+      StreamOps.windowedTopK(s, StreamOps.eventsStream(s, dir),
         windowDur = "1 hour", watermark = "10 minutes",
         key = "event_type", k = 3,
         name = s"stream_topk_${System.nanoTime}")
-      finally s.conf.set("spark.sql.shuffle.partitions", prev)
     }),
 
     // streaming count-min sketch: the q297 cell aggregation maintained
@@ -339,16 +298,12 @@ object QueriesStreaming {
     // corpus; the memory-sink result equals the batch sketch cell for
     // cell (same md5-prefix keys, same Carter-Wegman rows).
     "q306_stream_countmin" -> ((s, dir) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val toks = StreamOps.documentsStream(s, dir)
-          .select(explode(graft.llm.TextAnalysis.tokens(
-            lower(col("text")))).as("tok"))
-        val sk = graft.llm.Sketch.countMin(toks, "tok", w = 512)
-        StreamOps.runToCompletion(s, sk,
-          s"stream_cms_${System.nanoTime}", availableNow = true)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val toks = StreamOps.documentsStream(s, dir)
+        .select(explode(graft.llm.TextAnalysis.tokens(
+          lower(col("text")))).as("tok"))
+      val sk = graft.llm.Sketch.countMin(toks, "tok", w = 512)
+      StreamOps.runToCompletion(s, sk,
+        s"stream_cms_${System.nanoTime}", availableNow = true)
     }),
 
     // streaming equi-width histogram sketch (q312's streaming twin):
@@ -356,16 +311,12 @@ object QueriesStreaming {
     // range / width, never by stream length — and the memory-sink
     // result equals the batch histogram cell for cell
     "q317_stream_histogram" -> ((s, dir) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val bins = StreamOps.eventsStream(s, dir)
-          .select(expr(
-            "CAST(round(value * 100) AS BIGINT) div 500").as("bin"))
-          .groupBy("bin").agg(count(lit(1)).as("cnt"))
-        StreamOps.runToCompletion(s, bins,
-          s"stream_hist_${System.nanoTime}", availableNow = true)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val bins = StreamOps.eventsStream(s, dir)
+        .select(expr(
+          "CAST(round(value * 100) AS BIGINT) div 500").as("bin"))
+        .groupBy("bin").agg(count(lit(1)).as("cnt"))
+      StreamOps.runToCompletion(s, bins,
+        s"stream_hist_${System.nanoTime}", availableNow = true)
     })
   )
 

@@ -2,7 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  Trigger}
 import org.apache.spark.sql.types._
+import graft.GraftSession
+import graft.util.Parallelize
 
 /** Streaming verbs over Structured Streaming (SURVEY.md §2.11 — the
   * reference has NO streaming layer; this is the extension mandated for the
@@ -17,11 +21,10 @@ object StreamOps {
 
   /** The events parquet as a stream. The stream source needs a pinned
     * schema, so probe the batch footer first: old testdata drops carry
-    * TIMESTAMP(NANOS) `ts` (readable only as INT64 via the legacy flag —
+    * TIMESTAMP(NANOS) `ts` (INT64 under the session's legacy flag —
     * truncate to µs like the batch path in Tables); current drops carry
     * TIMESTAMP(MICROS), read natively. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", tsType),
@@ -87,11 +90,6 @@ object StreamOps {
       .select(col(key), col("session_window.start").as("session_start"),
         col("n_events"), col("v"))
 
-  /** Run a streaming query to completion against the (finite) file source
-    * and return the result as a batch DataFrame — lets the DuckDB oracle
-    * check streaming semantics. (Measured: lowering shuffle partitions for
-    * the state store does NOT reduce the ~2-3s wall — the cost is
-    * micro-batch planning/checkpoint machinery, not task count.) */
   /** Stream-static enrichment: the streaming fact rows join a STATIC
     * dimension — broadcast, so there is no streaming state and no shuffle
     * of the stream side; each micro-batch is enriched map-side (the
@@ -105,23 +103,49 @@ object StreamOps {
       .agg(count(lit(1)).as("n"),
         sum(col(valueCol).cast(DecimalType(30, 6))).cast("double").as("v"))
 
+  /** State-store shards of every stream the runners below start. A
+    * stateful operator splits its state into `spark.sql.shuffle.partitions`
+    * shards, fixed in the checkpoint when the query starts; every
+    * micro-batch runs one task and keeps one set of state files per shard.
+    * The runners start their query with the width pinned to `StateShards`
+    * (the caller's is restored right after), so a stream's shard count
+    * does not grow with the session's width (one per core, or keyed to
+    * the data by `tuneShuffle`). Micro-batches run with AQE off, so the
+    * initial-partition pin that comes with the width is inert. */
+  val StateShards = 4
+
+  private def start(spark: SparkSession, writer: DataStreamWriter[_])
+      : StreamingQuery =
+    Parallelize.withFixedShuffle(spark, StateShards)(writer.start())
+
+  /** Deletes whatever is at `path` and returns it: a stream's checkpoint
+    * and file sink must start empty. */
+  private def emptied(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    path
+  }
+
+  /** Run a streaming query to completion against the (finite) file source
+    * and return the result as a batch DataFrame — lets the DuckDB oracle
+    * check streaming semantics. `name` names the memory table and the
+    * checkpoint, `GraftSession.scratch(spark, "ckpt", name)`, emptied
+    * first. (Measured: lowering shuffle partitions for the state store
+    * does NOT reduce the ~2-3s wall — the cost is micro-batch
+    * planning/checkpoint machinery, not task count.) */
   def runToCompletion(spark: SparkSession, agg: DataFrame, name: String,
                       mode: String = "complete",
                       availableNow: Boolean = false): DataFrame = {
+    // AvailableNow processes the finite source and terminates itself —
+    // one fewer trigger round than processAllAvailable polling
     val writer = agg.writeStream
       .outputMode(mode)
       .format("memory")
       .queryName(name)
-    // AvailableNow processes the finite source and terminates itself —
-    // one fewer trigger round than processAllAvailable polling; a
-    // pre-created checkpoint dir skips the temp-dir create/delete path.
-    val q = if (availableNow) {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(s"graft_ckpt_$name").toString
-      writer.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    } else writer.start()
+      .option("checkpointLocation",
+        emptied(spark, GraftSession.scratch(spark, "ckpt", name)))
+    val q = start(spark,
+      if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
     try {
       if (availableNow) q.awaitTermination() else q.processAllAvailable()
     } finally if (q.isActive) q.stop()
@@ -299,15 +323,12 @@ object StreamOps {
     * batch re-read of the committed output. */
   def runToParquetSink(spark: SparkSession, df: DataFrame,
                        path: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    val q = df.writeStream
+    emptied(spark, path)
+    val q = start(spark, df.writeStream
       .format("parquet")
       .option("path", s"$path/data")
       .option("checkpointLocation", s"$path/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()))
     try q.awaitTermination() finally if (q.isActive) q.stop()
     spark.read.parquet(s"$path/data")
   }

@@ -254,7 +254,7 @@ class BloscSpec extends SparkSpec {
 
   test("zarr v2 store roundtrip with the numcodecs-default blosc-lz4+shuffle") {
     import spark.implicits._
-    val store = Files.createTempDirectory("zblosc").toString
+    val store = scratchDir("zblosc")
     val df = (for (i <- 0 until 5; j <- 0 until 7)
       yield (i.toLong, j.toLong, i * 100.0 + j)).toSeq.toDF("row", "col", "v")
     Zarr.writeLongDF(df, store, "v", Seq("row", "col"),
@@ -276,7 +276,7 @@ class BloscSpec extends SparkSpec {
 
   test("zarr v3 store roundtrip with a blosc codec entry") {
     import spark.implicits._
-    val store = Files.createTempDirectory("zblosc3").toString
+    val store = scratchDir("zblosc3")
     val df = (for (i <- 0 until 4; j <- 0 until 5)
       yield (i.toLong, j.toLong, i * 10.0 + j)).toSeq.toDF("row", "col", "v")
     Zarr.writeLongDF(df, store, "v", Seq("row", "col"),

@@ -28,7 +28,7 @@ class DataTreeSpec extends SparkSpec {
   }
 
   test("open_datatree walks a store directory into a hierarchy") {
-    val root = java.nio.file.Files.createTempDirectory("graft_tree").toString
+    val root = scratchDir("graft_tree")
     Seq((1, 1.0)).toDF("k", "v").write.mode("overwrite").parquet(s"$root/")
     Seq((2, 2.0)).toDF("k", "v").write.mode("overwrite").parquet(s"$root/a")
     Seq((3, 3.0)).toDF("k", "v").write.mode("overwrite").parquet(s"$root/a/b")

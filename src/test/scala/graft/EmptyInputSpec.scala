@@ -391,11 +391,13 @@ class EmptyInputSpec extends SparkSpec {
     val emptyEv = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("a", LongType), StructField("b", LongType))))
-    ZOrder.write(emptyEv, "/tmp/graft_zorder_empty", Seq("a", "b"), 2)
-    assert(spark.read.parquet("/tmp/graft_zorder_empty").count() === 0L)
+    val empty = scratchDir("zorder_empty")
+    ZOrder.write(emptyEv, empty, Seq("a", "b"), 2)
+    assert(spark.read.parquet(empty).count() === 0L)
     // zero span (constant key) must not divide by zero
     val const = Seq((1L, 1L), (1L, 2L), (1L, 3L)).toDF("a", "b")
-    ZOrder.write(const, "/tmp/graft_zorder_const", Seq("a", "b"), 2)
-    assert(spark.read.parquet("/tmp/graft_zorder_const").count() === 3L)
+    val constDir = scratchDir("zorder_const")
+    ZOrder.write(const, constDir, Seq("a", "b"), 2)
+    assert(spark.read.parquet(constDir).count() === 3L)
   }
 }

@@ -24,7 +24,6 @@ class EventsContractSpec extends SparkSpec {
   }
 
   test("raw ts physical type is one the readers dispatch on") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for (dir <- sfDirs) {
       val raw = spark.read.parquet(s"$dir/events.parquet")
       val t = raw.schema("ts").dataType

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.scalatest.funsuite.AnyFunSuite
 import graft.io.{Blosc, HDF5, Lzf, NetCDF, Szip}
 
 /** Corruption robustness: a damaged container must raise a JVM
@@ -12,7 +11,7 @@ import graft.io.{Blosc, HDF5, Lzf, NetCDF, Szip}
   * NO checksums, so metadata flips may legitimately parse to different
   * metadata — those paths are held to "fail loudly or return promptly",
   * while fletcher32-covered chunk payloads are held to "always caught". */
-class FuzzSpec extends AnyFunSuite {
+class FuzzSpec extends SparkSpec {
 
   private def lcg(seed: Long): Iterator[Long] =
     Iterator.iterate(seed)(s =>
@@ -25,7 +24,7 @@ class FuzzSpec extends AnyFunSuite {
   }
 
   test("HDF5: every flip inside a fletcher-covered chunk payload is caught") {
-    val dir = Files.createTempDirectory("fz_h5").toString
+    val dir = scratchDir("fz_h5")
     val path = s"$dir/f.nc4"
     HDF5.writeNc4(path,
       Seq("t" -> Array.tabulate(6)(_.toDouble),
@@ -62,7 +61,7 @@ class FuzzSpec extends AnyFunSuite {
   }
 
   test("HDF5: random whole-file flips fail loudly or parse promptly") {
-    val dir = Files.createTempDirectory("fz_h5b").toString
+    val dir = scratchDir("fz_h5b")
     val path = s"$dir/f.nc4"
     HDF5.writeNc4(path,
       Seq("t" -> Array.tabulate(5)(_.toDouble)),
@@ -146,7 +145,7 @@ class FuzzSpec extends AnyFunSuite {
   }
 
   test("netCDF: header flips raise bounded errors, never allocation bombs") {
-    val dir = Files.createTempDirectory("fz_nc").toString
+    val dir = scratchDir("fz_nc")
     val path = s"$dir/f.nc"
     NetCDF.write(path,
       dims = Seq(NetCDF.Dim("t", 5), NetCDF.Dim("x", 3)),

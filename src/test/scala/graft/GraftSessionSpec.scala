@@ -12,5 +12,7 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    // a builder constant, not a flag the first events read flips
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.{ByteBuffer, ByteOrder}
-import org.scalatest.funsuite.AnyFunSuite
 import graft.io.{ArraySrc, HDF5}
 
 /** Extensible-array chunk index (HDF5 1.10+ unlimited-dimension files):
@@ -11,7 +10,7 @@ import graft.io.{ArraySrc, HDF5}
   * conformance rests on (a) these structural fixtures and (b) the
   * reader's checksum-verification-of-every-block contract, which turns
   * any layout drift on a real file into a loud error (pinned below). */
-class H5ExtensibleArraySpec extends AnyFunSuite {
+class H5ExtensibleArraySpec extends SparkSpec {
 
   private val UNDEF = -1L
 
@@ -291,7 +290,7 @@ class H5ExtensibleArraySpec extends AnyFunSuite {
     // 7x4 var chunked (2,1): grid 4x4 = 16 chunks; unlimited dim 1 —
     // libhdf5 stores EA element k as the chunk whose SWIZZLED coords
     // (dim-1 slowest) linearize to k
-    val dir = java.nio.file.Files.createTempDirectory("graft_swz").toString
+    val dir = scratchDir("graft_swz")
     val vals = Array.tabulate(28)(i => (i * 37 % 101).toDouble)
     val path = s"$dir/swz.nc4"
     HDF5.writeNc4(path,
@@ -317,7 +316,7 @@ class H5ExtensibleArraySpec extends AnyFunSuite {
   }
 
   test("unlimited dim at 0 keeps plain C order (netCDF-4 record dim)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_swz0").toString
+    val dir = scratchDir("graft_swz0")
     val vals = Array.tabulate(28)(i => (i * 13 % 97).toDouble)
     val path = s"$dir/rec.nc4"
     HDF5.writeNc4(path,
@@ -338,7 +337,7 @@ class H5ExtensibleArraySpec extends AnyFunSuite {
     // <= 124 direct-block bound), both dims ragged so edge-chunk padding
     // crosses the swizzled walk; values chosen so any chunk permutation
     // or transposition changes the readback
-    val dir = java.nio.file.Files.createTempDirectory("graft_swzL").toString
+    val dir = scratchDir("graft_swzL")
     val vals = Array.tabulate(19 * 23)(i => ((i * 131) % 997).toDouble)
     val path = s"$dir/swzl.nc4"
     HDF5.writeNc4(path,
@@ -368,8 +367,7 @@ class H5ExtensibleArraySpec extends AnyFunSuite {
       val u = 1 + rng.nextInt(nd - 1) // unlimited dim NEVER dim 0 here
       val grid = shape.zip(chunk).map { case (s, c) => (s + c - 1) / c }
       if (grid.product <= 124) { // the fixture writer's direct bound
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft_swzf$trial").toString
+        val dir = scratchDir(s"graft_swzf$trial")
         val n = shape.product
         val vals = Array.tabulate(n)(i => ((i * 193 + trial) % 1009).toDouble)
         val path = s"$dir/f.nc4"
@@ -390,7 +388,7 @@ class H5ExtensibleArraySpec extends AnyFunSuite {
   }
 
   test("swizzled-file metadata corruption still fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_swzc").toString
+    val dir = scratchDir("graft_swzc")
     val vals = Array.tabulate(28)(_.toDouble)
     val path = s"$dir/swz.nc4"
     HDF5.writeNc4(path,

@@ -1,14 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import org.scalatest.funsuite.AnyFunSuite
 import graft.io.{HDF5, PreadSrc}
 import graft.io.HDF5.WVar
 
 /** Random-access byte source: PreadSrc must be byte-identical to the
   * in-memory array path, and — the 100 TB claim — the metadata walk must
   * fault in a small bounded set of pages, not the file. */
-class H5SrcSpec extends AnyFunSuite {
+class H5SrcSpec extends SparkSpec {
 
   private def fixture(path: String, rows: Int = 64,
                       chunk: Seq[Int] = Seq(8, 2)): Unit = {
@@ -22,7 +21,7 @@ class H5SrcSpec extends AnyFunSuite {
   }
 
   test("PreadSrc slice/byteAt match the file across page boundaries") {
-    val dir = Files.createTempDirectory("graft_pread").toString
+    val dir = scratchDir("graft_pread")
     val path = s"$dir/f.nc4"
     fixture(path)
     val all = Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -41,7 +40,7 @@ class H5SrcSpec extends AnyFunSuite {
   }
 
   test("parseFile + readVar over PreadSrc equal the in-memory path") {
-    val dir = Files.createTempDirectory("graft_pread2").toString
+    val dir = scratchDir("graft_pread2")
     val path = s"$dir/f.nc4"
     fixture(path)
     val all = Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -57,7 +56,7 @@ class H5SrcSpec extends AnyFunSuite {
   }
 
   test("multi-file directory: chunk tasks carry their own file's metadata") {
-    val dir = Files.createTempDirectory("graft_mf").toString
+    val dir = scratchDir("graft_mf")
     // different chunkings per file — tasks must use per-file chunk dims
     Seq(("a.nc4", Seq(8, 2), 0), ("b.nc4", Seq(4, 5), 1000)).foreach {
       case (name, chunk, base) =>
@@ -69,7 +68,7 @@ class H5SrcSpec extends AnyFunSuite {
               yield base + t * 100.0 + l * 1.5).toArray,
             chunk = Some(chunk))))
     }
-    val rows = HDF5.toLongDF(TestSpark.spark, dir, "temp")
+    val rows = HDF5.toLongDF(spark, dir, "temp")
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSet
     val want = (for (base <- Seq(0, 1000); t <- 0 until 12; l <- 0 until 5)
       yield ((base + t).toLong, l * 0.5, base + t * 100.0 + l * 1.5)).toSet
@@ -77,7 +76,7 @@ class H5SrcSpec extends AnyFunSuite {
   }
 
   test("metadata walk touches a bounded page set, not the data payload") {
-    val dir = Files.createTempDirectory("graft_pread3").toString
+    val dir = scratchDir("graft_pread3")
     val path = s"$dir/big.nc4"
     // ~3.4 MB of chunk payload dwarfs the metadata
     fixture(path, rows = 85000, chunk = Seq(64, 5))

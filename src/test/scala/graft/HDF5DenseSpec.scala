@@ -30,7 +30,7 @@ class HDF5DenseSpec extends SparkSpec {
   }
 
   test("dense group: superblock v2 + fractal-heap links + name index") {
-    val dir = Files.createTempDirectory("graft_h5d").toString
+    val dir = scratchDir("graft_h5d")
     val path = s"$dir/dense.nc4"
     denseFixture(path)
     val bytes = Files.readAllBytes(Paths.get(path))
@@ -46,7 +46,7 @@ class HDF5DenseSpec extends SparkSpec {
   }
 
   test("shuffle+deflate chunks decode to the original values") {
-    val dir = Files.createTempDirectory("graft_h5d2").toString
+    val dir = scratchDir("graft_h5d2")
     val path = s"$dir/dense.nc4"
     denseFixture(path)
     val bytes = Files.readAllBytes(Paths.get(path))
@@ -61,7 +61,7 @@ class HDF5DenseSpec extends SparkSpec {
   }
 
   test("dense toLongDF matches the compact-group decode") {
-    val dirD = Files.createTempDirectory("graft_h5d3").toString
+    val dirD = scratchDir("graft_h5d3")
     denseFixture(s"$dirD/part0.nc4")
     val df = HDF5.toLongDF(spark, dirD, "temp")
     assert(df.count() === 30)
@@ -72,7 +72,7 @@ class HDF5DenseSpec extends SparkSpec {
   }
 
   test("compound datatype: per-member extraction") {
-    val dir = Files.createTempDirectory("graft_h5c").toString
+    val dir = scratchDir("graft_h5c")
     val path = s"$dir/compound.h5"
     val t = Array.tabulate(7)(_ * 10.0)
     val v = Array.tabulate(7)(i => i * 1.5 - 2.0)
@@ -92,7 +92,7 @@ class HDF5DenseSpec extends SparkSpec {
   test("wide dense group: depth-1 name index (BTIN + leaves) roundtrips") {
     // 200 data vars + 1 dim > the ~185-record single-leaf capacity, so
     // the writer emits a BTIN root and the reader walks it
-    val dir = Files.createTempDirectory("graft_h5w").toString
+    val dir = scratchDir("graft_h5w")
     val path = s"$dir/wide.nc4"
     val time = Array.tabulate(6)(_.toDouble)
     val vars = (0 until 200).map { i =>
@@ -114,7 +114,7 @@ class HDF5DenseSpec extends SparkSpec {
   }
 
   test("one corrupt object does not make the other variables unreadable") {
-    val dir = Files.createTempDirectory("graft_h5x").toString
+    val dir = scratchDir("graft_h5x")
     val path = s"$dir/mixed.nc4"
     denseFixture(path)
     val bytes = Files.readAllBytes(Paths.get(path))

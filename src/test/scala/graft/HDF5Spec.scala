@@ -27,7 +27,7 @@ class HDF5Spec extends SparkSpec {
   }
 
   test("netCDF-4 roundtrip: dims, DIMENSION_LIST, chunked+deflate data") {
-    val dir = Files.createTempDirectory("graft_h5").toString
+    val dir = scratchDir("graft_h5")
     val path = s"$dir/part0.nc4"
     fixture(path)
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -52,7 +52,7 @@ class HDF5Spec extends SparkSpec {
   test("UTF-8 variable names survive the v1 group walk (heap decode)") {
     // 'température' is 12 chars / 14 UTF-8 bytes; Byte.toChar would
     // sign-extend 0xC3/0xA9 into mojibake and break byName
-    val dir = Files.createTempDirectory("graft_h5utf").toString
+    val dir = scratchDir("graft_h5utf")
     val path = s"$dir/part0.nc4"
     HDF5.writeNc4(path,
       Seq("x" -> Array.tabulate(3)(_.toDouble)),
@@ -66,7 +66,7 @@ class HDF5Spec extends SparkSpec {
   }
 
   test("fletcher32 filter: checksum roundtrip, verified on read, flip detection") {
-    val dir = Files.createTempDirectory("graft_h5fl").toString
+    val dir = scratchDir("graft_h5fl")
     val path = s"$dir/fl.nc4"
     val x = Array.tabulate(7)(_.toDouble)
     val v = (for (i <- 0 until 7; j <- 0 until 3)
@@ -106,7 +106,7 @@ class HDF5Spec extends SparkSpec {
     // f32 + shuffle + fletcher: the 4-byte checksum occupies a FULL
     // element slot in the shuffle (es=4), unlike the unshuffled 4-byte
     // tail of the f64 case — both boundary treatments must roundtrip
-    val dir2 = Files.createTempDirectory("graft_h5fl32").toString
+    val dir2 = scratchDir("graft_h5fl32")
     val p32 = s"$dir2/fl32.nc4"
     val v32 = (for (i <- 0 until 5; j <- 0 until 4)
       yield (i * 2.5 + j).toFloat.toDouble).toArray
@@ -125,7 +125,7 @@ class HDF5Spec extends SparkSpec {
     // LAST — it covers the compressed bytes, so the reader must verify
     // and strip it BEFORE inflating (the declared order, not a hardcoded
     // innermost assumption)
-    val dir = Files.createTempDirectory("graft_h5flo").toString
+    val dir = scratchDir("graft_h5flo")
     val path = s"$dir/flo.nc4"
     val v = (for (i <- 0 until 7; j <- 0 until 3)
       yield i * 10.0 + j).toArray
@@ -147,7 +147,7 @@ class HDF5Spec extends SparkSpec {
   }
 
   test("szip roundtrip: chunked f32 variable through the CCSDS Rice codec") {
-    val dir = Files.createTempDirectory("graft_h5sz").toString
+    val dir = scratchDir("graft_h5sz")
     val path = s"$dir/sz.nc4"
     val x = Array.tabulate(9)(_.toDouble)
     val v = (for (i <- 0 until 9; j <- 0 until 4)
@@ -174,7 +174,7 @@ class HDF5Spec extends SparkSpec {
   }
 
   test("lzf roundtrip: chunked f64 variable through the h5py-format codec") {
-    val dir = Files.createTempDirectory("graft_h5lzf").toString
+    val dir = scratchDir("graft_h5lzf")
     val path = s"$dir/lzf.nc4"
     val x = Array.tabulate(7)(_.toDouble)
     val v = (for (i <- 0 until 7; j <- 0 until 5)
@@ -195,7 +195,7 @@ class HDF5Spec extends SparkSpec {
   }
 
   test("zstd filter roundtrip (id 32015, the netCDF-C 4.9+ encoding)") {
-    val dir = Files.createTempDirectory("graft_h5zst").toString
+    val dir = scratchDir("graft_h5zst")
     val path = s"$dir/z.nc4"
     val x = Array.tabulate(6)(_.toDouble)
     val v = (for (i <- 0 until 6; j <- 0 until 4)
@@ -223,7 +223,7 @@ class HDF5Spec extends SparkSpec {
   }
 
   test("distributed toLongDF matches the in-memory decode") {
-    val dir = Files.createTempDirectory("graft_h5df").toString
+    val dir = scratchDir("graft_h5df")
     fixture(s"$dir/part0.nc4")
     val df = HDF5.toLongDF(spark, dir, "temp")
     assert(df.columns.toSeq === Seq("time", "lat", "temp"))
@@ -235,7 +235,7 @@ class HDF5Spec extends SparkSpec {
   }
 
   test("deflate: a valid zlib stream shorter than its chunk raises") {
-    val dir = Files.createTempDirectory("graft_h5short").toString
+    val dir = scratchDir("graft_h5short")
     val path = java.nio.file.Paths.get(s"$dir/part0.nc4")
     HDF5.writeNc4(path.toString,
       Seq("x" -> Array.tabulate(6)(_.toDouble),
@@ -261,7 +261,7 @@ class HDF5Spec extends SparkSpec {
   }
 
   test("fixed-length string dataset reads back as strings (class 3)") {
-    val dir = Files.createTempDirectory("graft_h5s").toString
+    val dir = scratchDir("graft_h5s")
     val path = s"$dir/names.h5"
     val names = Seq("OSLO", "NAIROBI", "LA PAZ", "") // padding + empty
     HDF5.writeStringFixture(path, "station", names, strlen = 8)

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.scalatest.funsuite.AnyFunSuite
 import graft.io.{ArraySrc, HDF5}
 import graft.io.HDF5._
 
@@ -9,7 +8,7 @@ import graft.io.HDF5._
   * writer->reader roundtrips for fixed-array and single-chunk, synthetic
   * buffers for the implicit / paged-fixed-array / v2-B-tree decode
   * paths, and the extensible-array guidance error. */
-class HDF5V4Spec extends AnyFunSuite {
+class HDF5V4Spec extends SparkSpec {
 
   private val grid = (for (t <- 0 until 7; l <- 0 until 5)
     yield t * 10.0 + l * 0.25).toArray
@@ -23,7 +22,7 @@ class HDF5V4Spec extends AnyFunSuite {
         index4 = Some(index))))
 
   test("fixed-array index: multi-chunk deflate roundtrip + structure pins") {
-    val dir = Files.createTempDirectory("h5fa").toString
+    val dir = scratchDir("h5fa")
     val path = s"$dir/fa.nc4"
     write(path, "fixed", Seq(3, 2)) // 3x3 grid of edge chunks
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -44,7 +43,7 @@ class HDF5V4Spec extends AnyFunSuite {
   }
 
   test("single-chunk index: one whole-shape chunk, filtered size in the message") {
-    val dir = Files.createTempDirectory("h5sc").toString
+    val dir = scratchDir("h5sc")
     val path = s"$dir/sc.nc4"
     write(path, "single", Seq(7, 5))
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -137,7 +136,7 @@ class HDF5V4Spec extends AnyFunSuite {
 
   test("extensible-array index: multi-data-block deflate roundtrip " +
     "through a full .nc4 file") {
-    val dir = Files.createTempDirectory("h5ea").toString
+    val dir = scratchDir("h5ea")
     val path = s"$dir/ea.nc4"
     write(path, "ea", Seq(2, 1)) // 4x5 = 20 chunks: iblock(4) + 8 + 16
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(path))

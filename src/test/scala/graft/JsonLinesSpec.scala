@@ -17,7 +17,7 @@ class JsonLinesSpec extends SparkSpec {
     (6L, ""))
 
   test("hostile strings roundtrip byte-exactly") {
-    val path = "/tmp/graft_jsonl_spec"
+    val path = scratchDir("jsonl_spec")
     val df = hostile.toDF("id", "text")
     JsonLines.write(df, path)
     val back = JsonLines.read(spark, path, df.schema)
@@ -26,9 +26,8 @@ class JsonLinesSpec extends SparkSpec {
   }
 
   test("FAILFAST read raises on a corrupt line instead of nulling it") {
-    val path = "/tmp/graft_jsonl_corrupt"
+    val path = scratchDir("jsonl_corrupt")
     val dir = new java.io.File(path)
-    dir.mkdirs()
     val f = new java.io.File(dir, "part-00000.json")
     val w = new java.io.PrintWriter(f)
     w.println("""{"id": 1, "text": "ok"}""")

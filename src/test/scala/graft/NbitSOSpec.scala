@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.scalatest.funsuite.AnyFunSuite
 import graft.io.{HDF5, NbitSO}
 import graft.io.HDF5.WVar
 
@@ -10,7 +9,7 @@ import graft.io.HDF5.WVar
   * self-consistent-but-wrong packing), codec round-trips, and full
   * writer->reader netCDF-4 file round-trips including deflate stacking
   * and negative signed values through the reduced-precision dtype. */
-class NbitSOSpec extends AnyFunSuite {
+class NbitSOSpec extends SparkSpec {
 
   // ---- n-bit: hand-computed packed bytes -------------------------------
   // size=4 LE, precision=6, offset=0, elements [1,2,3]. Each element
@@ -100,7 +99,7 @@ class NbitSOSpec extends AnyFunSuite {
   }
 
   test("netCDF-4 big-endian nbit writer->reader round-trip") {
-    val dir = Files.createTempDirectory("graft_benb").toString
+    val dir = scratchDir("graft_benb")
     val path = s"$dir/part0.nc4"
     // negatives exercise the sign-extension through the BE span read
     val vals = Array(7.0, -3.0, 1023.0, -1024.0, 0.0, 512.0)
@@ -203,7 +202,7 @@ class NbitSOSpec extends AnyFunSuite {
   // ---- full-file round-trips through the writer + reader ---------------
   test("netCDF-4 nbit variable round-trips, incl. negatives (dtype " +
     "precision sign-extension) and deflate stacking") {
-    val dir = Files.createTempDirectory("graft_nbit").toString
+    val dir = scratchDir("graft_nbit")
     val path = s"$dir/part0.nc4"
     val vals = Array(-500.0, 1023.0, -1024.0, 0.0, 7.0, 999.0)
     HDF5.writeNc4(path,
@@ -218,7 +217,7 @@ class NbitSOSpec extends AnyFunSuite {
   }
 
   test("netCDF-4 scale-offset int and D-scale float round-trip") {
-    val dir = Files.createTempDirectory("graft_so").toString
+    val dir = scratchDir("graft_so")
     val path = s"$dir/part0.nc4"
     val ints = Array(100.0, 103.0, 101.0, 100.0, 107.0, 102.0)
     // dyadic quarters: delta/100 + min is then EXACT double arithmetic,

@@ -33,7 +33,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("writer -> reader roundtrip across all scalar types") {
-    val path = java.nio.file.Files.createTempDirectory("nc").toString
+    val path = scratchDir("nc")
     val dims = Seq(Dim("a", 2), Dim("b", 3))
     val vals = (1 to 6).map(_.toDouble * 1.5).toArray
     for (t <- Seq(NC_BYTE, NC_SHORT, NC_INT, NC_FLOAT, NC_DOUBLE)) {
@@ -52,7 +52,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("toLongDF explodes dims with coordinate variables") {
-    val path = java.nio.file.Files.createTempDirectory("nc").toString
+    val path = scratchDir("nc")
     NetCDF.write(s"$path/f.nc", Seq(Dim("t", 2), Dim("y", 2)), Seq(
       Var("t", Seq(0), NC_INT, Array(10.0, 20.0)),
       Var("v", Seq(0, 1), NC_DOUBLE, Array(1.0, 2.0, 3.0, 4.0))))
@@ -64,7 +64,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("a missing directory raises 'cannot list directory' from every reader") {
-    val dir = java.nio.file.Files.createTempDirectory("nc").toString + "/absent"
+    val dir = scratchDir("nc") + "/absent"
     Seq[() => Any](() => NetCDF.toLongDF(spark, dir, "v"),
       () => NetCDF.openDataset(spark, dir),
       () => NetCDF.openDecoded(spark, dir, "v")).foreach { read =>
@@ -74,7 +74,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("CDF-2 and CDF-5 containers roundtrip (64-bit offsets/sizes)") {
-    val path = java.nio.file.Files.createTempDirectory("nc").toString
+    val path = scratchDir("nc")
     val dims = Seq(Dim("a", 2), Dim("b", 3))
     val vals = (1 to 6).map(_.toDouble * 2.5).toArray
     for (ver <- Seq(2, 5)) {
@@ -99,7 +99,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("UNLIMITED dimension: interleaved record vars roundtrip; fixed vars coexist") {
-    val dir = java.nio.file.Files.createTempDirectory("ncrec").toString
+    val dir = scratchDir("ncrec")
     val p = s"$dir/rec.nc"
     // time UNLIMITED (4 records), x fixed (3); temp(time,x) + cnt(time) +
     // a fixed coord var x(x) — two record vars force the interleaved layout
@@ -131,7 +131,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("final-record padding omitted by the writer is tolerated; real truncation still raises") {
-    val dir = java.nio.file.Files.createTempDirectory("ncunpad").toString
+    val dir = scratchDir("ncunpad")
     val p = s"$dir/unpad.nc"
     // two record vars force interleaving; cnt (NC_SHORT, slab 2) is
     // padded to 4 inside the record stride, so the file's final 2 bytes
@@ -159,7 +159,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("banded reads: tiny bandBytes forces per-record / per-row tasks") {
-    val dir = java.nio.file.Files.createTempDirectory("ncband").toString
+    val dir = scratchDir("ncband")
     val p = s"$dir/band.nc"
     // time is UNLIMITED with its own RECORD coordinate (the archive
     // shape); temp(time,x) interleaves with it record by record
@@ -195,7 +195,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("multi-file directory: per-file plans union with each file's coords") {
-    val dir = java.nio.file.Files.createTempDirectory("ncmf").toString
+    val dir = scratchDir("ncmf")
     // two shards of one logical series, distinct coordinate ranges
     Seq((0, "a.nc"), (10, "b.nc")).foreach { case (base, name) =>
       NetCDF.write(s"$dir/$name",
@@ -214,7 +214,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("single record variable uses the unpadded record stride (spec note)") {
-    val dir = java.nio.file.Files.createTempDirectory("ncrec1").toString
+    val dir = scratchDir("ncrec1")
     val p = s"$dir/one.nc"
     // one NC_SHORT record var, slab 3 shorts = 6 bytes: records must be
     // packed at stride 6, NOT padded to 8
@@ -229,7 +229,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("attributes roundtrip and drive the CF decode (packed shorts -> doubles)") {
-    val dir = java.nio.file.Files.createTempDirectory("ncatt").toString
+    val dir = scratchDir("ncatt")
     val p = s"$dir/packed.nc"
     // classic packed-data convention: shorts + scale/offset, -999 fill
     NetCDF.write(p,
@@ -261,7 +261,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("writer rejects malformed record usage; UTF-8 names size correctly") {
-    val dir = java.nio.file.Files.createTempDirectory("ncguard").toString
+    val dir = scratchDir("ncguard")
     // non-leading UNLIMITED dim would silently shape a 0-size slab
     val e1 = intercept[IllegalArgumentException] {
       NetCDF.write(s"$dir/bad1.nc",
@@ -293,7 +293,7 @@ class NetCDFSpec extends SparkSpec {
   test("writeDataset: XDataset -> .nc -> toLongDF roundtrip with attrs and gaps") {
     import spark.implicits._
     import graft.model.{DatasetMeta, XDataset}
-    val dir = java.nio.file.Files.createTempDirectory("ncds").toString
+    val dir = scratchDir("ncds")
     // sparse grid (one cell absent -> NaN in the file), 2 data vars
     val rows = Seq((0L, 0L, 1.0, 10.0), (0L, 1L, 2.0, 20.0),
       (1L, 0L, 3.0, 30.0)) // (1,1) missing
@@ -324,7 +324,7 @@ class NetCDFSpec extends SparkSpec {
     // a >2 GiB file can't be written in a unit test; hand-patch the begin
     // field of a small CDF-5 header and assert the 64-bit path reads it —
     // that is the exact field CDF-1's 32-bit INT cannot represent
-    val path = java.nio.file.Files.createTempDirectory("nc").toString
+    val path = scratchDir("nc")
     val f = s"$path/far.nc"
     NetCDF.write(f, Seq(Dim("a", 2)),
       Seq(Var("v", Seq(0), NC_DOUBLE, Array(1.0, 2.0))), version = 5)
@@ -345,7 +345,7 @@ class NetCDFSpec extends SparkSpec {
   }
 
   test("NC_CHAR variables roundtrip as strings (char_to_bytes semantics)") {
-    val path = java.nio.file.Files.createTempDirectory("ncchar").toString
+    val path = scratchDir("ncchar")
     val names = Seq("OSLO", "NAIROBI", "LA PAZ") // padding + inner space
     val f = s"$path/stations.nc"
     NetCDF.write(f, Seq(Dim("station", 3), Dim("strlen", 8)), Seq(

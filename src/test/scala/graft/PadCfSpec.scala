@@ -106,7 +106,7 @@ class PadCfSpec extends SparkSpec {
 
   test("Store: partitioned write, region overwrite, pruned read") {
     import graft.io.Store
-    val dir = java.nio.file.Files.createTempDirectory("graft_store").toString
+    val dir = scratchDir("graft_store")
     val df = Seq((1, "a", 1.0), (1, "b", 2.0), (2, "a", 3.0)).toDF("chunk", "k", "v")
     Store.write(df, dir, Seq("chunk"))
     assert(Store.open(spark, dir).count() === 3)

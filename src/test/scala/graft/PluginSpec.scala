@@ -11,7 +11,7 @@ class PluginSpec extends SparkSpec {
   import spark.implicits._
 
   test("backend registry dispatches by engine and rejects unknown ones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_backend").toString
+    val dir = scratchDir("graft_backend")
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.mode("overwrite")
       .parquet(s"$dir/t.parquet")
     val df = Backends.openDataset(spark, s"$dir/t.parquet", "parquet")
@@ -62,7 +62,7 @@ class PluginSpec extends SparkSpec {
 
   test("store dataset roundtrip keeps dims/coords/attrs via the sidecar") {
     import graft.io.{CFDecode, Store}
-    val dir = java.nio.file.Files.createTempDirectory("graft_store_ds").toString
+    val dir = scratchDir("graft_store_ds")
     val ds = new XDataset(
       Seq((1L, 100), (2L, -999), (3L, 104)).toDF("t", "enc"),
       graft.model.DatasetMeta(Seq("t"), coords = Set.empty,

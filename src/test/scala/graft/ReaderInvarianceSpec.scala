@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -40,7 +39,7 @@ class ReaderInvarianceSpec extends SparkSpec {
     df.collect().map(_.toString).toSeq.sorted
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft_inv_$tag").toString
+    scratchDir(s"graft_inv_$tag")
 
   private def deleteRecursively(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)

@@ -13,4 +13,9 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   lazy val sf: String = TestSpark.sf
+
+  /** A new empty directory under the session's scratch root, which Spark
+    * deletes when the session stops or the JVM exits. */
+  def scratchDir(prefix: String): String = java.nio.file.Files
+    .createTempDirectory(GraftSession.scratchRoot(spark), prefix).toString
 }

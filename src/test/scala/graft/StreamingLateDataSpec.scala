@@ -33,28 +33,28 @@ class StreamingLateDataSpec extends SparkSpec {
     * a 1-file-per-trigger readStream over the directory. */
   private def chunkedSource(
       chunks: Seq[Seq[(Long, String, Long, String, Double)]]): DataFrame = {
-    val srcDir = Files.createTempDirectory("graft_late_src")
+    val srcDir = scratchDir("graft_late_src")
     chunks.zipWithIndex.foreach { case (rows, k) =>
-      val tmp = Files.createTempDirectory(s"graft_late_$k").toString
+      val tmp = scratchDir(s"graft_late_$k")
       rows.toDF("event_id", "tss", "user_id", "event_type", "value")
         .withColumn("ts", to_timestamp(col("tss")))
         .select("event_id", "ts", "user_id", "event_type", "value")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
-      val dst = Paths.get(srcDir.toString, f"chunk_$k%03d.parquet")
+      val dst = Paths.get(srcDir, f"chunk_$k%03d.parquet")
       Files.move(part.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
       dst.toFile.setLastModified(1000000L + k * 1000L)
     }
     spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
   }
 
   /** Run to completion on a memory sink; returns (table name, rows
     * dropped by watermark across the run). */
   private def run(df: DataFrame, mode: OutputMode): (String, Long) = {
     val name = s"late_${System.nanoTime}"
-    val ckpt = Files.createTempDirectory("graft_late_ckpt").toString
+    val ckpt = scratchDir("graft_late_ckpt")
     val q = df.writeStream.outputMode(mode).format("memory")
       .queryName(name).option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()

@@ -30,17 +30,17 @@ class StreamingSpec extends SparkSpec {
     // event time mean each batch closes earlier windows.
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .orderBy("doc_id")
-    val srcDir = Files.createTempDirectory("graft_curation_src")
+    val srcDir = scratchDir("graft_curation_src")
     val nChunks = 5
     val maxId = docs.agg(max("doc_id")).head().getLong(0)
     val step = maxId / nChunks + 1
     (0 until nChunks).foreach { k =>
-      val tmp = Files.createTempDirectory(s"graft_chunk_$k").toString
+      val tmp = scratchDir(s"graft_chunk_$k")
       docs.filter(col("doc_id") >= k * step && col("doc_id") < (k + 1) * step)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
-      val dst = Paths.get(srcDir.toString, f"chunk_$k%03d.parquet")
+      val dst = Paths.get(srcDir, f"chunk_$k%03d.parquet")
       Files.move(part.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
       dst.toFile.setLastModified(1000000L + k * 1000L) // ascending mtimes
     }
@@ -49,10 +49,10 @@ class StreamingSpec extends SparkSpec {
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
     val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val agg = StreamOps.curationDedup(src, "60 seconds", "0 seconds")
     val name = s"stream_evict_${System.nanoTime}"
-    val ckpt = Files.createTempDirectory("graft_evict_ckpt").toString
+    val ckpt = scratchDir("graft_evict_ckpt")
     val q = agg.writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName(name)
       .option("checkpointLocation", ckpt)
@@ -151,7 +151,7 @@ class StreamingSpec extends SparkSpec {
     // still equal the batch result, i.e. state genuinely merges across
     // batches. The watermark is wider than the data span so no row is
     // late regardless of file processing order.
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb").toString
+    val dir = scratchDir("graft_mb")
     val ev = graft.io.Tables.events(spark, sf)
     (0 until 4).foreach { i =>
       ev.filter(pmod(col("user_id"), lit(4)) === i)

@@ -21,7 +21,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("z-ordered files are localized in BOTH keys; result set unchanged") {
-    val dir = "/tmp/graft_zorder_spec"
+    val dir = scratchDir("zorder_spec")
     val ev = Tables.events(spark, sf)
     ZOrder.write(ev, dir, Seq("user_id", "ts"), numFiles = 8)
     val back = spark.read.parquet(dir)

@@ -66,7 +66,7 @@ class ZarrSpec extends SparkSpec {
     "AAAAAAAAAKSBiQQAAHgvMVBLBQYAAAAADgAOAPACAACyBAAAAAA="
 
   private def extractFixture(): String = {
-    val dir = Files.createTempDirectory("zarrfix").toString
+    val dir = scratchDir("zarrfix")
     val zin = new ZipInputStream(new ByteArrayInputStream(
       java.util.Base64.getDecoder.decode(fixtureB64)))
     var e = zin.getNextEntry
@@ -100,7 +100,7 @@ class ZarrSpec extends SparkSpec {
   }
 
   test("driver-side writeArray -> readArray roundtrip with edge chunks") {
-    val store = Files.createTempDirectory("zw").toString
+    val store = scratchDir("zw")
     Zarr.initStore(spark, store)
     val data = Array.tabulate(3 * 5)(_.toDouble * 0.5 - 2)
     val m = ArrayMeta(Seq(3, 5), Seq(2, 2), '<', 'f', 8,
@@ -113,7 +113,7 @@ class ZarrSpec extends SparkSpec {
 
   test("v2 nested chunk keys (dimension_separator '/'): distributed roundtrip") {
     import spark.implicits._
-    val store = Files.createTempDirectory("znest").toString
+    val store = scratchDir("znest")
     val df = (for (i <- 0 until 5; j <- 0 until 7)
       yield (i.toLong, j.toLong, i * 100.0 + j)).toSeq
       .toDF("row", "col", "v")
@@ -133,7 +133,7 @@ class ZarrSpec extends SparkSpec {
   }
 
   test("v2 zstd compressor (numcodecs Zstd): roundtrip + format pins") {
-    val store = Files.createTempDirectory("zzstd").toString
+    val store = scratchDir("zzstd")
     Zarr.initStore(spark, store)
     val data = Array.tabulate(4 * 6)(i => (i % 5) * 1.25)
     val m = ArrayMeta(Seq(4, 6), Seq(2, 4), '<', 'f', 8,
@@ -153,7 +153,7 @@ class ZarrSpec extends SparkSpec {
 
   test("v3 zstd codec (zarr-python 3's default chain): roundtrip + metadata pin") {
     import spark.implicits._
-    val store = Files.createTempDirectory("zv3zstd").toString
+    val store = scratchDir("zv3zstd")
     val df = (for (i <- 0 until 5; j <- 0 until 7)
       yield (i.toLong, j.toLong, i * 100.0 + j)).toSeq
       .toDF("row", "col", "v")
@@ -173,7 +173,7 @@ class ZarrSpec extends SparkSpec {
   }
 
   test("dtype battery roundtrips: f4, i2, u1, big-endian f8") {
-    val store = Files.createTempDirectory("zdt").toString
+    val store = scratchDir("zdt")
     val cases = Seq(
       (ArrayMeta(Seq(4), Seq(3), '<', 'f', 4, None, 0.0, ".", Seq("d"), Map()),
         Array(1.5, -2.25, 0.0, 8.0)),
@@ -192,7 +192,7 @@ class ZarrSpec extends SparkSpec {
 
   test("distributed writeLongDF -> toLongDF roundtrip (edge chunks, zlib)") {
     import spark.implicits._
-    val store = Files.createTempDirectory("zdist").toString
+    val store = scratchDir("zdist")
     // 5x7 grid, chunks 2x3 -> 3x3 grid with edge chunks both ways
     val df = (for (i <- 0 until 5; j <- 0 until 7)
       yield (i.toLong, j.toLong, i * 100.0 + j)).toSeq
@@ -214,7 +214,7 @@ class ZarrSpec extends SparkSpec {
 
   test("region write replaces only covered chunks") {
     import spark.implicits._
-    val store = Files.createTempDirectory("zreg").toString
+    val store = scratchDir("zreg")
     val full = (for (i <- 0 until 4; j <- 0 until 4)
       yield (i.toLong, j.toLong, 1.0)).toSeq.toDF("row", "col", "v")
     Zarr.writeLongDF(full, store, "v", Seq("row", "col"),
@@ -233,7 +233,7 @@ class ZarrSpec extends SparkSpec {
   }
 
   test("openDataset joins all data vars on shared dims; coords excluded") {
-    val store = Files.createTempDirectory("zds").toString
+    val store = scratchDir("zds")
     Zarr.initStore(spark, store)
     val mU = ArrayMeta(Seq(2, 3), Seq(2, 2), '<', 'f', 8, Some(("zlib", 1)),
       Double.NaN, ".", Seq("a", "b"), Map())
@@ -252,7 +252,7 @@ class ZarrSpec extends SparkSpec {
 
   test("append_dim extends through a mid-chunk boundary without losing old cells") {
     import spark.implicits._
-    val store = Files.createTempDirectory("zapp").toString
+    val store = scratchDir("zapp")
     // 3x2 grid, row-chunks of 2 -> old boundary chunk (row 2) is half full
     val df0 = (for (i <- 0 until 3; j <- 0 until 2)
       yield (i.toLong, j.toLong, i * 10.0 + j)).toSeq.toDF("row", "col", "v")
@@ -287,7 +287,7 @@ class ZarrSpec extends SparkSpec {
 
   test("v3: distributed roundtrip with zarr.json metadata, nested keys, gzip") {
     import spark.implicits._
-    val store = Files.createTempDirectory("zv3").toString
+    val store = scratchDir("zv3")
     val df = (for (i <- 0 until 5; j <- 0 until 7)
       yield (i.toLong, j.toLong, i * 100.0 + j)).toSeq
       .toDF("row", "col", "v")
@@ -319,7 +319,7 @@ class ZarrSpec extends SparkSpec {
 
   test("v3: region write + driver readArray + openDataset transparency") {
     import spark.implicits._
-    val store = Files.createTempDirectory("zv3reg").toString
+    val store = scratchDir("zv3reg")
     val full = (for (i <- 0 until 4; j <- 0 until 4)
       yield (i.toLong, j.toLong, 1.0)).toSeq.toDF("row", "col", "v")
     val coords = Seq(Array.tabulate(4)(_.toDouble), Array.tabulate(4)(_.toDouble))
@@ -339,7 +339,7 @@ class ZarrSpec extends SparkSpec {
   }
 
   test("v3: '.' chunk-key separator reads flat c.0.0 files; consolidate rejects v3") {
-    val store = Files.createTempDirectory("zv3dot").toString
+    val store = scratchDir("zv3dot")
     val m = ArrayMeta(Seq(3, 4), Seq(2, 3), '<', 'f', 8, None, 0.0, ".",
       Seq("r", "c"), Map(), v3 = true)
     Zarr.initStoreV3(spark, store)
@@ -355,7 +355,7 @@ class ZarrSpec extends SparkSpec {
 
   test("v3: append_dim through a mid-chunk boundary is format-transparent") {
     import spark.implicits._
-    val store = Files.createTempDirectory("zv3app").toString
+    val store = scratchDir("zv3app")
     val df = (for (i <- 0 until 3) yield (i.toLong, i * 1.0)).toSeq
       .toDF("t", "v")
     Zarr.writeLongDF(df, store, "v", Seq("t"),
@@ -384,7 +384,7 @@ class ZarrSpec extends SparkSpec {
         grid(0.25).withColumn("v2", org.apache.spark.sql.functions.col("v") * 2),
         Seq("t", "x")))
     for (fmt <- Seq(2, 3)) {
-      val root = Files.createTempDirectory(s"ztreew$fmt").toString
+      val root = scratchDir(s"ztreew$fmt")
       DataTree.writeZarr(tree, root, zarrFormat = fmt)
       val back = DataTree.openZarr(spark, root)
       assert(back.groups == Seq("/model/fcst", "/obs"))
@@ -422,7 +422,7 @@ class ZarrSpec extends SparkSpec {
   }
 
   test("absent chunk reads as fill_value; unsupported compressor rejects") {
-    val store = Files.createTempDirectory("zfill").toString
+    val store = scratchDir("zfill")
     val m = ArrayMeta(Seq(4), Seq(2), '<', 'f', 8, None, -1.5, ".",
       Seq("d"), Map())
     Zarr.writeArray(spark, store, "v", m, Array(1.0, 2.0, 3.0, 4.0))
@@ -445,7 +445,7 @@ class ZarrSpec extends SparkSpec {
 
   test("v3 sharding_indexed: roundtrip, shard-count layout, index + crc format pins") {
     import spark.implicits._
-    val store = Files.createTempDirectory("zv3shard").toString
+    val store = scratchDir("zv3shard")
     val df = (for (i <- 0 until 7; j <- 0 until 10)
       yield (i.toLong, j.toLong, i * 100.0 + j)).toSeq
       .toDF("row", "col", "v")
@@ -520,7 +520,7 @@ class ZarrSpec extends SparkSpec {
         Some(("gzip", 1)), indexAtEnd = atEnd, indexCrc = crc)))
       val enc = {
         // encodeChunk is private; roundtrip through the public store API
-        val dir = Files.createTempDirectory("zshardloc").toString
+        val dir = scratchDir("zshardloc")
         Zarr.writeArray(spark, dir, "v", m, vals)
         Files.readAllBytes(Paths.get(dir, "v", "c", "0", "0"))
       }
@@ -528,7 +528,7 @@ class ZarrSpec extends SparkSpec {
       assert(dec.toSeq == vals.toSeq,
         s"shard roundtrip failed for indexAtEnd=$atEnd crc=$crc")
       // and the metadata on disk declares the location/codec choices
-      val dir2 = Files.createTempDirectory("zshardmeta").toString
+      val dir2 = scratchDir("zshardmeta")
       Zarr.writeArray(spark, dir2, "v", m, vals)
       val za = new String(Files.readAllBytes(
         Paths.get(dir2, "v", "zarr.json")), "UTF-8")
@@ -544,7 +544,7 @@ class ZarrSpec extends SparkSpec {
     // hand-written store, independent of our writer: logical 2x3 chunk
     // a[i][j] = i*3+j with transpose order [1,0] -> stored C-order is the
     // 3x2 transposed sequence [0,3,1,4,2,5]
-    val store = Files.createTempDirectory("ztp").toString
+    val store = scratchDir("ztp")
     Files.createDirectories(Paths.get(store, "v", "c", "0"))
     val meta =
       """{"zarr_format":3,"node_type":"array","shape":[2,3],
@@ -570,7 +570,7 @@ class ZarrSpec extends SparkSpec {
 
   test("v3 transpose codec: write roundtrip, 3-D permutation, edge chunks") {
     import spark.implicits._
-    val store = Files.createTempDirectory("ztp3").toString
+    val store = scratchDir("ztp3")
     // 3x4x5 with chunks 2x3x2 (edge chunks in every dim) and a rotation
     // permutation [2,0,1]
     val df = (for (i <- 0 until 3; j <- 0 until 4; k <- 0 until 5)
@@ -599,7 +599,7 @@ class ZarrSpec extends SparkSpec {
   test("v2 F-order arrays decode and re-encode through the reversal perm") {
     // hand-written order:"F" store: logical a[i][j] = i*3+j stored
     // column-major [0,3,1,4,2,5]
-    val store = Files.createTempDirectory("zforder").toString
+    val store = scratchDir("zforder")
     Files.createDirectories(Paths.get(store, "v"))
     val za = """{"zarr_format":2,"shape":[2,3],"chunks":[2,3],
       "dtype":"<f8","compressor":null,"fill_value":null,
@@ -619,7 +619,7 @@ class ZarrSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet == want)
     // writer: a reversal tperm re-emits order:"F" and roundtrips; any
     // other permutation has no v2 encoding and fails loudly
-    val dir2 = Files.createTempDirectory("zforder2").toString
+    val dir2 = scratchDir("zforder2")
     Zarr.writeArray(spark, dir2, "w", m, Array(0.0, 1.0, 2.0, 3.0, 4.0, 5.0))
     val za2 = new String(Files.readAllBytes(
       Paths.get(dir2, "w", ".zarray")), "UTF-8")
@@ -627,7 +627,7 @@ class ZarrSpec extends SparkSpec {
     assert(Zarr.toLongDF(spark, dir2, "w").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet == want)
     intercept[RuntimeException] {
-      Zarr.writeArray(spark, Files.createTempDirectory("zforder3").toString,
+      Zarr.writeArray(spark, scratchDir("zforder3"),
         "x", m.copy(shape = Seq(2, 3, 4), chunks = Seq(2, 3, 4),
           dims = Seq("i", "j", "k"), tperm = Some(Seq(1, 0, 2))),
         Array.fill(24)(0.0))
@@ -638,7 +638,7 @@ class ZarrSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((0L, 0L, 1.0)).toDF("a", "b", "v")
     def w(fmt: Int, tp: Option[Seq[Int]], inner: Option[Seq[Int]] = None) =
-      Zarr.writeLongDF(df, Files.createTempDirectory("ztpg").toString, "v",
+      Zarr.writeLongDF(df, scratchDir("ztpg"), "v",
         Seq("a", "b"), Seq(Array(0.0), Array(0.0)), chunks = Seq(1, 1),
         zarrFormat = fmt, transposeOrder = tp, shardInner = inner)
     intercept[IllegalArgumentException] { w(3, Some(Seq(0, 0))) }
@@ -716,7 +716,7 @@ class ZarrSpec extends SparkSpec {
     Seq("v2 zlib", "v2 blosc", "v3 sharded").foreach { layout =>
       val stores = Seq[(Cells => Cells, Int)]((identity, 1), (identity, 7), (_.reverse, 7))
         .map { case (order, parts) =>
-          val store = Files.createTempDirectory("zinv").toString
+          val store = scratchDir("zinv")
           write(frame(order(cells), parts), store, region = false, layout)
           write(frame(order(region), parts), store, region = true, layout)
           store
@@ -742,7 +742,7 @@ class ZarrSpec extends SparkSpec {
     val stores = Seq(1, 4).map { parts =>
       val df = spark.range(0, ny * nx, 1, parts)
         .selectExpr(s"id div $nx as y", s"id % $nx as x", "cast(id as double) / 4 as v")
-      val store = Files.createTempDirectory("zcap").toString
+      val store = scratchDir("zcap")
       Zarr.writeLongDF(df, store, "v", Seq("y", "x"), coords, Seq(128, 128))
       store
     }
@@ -758,7 +758,7 @@ class ZarrSpec extends SparkSpec {
     Seq(1, 2).foreach { parts => // the duplicates in one input partition, then two
       val df = spark.sparkContext.parallelize(cells, parts).toDF("row", "col", "v")
       val e = intercept[Exception] {
-        Zarr.writeLongDF(df, Files.createTempDirectory("zdup").toString, "v",
+        Zarr.writeLongDF(df, scratchDir("zdup"), "v",
           Seq("row", "col"), Seq(Array(0.0, 1.0), Array(10.0, 11.0)), chunks = Seq(2, 2))
       }
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
@@ -777,7 +777,7 @@ class ZarrSpec extends SparkSpec {
       yield (i.toLong, j.toLong, -1.0)).toDF("row", "col", "v")
     Seq(2, 3).foreach { fmt =>
       val stores = Seq("", "graftlocal:").map { scheme =>
-        val dir = Files.createTempDirectory("zfs").toString
+        val dir = scratchDir("zfs")
         val store = scheme + dir
         Zarr.writeLongDF(df, store, "v", Seq("row", "col"), grid7x11, Seq(4, 6),
           zarrFormat = fmt)
@@ -798,7 +798,7 @@ class ZarrSpec extends SparkSpec {
   test("a local store with Hadoop .crc sidecars reads after a region rewrite") {
     import spark.implicits._
     import org.apache.hadoop.fs.{FileSystem, Path}
-    val store = Files.createTempDirectory("zcrc").toString
+    val store = scratchDir("zcrc")
     val df = (for (i <- 0 until 7; j <- 0 until 11)
       yield (i.toLong, j.toLong, i * 100.0 + j)).toDF("row", "col", "v")
     Zarr.writeLongDF(df, store, "v", Seq("row", "col"), grid7x11, Seq(4, 6))
