@@ -6,7 +6,9 @@ import java.nio.file.{Files, Paths}
 /** Writes PLANS.md: the formatted physical plan of one representative query
   * per scale-critical operator family, with the property each plan is
   * expected to exhibit. Regenerate after plan-shape changes:
-  * `sbt "runMain graft.PlanDump /root/testdata/sf0.001 PLANS.md"`. */
+  * `sbt "runMain graft.PlanDump /root/testdata/sf0.001 PLANS.md"`; dump
+  * any registered query's plans with `sbt "runMain graft.PlanDump <sfDir>
+  * <out.md> <query ...>"`. */
 object PlanDump {
 
   private val picks: Seq[(String, String)] = Seq(
@@ -163,14 +165,20 @@ object PlanDump {
         "window, no sort of the data).")
   )
 
-  /** `runMain graft.PlanDump [sfDir] [out|-] [q... ]` — extra args restrict
-    * the dump to those picks (for surgical PLANS.md section refreshes; the
-    * file carries hand-annotated sections a full regenerate would clobber);
-    * out `-` prints to stdout instead of writing a file. */
+  /** `runMain graft.PlanDump [sfDir] [out|-] [query ...]` — dumps the
+    * picks, or only the named queries: any registered name, a pick keeping
+    * its note (for surgical PLANS.md section refreshes; the file carries
+    * hand-annotated sections a full regenerate would clobber). Each section
+    * holds the formatted plan's operator tree and scan evidence (pushdown,
+    * pruning), then the AQE-final executed plan, read after the query ran.
+    * out `-` prints to stdout instead of writing a file. A query that fails
+    * fails the main, and a file is then not written. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val onlyNames = args.drop(2).toSet
+    val names = SparkEntry.select(
+      if (args.length > 2) args.drop(2).toSeq else picks.map(_._1))
+    val notes = picks.toMap
     val spark = GraftSession(sfDir)
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the scale-critical operators\n\n")
@@ -178,21 +186,38 @@ object PlanDump {
     sb.append("independent; AQE may re-plan exchanges at runtime). Each section ")
     sb.append("states the property the plan must exhibit; `ScaleAuditSpec` and ")
     sb.append("`PlanSpec` enforce these on every build.\n")
-    for ((name, note) <- picks if onlyNames.isEmpty || onlyNames(name)) {
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(FormattedMode)
+    val outcomes = SparkEntry.run(spark, sfDir, names) { (_, df) =>
+      val plan = df.queryExecution.explainString(FormattedMode)
+      // run the frame's own adaptive plan so it reaches its final form;
+      // count() and foreach plan a new query on top and leave it unfinal
+      df.queryExecution.toRdd.foreach(_ => ())
       // keep the operator tree + the scan evidence (pushdown, pruning)
       val tree = plan.split("\n\n").headOption.getOrElse(plan)
       val scanEvidence = plan.linesIterator.filter(l =>
         l.contains("PushedFilters") || l.contains("ReadSchema"))
         .map(_.trim).toSeq.distinct
-      sb.append(s"\n## $name\n\n$note\n\n```\n$tree\n")
-      if (scanEvidence.nonEmpty)
-        sb.append(scanEvidence.mkString("\n", "\n", "\n"))
-      sb.append("```\n")
+      val evidence =
+        if (scanEvidence.isEmpty) "" else scanEvidence.mkString("\n", "\n", "\n")
+      s"```\n$tree\n$evidence```\n\nAQE-final executed plan:\n\n```\n" +
+        s"${df.queryExecution.executedPlan}\n```\n"
+    }.toList
+    outcomes.foreach { o =>
+      sb.append(s"\n## ${o.name}\n\n")
+      notes.get(o.name).foreach(n => sb.append(s"$n\n\n"))
+      sb.append(o.result.fold(e => s"FAILED: ${e.getMessage}\n", identity))
     }
+    val failed = outcomes.filter(_.result.isLeft)
+    // a file is only written whole: a failed query leaves it as it was
     if (out == "-") println(sb.toString)
-    else { Files.writeString(Paths.get(out), sb.toString); println(s"wrote $out") }
+    else if (failed.isEmpty) {
+      Files.writeString(Paths.get(out), sb.toString); println(s"wrote $out")
+    }
     spark.stop()
+    failed.headOption.foreach { f =>
+      throw new IllegalStateException(
+        s"queries failed: ${failed.map(_.name).mkString(", ")}" +
+          (if (out == "-") "" else s"; $out not written"),
+        f.result.left.toOption.orNull)
+    }
   }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *  - dimension tables (part/supplier/nation/region) stay as-is, like a
   *    real star schema scaling facts against fixed dims.
   *
-  * Usage: runMain graft.ScaleSmoke [srcDir] [outDir] [query ...]
+  * Usage: runMain graft.ScaleSmoke [srcDir] [outDir] [query ... | ALL]
   */
 object ScaleSmoke {
 
@@ -50,11 +50,11 @@ object ScaleSmoke {
     // family). Results append to SPARK_GRAFT_SCALE_LOG as JSONL so a
     // hung query is visible and the sweep resumes by skipping names
     // already logged.
-    val names =
-      if (args.length > 2 && args(2) == "ALL")
-        SparkEntry.queries.keys.toSeq.sorted.filterNot(_.contains("stream"))
-      else if (args.length > 2) args.drop(2).toSeq
-      else DEFAULT
+    val names = args.drop(2).toSeq match {
+      case Seq("ALL") => SparkEntry.select(Nil).filterNot(_.contains("stream"))
+      case Seq()      => SparkEntry.select(DEFAULT)
+      case named      => SparkEntry.select(named)
+    }
     val logPath = sys.env.get("SPARK_GRAFT_SCALE_LOG")
     val done: Set[String] = logPath.filter(p =>
       java.nio.file.Files.exists(java.nio.file.Paths.get(p))).map { p =>
@@ -83,20 +83,15 @@ object ScaleSmoke {
     val w = graft.util.Parallelize.tuneShuffle(spark, out)
     println(s"SCALE_SHUFFLE_WIDTH $w")
 
-    val results = names.filterNot(done).map { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
-      val t0 = System.nanoTime()
-      val rows = try {
-        graft.util.QueryCache.scoped { fn(spark, out).count() }
-      } catch { case e: Throwable =>
-        println(s"SCALE_FAIL $name: ${e.getClass.getSimpleName}: " +
+    val total = SparkEntry.run(spark, out, names.filterNot(done)) {
+      (_, df) => df.count()
+    }.map { o =>
+      val rows = o.result.fold({ e =>
+        println(s"SCALE_FAIL ${o.name}: ${e.getClass.getSimpleName}: " +
           s"${String.valueOf(e.getMessage).take(200)}")
         -1L
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      val line = f"""{"name":"$name","sec":$secs%.3f,"rows":$rows}"""
+      }, identity)
+      val line = f"""{"name":"${o.name}","sec":${o.secs}%.3f,"rows":$rows}"""
       println(s"SCALE $line")
       logPath.foreach { p =>
         java.nio.file.Files.write(java.nio.file.Paths.get(p),
@@ -104,22 +99,17 @@ object ScaleSmoke {
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       }
-      name -> (secs, rows)
-    }
-    val total = results.map(_._2._1).sum
+      o.secs
+    }.sum
     println(f"""SCALE_TOTAL {"reps":$reps,"sec":$total%.3f}""")
     spark.stop()
   }
 
-  private def rep(spark: SparkSession, src: String, t: String): DataFrame = {
-    val base = spark.read.parquet(s"$src/$t.parquet")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "10").toInt
-    base.crossJoin(
-      spark.range(reps.toLong).toDF("__r").hint("broadcast"))
-  }
-
   private def build(spark: SparkSession, src: String, out: String,
                     reps: Int): Unit = {
+    def rep(t: String): DataFrame =
+      spark.read.parquet(s"$src/$t.parquet").crossJoin(
+        spark.range(reps.toLong).toDF("__r").hint("broadcast"))
     val r = col("__r")
     def shift(c: String) = (col(c) + r * OFF).as(c)
     val tables = sys.env.get("SPARK_GRAFT_SCALE_TABLES")
@@ -145,7 +135,7 @@ object ScaleSmoke {
       else
         when(r === 0, col("text"))
           .otherwise(concat(col("text"), lit(" r"), r))
-    save(rep(spark, src, "documents").select(
+    save(rep("documents").select(
       shift("doc_id"),
       mutText.as("text"),
       col("lang"), col("source"),
@@ -170,21 +160,21 @@ object ScaleSmoke {
             slice(col("embedding"), lit(1), k)))
       else col("embedding")
     }
-    save(rep(spark, src, "embeddings")
+    save(rep("embeddings")
       .select(shift("vec_id"), mutEmb.as("embedding"), col("label"), r),
       "embeddings")
-    save(rep(spark, src, "lineitem").select(
+    save(rep("lineitem").select(
       shift("l_orderkey") +: spark.read.parquet(s"$src/lineitem.parquet")
         .columns.filter(_ != "l_orderkey").map(col).toSeq :+ r: _*), "lineitem")
-    save(rep(spark, src, "orders").select(
+    save(rep("orders").select(
       shift("o_orderkey") +: spark.read.parquet(s"$src/orders.parquet")
         .columns.filter(_ != "o_orderkey").map(col).toSeq :+ r: _*), "orders")
-    save(rep(spark, src, "customer").select(
+    save(rep("customer").select(
       shift("c_custkey"),
       when(r === 0, col("c_name"))
         .otherwise(concat(col("c_name"), lit(" "), r)).as("c_name"),
       col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"), r), "customer")
-    save(rep(spark, src, "events").select(
+    save(rep("events").select(
       shift("event_id"), col("ts"), shift("user_id"),
       col("event_type"), col("value"), col("props"), r), "events")
     Seq("part", "supplier", "nation", "region").foreach { t =>

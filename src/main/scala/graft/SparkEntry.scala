@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
+import graft.util.QueryCache
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Query registry: each entry exercises one operator family from SURVEY.md §2
   * through the graft library; [[oracleSql]] holds the DuckDB-equivalent SQL
@@ -13,6 +14,9 @@ import graft.queries._
   * ([[graft.model.XDataset.exactSum]]) so Spark and DuckDB agree bit-for-bit;
   * numerically stable statistics (stddev/corr/percentile) are rounded to 4-6
   * dp on BOTH sides.
+  *
+  * Every main (Bench, Verify, PlanDump, ScaleSmoke) names its queries with
+  * [[select]] and runs them with [[run]]; a main only formats the outcomes.
   */
 object SparkEntry {
 
@@ -20,21 +24,55 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_agg_partial")(spark, "/root/testdata/sf0.001")
 
+  /** The 13 query families. Their key sets are disjoint: `++` would keep
+    * only the last of two queries with one name (RegistrySpec checks). */
+  private[graft] val families: Seq[QueryFamily] = Seq(QueriesCore,
+    QueriesAlign, QueriesGroupBy, QueriesWindow, QueriesReshape,
+    QueriesFunctions, QueriesNumerics, QueriesLLM, QueriesUdf,
+    QueriesStreaming, QueriesMore, QueriesCalendar, QueriesCoverage)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    QueriesCore.queries ++ QueriesAlign.queries ++ QueriesGroupBy.queries ++
-      QueriesWindow.queries ++ QueriesReshape.queries ++
-      QueriesFunctions.queries ++ QueriesNumerics.queries ++
-      QueriesLLM.queries ++ QueriesUdf.queries ++ QueriesStreaming.queries ++
-      QueriesMore.queries ++ QueriesCalendar.queries ++
-      QueriesCoverage.queries
+    families.map(_.queries).reduce(_ ++ _)
 
   /** DuckDB-runnable oracle for each query (same column names/aliases).
     * Queries absent here get the driver's weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    QueriesCore.oracles ++ QueriesAlign.oracles ++ QueriesGroupBy.oracles ++
-      QueriesWindow.oracles ++ QueriesReshape.oracles ++
-      QueriesFunctions.oracles ++ QueriesNumerics.oracles ++
-      QueriesLLM.oracles ++ QueriesUdf.oracles ++ QueriesStreaming.oracles ++
-      QueriesMore.oracles ++ QueriesCalendar.oracles ++
-      QueriesCoverage.oracles
+  def oracleSql: Map[String, String] = families.map(_.oracles).reduce(_ ++ _)
+
+  /** Every registered name in sorted order when `names` is empty, else
+    * `names` (duplicates dropped). An unknown name raises an
+    * IllegalArgumentException that lists it, so a misspelt name fails the
+    * main before it writes anything. */
+  def select(names: Seq[String]): Seq[String] = {
+    val known = queries.keySet
+    val unknown = names.filterNot(known).distinct
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (names.isEmpty) known.toSeq.sorted else names.distinct
+  }
+
+  /** One query's outcome: the action's result or what it threw, and the
+    * seconds from the start of the build to the end of the action. */
+  final case class Outcome[T](name: String, result: Either[Throwable, T],
+                              secs: Double)
+
+  /** The query lifecycle every main shares. For each name, in order: build
+    * the query and apply `action` to its name and frame inside
+    * [[QueryCache.scoped]], which releases exactly the frames the query's
+    * operators persisted; then `catalog.clearCache()` drops anything else
+    * cached, so cache memory never accumulates across a run. A failure is
+    * captured in that name's outcome and the run goes on. Each query runs
+    * as the iterator reaches it, so a caller can report one outcome before
+    * the next query starts. */
+  def run[T](spark: SparkSession, dir: String, names: Seq[String])(
+      action: (String, DataFrame) => T): Iterator[Outcome[T]] = {
+    val registry = queries
+    names.iterator.map { name =>
+      val t0 = System.nanoTime()
+      val result =
+        try Right(QueryCache.scoped(action(name, registry(name)(spark, dir))))
+        catch { case e: Throwable => Left(e) }
+      val secs = (System.nanoTime() - t0) / 1e9
+      spark.catalog.clearCache()
+      Outcome(name, result, secs)
+    }
+  }
 }

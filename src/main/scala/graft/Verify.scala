@@ -1,23 +1,22 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each registered query's result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *   runMain graft.Verify <sfDir> <outDir> [query ...]
+  *
+  * dumps every registered query, or only the named ones. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional trailing args: run only these queries (one-query dumps)
-    val only = args.drop(2).toSet
+    val names = SparkEntry.select(args.drop(2).toSeq)
     val spark = GraftSession(sfDir)
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try graft.util.QueryCache.scoped {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
+    SparkEntry.run(spark, sfDir, names) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.foreach {
+      case SparkEntry.Outcome(name, Left(e), _) =>
         // A query that errors must still leave an artifact: a sentinel
         // one-row parquet guarantees the driver's compare records a FAIL
         // for this name instead of silently omitting it (a 51-query
@@ -32,10 +31,7 @@ object Verify {
         } catch { case e2: Throwable =>
           System.err.println(s"[verify] $name sentinel write failed: ${e2.getMessage}")
         }
-      }
-      // operators persist() intermediates scoped to one query; drop them
-      // so cache memory never accumulates across the full registry run
-      spark.catalog.clearCache()
+      case _ =>
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -17,12 +17,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed+sorted parquet table (catalog-managed; at
-    * cluster scale the same call against a shared metastore). */
-  def writeBucketed(df: DataFrame, table: String, key: String,
+  /** Write `df` as a bucketed+sorted parquet table `table` whose files
+    * live at `path` (an external table: nothing lands in the working
+    * directory's `spark-warehouse/`; at cluster scale the same call
+    * against a shared metastore and store). */
+  def writeBucketed(df: DataFrame, table: String, path: String, key: String,
                     buckets: Int): Unit =
     df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
+      .bucketBy(buckets, key).sortBy(key).option("path", path)
+      .saveAsTable(table)
 
   /** Join two co-bucketed tables on their bucket key — shuffle-free. */
   def join(spark: SparkSession, left: String, right: String,

@@ -88,14 +88,6 @@ object Cluster {
              k: Int, iters: Int): DataFrame =
     kmeansImpl(vecs, id, vec, k, iters, new Stats)
 
-  /** The Lloyd loop's FINAL centroids (the driver-held k x dim array
-    * [[kmeansImpl]] assigns against) — for callers that need distances
-    * to every centroid, not just the nearest (silhouette, soft
-    * assignment). */
-  def kmeansCentroids(vecs: DataFrame, id: String, vec: String,
-                      k: Int, iters: Int): Array[Array[Double]] =
-    lloydCents(vecs, id, vec, k, iters, new Stats)
-
   /** Simplified (centroid-based) silhouette per cluster: for each point
     * a = distance to its own centroid, b = distance to the nearest
     * OTHER centroid, s = (b − a) / max(a, b) ∈ [−1, 1] — the standard
@@ -196,7 +188,7 @@ object Cluster {
     import org.apache.spark.sql.expressions.Window
     // persist: the cap aggregate and the ranked scan both consume the
     // assignment — unpersisted, an upstream kmeans assign() projection
-    // would run twice (callers clearCache() per query)
+    // would run twice (the caller's QueryCache scope releases it)
     val a = graft.util.QueryCache.persist(assigned)
     val sizes = a.groupBy(col(cluster)).agg(count(lit(1)).as("__n"))
     val cap = sizes.agg(min(col("__n")).as("__cap"))

@@ -382,7 +382,7 @@ object Dedup {
     // stream; without materialization each re-runs the explode +
     // substring + xxhash64 windowing pass over the full corpus. The
     // cached form is 3 longs/row — far narrower than the text it derives
-    // from — and query-scoped (callers clearCache per query).
+    // from — and query-scoped (the caller's QueryCache scope releases it).
     val grams = graft.util.QueryCache.persist(
       windowGrams(docs, id, text, gramLen, stride))
     // minDocs == 2 ("shared by ANY other doc", the default and the q156
@@ -468,11 +468,13 @@ object Dedup {
     * lineage stays shallow. Duplicate families in a dedup pipeline are
     * shallow (stars/chains of a few hops), so rounds ~ 2-4 in practice. */
   def connectedComponents(pairs: DataFrame, a: String, b: String): DataFrame = {
-    val edges = pairs.select(col(a).as("u"), col(b).as("v"))
-      .union(pairs.select(col(b).as("u"), col(a).as("v")))
-      .distinct().persist()
-    var labels = edges.select(col("u").as("id")).distinct()
-      .withColumn("cluster_id", col("id")).persist()
+    val edges = graft.util.QueryCache.persist(
+      pairs.select(col(a).as("u"), col(b).as("v"))
+        .union(pairs.select(col(b).as("u"), col(a).as("v")))
+        .distinct())
+    var labels = graft.util.QueryCache.persist(
+      edges.select(col("u").as("id")).distinct()
+        .withColumn("cluster_id", col("id")))
     // Convergence witness: labels only ever DECREASE under min-propagation,
     // so the label sum is strictly monotone until fixpoint — one decimal
     // aggregate per round replaces a join-based change detector.
@@ -648,8 +650,8 @@ object Dedup {
                k: Int, iters: Int, threshold: Double): DataFrame = {
     // persist: the Lloyd loop makes iters+2 passes (init collect,
     // per-round assign+update, final assign) — without materialisation
-    // each re-runs the normalization from the source scan. Callers
-    // clearCache() per query, so the entries are query-scoped.
+    // each re-runs the normalization from the source scan. The caller's
+    // QueryCache scope releases the entries, so they are query-scoped.
     val normed = graft.util.QueryCache.persist(
       graft.util.Parallelize.ensure(vecs)
         .select(col(id), Cluster.l2normalize(col(vec)).as("__nv")))
@@ -681,21 +683,6 @@ object Dedup {
       .filter(col("cos") >= threshold)
       .groupBy(col("id_b").as(id), col("cluster"))
       .agg(max(col("cos")).as("max_cos"))
-  }
-
-  /** Embedding near-dup: cosine above threshold within LSH buckets — see
-    * [[Similarity]] for the bucketing; this is the verify step. */
-  def cosineVerify(pairs: DataFrame, vecs: DataFrame, id: String,
-                   vec: String, threshold: Double): DataFrame = {
-    import graft.numerics.Numerics
-    val v = vecs.select(col(id), col(vec))
-    pairs
-      .join(v.select(col(id).as("id_a"), col(vec).as("va")), "id_a")
-      .join(v.select(col(id).as("id_b"), col(vec).as("vb")), "id_b")
-      .withColumn("cosine", Numerics.dotDecimal(col("va"), col("vb")) /
-        (Numerics.normDecimal(col("va")) * Numerics.normDecimal(col("vb"))))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
   }
 
   /** Blocked fuzzy record linkage (edit distance): per record, how many

@@ -37,7 +37,7 @@ object NgramLM {
   def bigramPerplexity(corpus: DataFrame, id: String, text: String,
                        alpha: Double = 0.5): DataFrame = {
     // persist: three downstream consumers + the count() action below;
-    // callers clearCache() per query so the entry is query-scoped (an
+    // the caller's QueryCache scope releases the entry (an
     // eager localCheckpoint here forced an extra blocking job — measured
     // regression on the perplexity query)
     val docBi = graft.util.QueryCache.persist(corpus

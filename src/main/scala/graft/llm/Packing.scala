@@ -44,8 +44,8 @@ object Packing {
     val p = math.max(spark.sparkContext.defaultParallelism, 1)
     // persist: the probe aggregate, the partial-sums job, and the final
     // plan all consume this frame — without materialisation each re-runs
-    // the (often expensive) valCol from the source scan. Callers
-    // (Bench/Verify) clearCache per query, so the entry is query-scoped.
+    // the (often expensive) valCol from the source scan. The caller's
+    // QueryCache scope releases the entry, so it is query-scoped.
     // An eager localCheckpoint here cost an extra blocking job and cut
     // the plan off from AQE (measured 2-4× on the packing queries).
     val narrow = graft.util.QueryCache.persist(

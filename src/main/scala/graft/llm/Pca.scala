@@ -53,10 +53,10 @@ object Pca {
     // the SCAN stage — a single-file scan serialized it on one task
     // (measured 2.4 s of 2.8 s total at sf0.1); decimal partial sums are
     // exact and commutative, so the widened partial/merge is bit-identical
-    val m = graft.util.Parallelize.ensure(df)
+    val m = graft.util.QueryCache.persist(graft.util.Parallelize.ensure(df)
       .agg(graft.exprs.CovMomentsAgg.covMoments(col(vecCol), d).as("m"))
-      .select(inline(col("m"))) // T = (d+1)(d+2)/2 rows — bounded driver-side state
-      .persist()
+      // T = (d+1)(d+2)/2 rows — bounded driver-side state
+      .select(inline(col("m"))))
     val n = m.filter(col("i") === d && col("j") === d)
       .head().getDecimal(2).doubleValue() // bounded: the count cell
     require(n >= 2, s"covariance needs >= 2 rows, got ${n.toLong}")
@@ -89,7 +89,8 @@ object Pca {
           .as(Seq("dj", "xj")))
       .select(col("i"), (col("i") + col("dj")).as("j"),
         (col("xi").cast("double") * col("xj").cast("double")).as("p"))
-    val m = prods.groupBy("i", "j").agg(sum(dec(col("p"))).as("s2")).persist()
+    val m = graft.util.QueryCache.persist(
+      prods.groupBy("i", "j").agg(sum(dec(col("p"))).as("s2")))
     val n = m.filter(col("i") === d && col("j") === d)
       .head().getDecimal(2).doubleValue()
     require(n >= 2, s"covariance needs >= 2 rows, got ${n.toLong}")

@@ -67,8 +67,9 @@ object Sampling {
     val joined = keyed.join(broadcast(counts), "__sk")
     val cutoff = least(lit(65536.0), ceil(lit(262144.0) * n / col("__N")))
     // persist: the collect below materialises the cache; the final window
-    // pass reads it. Callers clearCache() per query (eager localCheckpoint
-    // here cost an extra blocking job — measured 2× on this query).
+    // pass reads it. The caller's QueryCache scope releases it (eager
+    // localCheckpoint here cost an extra blocking job — measured 2× on
+    // this query).
     val pre = graft.util.QueryCache.persist(joined.filter(b16 < cutoff))
     val nBy = countRows.toMap
     val preBy = pre.groupBy(col("__sk")).agg(count(lit(1)).as("c"))

@@ -71,14 +71,4 @@ object Positions {
         col("__off") + (col("__mid") - shiftleft(col("__pid").cast(LongType), 33)))
       .drop("__pid", "__mid", "__off")
   }
-
-  /** Window-based variant: fine when a partitioning key bounds the window
-    * size (e.g. per-group positions); avoid the unpartitioned form at scale. */
-  def viaWindow(df: DataFrame, partitionBy: Seq[Column], orderCols: Seq[Column], posCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w =
-      if (partitionBy.isEmpty) Window.orderBy(orderCols: _*)
-      else Window.partitionBy(partitionBy: _*).orderBy(orderCols: _*)
-    df.withColumn(posCol, row_number().over(w).cast(LongType) - 1L)
-  }
 }

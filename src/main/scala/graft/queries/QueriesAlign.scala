@@ -10,7 +10,7 @@ import graft.agg.Groupers
 
 /** Alignment / implicit-join operator queries (SURVEY.md §2.3): align modes,
   * reindex, broadcast binary ops, merge, combine_first, as-of joins. */
-object QueriesAlign {
+object QueriesAlign extends QueryFamily {
 
   private def custPerNation(s: SparkSession, dir: String): XDataset =
     XDataset(

@@ -14,7 +14,7 @@ import graft.io.{CFDecode, Tables}
   * identical integer formulas; the month-from-doy CASE chains on both sides
   * are generated from the same month-start tables.
   */
-object QueriesCalendar {
+object QueriesCalendar extends QueryFamily {
 
   private val startsNoLeap = Seq(0, 31, 59, 90, 120, 151, 181, 212, 243, 273,
     304, 334, 365)

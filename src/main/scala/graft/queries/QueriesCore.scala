@@ -8,7 +8,7 @@ import graft.io.Tables
 
 /** Selection / projection / masking operator queries (SURVEY.md §2.2) +
   * the flagship partial-reduction aggregate (§2.4). */
-object QueriesCore {
+object QueriesCore extends QueryFamily {
 
   def li(s: SparkSession, dir: String): XDataset =
     XDataset(Tables.lineitem(s, dir), dims = Seq("l_orderkey", "l_linenumber"))

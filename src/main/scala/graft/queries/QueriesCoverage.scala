@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{BinaryType, DecimalType, LongType,
 import graft.model.{MultiDataset, XDataset}
 import graft.model.XDataset.exactSum
 import graft.GraftSession.scratch
-import graft.io.Tables
+import graft.io.{Bucketing, Tables}
 
 /** Driver-checked queries for operators that previously had only unit
   * coverage (SURVEY.md §2 "unit"-status rows): meta verbs (drop_vars,
@@ -17,7 +17,7 @@ import graft.io.Tables
   * co-located joins, save_mfdataset, and the dict round-trip. Each entry
   * runs the op through the public library API and lands on a DuckDB-
   * expressible result so the driver's oracle hash-checks it. */
-object QueriesCoverage {
+object QueriesCoverage extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -526,14 +526,10 @@ object QueriesCoverage {
       val custP = scratch(s, "bkt_customer", dir)
       val ordersT = "graft_" + new java.io.File(ordersP).getName
       val custT = "graft_" + new java.io.File(custP).getName
-      Tables.orders(s, dir).write.mode("overwrite")
-        .bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", ordersP)
-        .saveAsTable(ordersT)
-      Tables.customer(s, dir).write.mode("overwrite")
-        .bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", custP)
-        .saveAsTable(custT)
+      Bucketing.writeBucketed(Tables.orders(s, dir), ordersT, ordersP,
+        "o_custkey", 8)
+      Bucketing.writeBucketed(Tables.customer(s, dir), custT, custP,
+        "c_custkey", 8)
       s.table(ordersT)
         .join(s.table(custT), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
@@ -551,15 +547,15 @@ object QueriesCoverage {
     }),
 
     // §2.1 load_* (ref `dataset.py:1381`): eager materialization — the
-    // persisted frame must answer identically to the lazy scan
+    // persisted frame must answer identically to the lazy scan. The
+    // query does not scope itself: it expects its caller (SparkEntry.run)
+    // to scope it, and that scope releases the cache after the result ran
     "q224_load_eager" -> ((s, dir) => {
-      graft.util.QueryCache.scoped {
-        XDataset(Tables.supplier(s, dir), dims = Seq("s_suppkey"))
-          .load()
-          .df.groupBy("s_nationkey")
-          .agg(count(lit(1)).as("n"),
-            exactSum(col("s_acctbal")).as("bal"))
-      }
+      XDataset(Tables.supplier(s, dir), dims = Seq("s_suppkey"))
+        .load()
+        .df.groupBy("s_nationkey")
+        .agg(count(lit(1)).as("n"),
+          exactSum(col("s_acctbal")).as("bal"))
     }),
 
     // §2.2 loc (ref `dataset.py:632` _LocIndexer): label-dict selection

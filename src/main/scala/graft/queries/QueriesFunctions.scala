@@ -8,7 +8,7 @@ import graft.functions.{DtFns, StrFns}
 /** Scalar-function operator queries (SURVEY.md §2.9): the `.str` and `.dt`
   * accessor batteries, type/NA scalar ops, 3-arg where, full_like,
   * date_range + infer_freq. */
-object QueriesFunctions {
+object QueriesFunctions extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

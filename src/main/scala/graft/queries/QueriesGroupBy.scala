@@ -9,7 +9,7 @@ import graft.agg.{Aggregations, Groupers}
 
 /** GroupBy / groupers / resample / weighted / reduction-semantics queries
   * (SURVEY.md §2.4). */
-object QueriesGroupBy {
+object QueriesGroupBy extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -9,7 +9,7 @@ import graft.llm.{Agreement, Bpe, Calibration, Classifier, Cluster, CorpusStats,
 /** Training-data pipeline operator queries: dedup (exact / MinHash-LSH /
   * SimHash / n-gram Jaccard), embedding similarity search, text analysis,
   * multimodal plumbing. */
-object QueriesLLM {
+object QueriesLLM extends QueryFamily {
 
   /** Seeded hyperplane signs for q54b — one source of truth for the engine
     * expression AND the generated oracle SQL literal. */
@@ -76,11 +76,11 @@ object QueriesLLM {
       // 64-bit shingle ids, NOT strings: set sizes are identical w.h.p.
       // (within-doc 64-bit collision ~1e-15) and the persist/shuffle/
       // intersect all run over longs instead of text.
-      val sig = all.withColumn("sh_x", Dedup.shingleIds(col("text"), 3))
-        .withColumn("sig", Dedup.minhashFromHashes(
-          transform(col("sh_x"), h => pmod(h, lit(2147483647L))), 64))
-        .select("doc_id", "sh_x", "sig")
-        .persist()
+      val sig = graft.util.QueryCache.persist(
+        all.withColumn("sh_x", Dedup.shingleIds(col("text"), 3))
+          .withColumn("sig", Dedup.minhashFromHashes(
+            transform(col("sh_x"), h => pmod(h, lit(2147483647L))), 64))
+          .select("doc_id", "sh_x", "sig"))
       val buckets = Dedup.lshBuckets(sig, "doc_id", "sig",
         bands = 16, rowsPerBand = 4)
       val pairs = Dedup.candidatePairs(buckets, "doc_id")
@@ -162,8 +162,8 @@ object QueriesLLM {
       val corpus = Tables.embeddings(s, dir)
       val centroids = corpus.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cell_id"), col("embedding").as("cell_vec"))
-      val assigned = Similarity.ivfAssign(corpus, centroids,
-        "vec_id", "embedding", "cell_id", "cell_vec").persist()
+      val assigned = graft.util.QueryCache.persist(Similarity.ivfAssign(
+        corpus, centroids, "vec_id", "embedding", "cell_id", "cell_vec"))
       val probes = assigned.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("__pv"),
           col("cell_id"))
@@ -233,8 +233,8 @@ object QueriesLLM {
       val corpus = Tables.embeddings(s, dir)
       val centroids = corpus.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cell_id"), col("embedding").as("cell_vec"))
-      val assigned = Similarity.ivfAssign(corpus, centroids,
-        "vec_id", "embedding", "cell_id", "cell_vec").persist()
+      val assigned = graft.util.QueryCache.persist(Similarity.ivfAssign(
+        corpus, centroids, "vec_id", "embedding", "cell_id", "cell_vec"))
       val probes = Similarity.ivfProbeCells(
         corpus.filter(col("vec_id") < 5)
           .select(col("vec_id").as("probe_id"), col("embedding").as("__pv")),

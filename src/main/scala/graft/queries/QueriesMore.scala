@@ -16,7 +16,7 @@ import graft.window.Pad
   * rolling-construct, upsampling, first/last, prod/all/any, positional
   * argmax, pct rank, ufunc battery, CF decode, cross product, set ops,
   * eval, multi-file open. */
-object QueriesMore {
+object QueriesMore extends QueryFamily {
 
   /** q356's oracle: 8 synchronized 3-core peel rounds unrolled as CTE
     * stages (standard SQL forbids aggregates in a recursive term, so

@@ -8,7 +8,7 @@ import graft.io.Tables
 import graft.numerics.Numerics
 
 /** Numerics / statistics / interpolation queries (SURVEY.md §2.10). */
-object QueriesNumerics {
+object QueriesNumerics extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -7,7 +7,7 @@ import graft.io.Tables
 import graft.reshape.Reshape
 
 /** Reshape / combine operator queries (SURVEY.md §2.7-2.8). */
-object QueriesReshape {
+object QueriesReshape extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -12,7 +12,7 @@ import graft.streaming.StreamOps
   * state-store shard count ([[StreamOps.StateShards]]) from the
   * `StreamOps` runners, and scratch files (stream fixtures, sink output,
   * checkpoints) live under [[graft.GraftSession.scratch]]. */
-object QueriesStreaming {
+object QueriesStreaming extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

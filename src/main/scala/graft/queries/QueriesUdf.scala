@@ -7,7 +7,7 @@ import graft.exprs.{Ewm, HFQuantile}
 
 /** UDF-surface queries (SURVEY.md §2.12 apply_ufunc mapping) + custom
   * aggregates that Spark lacks natively. */
-object QueriesUdf {
+object QueriesUdf extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,7 +8,7 @@ import graft.window.Windows
 
 /** Moving-window operator queries (SURVEY.md §2.5): rolling with
   * min_periods/center, shift/diff, ffill/bfill, coarsen. */
-object QueriesWindow {
+object QueriesWindow extends QueryFamily {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -293,7 +293,7 @@ object StreamOps {
         transform(col("sh_x"), h => pmod(h, lit(2147483647L))), numHashes))
     // static side: computed ONCE and persisted — an unpersisted static
     // plan re-evaluates per micro-batch in a stream-static join
-    val refSig = withSig(ref).persist()
+    val refSig = graft.util.QueryCache.persist(withSig(ref))
     val refBuckets = Dedup.lshBuckets(refSig.select(col(id), col("sig")),
       id, "sig", bands, rows).withColumnRenamed(id, "ref_id")
     val refSh = refSig.select(col(id).as("ref_id"), col("sh_x").as("ref_sh"))

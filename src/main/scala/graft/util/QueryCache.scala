@@ -6,16 +6,18 @@ import org.apache.spark.storage.StorageLevel
 /** Query-scoped cache registry: library operators that persist a
   * multi-consumer intermediate (packing's ranged frame, the LM token
   * table, SemDeDup's normalized vectors, ...) register it here, and the
-  * enclosing [[scoped]] block — one per query in Bench/Verify, or any
-  * user pipeline step — unpersists exactly those frames on exit.
+  * enclosing [[scoped]] block — one per query in the registry runner
+  * (`SparkEntry.run`), or any user pipeline step — unpersists exactly
+  * those frames on exit. Every persist in the library goes through
+  * [[persist]] (ScratchSpec scans for others).
   *
   * The returned DataFrames usually still REFERENCE the persisted frame
   * (the cache must outlive the operator call, until the caller's action
   * has run), so the operator itself cannot unpersist — but a library
   * function also must not leak session-lifetime cache entries to every
-  * caller that is not Bench/Verify. Scoping at the caller is the right
+  * caller outside the runner. Scoping at the caller is the right
   * altitude for both. Outside any scope the persist is recorded
-  * session-wide and [[clearAll]] (or Spark's own catalog.clearCache)
+  * session-wide and [[clearAll]] (or Spark's catalog-wide cache clear)
   * reclaims it.
   */
 object QueryCache {

@@ -11,8 +11,11 @@ class BucketingSpec extends SparkSpec {
   test("join between co-bucketed tables is shuffle-free") {
     val left = spark.range(10000).toDF("k").withColumn("a", col("k") % 7)
     val right = spark.range(5000).toDF("k").withColumn("b", col("k") % 11)
-    Bucketing.writeBucketed(left, "bk_left", "k", 8)
-    Bucketing.writeBucketed(right, "bk_right", "k", 8)
+    val dir = scratchDir("bucketing")
+    Bucketing.writeBucketed(left, "bk_left", s"$dir/left", "k", 8)
+    Bucketing.writeBucketed(right, "bk_right", s"$dir/right", "k", 8)
+    // external tables: the files sit under the scratch directory
+    assert(new java.io.File(s"$dir/left").list().exists(_.endsWith(".parquet")))
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {

@@ -1,13 +1,21 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import graft.util.QueryCache
+
 /** Plan-quality assertions — the scale contract, checked on real plans:
   * filters reach the parquet scan, projections prune the read schema,
   * small dimension sides broadcast, and positional machinery avoids
   * single-partition windows. */
 class PlanSpec extends SparkSpec {
 
+  /** Builds `name` and reads its plan inside a query scope, as the registry
+    * runner does, so no persisted frame outlives the test. */
+  private def scopedPlan(name: String)(f: DataFrame => String): String =
+    QueryCache.scoped(f(SparkEntry.queries(name)(spark, sf)))
+
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+    scopedPlan(name)(_.queryExecution.executedPlan.toString)
 
   test("label-slice filter is pushed down to the parquet scan") {
     val p = plan("q02_sel_slice")
@@ -29,9 +37,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("whole-stage codegen covers the scalar-function battery") {
-    val p = SparkEntry.queries("q36_str_battery")(spark, sf)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    val p = scopedPlan("q36_str_battery")(_.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
     // Spark 4 formatted plans mark codegen stages as `[codegen id : N]`
     assert(p.contains("codegen id"), p.take(500))
   }

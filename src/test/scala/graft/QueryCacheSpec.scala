@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import graft.util.QueryCache
 
 /** Query-scoped cache registry: frames persisted inside a scope are
@@ -49,5 +50,23 @@ class QueryCacheSpec extends SparkSpec {
     }
     // nothing from the op survives the scope
     assert(spark.sparkContext.getPersistentRDDs.size <= before)
+    // covariance persists its moments frame
+    val vecs = Seq(Array(1.0f, 2.0f), Array(2.0f, 1.0f), Array(0.0f, 3.0f))
+      .map(Tuple1(_)).toDF("v")
+    QueryCache.scoped {
+      assert(graft.llm.Pca.covariance(vecs, "v").count() === 3L)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size <= before)
+  }
+
+  test("q224_load_eager reads its loaded frame from the cache") {
+    QueryCache.scoped {
+      val q = SparkEntry.queries("q224_load_eager")(spark, sf)
+      val cached = q.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r
+      }
+      assert(cached.nonEmpty, q.queryExecution.withCachedData.treeString)
+      assert(q.count() > 0L)
+    }
   }
 }

@@ -10,12 +10,13 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 import graft.streaming.StreamOps
-import graft.util.Parallelize
+import graft.util.{Parallelize, QueryCache}
 
 /** Queries do not manage their own environment: the files they write live
-  * under the session's scratch root, never a hand-built `/tmp` path, and
+  * under the session's scratch root, never a hand-built `/tmp` path;
   * stateful streams take their state-shard count from the StreamOps
-  * runners, never from a conf write in the registry. */
+  * runners, never from a conf write in the registry; and only the registry
+  * runner scopes a query's cache and clears it. */
 class ScratchSpec extends SparkSpec {
 
   private def scalaFiles(dir: File): Seq[File] =
@@ -24,15 +25,22 @@ class ScratchSpec extends SparkSpec {
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     }
 
-  /** `path:line` of every line in `files` that contains `needle`. */
-  private def hits(files: Seq[File], needle: String): Seq[String] =
+  /** `path:line` of every line in `files` that matches `pattern`. */
+  private def hits(files: Seq[File], pattern: String): Seq[String] = {
+    val re = pattern.r.unanchored
     files.flatMap { f =>
       val src = Source.fromFile(f, "UTF-8")
       try src.getLines().zipWithIndex.collect {
-        case (l, i) if l.contains(needle) => s"${f.getPath}:${i + 1}"
+        case (re(), i) => s"${f.getPath}:${i + 1}"
       }.toList
       finally src.close()
     }
+  }
+
+  /** The files of `hits`, once each: the lifecycle and persist scans allow
+    * several lines in one file. */
+  private def filesOf(hits: Seq[String]): Seq[String] =
+    hits.map(_.takeWhile(_ != ':')).distinct
 
   test("src/main builds no /tmp path; queries/ never sets the shuffle width") {
     val main = new File("src/main/scala")
@@ -43,15 +51,27 @@ class ScratchSpec extends SparkSpec {
     assert(tmp.map(_.takeWhile(_ != ':')) ===
       Seq("src/main/scala/graft/ScaleSmoke.scala"), tmp.mkString(", "))
     val pins = hits(scalaFiles(new File(main, "graft/queries")),
-      "\"spark.sql.shuffle.partitions\"")
+      "\"spark\\.sql\\.shuffle\\.partitions\"")
     assert(pins.isEmpty, pins.mkString(", "))
+  }
+
+  test("src/main scopes and releases queries only in the registry runner") {
+    val files = scalaFiles(new File("src/main/scala"))
+    val lifecycle = hits(files, "QueryCache\\.scoped|catalog\\.clearCache")
+    assert(filesOf(lifecycle) === Seq("src/main/scala/graft/SparkEntry.scala"),
+      lifecycle.mkString(", "))
+    // every persist registers with the query scope
+    val persists = hits(files, "(?<!QueryCache)\\.persist\\(|\\.cache\\(\\)")
+    assert(filesOf(persists) === Seq("src/main/scala/graft/util/QueryCache.scala"),
+      persists.mkString(", "))
   }
 
   test("q135_zarr_roundtrip writes its store under the SparkFiles root") {
     val store = new File(GraftSession.scratch(spark, "zarr", sf))
     assert(store.toPath.startsWith(SparkFiles.getRootDirectory()))
     org.apache.commons.io.FileUtils.deleteDirectory(store)
-    val rows = SparkEntry.queries("q135_zarr_roundtrip")(spark, sf).collect()
+    val rows = QueryCache.scoped(
+      SparkEntry.queries("q135_zarr_roundtrip")(spark, sf).collect())
     assert(rows.length === 30)
     assert(Option(store.list()).exists(_.nonEmpty), s"$store is empty")
   }
