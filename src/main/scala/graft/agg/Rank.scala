@@ -13,6 +13,10 @@ import graft.model.Positions
   * offsets ([[Positions.zipWithIndex]]), then resolves ties with a
   * per-value aggregation joined back: rank_avg(x) = mean of (ordinal+1)
   * over the tie group. Two shuffles, no single-task stage.
+  *
+  * NULL values are missing, as xarray's `rank` (bottleneck `nanrankdata`)
+  * treats NaN: they get a NULL rank and take no ordinal, and `pct`
+  * divides by the non-NULL count.
   */
 object Rank {
 
@@ -20,14 +24,15 @@ object Rank {
     * `pct = true` for rank/n (xarray pct=True). */
   def avgRank(df: DataFrame, valueCol: String, outCol: String,
               pct: Boolean = false): DataFrame = {
+    val present = df.filter(col(valueCol).isNotNull)
     val pos = "__rank_pos"
-    val withPos = Positions.zipWithIndex(df, Seq(col(valueCol)), pos)
-    val perValue = withPos.groupBy(col(valueCol).as("__rank_v"))
+    val perValue = Positions.zipWithIndex(present, Seq(col(valueCol)), pos)
+      .groupBy(col(valueCol).as("__rank_v"))
       .agg(avg(col(pos) + 1).as("__rank_avg"))
-    val n = if (pct) Some(df.count().toDouble) else None
-    val joined = withPos
+    val n = if (pct) Some(present.count().toDouble) else None
+    val joined = df
       .join(perValue, col(valueCol) === col("__rank_v"), "left")
-      .drop("__rank_v", pos)
+      .drop("__rank_v")
     val out = n match {
       case Some(total) => joined.withColumn(outCol, col("__rank_avg") / total)
       case None        => joined.withColumn(outCol, col("__rank_avg"))
@@ -36,36 +41,28 @@ object Rank {
   }
 
   /** Value-level average-tie rank map via a TWO-LEVEL distributed
-    * prefix (the Packing pattern): ranks need only the distinct-value
-    * frame — per-value counts, a within-bucket prefix (window
-    * partitioned by a monotone bucket of the value), and a broadcast
-    * prefix over the bucket totals (bounded by range/width, not rows).
-    * rank(v) = below(v) + (cnt(v)+1)/2 — the identical half-integer
-    * [[avgRank]]'s ordinal average produces, with no per-row ordinal
-    * pass and no global window over values.
+    * prefix: ranks need only the distinct-value frame — per-value counts,
+    * a within-bucket prefix (window partitioned by a monotone bucket of
+    * the value), and [[Positions.bucketOffsets]] over the bucket totals
+    * (bounded by range/width, not rows). rank(v) = below(v) + (cnt(v)+1)/2
+    * — the identical half-integer [[avgRank]]'s ordinal average produces,
+    * with no per-row ordinal pass and no global window over values. NULL
+    * values take no rank and have no entry.
     *
     * @param bucket monotone non-decreasing function of the value column
     * @return (value, rank) map — join it back on the value */
   def avgRankMap(df: DataFrame, valueCol: String,
                  bucket: Column => Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pv = df.groupBy(col(valueCol).as("__v"))
+    val pv = df.filter(col(valueCol).isNotNull)
+      .groupBy(col(valueCol).as("__v"))
       .agg(count(lit(1)).as("__c"))
       .withColumn("__b", bucket(col("__v")))
     val wIn = Window.partitionBy(col("__b")).orderBy(col("__v"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val within = pv.withColumn("__below",
-      coalesce(sum(col("__c")).over(wIn), lit(0L)))
-    // bucket totals: one row per bucket — the global prefix runs over
-    // this bounded frame only
-    val wB = Window.orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val boff = pv.groupBy(col("__b")).agg(sum(col("__c")).as("__bt"))
-      .withColumn("__off", coalesce(sum(col("__bt")).over(wB), lit(0L)))
-      .select(col("__b"), col("__off"))
-    within.join(broadcast(boff), "__b")
+    Positions.bucketOffsets(pv, "__b", sum(col("__c")).as("__off"))
       .select(col("__v"),
-        (col("__off") + col("__below") +
+        (col("__off") + coalesce(sum(col("__c")).over(wIn), lit(0L)) +
           (col("__c") + 1) / lit(2.0)).as("__r"),
         col("__c"))
   }

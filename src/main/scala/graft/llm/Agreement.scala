@@ -139,10 +139,13 @@ object Agreement {
     *             div (2·n⁺·n⁻)
     * — every quantity an exact integer on any engine.
     *
+    * Rows whose label or score is NULL are dropped (skipna): a NULL
+    * label is neither class, so it must not take a rank either.
+    *
     * Scale shape: one hash-agg to the per-SCORE frame (bounded by the
-    * score grid, not rows), prefix via bucket offsets collected on the
-    * driver (bounded by `bucketFn`'s range — the globalRunningSum
-    * discipline, no global window), one widened final aggregate.
+    * score grid, not rows), a within-bucket prefix plus
+    * [[graft.model.Positions.bucketOffsets]] (bounded by `bucketFn`'s
+    * range — no global window over scores), one widened final aggregate.
     *
     * @param bucketFn monotone non-decreasing function of the score
     *                 column with bounded range (e.g. floor(p·64)) */
@@ -152,20 +155,13 @@ object Agreement {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val pv = graft.util.QueryCache.persist(
       scored.select(y.cast("long").as("yy"), score.as("v"))
+        .filter(col("yy").isNotNull && col("v").isNotNull)
         .groupBy(col("v"))
         .agg(count(lit(1)).as("c"), sum(col("yy")).as("pos"))
         .withColumn("b", bucketFn(col("v")).cast("long")))
-    val bt = pv.groupBy(col("b")).agg(sum(col("c")).as("ct"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val offsets = bt.scanLeft((0L, 0L)) { case ((_, acc), (b, ct)) =>
-      (b, acc + ct)
-    }.init.zip(bt).map { case ((_, off), (b, _)) => (b, off) }
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val offDf = offsets.toSeq.toDF("b", "off")
     val wIn = Window.partitionBy(col("b")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    pv.join(broadcast(offDf), "b")
+    graft.model.Positions.bucketOffsets(pv, "b", sum(col("c")).as("off"))
       .withColumn("below",
         col("off") + coalesce(sum(col("c")).over(wIn), lit(0L)))
       .agg(sum(col("pos")).cast(dec).as("np"),

@@ -257,8 +257,9 @@ object CorpusStats {
     * Gini = (2·Σ rank·x − (n+1)·S) / (n·S). Σ rank·x does not depend on
     * tie order (a tie group's rank sum is fixed), so it folds over the
     * PER-VALUE frame: Σ_v v·(c_v·below_v + c_v(c_v+1)/2). below_v comes
-    * from the two-level prefix (within-bucket window + broadcast bucket
-    * totals — never a global window); the value frame is bounded by the
+    * from a within-bucket window plus
+    * [[graft.model.Positions.bucketOffsets]] (bounded by
+    * weight-range/bucketWidth); the value frame is bounded by the
     * distinct weights, not rows. Top-decile share replays the same
     * frame from above: the top n div 10 items' weight, split exactly at
     * the threshold value. Everything integer; two truncating ppm divs. */
@@ -271,33 +272,18 @@ object CorpusStats {
         .filter(col("v").isNotNull && col("v") >= 0)
         .groupBy(col("v")).agg(count(lit(1)).as("c"))
         .withColumn("b", expr(s"v div $bucketWidth")))
-    // bucket totals -> driver (bounded by weight-range/bucketWidth —
-    // token counts, not rows), prefix offsets broadcast back: the
-    // globalRunningSum discipline, never a global window
-    val bt = pv.groupBy(col("b"))
-      .agg(sum(col("c")).as("ct"),
-        sum(col("v").cast(dec) * col("c")).cast(dec).as("wt"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), BigDecimal(r.getDecimal(2))))
-      .sortBy(_._1)
-    val offsets = bt.scanLeft((0L, 0L, BigDecimal(0))) {
-      case ((_, accC, accW), (b, ct, wt)) => (b, accC + ct, accW + wt)
-    }.init.zip(bt).map { case ((_, offC, offW), (b, _, _)) =>
-      (b, offC, offW)
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = offsets.toSeq.toDF("b", "off_c", "off_w")
     val wIn = Window.partitionBy(col("b")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
     // both prefixes in ONE projection so Spark plans a single Window
     // operator (two withColumn calls planned two stacked Windows)
     val ranked = graft.util.QueryCache.persist(
-      pv.join(broadcast(offDf), "b")
+      graft.model.Positions.bucketOffsets(pv, "b",
+          sum(col("c")).as("off_c"),
+          sum(col("v").cast(dec) * col("c")).cast(dec).as("off_w"))
         .select(col("v"), col("c"),
           (col("off_c") + coalesce(sum(col("c")).over(wIn), lit(0L)))
             .as("below"),
-          (col("off_w").cast(dec) + coalesce(
+          (col("off_w") + coalesce(
             sum(col("v").cast(dec) * col("c")).over(wIn),
             lit(0).cast(dec))).cast(dec).as("below_w")))
     val tot = ranked.agg(sum(col("c")).as("n"),

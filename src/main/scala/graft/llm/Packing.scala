@@ -2,7 +2,6 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Sequence packing — the "concatenate the corpus and chunk it into
@@ -12,108 +11,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * straddle a sequence boundary).
   *
   * The whole op reduces to one primitive: the GLOBAL token offset of every
-  * document, i.e. a prefix sum over a 100 TB table. A
-  * `sum() over (order by id)` window would funnel the corpus through ONE
-  * window partition; instead [[globalRunningSum]] computes it the
-  * distributed way (same scheme as [[graft.model.Positions.zipWithIndex]]):
-  * range-partition by the order key, partition-LOCAL running sums (a
-  * window partitioned by partition id — bounded), then per-partition
-  * totals (O(P) rows) collected, scanned into exclusive offsets on the
-  * driver, and broadcast-joined back. Two jobs, no global window, no
+  * document, i.e. a prefix sum over a 100 TB table —
+  * [[graft.model.Positions.runningSum]], the within-bucket running sum
+  * plus [[graft.model.Positions.bucketOffsets]]; no global window, no
   * single-task bottleneck.
   */
 object Packing {
-
-  /** Attach `sumCol` = running total of `valCol` in `orderCol` order
-    * (INCLUSIVE of the current row), computed via per-partition partial
-    * sums + broadcast offsets.
-    *
-    * Dense-integer fast path (the [[graft.model.Positions.zipWithIndex]]
-    * scheme): when `orderCol` is an integral column whose values are
-    * exactly {min..max} — generated doc ids, the common packing shape —
-    * the row's bucket is a PURE PROJECTION `(id - min) div block`, which
-    * replaces the range-partitioner's sampling job and the pinned-
-    * partition-id persist outright: one probe aggregate, one per-bucket
-    * sums job, and the final plan's own exchange-by-bucket. Buckets are
-    * perfectly balanced by density, so no skew risk. Non-dense or
-    * non-integral order keys fall back to the sampling-based range
-    * partitioning below. */
-  def globalRunningSum(df: DataFrame, orderCol: Column, valCol: Column,
-                       sumCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val p = math.max(spark.sparkContext.defaultParallelism, 1)
-    // persist: the probe aggregate, the partial-sums job, and the final
-    // plan all consume this frame — without materialisation each re-runs
-    // the (often expensive) valCol from the source scan. The caller's
-    // QueryCache scope releases the entry, so it is query-scoped.
-    // An eager localCheckpoint here cost an extra blocking job and cut
-    // the plan off from AQE (measured 2-4× on the packing queries).
-    val narrow = graft.util.QueryCache.persist(
-      df.withColumn("__v", valCol.cast(LongType)))
-    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
-    val odt = narrow.select(orderCol).schema.head.dataType
-    if (odt == LongType || odt == IntegerType || odt == ShortType ||
-        odt == ByteType) {
-      val r = narrow.agg(min(orderCol).cast(LongType),
-        max(orderCol).cast(LongType), count(lit(1)),
-        count_distinct(orderCol)).collect()(0)
-      if (!r.isNullAt(0) &&
-          r.getLong(1) - r.getLong(0) + 1 == r.getLong(2) &&
-          r.getLong(2) == r.getLong(3)) {
-        val mn = r.getLong(0); val n = r.getLong(2)
-        val block = math.max(1L, (n + p - 1) / p)
-        // exact integral floor-div: Column./ is DOUBLE division; subtract
-        // the remainder first so the quotient is an exact multiple
-        val diff = orderCol.cast(LongType) - mn
-        val bucketOf = (diff - pmod(diff, lit(block))) / block
-        // coalesce: a bucket whose __v are all null must contribute 0,
-        // not a null that poisons the running offsets
-        // Per-bucket offsets IN-PLAN, not via a driver collect: the
-        // exclusive prefix runs as an unpartitioned window over the
-        // bucket-sums AGGREGATE (<= p rows by construction — parallelism-
-        // bounded, never data), and the broadcast join folds it into the
-        // SAME action as the final plan. The previous collect+rebroadcast
-        // was a whole extra driver job — at small inputs this verb is
-        // per-job fixed overhead, which is what the round-14 q146 flag
-        // measured (5000 rows, ~0.2 s/job); at scale both shapes shuffle
-        // identical bytes.
-        val sums = narrow.groupBy(bucketOf.cast(LongType).as("__b"))
-          .agg(coalesce(sum(col("__v")), lit(0L)).as("__tot"))
-        val wOff = Window.orderBy(col("__b"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offDf = sums
-          .withColumn("__off", coalesce(sum(col("__tot")).over(wOff), lit(0L)))
-          .drop("__tot")
-        val localW = Window.partitionBy("__b").orderBy(orderCol)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        return narrow.withColumn("__b", bucketOf.cast(LongType))
-          .join(broadcast(offDf), "__b")
-          .withColumn(sumCol, col("__off") + sum(col("__v")).over(localW))
-          .drop("__b", "__off", "__v")
-      }
-    }
-    // fallback: sampled range partitioning (pinned partition ids)
-    val ranged = graft.util.QueryCache.persist(narrow
-      .repartitionByRange(p, orderCol)
-      .sortWithinPartitions(orderCol)
-      .withColumn("__pid", spark_partition_id()))
-    // explicit ROWS frame: the default RANGE frame sums all PEERS of a
-    // tied order value into every tied row, breaking the per-row running
-    // total (ties then share arithmetic, not just arbitrary order)
-    val localW = Window.partitionBy("__pid").orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val totals = ranged.groupBy("__pid")
-      .agg(coalesce(sum(col("__v")), lit(0L)).as("__tot"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (pid, t)) =>
-      (pid, acc + t)
-    }.init.zip(totals).map { case ((_, off), (pid, _)) => (pid, off) }
-    import spark.implicits._
-    val offDf = offsets.toSeq.toDF("__pid", "__off")
-    ranged.join(broadcast(offDf), "__pid")
-      .withColumn(sumCol, col("__off") + sum(col("__v")).over(localW))
-      .drop("__pid", "__off", "__v")
-  }
 
   /** Padded (document-boundary-preserving) packing — the OTHER standard
     * packing mode: a document never straddles a sequence; when it doesn't
@@ -165,14 +68,14 @@ object Packing {
     * `seq_first`, an empty span). */
   def packSequences(docs: DataFrame, id: String, tokenCount: Column,
                     seqLen: Int): DataFrame = {
-    // Parallelize.ensure BEFORE the projection: globalRunningSum caches
-    // its input, and the cache fill evaluates tokenCount (a regex pass
+    // Parallelize.ensure BEFORE the projection: runningSum caches its
+    // input, and the cache fill evaluates tokenCount (a regex pass
     // over every doc) map-side — on a narrow single-file scan that would
     // serialize; repartitioning the raw docs moves the text once and the
-    // regex then runs wide. (globalRunningSum persists the projection
-    // itself, so the regex runs exactly once either way.)
+    // regex then runs wide. (runningSum persists the projection itself,
+    // so the regex runs exactly once either way.)
     val base = graft.util.Parallelize.ensure(docs)
-    val withEnd = globalRunningSum(
+    val withEnd = graft.model.Positions.runningSum(
       base.select(col(id), tokenCount.cast(LongType).as("n_tokens")),
       col(id), col("n_tokens"), "end_off")
     withEnd

@@ -48,7 +48,8 @@ object Sampling {
     * count undershoots min(n, N) — Chernoff-rare, P ~ e^{-n/2} — fall back
     * to the unfiltered stratum, so the output is ALWAYS exactly the rank
     * semantics, never approximately. Driver state: one O(#strata) count
-    * pair, the Positions-offsets pattern. */
+    * pair, collected because it picks the fallback strata (control flow,
+    * not a prefix — unlike [[graft.model.Positions.bucketOffsets]]). */
   def exactStratifiedSample(df: DataFrame, id: String, stratum: String,
                             n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

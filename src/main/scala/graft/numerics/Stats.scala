@@ -173,8 +173,8 @@ object Stats {
       .agg(cnts.head, cnts.tail: _*)
     val ct = levels.map(l => col(s"c_${l.toLowerCase}")).reduce(_ + _)
     // prefix over the aggregated distinct-value frame (small by
-    // construction; the two-level Packing prefix is the swap-in for
-    // genuinely high-cardinality metrics)
+    // construction; a within-bucket prefix plus Positions.bucketOffsets
+    // is the swap-in for genuinely high-cardinality metrics)
     val w = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val ranked = perValue
@@ -223,8 +223,9 @@ object Stats {
       .agg(sum(when(inA, 1L).otherwise(0L)).as("ca"),
         sum(when(inB, 1L).otherwise(0L)).as("cb"))
     // prefix over the aggregated value-level frame (cardinality = number
-    // of DISTINCT metric values — 50 here; a two-level prefix sum à la
-    // Packing is the swap-in for genuinely high-cardinality metrics)
+    // of DISTINCT metric values — 50 here; a within-bucket prefix plus
+    // Positions.bucketOffsets is the swap-in for genuinely
+    // high-cardinality metrics)
     val w = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val ranked = perValue

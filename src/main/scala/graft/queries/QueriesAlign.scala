@@ -39,13 +39,12 @@ object QueriesAlign extends QueryFamily {
     // `alignment.py` join options): left keeps the customer label set,
     // right the supplier one; the unmatched side stays NULL (no fill)
     "q250_align_left_right" -> ((s, dir) => {
-      val l = Align.binaryOp(custPerNation(s, dir), suppPerNation(s, dir),
-        "left") { _ => Seq(col("n_cust"), col("n_supp")) }
-        .withColumn("mode", lit("left"))
-      val r = Align.binaryOp(custPerNation(s, dir), suppPerNation(s, dir),
-        "right") { _ => Seq(col("n_cust"), col("n_supp")) }
-        .withColumn("mode", lit("right"))
-      l.unionByName(r)
+      val cust = custPerNation(s, dir)
+      val supp = suppPerNation(s, dir)
+      def aligned(how: String): DataFrame =
+        Align.binaryOp(cust, supp, how) { _ => Seq(col("n_cust"), col("n_supp")) }
+          .withColumn("mode", lit(how))
+      aligned("left").unionByName(aligned("right"))
     }),
 
     // align(join="outer") with fill_value (ref `alignment.py` fill_value)

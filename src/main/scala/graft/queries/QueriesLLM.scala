@@ -1129,7 +1129,7 @@ object QueriesLLM extends QueryFamily {
     // documents — the "is the corpus dominated by few documents"
     // health check in front of dedup/length-cap decisions; exact
     // integer Lorenz arithmetic over the bounded per-value frame
-    // (never a global window — the globalRunningSum offset discipline)
+    // (never a global window over rows — Positions.bucketOffsets)
     "q360_token_gini" -> ((s, dir) =>
       CorpusStats.weightConcentration(Tables.documents(s, dir),
         TextAnalysis.tokenCount(col("text")))),

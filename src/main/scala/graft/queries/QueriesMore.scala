@@ -1715,8 +1715,9 @@ object QueriesMore extends QueryFamily {
 
     // peak concurrent sessions per day: sweep-line (+1/-1 boundaries,
     // ends before starts at an instant) running-summed by the
-    // DISTRIBUTED two-level prefix (Packing.globalRunningSum) — never a
-    // global window over the boundary stream
+    // DISTRIBUTED two-level prefix (Positions.runningSum over
+    // Positions.bucketOffsets) — never a global window over the boundary
+    // stream
     "q345_concurrency" -> ((s, dir) => {
       val sess = graft.window.Sessions.stats(Tables.events(s, dir),
         "user_id", "ts", gapSec = 1800)

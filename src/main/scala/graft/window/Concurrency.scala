@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * every session start, −1 at every end, running-sum the boundary stream,
   * take each day's max.
   *
-  * Scale shape: the running sum is [[graft.llm.Packing.globalRunningSum]]
-  * — the distributed two-level prefix (per-range partial sums broadcast
-  * as offsets + a partitioned local window), NEVER a global window over
+  * Scale shape: the running sum is [[graft.model.Positions.runningSum]]
+  * — a bucket-partitioned local window plus
+  * [[graft.model.Positions.bucketOffsets]], NEVER a global window over
   * the boundary stream. Ties collapse first (one row per (instant,
   * side)), and at an instant ends apply before starts (key = 2·µs for
   * ends, 2·µs+1 for starts), so a back-to-back handoff never counts as
@@ -40,7 +40,7 @@ object Concurrency {
       .agg(sum(col("d")).cast("long").as("dd"))
       .withColumn("key",
         col("us") * 2 + when(col("d") === 1L, 1L).otherwise(0L))
-    val run = graft.llm.Packing.globalRunningSum(agg, col("key"),
+    val run = graft.model.Positions.runningSum(agg, col("key"),
       col("dd"), "conc")
     run.groupBy(to_date(timestamp_micros(col("us"))).as("day"))
       .agg(count(lit(1)).as("n_boundaries"),

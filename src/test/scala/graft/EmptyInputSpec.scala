@@ -51,21 +51,21 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   test("packing prefix sum: empty, single-row, and sparse-id inputs") {
-    import graft.llm.Packing
+    import graft.model.Positions
     val emptyDocs = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("id", LongType), StructField("n", LongType))))
     // empty: probe stats are null -> falls to the range path -> empty out
-    assert(Packing.globalRunningSum(emptyDocs, col("id"), col("n"), "s")
+    assert(Positions.runningSum(emptyDocs, col("id"), col("n"), "s")
       .count() === 0L)
     // single row (dense by definition): fast path, sum = own value
     val oneRow = Seq((7L, 5L)).toDF("id", "n")
-    assert(Packing.globalRunningSum(oneRow, col("id"), col("n"), "s")
+    assert(Positions.runningSum(oneRow, col("id"), col("n"), "s")
       .select("s").head().getLong(0) === 5L)
     // sparse ids (holes) must NOT take the dense path silently wrong:
     // running sums still correct via the fallback
     val sparse = Seq((1L, 1L), (5L, 2L), (100L, 3L)).toDF("id", "n")
-    val got = Packing.globalRunningSum(sparse, col("id"), col("n"), "s")
+    val got = Positions.runningSum(sparse, col("id"), col("n"), "s")
       .orderBy("id").select("s").collect().map(_.getLong(0)).toSeq
     assert(got === Seq(1L, 3L, 6L))
   }

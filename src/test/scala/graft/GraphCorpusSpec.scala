@@ -188,6 +188,19 @@ class GraphCorpusSpec extends SparkSpec {
       v => floor(v * 10)).collect()(0).isNullAt(2))
   }
 
+  test("rocAuc drops rows with a NULL label or score (skipna)") {
+    def auc(rows: Seq[(Option[Long], Option[Double])]) =
+      Agreement.rocAuc(rows.toDF("y", "prob"), col("y"), col("prob"),
+        v => floor(v * 10)).select("n_pos", "n_neg", "auc_ppm")
+        .as[(Long, Long, Long)].head()
+    // a NULL label took a rank without counting as either class (AUC 2.0)
+    assert(auc(Seq((Some(0L), Some(0.1)), (Some(1L), Some(0.9)),
+      (None, Some(0.5)))) === ((1L, 1L, 1000000L)))
+    // a NULL score fell into a NULL bucket (and threw while building)
+    assert(auc(Seq((Some(0L), Some(0.1)), (Some(1L), Some(0.9)),
+      (Some(1L), None))) === ((1L, 1L, 1000000L)))
+  }
+
   test("lshIndexEval: identical docs are all caught (recall 1e6)") {
     val txt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = Seq((0L, txt), (1L, txt)).toDF("doc_id", "text")

@@ -167,9 +167,9 @@ class PipelineOpsSpec extends SparkSpec {
       .count() === 0)
   }
 
-  test("globalRunningSum uses a ROWS frame: tied order keys get per-row sums") {
+  test("runningSum uses a ROWS frame: tied order keys get per-row sums") {
     val df = Seq((1L, 10L), (5L, 10L), (5L, 20L), (9L, 5L)).toDF("k", "v")
-    val sums = Packing.globalRunningSum(df, col("k"), col("v"), "s")
+    val sums = graft.model.Positions.runningSum(df, col("k"), col("v"), "s")
       .orderBy("s").select("s").as[Long].collect().toSeq
     // ties on k=5 must still accumulate row-by-row: 10, 20|30, 30|40, 45
     assert(sums === Seq(10L, 20L, 40L, 45L) || sums === Seq(10L, 30L, 40L, 45L))

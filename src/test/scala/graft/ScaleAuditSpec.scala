@@ -31,6 +31,13 @@ class ScaleAuditSpec extends SparkSpec {
       "data (the round-15 in-plan replacement of the offsets collect)"),
     "q345_concurrency" -> ("same globalRunningSum bucket-offset prefix " +
       "as q146, over the parallelism-bounded bucket-sums aggregate"),
+    "q360_token_gini" -> ("Positions.bucketOffsets prefix over the " +
+      "per-bucket totals of the per-VALUE frame: one row per 64-wide " +
+      "token-count bucket — bounded by the weight range / bucketWidth, " +
+      "never rows"),
+    "q361_roc_auc" -> ("Positions.bucketOffsets prefix over the " +
+      "score-bucket totals: floor(p·64) of a probability is <= 65 " +
+      "buckets by construction, never rows"),
     "q03_isel_head" -> ("head() takes a global prefix by definition; " +
       "TakeOrderedAndProject, not a window, does the work at scale"),
     "q31_concat_newdim" -> "per-month ordinal over an aggregated 158-row frame",
@@ -73,8 +80,9 @@ class ScaleAuditSpec extends SparkSpec {
       "draw ordinal over the n-row TakeOrdered winners (q243 contract)",
     "q290_mannwhitney_u" ->
       ("rank prefix over the AGGREGATED distinct-value frame (50 rows " +
-        "for this metric); a Packing-style two-level prefix sum is the " +
-        "swap-in for genuinely high-cardinality metrics"),
+        "for this metric); a within-bucket prefix plus " +
+        "Positions.bucketOffsets is the swap-in for genuinely " +
+        "high-cardinality metrics"),
     "q291_ks_test" ->
       ("cumulative counts over the AGGREGATED distinct-value frame " +
         "(q290's contract; 50 rows for this metric)"),

@@ -111,6 +111,25 @@ class StatsSpec extends SparkSpec {
     assert(viaMap == viaOrdinals)
   }
 
+  test("avgRank and avgRankMap leave NULL values unranked and uncounted") {
+    import org.apache.spark.sql.functions._
+    // bottleneck nanrankdata: the missing value gets no rank and takes
+    // no ordinal, so [NULL, 1, 2, 2] ranks [NULL, 1, 2.5, 2.5]
+    val d = Seq(None, Some(1.0), Some(2.0), Some(2.0)).toDF("v")
+    def ranks(pct: Boolean): Seq[Option[Double]] =
+      graft.agg.Rank.avgRank(d, "v", "r", pct)
+        .orderBy(col("v").asc_nulls_first).select("r").as[Option[Double]]
+        .collect().toSeq
+    assert(ranks(pct = false) === Seq(None, Some(1.0), Some(2.5), Some(2.5)))
+    // pct divides by the non-NULL count (3)
+    assert(ranks(pct = true) ===
+      Seq(None, Some(1.0 / 3), Some(2.5 / 3), Some(2.5 / 3)))
+    val viaMap = graft.agg.Rank.avgRankMap(d, "v", x => floor(x))
+      .select("__v", "__r").orderBy("__v").as[(Double, Double)]
+      .collect().toSeq
+    assert(viaMap === Seq((1.0, 1.0), (2.0, 2.5)))
+  }
+
   test("kruskalWallis matches brute-force tie-corrected H over 3 groups") {
     val c = Seq(9.0, 14.0, 12.0, 7.0, 15.0)
     val all = a.map((_, "A")) ++ b.map((_, "N")) ++ c.map((_, "R"))
