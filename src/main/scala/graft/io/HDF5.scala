@@ -1634,15 +1634,18 @@ object HDF5 {
                               addr: Long, stored: Int, mask: Int,
                               cdims: Array[Int])
 
-  /** target bytes of DECODED data per read task when banding a
-    * contiguous variable (chunked variables parallelize per chunk) */
+  /** most bytes of DECODED data per read task when banding a contiguous
+    * variable (chunked variables parallelize per chunk) */
   private val ContigBandBytes = 32L << 20
 
   /** Open a directory of .nc4/.h5 files as ONE long-format DataFrame for
     * `varName`: a column per netCDF-4 dimension (the dimension-scale's
     * values) plus the value column. Schema from one driver-side parse;
     * decode runs in the executors, one task per stored chunk or
-    * contiguous row band of about `bandBytesReq` decoded bytes. */
+    * contiguous row band ([[LongGrid.bandRows]]: at most `bandBytesReq`
+    * decoded bytes, at least `min(rows, defaultParallelism)` bands per
+    * file). Each task is bounded by its own file's dimension scales, so a
+    * filter on a dim column skips the chunks and bands it cannot match. */
   def toLongDF(spark: SparkSession, dir: String, varName: String,
                bandBytesReq: Long = ContigBandBytes): DataFrame = {
     // clamp so a generous caller value can never overflow a task's
@@ -1659,7 +1662,8 @@ object HDF5 {
     case class FilePlan(path: String, d: DatasetMetaH5, dims: Seq[String],
                         labels: Array[Option[LongGrid.Labels]],
                         coordIntegral: Seq[Boolean],
-                        tasks: Seq[ReadTask])
+                        tasks: Seq[LongGrid.Task[ReadTask]])
+    val cores = spark.sparkContext.defaultParallelism
     val plans = files.map { file =>
       val src = new PreadSrc(file.getAbsolutePath)
       try {
@@ -1689,8 +1693,7 @@ object HDF5 {
             require(rowBytes <= Int.MaxValue,
               s"$varName: one row spans $rowBytes bytes — a single task " +
                 "cannot band it; re-chunk the file")
-            val band = math.max(1L,
-              bandBytes / math.max(1L, rowBytes)).toInt
+            val band = LongGrid.bandRows(sizes.head, rowBytes, bandBytes, cores)
             (0 until sizes.head by band).map { r0 =>
               val rows = math.min(band, sizes.head - r0)
               ReadTask(file.getAbsolutePath,
@@ -1699,7 +1702,10 @@ object HDF5 {
                 (rows +: sizes.tail).toArray)
             }
         }
-        FilePlan(file.getAbsolutePath, v, dns, labels, coordIntegral, tasks)
+        val shape = v.shape.toArray
+        FilePlan(file.getAbsolutePath, v, dns, labels, coordIntegral,
+          tasks.map(t => LongGrid.Task(t,
+            LongGrid.bounds(shape, t.origin, t.cdims, labels))))
       } finally src.close()
     }
     val p0 = plans.head

@@ -445,7 +445,7 @@ object NetCDF {
   private case class NcTask(path: String, first: Long, count: Int,
                             spanPos: Long, spanLen: Long)
 
-  /** decoded bytes of the target variable per read task */
+  /** most decoded bytes of the target variable per read task */
   private val BandBytes = 32L << 20
 
   /** Open a directory of .nc files as ONE long-format DataFrame for a
@@ -453,8 +453,11 @@ object NetCDF {
     * 1-D coordinate variable's values when present, else the 0-based
     * index) plus the value column — `open_dataset(engine=
     * "netcdf-converted")`. Schema from one driver-side header parse;
-    * decoding runs in the executors, one task per band of about
-    * `bandBytesReq` bytes. */
+    * decoding runs in the executors, one task per band
+    * ([[LongGrid.bandRows]]: at most `bandBytesReq` bytes, at least
+    * `min(rows, defaultParallelism)` bands per file). Each task is bounded
+    * by its file's fixed coordinates; a record coordinate is read by the
+    * task itself, so a filter on the record dim drops no task. */
   def toLongDF(spark: SparkSession, dir: String, varName: String,
                bandBytesReq: Long = BandBytes): DataFrame = {
     val bandBytes = math.min(math.max(1L, bandBytesReq), 1L << 30)
@@ -469,7 +472,8 @@ object NetCDF {
         w.dimIds == Seq(h.dims.indexWhere(_.name == d.name)))
     case class FilePlan(path: String, h: Header, v: VarMeta,
                         fixedLabels: Array[Option[LongGrid.Labels]],
-                        tasks: Seq[NcTask])
+                        tasks: Seq[LongGrid.Task[NcTask]])
+    val cores = spark.sparkContext.defaultParallelism
     val plans = files.map { file =>
       val path = file.getAbsolutePath
       val h = parseHeaderFile(path)
@@ -496,7 +500,7 @@ object NetCDF {
               "cannot band it")
           // the span preads whole interleaved records, so the band is
           // bounded by the full record stride, not the target's slab
-          val band = math.max(1L, bandBytes / math.max(1L, rec)).toInt
+          val band = LongGrid.bandRows(h.numrecs, rec, bandBytes, cores)
           val recBegin = h.vars.filter(h.isRecord).map(_.begin).min
           val fileLen = ch.size()
           // bytes of THIS variable (and its record coord, if any) that a
@@ -528,7 +532,7 @@ object NetCDF {
           require(rowBytes <= Int.MaxValue,
             s"$varName: one row spans $rowBytes bytes — a single task " +
               "cannot band it")
-          val band = math.max(1L, bandBytes / math.max(1L, rowBytes)).toInt
+          val band = LongGrid.bandRows(sizes.head, rowBytes, bandBytes, cores)
           (0 until sizes.head by band).map { r0 =>
             val rows = math.min(band, sizes.head - r0)
             NcTask(path, r0.toLong, rows,
@@ -537,7 +541,16 @@ object NetCDF {
         }
         (fixedLabels, tasks)
       } finally ch.close()
-      FilePlan(path, h, v, fixedLabels, tasks)
+      val shape = v.dimIds.map(h.dimSize(_).toLong).toArray
+      // the driver never reads a record coordinate: that dim is unbounded
+      val recCoord = h.isRecord(v) && coordOf(h, ds.head).isDefined
+      FilePlan(path, h, v, fixedLabels, tasks.map { t =>
+        val origin = t.first +: shape.tail.map(_ => 0L)
+        val box = t.count +: shape.tail.map(_.toInt)
+        val b = LongGrid.bounds(shape, origin, box, fixedLabels)
+        if (recCoord) b(0) = None
+        LongGrid.Task(t, b)
+      })
     }
     val p0 = plans.head
     val schema = LongGrid.schema(

@@ -716,8 +716,9 @@ object Zarr {
     * one row per element, one column per dimension (the 1-D coordinate
     * array's values when present in the store, else the 0-based index)
     * plus the value column. The driver lists the chunk files and parses
-    * their keys; executors read and decode the chunks. An absent chunk
-    * yields no rows. */
+    * their keys, bounding each chunk by its coordinate labels so that a
+    * filter on a dim column skips the chunks it cannot match; executors
+    * read and decode the chunks. An absent chunk yields no rows. */
   def toLongDF(spark: SparkSession, store: String, varName: String): DataFrame = {
     val m = openMetaAny(spark, store, varName)
     require(m.dims.length == m.shape.length,
@@ -751,7 +752,11 @@ object Zarr {
         fs.listStatus(new Path(store, varName))
           .map(_.getPath).filter(p => !p.getName.startsWith(".") &&
             p.getName != "zarr.json")
-    // (path, chunk origin): the key's grid index is the last `rank` path
+    val labels = coords.map(_.map(c => LongGrid.Labels(c._2))).toArray
+    val shape = m.shape.map(_.toLong).toArray
+    val box = m.chunks.toArray
+    val files = StoreFiles.access(fs, spark.sparkContext.hadoopConfiguration)
+    // (file, chunk origin): the key's grid index is the last `rank` path
     // segments (nested) or the "."-joined name, "c"-prefixed in v3
     val tasks = chunkFiles.toSeq.map { p =>
       val ci =
@@ -760,19 +765,14 @@ object Zarr {
             .toSeq.reverse
         else p.getName.split(java.util.regex.Pattern.quote(m.separator))
           .drop(if (m.v3) 1 else 0).map(_.toInt).toSeq
-      (p.toString, originOf(m, ci).toArray)
+      val origin = originOf(m, ci).toArray
+      LongGrid.Task((files.name(p), origin),
+        LongGrid.bounds(shape, origin, box, labels))
     }
     val metaB = spark.sparkContext.broadcast(m)
-    val labels = coords.map(_.map(c => LongGrid.Labels(c._2))).toArray
-    val shape = m.shape.map(_.toLong).toArray
-    val box = m.chunks.toArray
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    LongGrid.read(spark, schema, tasks) { case (path, origin) =>
-      val p = new Path(path)
-      val vals = decodeChunk(StoreFiles.read(p.getFileSystem(conf.value), p),
-        metaB.value)
-      LongGrid.Block(shape, origin, box, vals, labels)
+    LongGrid.read(spark, schema, tasks) { case (file, origin) =>
+      LongGrid.Block(shape, origin, box,
+        decodeChunk(files.read(file), metaB.value), labels)
     }
   }
 
@@ -1202,9 +1202,9 @@ object Zarr {
     }
     val mB = spark.sparkContext.broadcast(m)
     val labelsB = spark.sparkContext.broadcast(dimValues.map(new LabelIndex(_)).toArray)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
+    val files = StoreFiles.access(fsFor(store, spark),
       spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(store, varName).toString
+    val dir = files.name(new Path(store, varName))
     val frame = df.select((dims :+ varName).map(col): _*)
     val get = frame.schema.fields.zipWithIndex.map { case (f, k) => doubleAt(f, k) }
     val nGrid = m.chunkGrid.map(_.toLong).product
@@ -1222,7 +1222,6 @@ object Zarr {
       .repartitionAndSortWithinPartitions(byChunk)
       .foreachPartition { it =>
         val mm = mB.value
-        val fs = new Path(dir).getFileSystem(conf.value)
         val in = it.buffered
         while (in.hasNext) {
           val c = in.head._1
@@ -1238,7 +1237,7 @@ object Zarr {
               filled.set(o); box(o) = vals(i); i += 1
             }
           }
-          StoreFiles.write(fs, new Path(dir, mm.chunkKey(gridIndex(mm, c))),
+          files.write(s"$dir/${mm.chunkKey(gridIndex(mm, c))}",
             encodeChunk(box, mm))
         }
       }

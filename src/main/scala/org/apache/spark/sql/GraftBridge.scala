@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Column <-> Expression bridge. Spark 4 made these converters
   * `private[sql]` (Column is ColumnNode-backed in sql-api); extensions that
@@ -21,4 +23,10 @@ object GraftBridge {
   def inSession(df: DataFrame, spark: SparkSession): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[Row]].queryExecution.logical)
+
+  /** A DataFrame reading a DataSource V2 table directly: no format name,
+    * catalog or option is registered for it. */
+  def ofTable(spark: SparkSession, table: Table): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      DataSourceV2Relation.create(table, None, None))
 }

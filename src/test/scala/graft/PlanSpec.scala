@@ -45,8 +45,19 @@ class PlanSpec extends SparkSpec {
 
   test("distributed rank plan has no unpartitioned Window") {
     val p = plan("q25_rank_avg")
-    assert(!p.contains("Window [") || p.contains("PartitionBy"),
-      "rank must not use a global window")
+    assert(!PlanShapes.unpartitionedWindow(p),
+      s"rank must not use a global window:\n$p")
+  }
+
+  test("PlanShapes tells an unpartitioned Window from a partitioned one") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number, sum}
+    def shape(w: org.apache.spark.sql.expressions.WindowSpec, f: org.apache.spark.sql.Column) =
+      PlanShapes.unpartitionedWindow(spark.range(10).withColumn("w", f.over(w))
+        .queryExecution.executedPlan.toString)
+    assert(shape(Window.orderBy("id"), row_number()))
+    assert(!shape(Window.partitionBy(col("id") % 2).orderBy("id"), row_number()))
+    assert(!shape(Window.partitionBy(col("id") % 2), sum("id")))
   }
 
   test("pchip/akima plans: windows are partitioned by the series key") {

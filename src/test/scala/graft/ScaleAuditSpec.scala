@@ -328,32 +328,7 @@ class ScaleAuditSpec extends SparkSpec {
         try graft.util.QueryCache.scoped(
           fn(spark, sf).queryExecution.executedPlan.toString)
         catch { case e: Throwable => s"PLAN-ERROR ${e.getMessage}" }
-      // Physical WindowExec prints "Window [exprs], [partSpec], [order]"
-      // (TWO "], [" separators) when both specs are present, and OMITS an
-      // empty group entirely: unpartitioned-with-order prints
-      // "Window [exprs], [order]" (one separator, trailing group carries
-      // ASC/DESC), partitioned-without-order prints
-      // "Window [exprs], [partCols]" (one separator, bare columns — NOT a
-      // scale hazard). The former "], [], [" pattern matched neither
-      // shape, leaving global-window detection dead.
-      def sepCount(l: String): Int = {
-        var c = 0; var i = l.indexOf("], [")
-        while (i >= 0) { c += 1; i = l.indexOf("], [", i + 1) }
-        c
-      }
-      val globalWin = plan.linesIterator.exists { l =>
-        val isWin = l.trim.startsWith("Window ") ||
-          l.contains("+- Window ") || l.contains(":- Window ")
-        isWin && {
-          val i = l.lastIndexOf("], [")
-          if (i < 0) true // a Window with no spec groups at all is global
-          else {
-            val tail = l.substring(i + 4)
-            sepCount(l) < 2 &&
-              (tail.contains(" ASC") || tail.contains(" DESC"))
-          }
-        }
-      }
+      val globalWin = PlanShapes.unpartitionedWindow(plan)
       val cartesian = plan.contains("CartesianProduct") ||
         plan.contains("BroadcastNestedLoopJoin")
       if (globalWin && !allowGlobalWindow.contains(name))

@@ -15,8 +15,9 @@ import graft.util.{Parallelize, QueryCache}
 /** Queries do not manage their own environment: the files they write live
   * under the session's scratch root, never a hand-built `/tmp` path;
   * stateful streams take their state-shard count from the StreamOps
-  * runners, never from a conf write in the registry; and only the registry
-  * runner scopes a query's cache and clears it. */
+  * runners, never from a conf write in the registry; only the registry
+  * runner scopes a query's cache and clears it; and only `StoreFiles`
+  * ships a Hadoop conf to tasks. */
 class ScratchSpec extends SparkSpec {
 
   private def scalaFiles(dir: File): Seq[File] =
@@ -64,6 +65,15 @@ class ScratchSpec extends SparkSpec {
     val persists = hits(files, "(?<!QueryCache)\\.persist\\(|\\.cache\\(\\)")
     assert(filesOf(persists) === Seq("src/main/scala/graft/util/QueryCache.scala"),
       persists.mkString(", "))
+  }
+
+  test("only StoreFiles builds a Hadoop conf for tasks") {
+    // a local store's tasks get plain paths; a shipped conf is ~110 KB
+    // that every task deserializes
+    val confs = hits(scalaFiles(new File("src/main/scala")),
+      "SerializableConfiguration")
+    assert(filesOf(confs) === Seq("src/main/scala/graft/io/StoreFiles.scala"),
+      confs.mkString(", "))
   }
 
   test("q135_zarr_roundtrip writes its store under the SparkFiles root") {
