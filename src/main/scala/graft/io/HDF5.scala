@@ -19,8 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    B-tree v2; direct, root-indirect, and NESTED indirect blocks via
   *    the spec's doubling table; FILTERED heaps — deflate/shuffle/
   *    fletcher32 on whole direct blocks with per-block masks)
-  *  - datasets: fixed-point + IEEE-float datatypes (LE/BE, 1/2/4/8),
-  *    compound types (per-member reads), contiguous and chunked layouts —
+  *  - datasets: the [[Elem]] fixed-point and IEEE-float datatypes, nbit
+  *    reduced-precision fixed point, compound types (per-member reads),
+  *    contiguous and chunked layouts —
   *    the v1 chunk B-tree plus ALL five layout-v4 indexes HDF5 1.10+
   *    writes under libver="latest" (single chunk, implicit, fixed array
   *    incl. paged data blocks, extensible array incl. super blocks and
@@ -885,10 +886,9 @@ object HDF5 {
         Attr(name, text = new String(body, p, dt.size, "UTF-8")
           .takeWhile(_ != 0))
       case 0 | 1 =>
-        val db = ByteBuffer.wrap(body, p, n * dt.size)
-          .order(if (dt.littleEndian) ByteOrder.LITTLE_ENDIAN
-                 else ByteOrder.BIG_ENDIAN)
-        Attr(name, nums = Array.fill(n)(readScalar(db, dt)))
+        val nums = new Array[Double](n)
+        numbers(dt, s"attribute $name")(body, p, n, dt.size, nums, 0)
+        Attr(name, nums = nums)
       case 9 if dt.base.exists(_.clazz == 7) =>
         // vlen of object references: per element 4-byte count + 12-byte
         // global heap ID; each heap object holds `count` 8-byte addresses
@@ -906,55 +906,46 @@ object HDF5 {
     }
   }
 
-  private def readScalar(b: ByteBuffer, dt: DType): Double = dt.clazz match {
-    case 1 => if (dt.size == 4) b.getFloat().toDouble else b.getDouble()
-    case 0 if dt.precBits > 0 &&
-      (dt.bitOff != 0 || dt.precBits < dt.size * 8) =>
-      // reduced-precision fixed point (nbit variables): the restored
-      // bytes carry the value at bits [bitOff, bitOff+precBits); other
-      // bits are zero. Extract the span and sign-extend from its top
-      // bit — the H5T conversion step the full-width read skips.
-      require(dt.size <= 8 && dt.precBits + dt.bitOff <= 64,
-        s"fixed-point precision ${dt.precBits}+${dt.bitOff} in " +
-          s"${dt.size}-byte type")
-      // assemble the element's logical value from its memory order —
-      // byte 0 is least significant for LE, most significant for BE
-      var raw = 0L
-      var i = 0
-      if (dt.littleEndian)
-        while (i < dt.size) { raw |= (b.get() & 0xffL) << (8 * i); i += 1 }
-      else
-        while (i < dt.size) { raw = (raw << 8) | (b.get() & 0xffL); i += 1 }
-      val span = raw >>> dt.bitOff
-      val v =
-        if (dt.signed) (span << (64 - dt.precBits)) >> (64 - dt.precBits)
-        else span & (if (dt.precBits == 64) -1L
-        else (1L << dt.precBits) - 1)
-      require(math.abs(v.toDouble) <= 9007199254740992.0,
-        s"reduced-precision integer $v exceeds the exact-double range")
-      v.toDouble
-    case 0 => dt.size match {
-      case 1 => val v = b.get(); if (dt.signed) v.toDouble else (v & 0xff).toDouble
-      case 2 => val v = b.getShort(); if (dt.signed) v.toDouble else (v & 0xffff).toDouble
-      case 4 => val v = b.getInt(); if (dt.signed) v.toDouble else (v & 0xffffffffL).toDouble
-      case 8 =>
-        val v = b.getLong()
-        // 64-bit integers route through Double on the way to the long
-        // columns; past 2^53 that silently rounds (e.g. int64 nanosecond
-        // timestamps) — fail loudly rather than corrupt join keys. The
-        // unsigned top-bit range maps above 2^63 and therefore always
-        // trips the same guard (with the true value in the message).
-        val d = if (dt.signed) v.toDouble
-                else if (v >= 0) v.toDouble
-                else v.toDouble + 1.8446744073709552e19
-        require(math.abs(d) <= 9007199254740992.0, // 2^53
-          s"64-bit integer $v exceeds the exact-double range (2^53) — " +
-            "the converter would silently round it; read this variable " +
-            "through a narrower or float type, or extend the reader with " +
-            "a typed int64 path")
-        d
+  /** Decodes `n` elements, the i-th at byte `off + i * stride` of a
+    * buffer, into `dst(at + i)`. */
+  private type Runs[T] = (Array[Byte], Int, Int, Int, Array[T], Int) => Unit
+
+  /** The decoder of a numeric datatype: a reduced-precision fixed-point
+    * field (nbit variables) here, every full-width fixed-point or float
+    * type through [[Elem]]. `what` names the variable in a refusal. */
+  private def numbers(dt: DType, what: => String): Runs[Double] =
+    dt.clazz match {
+      case 0 if dt.precBits > 0 &&
+          (dt.bitOff != 0 || dt.precBits < dt.size * 8) =>
+        require(dt.size <= 8 && dt.precBits + dt.bitOff <= 64,
+          s"$what: fixed-point precision ${dt.precBits}+${dt.bitOff} in " +
+            s"${dt.size}-byte type")
+        (src, off, n, stride, dst, at) => (0 until n).foreach(i =>
+          dst(at + i) = bitField(src, off + i * stride, dt))
+      case 0 | 1 =>
+        Elem(if (dt.clazz == 1) 'f' else if (dt.signed) 'i' else 'u',
+          dt.size, !dt.littleEndian, what).decode(_, _, _, _, _, _)
+      case c => sys.error(s"$what: non-numeric datatype class $c")
     }
-    case c => sys.error(s"non-numeric scalar class $c")
+
+  /** A reduced-precision element: the restored bytes carry the value at
+    * bits [bitOff, bitOff+precBits), other bits zero. Extract the span and
+    * sign-extend from its top bit — the H5T conversion step the full-width
+    * read skips. */
+  private def bitField(src: Array[Byte], off: Int, dt: DType): Double = {
+    // the element's logical value from its memory order — byte 0 is least
+    // significant for LE, most significant for BE
+    var raw = 0L
+    var i = 0
+    if (dt.littleEndian)
+      while (i < dt.size) { raw |= (src(off + i) & 0xffL) << (8 * i); i += 1 }
+    else
+      while (i < dt.size) { raw = (raw << 8) | (src(off + i) & 0xffL); i += 1 }
+    val span = raw >>> dt.bitOff
+    Elem.exact(
+      if (dt.signed) (span << (64 - dt.precBits)) >> (64 - dt.precBits)
+      else span & (if (dt.precBits == 64) -1L else (1L << dt.precBits) - 1),
+      unsigned = !dt.signed)
   }
 
   private def parseDataset(bytes: H5Src, name: String,
@@ -1509,7 +1500,7 @@ object HDF5 {
   private def readVarImpl(bytes: H5Src, f: H5File, name: String,
                           member: Option[String]): Array[Double] =
     readVarGeneric[Double](bytes, f, name, member,
-      new Array[Double](_), readScalar)
+      new Array[Double](_), numbers(_, name))
 
   /** Fixed-length string dataset (datatype class 3) decoded to strings,
     * trailing NUL padding stripped (ref `coding/strings.py`
@@ -1520,19 +1511,18 @@ object HDF5 {
     require(d.dtype.clazz == 3,
       s"$name is not a fixed-length string dataset (class ${d.dtype.clazz})")
     readVarGeneric[String](bytes, f, name, None, new Array[String](_),
-      (b, dt) => {
-        val a = new Array[Byte](dt.size)
-        b.get(a)
-        var e = a.length
-        while (e > 0 && a(e - 1) == 0) e -= 1
-        new String(a, 0, e, "UTF-8")
+      dt => (src, off, n, stride, dst, at) => (0 until n).foreach { i =>
+        val o = off + i * stride
+        var e = dt.size
+        while (e > 0 && src(o + e - 1) == 0) e -= 1
+        dst(at + i) = new String(src, o, e, "UTF-8")
       })
   }
 
   private def readVarGeneric[T](bytes: H5Src, f: H5File, name: String,
                                 member: Option[String],
                                 alloc: Int => Array[T],
-                                read: (ByteBuffer, DType) => T): Array[T] = {
+                                runs: DType => Runs[T]): Array[T] = {
     val d = f.byName(name)
     // element stride is the FULL (possibly compound) type size; the value
     // read per element is either the scalar itself or one compound member
@@ -1553,16 +1543,12 @@ object HDF5 {
     val stride = d.dtype.size
     val n = d.shape.product.toInt
     val out = alloc(n)
+    val decode = runs(edt)
     def decodeInto(raw: Array[Byte], chunkOrigin: Seq[Long],
-                   chunkDims: Seq[Int]): Unit = {
-      val db = ByteBuffer.wrap(raw)
-        .order(if (edt.littleEndian) ByteOrder.LITTLE_ENDIAN
-               else ByteOrder.BIG_ENDIAN)
-      LongGrid.foreachCell(d.shape, chunkOrigin, chunkDims) { (i, pos) =>
-        db.position(i * stride + mOff)
-        out(pos.toInt) = read(db, edt)
+                   chunkDims: Seq[Int]): Unit =
+      LongGrid.foreachRun(d.shape, chunkOrigin, chunkDims) { (i, pos, len) =>
+        decode(raw, i * stride + mOff, len, stride, out, pos.toInt)
       }
-    }
     d.layout match {
       case Contiguous(addr, size) =>
         require(addr != UNDEF, s"$name has no allocated data")
@@ -1726,13 +1712,10 @@ object HDF5 {
       val n = t.cdims.map(_.toLong).product.toInt
       val plain = defilter(raw, d.filters, t.mask, n * stride,
         s"a chunk of ${d.name}")
-      val db = ByteBuffer.wrap(plain)
-        .order(if (d.dtype.littleEndian) ByteOrder.LITTLE_ENDIAN
-               else ByteOrder.BIG_ENDIAN)
+      val decode = numbers(d.dtype, d.name)
       val values = new Array[Double](n)
-      LongGrid.foreachCell(d.shape, t.origin, t.cdims) { (i, _) =>
-        db.position(i * stride)
-        values(i) = readScalar(db, d.dtype)
+      LongGrid.foreachRun(d.shape, t.origin, t.cdims) { (i, _, len) =>
+        decode(plain, i * stride, len, stride, values, i)
       }
       LongGrid.Block(d.shape.toArray, t.origin, t.cdims, values, labels)
     }
@@ -1825,6 +1808,9 @@ object HDF5 {
     require(!szip || f32,
       "szip write path codes 32-bit samples — set f32 (8/16-bit reads " +
         "are supported; the f64 writer default cannot szip)")
+    /** i8, f4 or f8, as declared by `integral`, `f32` and `bigEndian`. */
+    private[io] def elem: Elem = Elem(if (integral) 'i' else 'f',
+      if (f32 && !integral) 4 else 8, bigEndian, name)
     /** H5Z_set_local_szip-shaped client data: [mask, bpp, pixels/block,
       * pixels/scanline]; RAW+NN+LSB matches what libhdf5 stores for
       * little-endian data. */
@@ -1926,20 +1912,9 @@ object HDF5 {
     val chunkBlobs = scala.collection.mutable.Map.empty[String,
       Seq[Array[Byte]]]
     val btreeOf = scala.collection.mutable.Map.empty[String, Long]
-    // precompute encoded payloads
-    def elemSize(v: WVar): Int = elemSizeOf(v)
-    def encode(v: WVar, slice: Array[Double]): Array[Byte] = {
-      val eb = ByteBuffer.allocate(slice.length * elemSize(v))
-        .order(if (v.bigEndian) ByteOrder.BIG_ENDIAN
-               else ByteOrder.LITTLE_ENDIAN)
-      slice.foreach { x =>
-        if (v.integral) eb.putLong(x.toLong)
-        else if (v.f32) eb.putFloat(x.toFloat)
-        else eb.putDouble(x) }
-      eb.array()
-    }
     def shapeOf(v: WVar): Seq[Int] =
       v.dims.map(k => dimDefs(k)._2.length)
+    // precompute encoded payloads
     all.foreach { v =>
       val ohSize = ohSizeOf(v, dimDefs, dense && attrRegion.contains(v.name))
       ohAddr(v.name) = cursor
@@ -1947,7 +1922,7 @@ object HDF5 {
       v.chunk match {
         case None =>
           dataAddr(v.name) = cursor
-          cursor += shapeOf(v).map(_.toLong).product * elemSize(v)
+          cursor += shapeOf(v).map(_.toLong).product * v.elem.size
         case Some(cd) =>
           val shape = shapeOf(v)
           val grid = shape.zip(cd).map { case (s, c) => (s + c - 1) / c }
@@ -1968,7 +1943,7 @@ object HDF5 {
             LongGrid.foreachCell(shape.map(_.toLong), origin, cd) { (i, pos) =>
               slice(i) = v.data(pos.toInt)
             }
-            val enc0 = encode(v, slice)
+            val enc0 = v.elem.encode(slice)
             // nbit / scale-offset run FIRST in pipeline (apply) order
             val enc =
               if (v.nbitPrec > 0) NbitSO.nbitEncode(enc0, v.nbitCd(cd))
@@ -1988,7 +1963,7 @@ object HDF5 {
             val summed =
               if (v.fletcher && !v.fletcherOuter) addSum(enc) else enc
             val filtered =
-              if (v.shuffle) ByteFilters.shuffle(summed, elemSize(v)) else summed
+              if (v.shuffle) ByteFilters.shuffle(summed, v.elem.size) else summed
             val deflated =
               if (v.szip) Szip.hdf5Encode(filtered, v.szipCd(cd))
               else if (v.lzf) Lzf.compress(filtered)
@@ -2156,14 +2131,14 @@ object HDF5 {
     out.bytes(gcol.array())
     // objects
     all.foreach { v =>
-      out.bytes(renderOH(v, shapeOf(v), elemSize(v), dataAddr.get(v.name),
+      out.bytes(renderOH(v, shapeOf(v), v.elem.size, dataAddr.get(v.name),
         btreeOf.get(v.name), deflateLevel, dimDefs, gcolAddr, gIndex,
         attrRegion.get(v.name),
         if (v.index4.contains("single"))
           Some(chunkAddrs(v.name).head._3) else None))
       v.chunk match {
         case None =>
-          out.bytes(encode(v, v.data))
+          out.bytes(v.elem.encode(v.data))
         case Some(cd) =>
           chunkBlobs(v.name).foreach(out.bytes)
           val entries = chunkAddrs(v.name)
@@ -2913,9 +2888,6 @@ object HDF5 {
     b.array()
   }
 
-  private def elemSizeOf(v: WVar): Int =
-    if (v.integral) 8 else if (v.f32) 4 else 8
-
   /** Rendered header size — MUST agree with [[renderOH]], so it renders
     * the same message set with dummy addresses (sizes are
     * address-independent). */
@@ -2923,7 +2895,7 @@ object HDF5 {
                        dimDefs: Seq[(String, Array[Double])],
                        denseAttr: Boolean): Long = {
     val shape = v.dims.map(_ => 1)
-    val msgs = messagesOf(v, shape, elemSizeOf(v), Some(0L), Some(0L), 1,
+    val msgs = messagesOf(v, shape, v.elem.size, Some(0L), Some(0L), 1,
       dimDefs, 0L, _ => 1, if (denseAttr) Some((0L, 0L)) else None,
       if (v.index4.contains("single")) Some(0) else None)
     16L + msgs.map(_.length.toLong).sum

@@ -72,6 +72,53 @@ private[graft] object LongGrid {
     while (c.valid) { f(c.cell, c.pos); c.advance() }
   }
 
+  /** [[foreachCell]] by rows: calls `f(cell, pos, len)` for each run of
+    * `len` in-shape cells along the last dim, starting at box offset
+    * `cell` and array offset `pos`. A rank-0 box is one run of one cell. */
+  def foreachRun(shape: Seq[Long], origin: Seq[Long], dims: Seq[Int])(
+      f: (Int, Long, Int) => Unit): Unit =
+    if (dims.isEmpty) f(0, 0L, 1)
+    else {
+      val len = math.min(dims.last.toLong, shape.last - origin.last).toInt
+      if (len > 0) foreachCell(shape.init, origin.init, dims.init) { (c, p) =>
+        f(c * dims.last, p * shape.last + origin.last, len)
+      }
+    }
+
+  /** Transposed box remap between a box's LOGICAL C-order layout (shape
+    * = chunks) and its STORED C-order layout (shape = chunks[p(i)]): the
+    * Zarr transpose codec, and Fortran order (p = the dim reversal).
+    * `toStored=true` is the encode direction. One div-free odometer walk
+    * over the stored index space; logical offsets accumulate through the
+    * permuted strides. */
+  def permute(src: Array[Double], chunks: Seq[Int],
+              p: Seq[Int], toStored: Boolean): Array[Double] = {
+    val d = chunks.length
+    val s = chunks.toArray
+    val t = p.map(s(_)).toArray                        // stored shape
+    val strideS = new Array[Int](d)                    // logical C strides
+    var acc = 1
+    var k = d - 1
+    while (k >= 0) { strideS(k) = acc; acc *= s(k); k -= 1 }
+    val strideL = p.map(strideS(_)).toArray            // logical stride of
+    val out = new Array[Double](src.length)            // stored axis i
+    val idx = new Array[Int](d)
+    var ls = 0                                         // stored linear
+    var ll = 0                                         // logical linear
+    while (ls < src.length) {
+      if (toStored) out(ls) = src(ll) else out(ll) = src(ls)
+      var i = d - 1
+      var carry = true
+      while (carry && i >= 0) {
+        idx(i) += 1; ll += strideL(i)
+        if (idx(i) < t(i)) carry = false
+        else { ll -= idx(i) * strideL(i); idx(i) = 0; i -= 1 }
+      }
+      ls += 1
+    }
+    out
+  }
+
   /** The frame's schema: one column per dim, LongType iff its coordinate
     * is integral or absent (`None`), then the value column, LongType iff
     * the dtype is integral. */

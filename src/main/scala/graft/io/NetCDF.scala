@@ -88,12 +88,16 @@ object NetCDF {
     }
   }
 
-  private def typeSize(t: Int): Int = t match {
-    case NC_BYTE | NC_CHAR | NC_UBYTE => 1
-    case NC_SHORT | NC_USHORT => 2
-    case NC_INT | NC_FLOAT | NC_UINT => 4
-    case NC_DOUBLE | NC_INT64 | NC_UINT64 => 8
-  }
+  /** nc_type -> its big-endian stored element. */
+  private val Elems: Map[Int, Elem] = Map(
+    NC_BYTE -> ('i', 1), NC_CHAR -> ('i', 1), NC_SHORT -> ('i', 2),
+    NC_INT -> ('i', 4), NC_FLOAT -> ('f', 4), NC_DOUBLE -> ('f', 8),
+    NC_UBYTE -> ('u', 1), NC_USHORT -> ('u', 2), NC_UINT -> ('u', 4),
+    NC_INT64 -> ('i', 8), NC_UINT64 -> ('u', 8)).map { case (t, (k, n)) =>
+      t -> Elem(k, n, bigEndian = true, s"nc_type $t") }
+  private def elem(t: Int): Elem =
+    Elems.getOrElse(t, sys.error(s"unsupported nc_type $t"))
+  private def typeSize(t: Int): Int = elem(t).size
   private def pad4(n: Int): Int = (4 - n % 4) % 4
   private def pad4L(n: Long): Long = (4 - n % 4) % 4
 
@@ -171,13 +175,12 @@ object NetCDF {
     val recSize: Long =
       if (recVars.length == 1) slabElems(recVars.head).toLong * typeSize(recVars.head.ncType)
       else recVars.map(vsize(_).toLong).sum
-    def put(buf: ByteBuffer, t: Int, x: Double): Unit = t match {
-      case NC_BYTE | NC_CHAR | NC_UBYTE => buf.put(x.toByte)
-      case NC_SHORT | NC_USHORT => buf.putShort(x.toShort)
-      case NC_INT | NC_UINT => buf.putInt(x.toInt)
-      case NC_FLOAT => buf.putFloat(x.toFloat)
-      case NC_DOUBLE => buf.putDouble(x)
-      case NC_INT64 | NC_UINT64 => buf.putLong(x.toLong)
+    // `n` values from `from` as `t`, zero-padded to `bytes`
+    def put(t: Int, data: Array[Double], from: Int, n: Int,
+            bytes: Int): Unit = {
+      val b = new Array[Byte](bytes)
+      elem(t).encode(data, from, n, b, 0)
+      out.write(b)
     }
     def attList(atts: Seq[Att]): Unit =
       if (atts.isEmpty) { nn(0L); nn(0L) }
@@ -190,9 +193,7 @@ object NetCDF {
             out.write(b); out.write(new Array[Byte](pad4(b.length)))
           } else {
             val sz = a.nelems * typeSize(a.ncType)
-            val buf = ByteBuffer.allocate(sz + pad4(sz))
-            a.nums.foreach(put(buf, a.ncType, _))
-            out.write(buf.array())
+            put(a.ncType, a.nums, 0, a.nelems, sz + pad4(sz))
           }
         }
       }
@@ -213,11 +214,7 @@ object NetCDF {
       attList(v.atts)
       i32(v.ncType); nn(vsize(v)); off(begins(v.name))
     }
-    fixVars.foreach { v =>
-      val buf = ByteBuffer.allocate(vsize(v))
-      v.data.foreach(put(buf, v.ncType, _))
-      out.write(buf.array())
-    }
+    fixVars.foreach(v => put(v.ncType, v.data, 0, v.data.length, vsize(v)))
     // record section: records interleave all record vars' slabs
     (0L until numrecs).foreach { r =>
       recVars.foreach { v =>
@@ -225,9 +222,7 @@ object NetCDF {
         val slabBytes =
           if (recVars.length == 1) se * typeSize(v.ncType)
           else vsize(v)
-        val buf = ByteBuffer.allocate(slabBytes)
-        (0 until se).foreach(i => put(buf, v.ncType, v.data(r.toInt * se + i)))
-        out.write(buf.array())
+        put(v.ncType, v.data, r.toInt * se, se, slabBytes)
       }
     }
     Files.write(Paths.get(path), out.toByteArray)
@@ -276,11 +271,10 @@ object NetCDF {
           buf.position(buf.position() + pad4(nelems))
           Att(an, t, text = new String(b, "UTF-8"))
         } else {
-          val nelems = bounded(rawN * typeSize(t), "attribute values") /
-            typeSize(t)
-          val nums = Array.fill(nelems)(get1(buf, t))
-          val sz = nelems.toLong * typeSize(t)
-          buf.position(buf.position() + pad4L(sz).toInt)
+          val e = elem(t)
+          val sz = bounded(rawN * e.size, "attribute values")
+          val nums = e.decode(bytes, buf.position(), sz / e.size, e.size)
+          buf.position(buf.position() + sz + pad4(sz))
           Att(an, t, nums = nums)
         }
       }
@@ -302,44 +296,37 @@ object NetCDF {
     Header(version, numrecs, dims, vars, gatts)
   }
 
-  private def get1(buf: ByteBuffer, t: Int): Double = t match {
-    case NC_BYTE | NC_CHAR => buf.get().toDouble
-    case NC_UBYTE => (buf.get() & 0xff).toDouble
-    case NC_SHORT => buf.getShort().toDouble
-    case NC_USHORT => (buf.getShort() & 0xffff).toDouble
-    case NC_INT => buf.getInt().toDouble
-    case NC_UINT => (buf.getInt() & 0xffffffffL).toDouble
-    case NC_FLOAT => buf.getFloat().toDouble
-    case NC_DOUBLE => buf.getDouble()
-    case NC_INT64 | NC_UINT64 => buf.getLong().toDouble
-  }
-
   /** Decode one variable's values as doubles, C (row-major) order along
     * its dims. Record variables stride the interleaved record section:
     * record r's slab sits at `begin + r * recSize`. */
   def readVar(bytes: Array[Byte], hdr: Header, varName: String): Array[Double] = {
     val v = hdr.vars.find(_.name == varName)
       .getOrElse(throw new NoSuchElementException(varName))
+    val e = elem(v.ncType)
     if (hdr.isRecord(v)) {
       val slab = v.dimIds.tail.map(hdr.dims(_).size).product
-      val rec = hdr.recSize
       val out = new Array[Double](hdr.numrecs.toInt * slab)
-      (0 until hdr.numrecs.toInt).foreach { r =>
-        val pos = v.begin + r * rec
-        require(pos + slab.toLong * typeSize(v.ncType) <= bytes.length,
-          "record slab beyond file end")
-        val buf = ByteBuffer.wrap(bytes, pos.toInt, slab * typeSize(v.ncType))
-        (0 until slab).foreach(i => out(r * slab + i) = get1(buf, v.ncType))
-      }
+      require(hdr.numrecs == 0 || v.begin + (hdr.numrecs - 1) * hdr.recSize +
+        slab.toLong * e.size <= bytes.length, "record slab beyond file end")
+      records(bytes, v, v.begin.toInt, hdr.recSize.toInt, slab, out)
       out
     } else {
       val n = v.dimIds.map(hdr.dims(_).size).product
-      require(v.begin <= Int.MaxValue - n.toLong * typeSize(v.ncType),
+      require(v.begin <= Int.MaxValue - n.toLong * e.size,
         "in-memory decode is bounded by a 2 GiB byte array; " +
           "larger CDF-2/5 files need the file-channel path")
-      val buf = ByteBuffer.wrap(bytes, v.begin.toInt, n * typeSize(v.ncType))
-      Array.fill(n)(get1(buf, v.ncType))
+      e.decode(bytes, v.begin.toInt, n, e.size)
     }
+  }
+
+  /** `out.length / n` records of `n` values of `c`, record r's at byte
+    * `at + r * rec` of `bytes` (one strided decode when `n` is 1). */
+  private def records(bytes: Array[Byte], c: VarMeta, at: Int, rec: Int,
+                      n: Int, out: Array[Double]): Unit = {
+    val e = elem(c.ncType)
+    if (n == 1) e.decode(bytes, at, out.length, rec, out, 0)
+    else (0 until out.length / math.max(n, 1)).foreach(r =>
+      e.decode(bytes, r * rec + at, n, e.size, out, r * n))
   }
 
   /** NC_CHAR variable decoded to fixed-width STRINGS: the last dimension
@@ -357,21 +344,8 @@ object NetCDF {
       s"$varName: the record dimension cannot be the string-length dim")
     val strlen = hdr.dims(v.dimIds.last).size
     require(strlen > 0, s"$varName has a zero-length string dimension")
-    val raw: Array[Byte] =
-      if (hdr.isRecord(v)) {
-        val slab = v.dimIds.tail.map(hdr.dims(_).size).product
-        val out = new Array[Byte](hdr.numrecs.toInt * slab)
-        (0 until hdr.numrecs.toInt).foreach { r =>
-          val pos = v.begin + r * hdr.recSize
-          require(pos + slab <= bytes.length, "record slab beyond file end")
-          System.arraycopy(bytes, pos.toInt, out, r * slab, slab)
-        }
-        out
-      } else {
-        val n = v.dimIds.map(hdr.dims(_).size).product
-        require(v.begin + n <= bytes.length, "char data beyond file end")
-        java.util.Arrays.copyOfRange(bytes, v.begin.toInt, v.begin.toInt + n)
-      }
+    // NC_CHAR decodes as signed bytes: each double is its byte exactly
+    val raw = readVar(bytes, hdr, varName).map(_.toByte)
     raw.grouped(strlen).map { g =>
       var e = g.length
       while (e > 0 && (g(e - 1) == 0 || g(e - 1) == ' '.toByte)) e -= 1
@@ -391,10 +365,7 @@ object NetCDF {
     }.toArray
   }
 
-  private def isIntegral(t: Int): Boolean =
-    t == NC_BYTE || t == NC_SHORT || t == NC_INT ||
-      t == NC_UBYTE || t == NC_USHORT || t == NC_UINT ||
-      t == NC_INT64 || t == NC_UINT64
+  private def isIntegral(t: Int): Boolean = t != NC_CHAR && elem(t).integral
 
   /** Parse just the header by reading a GROWING PREFIX of the file —
     * classic netCDF puts the whole header first, so a multi-gigabyte
@@ -488,9 +459,9 @@ object NetCDF {
         // read per task from the span; None here.
         val fixedLabels = ds.zipWithIndex.map { case (d, k) =>
           coordOf(h, d).filter(c => !(h.isRecord(v) && k == 0)).map { c =>
-            val n = d.size
-            val b = pread(ch, c.begin, n * typeSize(c.ncType))
-            LongGrid.Labels(Array.fill(n)(get1(b, c.ncType)))
+            val e = elem(c.ncType)
+            LongGrid.Labels(e.decode(
+              pread(ch, c.begin, d.size * e.size).array(), 0, d.size, e.size))
           }
         }.toArray
         val tasks = if (h.isRecord(v)) {
@@ -565,7 +536,7 @@ object NetCDF {
       val span = {
         val ch = java.nio.channels.FileChannel.open(
           Paths.get(t.path), java.nio.file.StandardOpenOption.READ)
-        try pread(ch, t.spanPos, t.spanLen.toInt) finally ch.close()
+        try pread(ch, t.spanPos, t.spanLen.toInt).array() finally ch.close()
       }
       val tail = v.dimIds.tail.map(h.dims(_).size)
       val slab = tail.product
@@ -573,25 +544,17 @@ object NetCDF {
       val data = new Array[Double](t.count * slab)
       val recBegin = if (isRec) h.vars.filter(h.isRecord).map(_.begin).min
                      else 0L
-      // the band's cells of a record variable, or of its record
-      // coordinate: `n` values per record, records `recSize` apart
-      def records(c: VarMeta, n: Int, out: Array[Double]): Unit =
-        (0 until t.count).foreach { r =>
-          val b = span.duplicate().order(span.order())
-          b.position((r * h.recSize + c.begin - recBegin).toInt)
-          (0 until n).foreach(i => out(r * n + i) = get1(b, c.ncType))
-        }
-      if (isRec) records(v, slab, data)
-      else {
-        val b = span.duplicate().order(span.order())
-        data.indices.foreach(i => data(i) = get1(b, v.ncType))
-      }
+      // the band's cells of a record variable, or of its record coordinate
+      def bandRecords(c: VarMeta, n: Int, out: Array[Double]): Unit =
+        records(span, c, (c.begin - recBegin).toInt, h.recSize.toInt, n, out)
+      if (isRec) bandRecords(v, slab, data)
+      else elem(v.ncType).decode(span, 0, data.length, typeSize(v.ncType), data, 0)
       // the record coordinate labels only this band's records
       val labels =
         if (!isRec) fixedLabels
         else coordOf(h, h.dims(v.dimIds.head)).map { c =>
           val recCoord = new Array[Double](t.count)
-          records(c, 1, recCoord)
+          bandRecords(c, 1, recCoord)
           LongGrid.Labels(recCoord, t.first)
         } +: fixedLabels.tail
       LongGrid.Block(v.dimIds.map(h.dimSize(_).toLong).toArray,

@@ -14,10 +14,10 @@ import java.nio.{ByteBuffer, ByteOrder}
   *   element bytes.
   *
   * Reads `<f8`, `<f4`, `<i8`, `<i4` in either memory order (Fortran
-  * order is transposed into C order on read); anything else is a loud
-  * reject naming the dtype. Writes `<f8`/`<i8` C-order v1.0. The .npz
-  * container is a plain (stored or deflated) zip whose entries are
-  * `.npy` members — java.util.zip handles both compression modes. */
+  * order is transposed into C order on read) through [[Elem]]; anything
+  * else is a loud reject naming the dtype. Writes `<f8`/`<i8` C-order
+  * v1.0. The .npz container is a plain (stored or deflated) zip whose
+  * entries are `.npy` members — java.util.zip handles both modes. */
 object Npy {
 
   private val Magic = Array[Byte](0x93.toByte, 'N', 'U', 'M', 'P', 'Y')
@@ -42,9 +42,16 @@ object Npy {
     out.put(Magic); out.put(1.toByte); out.put(0.toByte)
     out.putShort(header.length.toShort)
     out.put(header.getBytes("US-ASCII"))
-    data.foreach(v => if (integral) out.putLong(v.toLong)
-                      else out.putDouble(v))
+    elem(descr).encode(data, 0, data.length, out.array(), out.position())
     out.array()
+  }
+
+  /** The four dtypes this codec reads; anything else is a loud reject. */
+  private def elem(descr: String): Elem = descr match {
+    case "<f8" | "<f4" | "<i8" | "<i4" =>
+      Elem(descr(1), descr.drop(2).toInt, bigEndian = false, "npy")
+    case other => sys.error(s"npy dtype '$other' unsupported — this " +
+      "reader decodes <f8/<f4/<i8/<i4 (use arr.astype(np.float64))")
   }
 
   /** (shape, C-ordered doubles). */
@@ -88,38 +95,14 @@ object Npy {
     require(nL <= Int.MaxValue.toLong,
       s"npy shape element count out of range: ${shape.mkString("x")}")
     val n = nL.toInt
-    val (esize, get: (ByteBuffer => Double)) = descr match {
-      case "<f8" => (8, (bb: ByteBuffer) => bb.getDouble())
-      case "<f4" => (4, (bb: ByteBuffer) => bb.getFloat().toDouble)
-      case "<i8" => (8, (bb: ByteBuffer) => bb.getLong().toDouble)
-      case "<i4" => (4, (bb: ByteBuffer) => bb.getInt().toDouble)
-      case other => sys.error(s"npy dtype '$other' unsupported — this " +
-        "reader decodes <f8/<f4/<i8/<i4 (use arr.astype(np.float64))")
-    }
-    require(bytes.length >= dataOff + n.toLong * esize,
-      s"npy truncated: need ${n.toLong * esize} data bytes, have " +
+    val e = elem(descr)
+    require(bytes.length >= dataOff + n.toLong * e.size,
+      s"npy truncated: need ${n.toLong * e.size} data bytes, have " +
         s"${bytes.length - dataOff}")
-    val db = ByteBuffer.wrap(bytes, dataOff, n * esize)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    val flat = Array.fill(n)(get(db))
-    val out =
-      if (!fortran || shape.length <= 1) flat
-      else { // transpose Fortran layout into C order
-        val cStrides = shape.scanRight(1)(_ * _).tail
-        val fStrides = shape.scanLeft(1)(_ * _).init
-        val o = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          var rem = i; var fi = 0; var k = 0
-          while (k < shape.length) {
-            val idx = rem / cStrides(k); rem %= cStrides(k)
-            fi += idx * fStrides(k); k += 1
-          }
-          o(i) = flat(fi); i += 1
-        }
-        o
-      }
-    (shape, out)
+    val flat = e.decode(bytes, dataOff, n, e.size)
+    // Fortran order is the C order of the reversed dims
+    (shape, if (!fortran) flat
+            else LongGrid.permute(flat, shape, shape.indices.reverse, false))
   }
 
   def writeNpz(entries: Seq[(String, Seq[Int], Array[Double])],

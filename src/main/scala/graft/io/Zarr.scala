@@ -76,6 +76,7 @@ object Zarr {
                        shard: Option[ShardSpec] = None,
                        tperm: Option[Seq[Int]] = None) {
     def integral: Boolean = kind == 'i' || kind == 'u'
+    private[io] def elem: Elem = Elem(kind, size, order == '>', "zarr array")
     def chunkGrid: Seq[Int] =
       shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
     def chunkElems: Int = chunks.product
@@ -91,17 +92,12 @@ object Zarr {
   private def fsFor(path: String, spark: SparkSession): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def parseDtype(s: String): (Char, Char, Int) = {
-    require(s.length >= 3, s"bad dtype '$s'")
-    val order = s.charAt(0) // '<' | '>' | '|'
-    val kind = s.charAt(1)  // 'f' | 'i' | 'u'
-    val size = s.substring(2).toInt
-    require("<>|".contains(order) && "fiu".contains(kind),
-      s"unsupported dtype '$s'")
-    (order, kind, size)
-  }
+  def parseMeta(zarray: String, zattrs: Option[String]): ArrayMeta =
+    parseV2(zarray, zattrs, "zarr array")
 
-  def parseMeta(zarray: String, zattrs: Option[String]): ArrayMeta = {
+  /** `what` names the array in a refusal. */
+  private def parseV2(zarray: String, zattrs: Option[String],
+                      what: String): ArrayMeta = {
     val j = JsonMethods.parse(zarray)
     def ints(field: String): Seq[Int] = (j \ field) match {
       case JArray(xs) => xs.map {
@@ -111,9 +107,13 @@ object Zarr {
       }
       case other => sys.error(s"bad $field $other")
     }
+    // typestr: byte order ('<' '>' '|'), kind, byte size — e.g. "<f8"
     val (ord, kind, size) = (j \ "dtype") match {
-      case JString(s) => parseDtype(s)
-      case other => sys.error(s"bad dtype $other")
+      case JString(s) if s.length >= 3 && "<>|".contains(s(0)) &&
+          s.drop(2).forall(_.isDigit) =>
+        val e = Elem(s(1), s.drop(2).toInt, s(0) == '>', s"$what: dtype '$s'")
+        (s(0), e.kind, e.size)
+      case other => sys.error(s"$what: bad dtype $other")
     }
     val comp = (j \ "compressor") match {
       case JNull | JNothing => None
@@ -186,16 +186,14 @@ object Zarr {
     val attrsPath = new Path(store, s"$name/.zattrs")
     val zat = if (fs.exists(attrsPath))
       Some(new String(StoreFiles.read(fs, attrsPath), "UTF-8")) else None
-    parseMeta(za, zat)
+    parseV2(za, zat, s"zarr array '$name'")
   }
 
-  /** v3 dtype names <-> the (kind, size) pair (spec table; the byte order
-    * lives in the `bytes` codec, not the dtype). */
-  private val v3Dtypes: Map[String, (Char, Int)] = Map(
-    "float64" -> ('f', 8), "float32" -> ('f', 4),
-    "int64" -> ('i', 8), "int32" -> ('i', 4), "int16" -> ('i', 2),
-    "int8" -> ('i', 1), "uint8" -> ('u', 1), "uint16" -> ('u', 2),
-    "uint32" -> ('u', 4))
+  /** v3 data_type names: the kind's word and the width in bits, e.g.
+    * "uint16" (the byte order lives in the `bytes` codec, not the dtype). */
+  private val V3Type = "(float|int|uint)(\\d{1,2})".r
+  private def v3Name(m: ArrayMeta): String =
+    Map('f' -> "float", 'i' -> "int", 'u' -> "uint")(m.kind) + m.size * 8
 
   /** Parse a zarr v3 array node (`zarr.json`, zarr_format 3): regular
     * chunk grid, `default` chunk key encoding ("c/"-prefixed, "/"
@@ -238,9 +236,10 @@ object Zarr {
       case _ => "/"
     }
     val (kind, size) = (j \ "data_type") match {
-      case JString(s) => v3Dtypes.getOrElse(s,
-        sys.error(s"unsupported v3 data_type $s"))
-      case other => sys.error(s"bad data_type $other")
+      case JString(s @ V3Type(k, bits)) if bits.toInt % 8 == 0 =>
+        val e = Elem(k.head, bits.toInt / 8, false, s"zarr array: data_type '$s'")
+        (e.kind, e.size)
+      case other => sys.error(s"unsupported v3 data_type $other")
     }
     var order: Char = '<'
     var comp: Option[(String, Int)] = None
@@ -432,39 +431,6 @@ object Zarr {
     * box — caller trims edge padding via global-index bounds). A sharded
     * array's "chunk file" is the whole SHARD; it decodes transparently to
     * the same full outer box, so every reader path is shard-agnostic. */
-  /** transpose codec remap between the chunk's LOGICAL C-order layout
-    * (shape = chunks) and its STORED C-order layout (shape =
-    * chunks[p(i)]). `toStored=true` is the encode direction. One div-free
-    * odometer walk over the stored index space; logical offsets accumulate
-    * through the permuted strides. */
-  private def permuteChunk(src: Array[Double], chunks: Seq[Int],
-                           p: Seq[Int], toStored: Boolean): Array[Double] = {
-    val d = chunks.length
-    val s = chunks.toArray
-    val t = p.map(s(_)).toArray                        // stored shape
-    val strideS = new Array[Int](d)                    // logical C strides
-    var acc = 1
-    var k = d - 1
-    while (k >= 0) { strideS(k) = acc; acc *= s(k); k -= 1 }
-    val strideL = p.map(strideS(_)).toArray            // logical stride of
-    val out = new Array[Double](src.length)            // stored axis i
-    val idx = new Array[Int](d)
-    var ls = 0                                         // stored linear
-    var ll = 0                                         // logical linear
-    while (ls < src.length) {
-      if (toStored) out(ls) = src(ll) else out(ll) = src(ls)
-      var i = d - 1
-      var carry = true
-      while (carry && i >= 0) {
-        idx(i) += 1; ll += strideL(i)
-        if (idx(i) < t(i)) carry = false
-        else { ll -= idx(i) * strideL(i); idx(i) = 0; i -= 1 }
-      }
-      ls += 1
-    }
-    out
-  }
-
   def decodeChunk(raw: Array[Byte], m: ArrayMeta): Array[Double] = {
     m.shard match {
       case Some(sh) => return decodeShard(raw, m, sh)
@@ -482,25 +448,9 @@ object Zarr {
       case None => { require(raw.length >= n * m.size, "short raw chunk"); raw }
       case Some((id, _)) => sys.error(s"unsupported compressor $id")
     }
-    val buf = ByteBuffer.wrap(plain, 0, n * m.size)
-    buf.order(if (m.order == '>') ByteOrder.BIG_ENDIAN
-              else ByteOrder.LITTLE_ENDIAN)
-    val vals = Array.tabulate(n) { _ =>
-      (m.kind, m.size) match {
-        case ('f', 8) => buf.getDouble()
-        case ('f', 4) => buf.getFloat().toDouble
-        case ('i', 8) => buf.getLong().toDouble
-        case ('i', 4) => buf.getInt().toDouble
-        case ('i', 2) => buf.getShort().toDouble
-        case ('i', 1) => buf.get().toDouble
-        case ('u', 1) => (buf.get() & 0xff).toDouble
-        case ('u', 2) => (buf.getShort() & 0xffff).toDouble
-        case ('u', 4) => (buf.getInt() & 0xffffffffL).toDouble
-        case (k, s) => sys.error(s"unsupported dtype $k$s")
-      }
-    }
+    val vals = m.elem.decode(plain, 0, n, m.size)
     m.tperm match {
-      case Some(p) => permuteChunk(vals, m.chunks, p, toStored = false)
+      case Some(p) => LongGrid.permute(vals, m.chunks, p, toStored = false)
       case None => vals
     }
   }
@@ -511,37 +461,21 @@ object Zarr {
       case None =>
     }
     val vals = m.tperm match {
-      case Some(p) => permuteChunk(vals0, m.chunks, p, toStored = true)
+      case Some(p) => LongGrid.permute(vals0, m.chunks, p, toStored = true)
       case None => vals0
     }
-    val buf = ByteBuffer.allocate(vals.length * m.size)
-    buf.order(if (m.order == '>') ByteOrder.BIG_ENDIAN
-              else ByteOrder.LITTLE_ENDIAN)
-    vals.foreach { x =>
-      (m.kind, m.size) match {
-        case ('f', 8) => buf.putDouble(x)
-        case ('f', 4) => buf.putFloat(x.toFloat)
-        case ('i', 8) => buf.putLong(x.toLong)
-        case ('i', 4) => buf.putInt(x.toInt)
-        case ('i', 2) => buf.putShort(x.toShort)
-        case ('i', 1) => buf.put(x.toByte)
-        case ('u', 1) => buf.put((x.toInt & 0xff).toByte)
-        case ('u', 2) => buf.putShort((x.toInt & 0xffff).toShort)
-        case ('u', 4) => buf.putInt((x.toLong & 0xffffffffL).toInt)
-        case (k, s) => sys.error(s"unsupported dtype $k$s")
-      }
-    }
+    val plain = m.elem.encode(vals)
     m.compressor match {
-      case Some(("zlib", lvl)) => ByteFilters.deflate(buf.array(), lvl)
-      case Some(("gzip", lvl)) => gzip(buf.array(), lvl)
+      case Some(("zlib", lvl)) => ByteFilters.deflate(plain, lvl)
+      case Some(("gzip", lvl)) => gzip(plain, lvl)
       case Some(("zstd", lvl)) =>
-        com.github.luben.zstd.Zstd.compress(buf.array(), lvl)
+        com.github.luben.zstd.Zstd.compress(plain, lvl)
       case Some((id, lvl)) if id.startsWith("blosc") =>
         val parts = id.split(":") // "blosc:<cname>:<shuffle>"
-        Blosc.compress(buf.array(), m.size,
+        Blosc.compress(plain, m.size,
           if (parts.length > 1) parts(1) else "lz4", lvl,
           if (parts.length > 2) parts(2).toInt else 1)
-      case _ => buf.array()
+      case _ => plain
     }
   }
 
@@ -964,9 +898,6 @@ object Zarr {
         m.attrs.toList.sortBy(_._1).map { case (k, v) => k -> JString(v) })))
 
   private def metaJsonV3(m: ArrayMeta): String = {
-    val dtypeName = v3Dtypes.collectFirst {
-      case (n, (k, s)) if k == m.kind && s == m.size => n
-    }.getOrElse(sys.error(s"no v3 name for dtype ${m.kind}${m.size}"))
     def chainJson(order: Char, comp: Option[(String, Int)]): List[JObject] =
       JObject("name" -> JString("bytes"), "configuration" ->
         JObject("endian" -> JString(
@@ -1019,7 +950,7 @@ object Zarr {
       "zarr_format" -> JInt(3),
       "node_type" -> JString("array"),
       "shape" -> JArray(m.shape.map(i => JInt(BigInt(i))).toList),
-      "data_type" -> JString(dtypeName),
+      "data_type" -> JString(v3Name(m)),
       "chunk_grid" -> JObject("name" -> JString("regular"),
         "configuration" -> JObject("chunk_shape" ->
           JArray(m.chunks.map(i => JInt(BigInt(i))).toList))),
