@@ -9,12 +9,13 @@ import java.nio.{ByteBuffer, ByteOrder}
   * refused where the descriptor is read.
   *
   * The 2^53 rule: a double holds every integer of magnitude at most 2^53
-  * and no wider one, so an `i8` or `u8` element beyond it raises on
-  * decode with its true (for `u8` unsigned) value instead of rounding
-  * silently into a `LongType` column. Encoding narrows as the JVM casts
-  * do: toward zero, saturating at the Int (`i4`) or Long (`i8 u8`)
-  * bounds, NaN to 0; `i1 u1 i2 u2` keep the low bits of that Int and `u4`
-  * of that Long. */
+  * and no wider one, so an `i8` or `u8` data element beyond it raises an
+  * [[ArithmeticException]] with its true (for `u8` unsigned) value instead
+  * of rounding into a `LongType` column; metadata (an attribute such as a
+  * fill) decodes with `exact = false` and rounds. Encoding narrows as the
+  * JVM casts do: toward zero, saturating at the Int (`i4`) or Long (`i8
+  * u8`) bounds, NaN to 0; `i1 u1 i2 u2` keep the low bits of that Int and
+  * `u4` of that Long. */
 private[io] final class Elem private (val kind: Char, val size: Int,
                                       val bigEndian: Boolean)
     extends Serializable {
@@ -26,16 +27,19 @@ private[io] final class Elem private (val kind: Char, val size: Int,
     .order(if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
 
   /** Decodes `n` elements, the i-th at byte `off + i * stride` of `src`,
-    * into `dst(at + i)`. */
+    * into `dst(at + i)`; `exact` applies the 2^53 rule. */
   def decode(src: Array[Byte], off: Int, n: Int, stride: Int,
-             dst: Array[Double], at: Int): Unit = {
+             dst: Array[Double], at: Int, exact: Boolean = true): Unit = {
     val b = buffer(src)
     var i = 0
     tag match {
       case "f8" => while (i < n) { dst(at + i) = b.getDouble(off + i * stride); i += 1 }
       case "f4" => while (i < n) { dst(at + i) = b.getFloat(off + i * stride); i += 1 }
       case "i8" | "u8" => while (i < n) {
-        dst(at + i) = Elem.exact(b.getLong(off + i * stride), kind == 'u'); i += 1 }
+        val v = b.getLong(off + i * stride)
+        dst(at + i) = if (exact) Elem.exact(v, kind == 'u')
+          else if (kind == 'u' && v < 0) v + 1.8446744073709552e19 else v.toDouble
+        i += 1 }
       case "i4" => while (i < n) { dst(at + i) = b.getInt(off + i * stride); i += 1 }
       case "u4" => while (i < n) {
         dst(at + i) = (b.getInt(off + i * stride) & 0xffffffffL).toDouble; i += 1 }
@@ -80,18 +84,16 @@ private[io] object Elem {
 
   /** The type `kind``size`; `what` names the array a refusal is about. */
   def apply(kind: Char, size: Int, bigEndian: Boolean, what: => String): Elem = {
-    require(Tags.contains(s"$kind$size"), s"$what: element type $kind$size " +
-      s"is not decodable (types: ${Tags.mkString(" ")})")
+    if (!Tags.contains(s"$kind$size")) throw new IllegalArgumentException(
+      s"$what: element type $kind$size is not decodable (types: ${Tags.mkString(" ")})")
     new Elem(kind, size, bigEndian)
   }
 
   /** A 64-bit integer as a double under the 2^53 rule; `unsigned` reads
     * `v`'s bits as an unsigned value. */
-  def exact(v: Long, unsigned: Boolean): Double = {
-    require(v <= (1L << 53) && v >= (if (unsigned) 0L else -(1L << 53)),
-      s"64-bit integer ${if (unsigned) java.lang.Long.toUnsignedString(v)
-        else v} exceeds the exact-double range (2^53); read the variable " +
-        "through a narrower or float type")
-    v.toDouble
-  }
+  def exact(v: Long, unsigned: Boolean): Double =
+    if (v <= (1L << 53) && v >= (if (unsigned) 0L else -(1L << 53))) v.toDouble
+    else throw new ArithmeticException(s"64-bit integer ${if (unsigned)
+      java.lang.Long.toUnsignedString(v) else v} exceeds the exact-double " +
+      "range (2^53); read the variable through a narrower or float type")
 }

@@ -887,7 +887,7 @@ object HDF5 {
           .takeWhile(_ != 0))
       case 0 | 1 =>
         val nums = new Array[Double](n)
-        numbers(dt, s"attribute $name")(body, p, n, dt.size, nums, 0)
+        numbers(dt, s"attribute $name", exact = false)(body, p, n, dt.size, nums, 0)
         Attr(name, nums = nums)
       case 9 if dt.base.exists(_.clazz == 7) =>
         // vlen of object references: per element 4-byte count + 12-byte
@@ -912,8 +912,10 @@ object HDF5 {
 
   /** The decoder of a numeric datatype: a reduced-precision fixed-point
     * field (nbit variables) here, every full-width fixed-point or float
-    * type through [[Elem]]. `what` names the variable in a refusal. */
-  private def numbers(dt: DType, what: => String): Runs[Double] =
+    * type through [[Elem]]. `what` names the variable in a refusal;
+    * `exact` is [[Elem.decode]]'s. */
+  private def numbers(dt: DType, what: => String,
+                      exact: Boolean = true): Runs[Double] =
     dt.clazz match {
       case 0 if dt.precBits > 0 &&
           (dt.bitOff != 0 || dt.precBits < dt.size * 8) =>
@@ -924,7 +926,7 @@ object HDF5 {
           dst(at + i) = bitField(src, off + i * stride, dt))
       case 0 | 1 =>
         Elem(if (dt.clazz == 1) 'f' else if (dt.signed) 'i' else 'u',
-          dt.size, !dt.littleEndian, what).decode(_, _, _, _, _, _)
+          dt.size, !dt.littleEndian, what).decode(_, _, _, _, _, _, exact)
       case c => sys.error(s"$what: non-numeric datatype class $c")
     }
 

@@ -83,7 +83,7 @@ object NetCDF {
       val rv = vars.filter(isRecord)
       if (rv.length == 1) {
         val v = rv.head
-        v.dimIds.tail.map(dims(_).size.toLong).product * typeSize(v.ncType)
+        v.dimIds.tail.map(dims(_).size.toLong).product * elem(v.ncType).size
       } else rv.map(_.vsize).sum
     }
   }
@@ -97,7 +97,6 @@ object NetCDF {
       t -> Elem(k, n, bigEndian = true, s"nc_type $t") }
   private def elem(t: Int): Elem =
     Elems.getOrElse(t, sys.error(s"unsupported nc_type $t"))
-  private def typeSize(t: Int): Int = elem(t).size
   private def pad4(n: Int): Int = (4 - n % 4) % 4
   private def pad4L(n: Long): Long = (4 - n % 4) % 4
 
@@ -130,7 +129,7 @@ object NetCDF {
         nnSz + b + pad4(b)
       }
       def attsSz(atts: Seq[Att]): Long = 2L * nnSz + atts.map { a =>
-        val payload = a.nelems.toLong * typeSize(a.ncType)
+        val payload = a.nelems.toLong * elem(a.ncType).size
         nameSz(a.name) + 4L + nnSz + payload + pad4L(payload)
       }.sum
       4L + nnSz + // magic + numrecs
@@ -165,15 +164,16 @@ object NetCDF {
       }
     def vsize(v: Var): Int =
       if (isRec(v)) {
-        val n = slabElems(v) * typeSize(v.ncType)
+        val n = slabElems(v) * elem(v.ncType).size
         n + pad4(n)
       } else {
-        val n = v.dimIds.map(dims(_).size).product * typeSize(v.ncType)
+        val n = v.dimIds.map(dims(_).size).product * elem(v.ncType).size
         n + pad4(n)
       }
     // per-record stride: single record var is UNPADDED (classic spec note)
     val recSize: Long =
-      if (recVars.length == 1) slabElems(recVars.head).toLong * typeSize(recVars.head.ncType)
+      if (recVars.length == 1)
+        slabElems(recVars.head).toLong * elem(recVars.head.ncType).size
       else recVars.map(vsize(_).toLong).sum
     // `n` values from `from` as `t`, zero-padded to `bytes`
     def put(t: Int, data: Array[Double], from: Int, n: Int,
@@ -192,7 +192,7 @@ object NetCDF {
             val b = a.text.getBytes("UTF-8")
             out.write(b); out.write(new Array[Byte](pad4(b.length)))
           } else {
-            val sz = a.nelems * typeSize(a.ncType)
+            val sz = a.nelems * elem(a.ncType).size
             put(a.ncType, a.nums, 0, a.nelems, sz + pad4(sz))
           }
         }
@@ -220,7 +220,7 @@ object NetCDF {
       recVars.foreach { v =>
         val se = slabElems(v)
         val slabBytes =
-          if (recVars.length == 1) se * typeSize(v.ncType)
+          if (recVars.length == 1) se * elem(v.ncType).size
           else vsize(v)
         put(v.ncType, v.data, r.toInt * se, se, slabBytes)
       }
@@ -273,7 +273,8 @@ object NetCDF {
         } else {
           val e = elem(t)
           val sz = bounded(rawN * e.size, "attribute values")
-          val nums = e.decode(bytes, buf.position(), sz / e.size, e.size)
+          val nums = new Array[Double](sz / e.size)
+          e.decode(bytes, buf.position(), nums.length, e.size, nums, 0, exact = false)
           buf.position(buf.position() + sz + pad4(sz))
           Att(an, t, nums = nums)
         }
@@ -315,6 +316,7 @@ object NetCDF {
       require(v.begin <= Int.MaxValue - n.toLong * e.size,
         "in-memory decode is bounded by a 2 GiB byte array; " +
           "larger CDF-2/5 files need the file-channel path")
+      require(v.begin + n.toLong * e.size <= bytes.length, "variable data beyond file end")
       e.decode(bytes, v.begin.toInt, n, e.size)
     }
   }
@@ -480,10 +482,10 @@ object NetCDF {
           // the final span is clamped to the bytes that exist instead of
           // demanding the full n*recSize.
           val slabBytes = v.dimIds.tail.map(h.dims(_).size.toLong).product *
-            typeSize(v.ncType)
+            elem(v.ncType).size
           val coordEnd = coordOf(h, ds.head)
             .filter(_ => h.isRecord(v))
-            .map(c => c.begin - recBegin + typeSize(c.ncType).toLong)
+            .map(c => c.begin - recBegin + elem(c.ncType).size.toLong)
             .getOrElse(0L)
           val lastNeeded = math.max(v.begin - recBegin + slabBytes, coordEnd)
           (0L until h.numrecs by band.toLong).map { r0 =>
@@ -499,7 +501,7 @@ object NetCDF {
           }
         } else {
           val sizes = v.dimIds.map(h.dims(_).size)
-          val rowBytes = sizes.tail.map(_.toLong).product * typeSize(v.ncType)
+          val rowBytes = sizes.tail.map(_.toLong).product * elem(v.ncType).size
           require(rowBytes <= Int.MaxValue,
             s"$varName: one row spans $rowBytes bytes — a single task " +
               "cannot band it")
@@ -548,7 +550,7 @@ object NetCDF {
       def bandRecords(c: VarMeta, n: Int, out: Array[Double]): Unit =
         records(span, c, (c.begin - recBegin).toInt, h.recSize.toInt, n, out)
       if (isRec) bandRecords(v, slab, data)
-      else elem(v.ncType).decode(span, 0, data.length, typeSize(v.ncType), data, 0)
+      else { val e = elem(v.ncType); e.decode(span, 0, data.length, e.size, data, 0) }
       // the record coordinate labels only this band's records
       val labels =
         if (!isRec) fixedLabels

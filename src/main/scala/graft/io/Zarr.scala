@@ -76,7 +76,7 @@ object Zarr {
                        shard: Option[ShardSpec] = None,
                        tperm: Option[Seq[Int]] = None) {
     def integral: Boolean = kind == 'i' || kind == 'u'
-    private[io] def elem: Elem = Elem(kind, size, order == '>', "zarr array")
+    private[io] lazy val elem: Elem = Elem(kind, size, order == '>', "zarr array")
     def chunkGrid: Seq[Int] =
       shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
     def chunkElems: Int = chunks.product
@@ -92,12 +92,7 @@ object Zarr {
   private def fsFor(path: String, spark: SparkSession): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def parseMeta(zarray: String, zattrs: Option[String]): ArrayMeta =
-    parseV2(zarray, zattrs, "zarr array")
-
-  /** `what` names the array in a refusal. */
-  private def parseV2(zarray: String, zattrs: Option[String],
-                      what: String): ArrayMeta = {
+  def parseMeta(zarray: String, zattrs: Option[String]): ArrayMeta = {
     val j = JsonMethods.parse(zarray)
     def ints(field: String): Seq[Int] = (j \ field) match {
       case JArray(xs) => xs.map {
@@ -111,9 +106,9 @@ object Zarr {
     val (ord, kind, size) = (j \ "dtype") match {
       case JString(s) if s.length >= 3 && "<>|".contains(s(0)) &&
           s.drop(2).forall(_.isDigit) =>
-        val e = Elem(s(1), s.drop(2).toInt, s(0) == '>', s"$what: dtype '$s'")
+        val e = Elem(s(1), s.drop(2).toInt, s(0) == '>', s"dtype '$s'")
         (s(0), e.kind, e.size)
-      case other => sys.error(s"$what: bad dtype $other")
+      case other => sys.error(s"bad dtype $other")
     }
     val comp = (j \ "compressor") match {
       case JNull | JNothing => None
@@ -186,7 +181,8 @@ object Zarr {
     val attrsPath = new Path(store, s"$name/.zattrs")
     val zat = if (fs.exists(attrsPath))
       Some(new String(StoreFiles.read(fs, attrsPath), "UTF-8")) else None
-    parseV2(za, zat, s"zarr array '$name'")
+    try parseMeta(za, zat) catch { case e: IllegalArgumentException =>
+      throw new IllegalArgumentException(s"zarr array '$name': ${e.getMessage}", e) }
   }
 
   /** v3 data_type names: the kind's word and the width in bits, e.g.
@@ -427,15 +423,18 @@ object Zarr {
     bos.toByteArray
   }
 
-  /** Decode one chunk file's payload to doubles in C order (full chunk
-    * box — caller trims edge padding via global-index bounds). A sharded
-    * array's "chunk file" is the whole SHARD; it decodes transparently to
-    * the same full outer box, so every reader path is shard-agnostic. */
-  def decodeChunk(raw: Array[Byte], m: ArrayMeta): Array[Double] = {
-    m.shard match {
-      case Some(sh) => return decodeShard(raw, m, sh)
-      case None =>
-    }
+  /** Decode one chunk file's payload to doubles in C order over the full
+    * chunk box of the chunk at the array origin. A sharded array's "chunk
+    * file" is the whole SHARD; it decodes transparently to the same full
+    * outer box, so every reader path is shard-agnostic. */
+  def decodeChunk(raw: Array[Byte], m: ArrayMeta): Array[Double] =
+    decodeAt(raw, m, m.shape.map(_ => 0L))
+
+  /** [[decodeChunk]] for the chunk at `origin`: only its in-shape cells
+    * decode, so edge padding (which yields no row) reads as the fill. */
+  private def decodeAt(raw: Array[Byte], m: ArrayMeta,
+                       origin: Seq[Long]): Array[Double] = {
+    if (m.shard.nonEmpty) return decodeShard(raw, m, m.shard.get, origin)
     val n = m.chunkElems
     val plain = m.compressor match {
       case Some(("zlib", _)) => ByteFilters.inflate(raw, n * m.size, "a chunk")
@@ -448,18 +447,16 @@ object Zarr {
       case None => { require(raw.length >= n * m.size, "short raw chunk"); raw }
       case Some((id, _)) => sys.error(s"unsupported compressor $id")
     }
-    val vals = m.elem.decode(plain, 0, n, m.size)
-    m.tperm match {
-      case Some(p) => LongGrid.permute(vals, m.chunks, p, toStored = false)
-      case None => vals
-    }
+    // runs in the stored layout, whose axis i is the box's axis p(i)
+    val p = m.tperm.getOrElse(m.chunks.indices)
+    val vals = Array.fill(n)(m.fillValue)
+    LongGrid.foreachRun(p.map(m.shape(_).toLong), p.map(origin), p.map(m.chunks)) {
+      (i, _, len) => m.elem.decode(plain, i * m.size, len, m.size, vals, i) }
+    if (m.tperm.isEmpty) vals else LongGrid.permute(vals, m.chunks, p, toStored = false)
   }
 
   private def encodeChunk(vals0: Array[Double], m: ArrayMeta): Array[Byte] = {
-    m.shard match {
-      case Some(sh) => return encodeShard(vals0, m, sh)
-      case None =>
-    }
+    if (m.shard.nonEmpty) return encodeShard(vals0, m, m.shard.get)
     val vals = m.tperm match {
       case Some(p) => LongGrid.permute(vals0, m.chunks, p, toStored = true)
       case None => vals0
@@ -494,10 +491,10 @@ object Zarr {
     c.getValue.toInt
   }
 
-  /** Metadata for ONE inner chunk: shape = inner box, inner compressor,
+  /** Metadata for ONE inner chunk: chunks = inner box, inner compressor,
     * shard=None (so the recursive encode/decode terminates). */
   private def innerMeta(m: ArrayMeta, sh: ShardSpec): ArrayMeta =
-    ArrayMeta(sh.inner, sh.inner, m.order, m.kind, m.size, sh.innerComp,
+    ArrayMeta(m.shape, sh.inner, m.order, m.kind, m.size, sh.innerComp,
       m.fillValue, m.separator, m.dims, Map.empty, v3 = true)
 
   /** Per-shard coordinate tables, computed ONCE (not per element — the
@@ -538,9 +535,10 @@ object Zarr {
     (elemMap, baseOf)
   }
 
-  private def decodeShard(raw: Array[Byte], m: ArrayMeta,
-                          sh: ShardSpec): Array[Double] = {
+  private def decodeShard(raw: Array[Byte], m: ArrayMeta, sh: ShardSpec,
+                          origin: Seq[Long]): Array[Double] = {
     val innerGrid = m.chunks.zip(sh.inner).map { case (c, i) => c / i }
+    val gridStride = innerGrid.scanRight(1)(_ * _).tail
     val nInner = innerGrid.product
     val idxLen = nInner * 16 + (if (sh.indexCrc) 4 else 0)
     require(raw.length >= idxLen, "shard shorter than its index")
@@ -564,7 +562,8 @@ object Zarr {
           s"inner chunk $g range [$off, ${off + len}) outside shard")
         val slice = java.util.Arrays.copyOfRange(raw, off.toInt,
           (off + len).toInt)
-        val vals = decodeChunk(slice, im)
+        val vals = decodeAt(slice, im, origin.indices.map(k => origin(k) +
+          (g / gridStride(k)) % innerGrid(k) * sh.inner(k).toLong))
         val base = baseOf(g)
         var f = 0
         while (f < vals.length) {
@@ -634,7 +633,7 @@ object Zarr {
     gridIndices(m).foreach { ci =>
       val p = new Path(store, s"$name/${m.chunkKey(ci)}")
       if (fs.exists(p)) {
-        val vals = decodeChunk(StoreFiles.read(fs, p), m)
+        val vals = decodeAt(StoreFiles.read(fs, p), m, originOf(m, ci))
         LongGrid.foreachCell(m.shape.map(_.toLong), originOf(m, ci),
           m.chunks) { (i, pos) => out(pos.toInt) = vals(i) }
       }
@@ -706,7 +705,7 @@ object Zarr {
     val metaB = spark.sparkContext.broadcast(m)
     LongGrid.read(spark, schema, tasks) { case (file, origin) =>
       LongGrid.Block(shape, origin, box,
-        decodeChunk(files.read(file), metaB.value), labels)
+        decodeAt(files.read(file), metaB.value, origin), labels)
     }
   }
 

@@ -166,6 +166,48 @@ class ElemSpec extends SparkSpec {
       .toSeq === vals.map(_.toLong).toSeq)
   }
 
+  test("Zarr <i8 edge padding beyond 2^53 is never decoded (C and F order)") {
+    def le(vs: Long*) = {
+      val b = java.nio.ByteBuffer.allocate(8 * vs.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      vs.foreach(b.putLong); b.array()
+    }
+    val big = (1L << 53) + 1
+    for (order <- Seq(None, Some(Seq(1, 0)))) {
+      val store = scratchDir("elem_zpad")
+      val m = Zarr.ArrayMeta(Seq(3, 3), Seq(2, 2), '<', 'i', 8, None, 0.0, ".",
+        Seq("r", "c"), Map(), tperm = order)
+      Zarr.writeArray(spark, store, "v", m, Array.tabulate(9)(_.toDouble))
+      // corner chunk (1, 1): cell (2, 2) in shape, stored first in either
+      // order; its three padding cells hold 2^53+1
+      Files.write(Paths.get(store, "v", "1.1"), le(8L, big, big, big))
+      assert(Zarr.readArray(spark, store, "v")._2.toSeq === (0 until 9).map(_.toDouble))
+      assert(Zarr.toLongDF(spark, store, "v").collect().map(_.getLong(2)).sorted
+        .toSeq === (0L until 9L), s"tperm $order")
+    }
+  }
+
+  test("a CDF-5 int64 attribute beyond 2^53 (netCDF's default fill) rounds; the file opens") {
+    val dir = scratchDir("elem_ncatt")
+    val path = s"$dir/v.nc"
+    // 72 KB of doubles: the header parse starts from a shorter prefix
+    NetCDF.write(path, Seq(Dim("a", 3), Dim("b", 9000)), Seq(
+      Var("s", Seq(0), NC_INT64, Array(1.0, 2.0, 3.0),
+        Seq(NetCDF.Att("_FillValue", NC_INT64, nums = Array(Long.MinValue.toDouble)))),
+      Var("big", Seq(1), NetCDF.NC_DOUBLE, Array.tabulate(9000)(_ + 0.5))), version = 5)
+    patch(path, "8000000000000000", "8000000000000002") // -2^63 + 2
+    val h = NetCDF.parseHeaderFile(path)
+    assert(h.vars.head.atts.head.nums.toSeq === Seq(Long.MinValue.toDouble))
+    assert(NetCDF.toLongDF(spark, dir, "s").collect().map(_.getLong(1)).sorted
+      .toSeq === Seq(1L, 2L, 3L))
+    // a truncated data section is a named refusal, not a buffer error
+    val b = Files.readAllBytes(Paths.get(path))
+    val cut = b.take(b.length - 8)
+    val e = intercept[IllegalArgumentException](
+      NetCDF.readVar(cut, NetCDF.parseHeader(cut), "big"))
+    assert(e.getMessage.contains("variable data beyond file end"))
+  }
+
   test("Zarr v2 refuses an undecodable dtype when the metadata is read, naming the array") {
     val store = scratchDir("elem_zdt")
     for (dt <- Seq("<f2", "<i16")) {
