@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, InputAdapter, ReusedSubqueryExec,
+  SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import java.nio.file.{Files, Paths}
 
 /** Writes PLANS.md: the formatted physical plan of one representative query
@@ -165,12 +169,33 @@ object PlanDump {
         "window, no sort of the data).")
   )
 
+  /** `plan` as an operator tree: one node name per line, indented by
+    * depth, an operator of a whole-stage codegen stage `n` marked `*(n)`
+    * as Spark's own tree string marks it. An adaptive plan shows its final
+    * plan and a query stage the plan inside; a reused exchange or subquery
+    * and a cached relation's scan are leaves, as in Spark's tree string. */
+  private def operators(plan: SparkPlan, depth: Int = 0,
+                        stage: String = ""): Seq[String] = plan match {
+    case w: WholeStageCodegenExec => operators(w.child, depth, s"*(${w.codegenStageId}) ")
+    case i: InputAdapter => operators(i.child, depth)
+    case _ =>
+      val inside = plan match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _: ReusedExchangeExec | _: ReusedSubqueryExec | _: InMemoryTableScanExec => Nil
+        case _ => plan.children
+      }
+      ("  " * depth + stage + plan.nodeName.trim) +:
+        (inside ++ plan.subqueries).flatMap(operators(_, depth + 1, stage))
+  }
+
   /** `runMain graft.PlanDump [sfDir] [out|-] [query ...]` — dumps the
     * picks, or only the named queries: any registered name, a pick keeping
     * its note (for surgical PLANS.md section refreshes; the file carries
     * hand-annotated sections a full regenerate would clobber). Each section
     * holds the formatted plan's operator tree and scan evidence (pushdown,
-    * pruning), then the AQE-final executed plan, read after the query ran.
+    * pruning), then the AQE-final executed plan's operator tree, read
+    * after the query ran.
     * out `-` prints to stdout instead of writing a file. A query that fails
     * fails the main, and a file is then not written. */
   def main(args: Array[String]): Unit = {
@@ -199,7 +224,7 @@ object PlanDump {
       val evidence =
         if (scanEvidence.isEmpty) "" else scanEvidence.mkString("\n", "\n", "\n")
       s"```\n$tree\n$evidence```\n\nAQE-final executed plan:\n\n```\n" +
-        s"${df.queryExecution.executedPlan}\n```\n"
+        operators(df.queryExecution.executedPlan).mkString("\n") + "\n```\n"
     }.toList
     outcomes.foreach { o =>
       sb.append(s"\n## ${o.name}\n\n")

@@ -27,11 +27,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * stream's uncompressed size (incompressible fallback). Byte-shuffle
   * transposes bytes within each block independently.
   *
-  * Inner codecs by code — all four compressed formats ship with Spark:
-  * 1 = lz4/lz4hc (lz4-java block format), 2 = snappy (snappy-java raw),
-  * 3 = zlib (java.util.zip), 4 = zstd (zstd-jni). 0 = blosclz (c-blosc's
-  * bespoke LZ77) has no JVM decoder and is rejected with re-encode
-  * guidance; numcodecs defaults to lz4, so blosclz stores are rare.
+  * The inner codec code names a stream of the codec table ([[Codec]]).
   */
 object Blosc {
 
@@ -40,9 +36,7 @@ object Blosc {
   private val FlagBitShuffle = 0x04
   private val FlagDontSplit = 0x10
 
-  private def lz4 = net.jpountz.lz4.LZ4Factory.fastestInstance()
-
-  /** Codec code <-> numcodecs cname. lz4hc shares lz4's stream format
+  /** Inner codec code <-> numcodecs cname. lz4hc shares lz4's stream format
     * (it differs only in compression effort), so both map to code 1. */
   private val cnames = Map("lz4" -> 1, "lz4hc" -> 1, "snappy" -> 2,
     "zlib" -> 3, "zstd" -> 4)
@@ -87,6 +81,9 @@ object Blosc {
     val dontSplit =
       if (version >= 2) (flags & FlagDontSplit) != 0 else !byteShuffle
     val nblocks = ((nbytes.toLong + blocksize - 1) / blocksize).toInt
+    // looked up at the first compressed stream: a frame of raw streams
+    // decodes whatever its code
+    lazy val stream = Codec.blosc(code, 0)
     val b = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
     var j = 0
     while (j < nblocks) {
@@ -106,45 +103,24 @@ object Blosc {
           "blosc stream overruns the frame")
         if (clen == neblock) // raw (incompressible) stream
           System.arraycopy(raw, src, block, s * neblock, neblock)
-        else decodeStream(code, raw, src, clen, block, s * neblock, neblock)
+        else {
+          val got = stream.decodeInto(raw, src, clen, block, s * neblock, neblock)
+          require(got == neblock,
+            s"${stream.name} stream decoded $got of $neblock bytes")
+        }
         src += clen
         s += 1
       }
       val plain =
         if (bitShuffle && blocksize >= typesize)
           bitUnshuffle(block, typesize)
-        else if (byteShuffle) ByteFilters.unshuffle(block, typesize)
+        else if (byteShuffle) Codec.unshuffle(block, typesize)
         else block
       System.arraycopy(plain, 0, out, j * blocksize, bsize)
       j += 1
     }
     out
   }
-
-  private def decodeStream(code: Int, src: Array[Byte], off: Int, clen: Int,
-                           dst: Array[Byte], dstOff: Int, dlen: Int): Unit =
-    code match {
-      case 1 =>
-        val read = lz4.fastDecompressor()
-          .decompress(src, off, dst, dstOff, dlen)
-        require(read == clen, s"lz4 stream consumed $read of $clen bytes")
-      case 2 =>
-        val n = org.xerial.snappy.Snappy.uncompress(src, off, clen, dst, dstOff)
-        require(n == dlen, s"snappy stream decoded $n of $dlen bytes")
-      case 3 =>
-        val got = ByteFilters.inflateInto(src, off, clen, dst, dstOff, dlen,
-          "a blosc block")
-        require(got == dlen, s"zlib stream decoded $got of $dlen bytes")
-      case 4 =>
-        val n = com.github.luben.zstd.Zstd.decompressByteArray(
-          dst, dstOff, dlen, src, off, clen)
-        require(n == dlen, s"zstd stream decoded $n of $dlen bytes")
-      case 0 => sys.error(
-        "blosc frame uses the blosclz inner codec, which has no JVM " +
-          "decoder — re-encode the store with numcodecs " +
-          "Blosc(cname='lz4'|'zstd'|'zlib'|'snappy') or Zlib")
-      case other => sys.error(s"unknown blosc inner codec code $other")
-    }
 
   /** Encode `plain` as a c-blosc v1 frame. `shuffle` follows numcodecs:
     * 0 = none, 1 = byte-shuffle, 2 = bit-shuffle. Falls back to the
@@ -157,6 +133,7 @@ object Blosc {
     val code = cnames.getOrElse(cname,
       sys.error(s"unsupported blosc cname '$cname' " +
         s"(${cnames.keys.toSeq.sorted.mkString(", ")})"))
+    val stream = Codec.blosc(code, level)
     val ts = math.max(typesize, 1)
     val nbytes = plain.length
     val byteShuffle = shuffle == 1 && ts > 1 && nbytes % ts == 0
@@ -186,12 +163,12 @@ object Blosc {
       System.arraycopy(plain, j * blocksize, src, 0, bsize)
       val block =
         if (bitShuffle) bitShuffleBytes(src, ts)
-        else if (byteShuffle) ByteFilters.shuffle(src, ts)
+        else if (byteShuffle) Codec.shuffle(src, ts)
         else src
       bstarts(j) = bodyBase + body.size()
       var s = 0
       while (s < nstreams) {
-        val comp = encodeStream(code, block, s * neblock, neblock, level)
+        val comp = stream.encode(block, s * neblock, neblock)
         val lenBuf = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
         if (comp.length >= neblock) { // store raw, flagged by length
           lenBuf.putInt(neblock)
@@ -225,28 +202,6 @@ object Blosc {
     out.put(body.toByteArray)
     out.array()
   }
-
-  private def encodeStream(code: Int, src: Array[Byte], off: Int, len: Int,
-                           level: Int): Array[Byte] =
-    code match {
-      case 1 =>
-        val c = lz4.fastCompressor()
-        val out = new Array[Byte](c.maxCompressedLength(len))
-        val n = c.compress(src, off, len, out, 0, out.length)
-        java.util.Arrays.copyOf(out, n)
-      case 2 =>
-        val out = new Array[Byte](
-          org.xerial.snappy.Snappy.maxCompressedLength(len))
-        val n = org.xerial.snappy.Snappy.compress(src, off, len, out, 0)
-        java.util.Arrays.copyOf(out, n)
-      case 3 =>
-        ByteFilters.deflate(src, off, len, math.min(math.max(level, 1), 9))
-      case 4 =>
-        val slice = java.util.Arrays.copyOfRange(src, off, off + len)
-        com.github.luben.zstd.Zstd.compress(slice,
-          math.min(math.max(level, 1), 22))
-      case other => sys.error(s"unknown blosc inner codec code $other")
-    }
 
   /** Bit transpose within one block (c-blosc's BITSHUFFLE, the kiyo-masui
     * bitshuffle algorithm): for the first `elems - elems % 8` elements,

@@ -25,12 +25,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    the v1 chunk B-tree plus ALL five layout-v4 indexes HDF5 1.10+
   *    writes under libver="latest" (single chunk, implicit, fixed array
   *    incl. paged data blocks, extensible array incl. super blocks and
-  *    paged data blocks, v2 B-tree); filter pipeline deflate + byte-shuffle +
-  *    fletcher32 + szip (pure-JVM CCSDS 121 Rice, see [[Szip]]) + lzf
-  *    (h5py's built-in, see [[Lzf]]) + zstd (id 32015, netCDF-C 4.9+ /
-  *    hdf5plugin, via Spark's bundled zstd-jni) in any declared order,
-  *    honoring the per-chunk filter mask — nbit/scaleoffset and other
-  *    exotic ids are rejected per-variable
+  *    paged data blocks, v2 B-tree); the filter pipeline in any declared
+  *    order, each filter id a codec of the table ([[Codec]]), honoring the
+  *    per-chunk filter mask — other ids are rejected per-variable
   *  - attributes: fixed-size strings/numbers, and vlen-of-object-reference
   *    via the global heap — exactly what netCDF-4's DIMENSION_LIST needs
   *  - netCDF-4 dimension model: datasets attributed
@@ -95,9 +92,7 @@ object HDF5 {
     def shuffleElem: Option[Int] =
       filters.find(_._1 == 2).map(_._2.headOption.getOrElse(1))
     def fletcher32: Boolean = filters.exists(_._1 == 3)
-    def badFilters: Seq[Int] =
-      filters.map(_._1).filterNot(Set(1, 2, 3, 4, 5, 6, 32000, 32001,
-        32015))
+    def badFilters: Seq[Int] = filters.filterNot(Codec.hdf5.isDefinedAt).map(_._1)
     def attr(n: String): Option[Attr] = attrs.find(_.name == n)
     def isDimScale: Boolean =
       attr("CLASS").exists(a => Option(a.text).contains("DIMENSION_SCALE"))
@@ -336,75 +331,21 @@ object HDF5 {
 
   /** Undo a declared pipeline on ONE storage block (chunk or fractal-heap
     * direct block), last-to-first, honoring the per-block filter mask
-    * (bit i set = pipeline[i] skipped). fletcher32 is verified + stripped
-    * at its actual position; each fletcher inner to a deflate contributes
-    * its 4 checksum bytes to that inflate's expected size. */
+    * (bit i set = pipeline[i] skipped). Each stage decodes to the nominal
+    * size carried through every inner stage (fletcher32 adds its 4
+    * checksum bytes, nbit packs); outside a scale-offset stage that size
+    * is only an upper bound. */
   private def defilter(raw: Array[Byte], filters: Seq[(Int, Seq[Int])],
                        mask: Int, nominal: Int,
                        what: String): Array[Byte] = {
-    val active = filters.zipWithIndex
-      .filter { case (_, i) => (mask & (1 << i)) == 0 }
-      .map(_._1)
-    // expected payload size of the decompressor at pipeline stage k:
-    // the nominal chunk size transformed by every INNER (earlier-
-    // applied) stage in order — fletcher appends 4 checksum bytes,
-    // nbit shrinks to its exact packed size, scale-offset's packed
-    // size is chunk-dependent so use its 21-byte-header upper bound
-    // (the bit decoders ignore trailing slack, and inflate/lzf stop
-    // at actual stream end)
-    def innerSize(k: Int): Int = {
-      var sz = nominal
-      active.take(k).foreach {
-        case (3, _) => sz += 4
-        case (5, cd) if cd.length >= 8 && cd(1) == 0 && cd(3) == 1 =>
-          sz = NbitSO.nbitPackedSize(cd)
-        case (6, _) => sz += NbitSO.SoHeader
-        case _ => ()
-      }
-      sz
+    val codecs = filters.zipWithIndex.collect {
+      case (f, i) if (mask & (1 << i)) == 0 => Codec.hdf5.applyOrElse(f,
+        (f: (Int, Seq[Int])) => sys.error(s"unsupported filter id ${f._1} in $what"))
     }
-    def soInner(k: Int): Boolean = active.take(k).exists(_._1 == 6)
-    var cur = raw
-    var k = active.length - 1
-    while (k >= 0) {
-      active(k) match {
-        case (1, _) => // an upper bound when scale-offset sits inside
-          cur = ByteFilters.inflate(cur, innerSize(k), what,
-            exact = !soInner(k))
-        case (2, cd) =>
-          cur = ByteFilters.unshuffle(cur, cd.headOption.getOrElse(1))
-        case (4, cd) => cur = Szip.hdf5Decode(cur, cd, what)
-        case (5, cd) => cur = NbitSO.nbitDecode(cur, cd)
-        case (6, cd) => cur = NbitSO.soDecode(cur, cd)
-        case (32000, _) => // h5py lzf; sized like deflate (see case 1)
-          cur = Lzf.decompress(cur, innerSize(k))
-        case (32001, _) => // hdf5-blosc plugin: payload is a self-
-          // describing c-blosc frame (cd values only matter on write);
-          // with scale-offset inner, innerSize is an upper bound and the
-          // frame's nbytes header is the real output size
-          cur = Blosc.decompress(cur, innerSize(k), exactSize = !soInner(k))
-        case (32015, _) => // registered zstd (netCDF-C 4.9+ / hdf5plugin)
-          val out = new Array[Byte](innerSize(k))
-          val n = com.github.luben.zstd.Zstd.decompressByteArray(
-            out, 0, out.length, cur, 0, cur.length)
-          require(n == out.length || soInner(k),
-            s"zstd chunk of $what decoded $n of ${out.length} bytes")
-          cur = out
-        case (3, _) =>
-          require(cur.length >= 4,
-            s"fletcher32 block of $what shorter than its checksum")
-          val dataLen = cur.length - 4
-          val stored = ByteBuffer.wrap(cur, dataLen, 4)
-            .order(ByteOrder.LITTLE_ENDIAN).getInt
-          require(fletcherSum(cur, dataLen) == stored,
-            s"fletcher32 checksum mismatch in $what")
-          cur = java.util.Arrays.copyOfRange(cur, 0, dataLen)
-        case (other, _) =>
-          sys.error(s"unsupported filter id $other in $what")
-      }
-      k -= 1
-    }
-    cur
+    val sizes = codecs.scanLeft(nominal)((n, c) => c.encodedSize(n))
+    val exact = codecs.scanLeft(true)((e, c) => e && !c.isInstanceOf[Codec.ScaleOffset])
+    codecs.indices.foldRight(raw)((k, cur) =>
+      codecs(k).decode(cur, sizes(k), what, exact(k)))
   }
 
   private[graft] def parseFRHP(bytes: H5Src, addr: Long): FractalHeap = {
@@ -1043,28 +984,12 @@ object HDF5 {
       sys.error(s"$name failed metadata parse: $err"))
     require(d.badFilters.isEmpty,
       s"$name uses unsupported filter ids ${d.badFilters.mkString(", ")}" +
-        " — this reader decodes deflate/shuffle/fletcher32/szip/nbit/" +
-        "scaleoffset/lzf/blosc/zstd only. " +
+        " — this reader decodes the filters of graft.io.Codec only. " +
         "Re-encode with `nccopy -F \"*,1\" in.nc4 out.nc4` (netCDF-C) or " +
         "`h5repack -f GZIP=1 in.h5 out.h5` to deflate, then re-read.")
-    d.filters.find(_._1 == 4).foreach { case (_, cd) =>
-      require(cd.length >= 4 && Set(8, 16, 32).contains(cd(1)),
-        s"$name uses szip with parameters [${cd.mkString(", ")}] — this " +
-          "reader decodes 8/16/32-bit szip samples only. Re-encode with " +
-          "`h5repack -f GZIP=1 in.h5 out.h5` to deflate, then re-read.")
-    }
-    d.filters.find(_._1 == 5).foreach { case (_, cd) =>
-      require(cd.length >= 4 && (cd(1) != 0 || cd(3) == 1 || cd(3) == 4),
-        s"$name uses nbit on an array/compound datatype " +
-          s"[${cd.mkString(", ")}] — this reader decodes atomic nbit " +
-          "only. Re-encode with `h5repack -f GZIP=1` to deflate.")
-    }
-    d.filters.find(_._1 == 6).foreach { case (_, cd) =>
-      require(cd.length >= 8 && (cd(0) == 2 || cd(0) == 0),
-        s"$name uses scale-offset E-scaling [${cd.mkString(", ")}] — " +
-          "unimplemented in the HDF5 C library itself; re-encode with " +
-          "INT or FLOAT_DSCALE scaling.")
-    }
+    // a filter's client data is checked where it becomes a codec
+    try d.filters.foreach(Codec.hdf5) catch { case e: IllegalArgumentException =>
+      throw new IllegalArgumentException(s"$name uses ${e.getMessage}", e) }
   }
 
   /** One stored chunk: grid origin, file address, stored (possibly
@@ -1810,6 +1735,21 @@ object HDF5 {
     require(!szip || f32,
       "szip write path codes 32-bit samples — set f32 (8/16-bit reads " +
         "are supported; the f64 writer default cannot szip)")
+    /** The filter pipeline of a chunked variable in apply order, as
+      * (filter id, client data): nbit or scale-offset, fletcher32
+      * (innermost: netCDF-C's checksum over the plain bytes), shuffle, the
+      * compressor, then fletcher32 when `fletcherOuter` (h5py's order:
+      * the checksum covers the compressed bytes). */
+    private[io] def filters(level: Int): Seq[(Int, Seq[Int])] = chunk.toSeq.flatMap { cd =>
+      val sum = Seq(3 -> Seq.empty[Int])
+      (if (nbitPrec > 0) Seq(5 -> nbitCd(cd)) else Nil) ++
+        soScale.map(_ => 6 -> soCd(cd)) ++
+        (if (fletcher && !fletcherOuter) sum else Nil) ++
+        (if (shuffle) Seq(2 -> Seq(elem.size)) else Nil) ++
+        Seq(if (szip) 4 -> szipCd(cd) else if (lzf) 32000 -> Nil
+          else if (zstd) 32015 -> Seq(3) else 1 -> Seq(level)) ++
+        (if (fletcher && fletcherOuter) sum else Nil)
+    }
     /** i8, f4 or f8, as declared by `integral`, `f32` and `bigEndian`. */
     private[io] def elem: Elem = Elem(if (integral) 'i' else 'f',
       if (f32 && !integral) 4 else 8, bigEndian, name)
@@ -1939,42 +1879,14 @@ object HDF5 {
                 .map(c => c.tail.patch(u, Seq(c.head), 0))
             case _ => cartesian(grid.map(g => (0 until g).toSeq))
           }
+          val codecs = v.filters(deflateLevel).map(Codec.hdf5)
           val blobs = gridIdx.map { gi =>
             val origin = gi.zip(cd).map { case (g, c) => g.toLong * c }
             val slice = new Array[Double](cd.product) // padding stays 0
             LongGrid.foreachCell(shape.map(_.toLong), origin, cd) { (i, pos) =>
               slice(i) = v.data(pos.toInt)
             }
-            val enc0 = v.elem.encode(slice)
-            // nbit / scale-offset run FIRST in pipeline (apply) order
-            val enc =
-              if (v.nbitPrec > 0) NbitSO.nbitEncode(enc0, v.nbitCd(cd))
-              else if (v.soScale.isDefined)
-                NbitSO.soEncode(enc0, v.soCd(cd))
-              else enc0
-            def addSum(a: Array[Byte]): Array[Byte] = {
-              val withSum = java.util.Arrays.copyOf(a, a.length + 4)
-              ByteBuffer.wrap(withSum, a.length, 4)
-                .order(ByteOrder.LITTLE_ENDIAN)
-                .putInt(fletcherSum(a, a.length))
-              withSum
-            }
-            // default apply order: fletcher32 (innermost, checksum over
-            // raw bytes), then shuffle, then deflate; fletcherOuter moves
-            // the checksum after deflate (h5py order)
-            val summed =
-              if (v.fletcher && !v.fletcherOuter) addSum(enc) else enc
-            val filtered =
-              if (v.shuffle) ByteFilters.shuffle(summed, v.elem.size) else summed
-            val deflated =
-              if (v.szip) Szip.hdf5Encode(filtered, v.szipCd(cd))
-              else if (v.lzf) Lzf.compress(filtered)
-              else if (v.zstd)
-                com.github.luben.zstd.Zstd.compress(filtered, 3)
-              else ByteFilters.deflate(filtered, deflateLevel)
-            (origin,
-              if (v.fletcher && v.fletcherOuter) addSum(deflated)
-              else deflated)
+            (origin, codecs.foldLeft(v.elem.encode(slice))((b, c) => c.encode(b)))
           }
           chunkBlobs(v.name) = blobs.map(_._2)
           chunkAddrs(v.name) = blobs.map { case (origin, blob) =>
@@ -2752,85 +2664,28 @@ object HDF5 {
     b.array()
   }
 
-  private def pipelineBody(level: Int,
-                           shuffleElem: Option[Int],
-                           fletcher: Boolean = false,
-                           fletcherOuter: Boolean = false,
-                           szipCd: Option[Seq[Int]] = None,
-                           lzf: Boolean = false,
-                           zstd: Boolean = false,
-                           nbitCd: Option[Seq[Int]] = None,
-                           soCd: Option[Seq[Int]] = None): Array[Byte] = {
-    val nf = 1 + (if (shuffleElem.isDefined) 1 else 0) +
-      (if (fletcher) 1 else 0) +
-      (if (nbitCd.isDefined) 1 else 0) + (if (soCd.isDefined) 1 else 0)
-    // entry sizes: deflate 16 / szip 24 (4 client values) / lzf 16 (8-byte
-    // padded name, ids >= 256 record one) / zstd 24 (name + level),
-    // shuffle 16, fletcher 8, nbit 40 (8 cd), scaleoffset 88 (20 cd)
-    val bodyLen = 8 + (if (szipCd.isDefined || zstd) 24 else 16) +
-      (if (shuffleElem.isDefined) 16 else 0) +
-      (if (fletcher) 8 else 0) +
-      (if (nbitCd.isDefined) 40 else 0) + (if (soCd.isDefined) 88 else 0)
-    val b = ByteBuffer.allocate(bodyLen).order(ByteOrder.LITTLE_ENDIAN)
-    b.put(1.toByte); b.put(nf.toByte)
-    b.putShort(0.toShort); b.putInt(0)
-    // nbit / scale-offset apply first: declare them first
-    nbitCd.foreach { cd =>
-      b.putShort(5.toShort); b.putShort(0.toShort)
-      b.putShort(0.toShort) // mandatory (skipping would corrupt data)
-      b.putShort(cd.length.toShort)
-      cd.foreach(b.putInt) // 8 values: even count, no pad
+  /** Filter-pipeline message (version 1) declaring `filters` in apply
+    * order. Ids from 256 record their registered name, NUL-padded to 8;
+    * client data pads to an even count. */
+  private def pipelineBody(filters: Seq[(Int, Seq[Int])]): Array[Byte] = {
+    val entries = filters.map { case f @ (id, cd) =>
+      val name =
+        if (id < 256) Array.emptyByteArray
+        else java.util.Arrays.copyOf(Codec.hdf5(f).name.getBytes("US-ASCII"), 8)
+      val b = ByteBuffer.allocate(8 + name.length + (cd.length + 1) / 2 * 8)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      b.putShort(id.toShort).putShort(name.length.toShort)
+      // a checksum, nbit or scale-offset stage is mandatory: skipping it
+      // would corrupt the data; the rest are optional
+      b.putShort((if (Set(3, 5, 6)(id)) 0 else 1).toShort)
+      b.putShort(cd.length.toShort).put(name)
+      cd.foreach(b.putInt)
+      b.array()
     }
-    soCd.foreach { cd =>
-      b.putShort(6.toShort); b.putShort(0.toShort)
-      b.putShort(0.toShort) // mandatory
-      b.putShort(cd.length.toShort)
-      cd.foreach(b.putInt) // 20 values: even count, no pad
-    }
-    def fletcherEntry(): Unit = {
-      b.putShort(3.toShort) // fletcher32
-      b.putShort(0.toShort) // name length
-      b.putShort(0.toShort) // flags: mandatory (checksums must not drop)
-      b.putShort(0.toShort) // no client values (entry = 8 bytes, even pad)
-    }
-    // write order = apply order: default netCDF-C layout puts fletcher32
-    // first (innermost checksum); fletcherOuter declares it last (h5py)
-    if (fletcher && !fletcherOuter) fletcherEntry()
-    shuffleElem.foreach { es =>
-      b.putShort(2.toShort) // shuffle
-      b.putShort(0.toShort) // name length
-      b.putShort(1.toShort) // flags: optional
-      b.putShort(1.toShort) // one client value: element size
-      b.putInt(es); b.putInt(0) // value + pad to 8
-    }
-    szipCd match {
-      case Some(cd) =>
-        b.putShort(4.toShort) // szip
-        b.putShort(0.toShort) // name length
-        b.putShort(1.toShort) // flags: optional
-        b.putShort(4.toShort) // [mask, bpp, pixels/block, pixels/scanline]
-        cd.foreach(b.putInt) // 4 values: even count, no pad
-      case None if lzf =>
-        b.putShort(32000.toShort) // h5py lzf (registered dynamic id)
-        b.putShort(8.toShort) // name length incl. padding
-        b.putShort(1.toShort) // flags: optional (h5py marks it skippable)
-        b.putShort(0.toShort) // no client values
-        b.put("lzf".getBytes); b.put(new Array[Byte](5)) // NUL-padded to 8
-      case None if zstd =>
-        b.putShort(32015.toShort) // registered zstd
-        b.putShort(8.toShort) // name length incl. padding
-        b.putShort(1.toShort) // flags: optional
-        b.putShort(1.toShort) // one client value: level
-        b.put("zstd".getBytes); b.put(new Array[Byte](4))
-        b.putInt(3); b.putInt(0) // level + pad to 8
-      case None =>
-        b.putShort(1.toShort) // deflate
-        b.putShort(0.toShort) // name length
-        b.putShort(1.toShort) // flags: optional
-        b.putShort(1.toShort) // one client value
-        b.putInt(level); b.putInt(0) // value + pad to 8
-    }
-    if (fletcher && fletcherOuter) fletcherEntry()
+    val b = ByteBuffer.allocate(8 + entries.map(_.length).sum)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    b.put(1.toByte).put(entries.length.toByte).putShort(0.toShort).putInt(0)
+    entries.foreach(b.put)
     b.array()
   }
 
@@ -2861,14 +2716,10 @@ object HDF5 {
               singleStored, gridN)
         })
       })
-    val filters = if (v.chunk.isDefined)
-      Seq(msg(0x0B, pipelineBody(level,
-        if (v.shuffle) Some(elemSize) else None, v.fletcher,
-        v.fletcherOuter,
-        if (v.szip) Some(v.szipCd(v.chunk.get)) else None,
-        v.lzf, v.zstd,
-        if (v.nbitPrec > 0) Some(v.nbitCd(v.chunk.get)) else None,
-        v.soScale.map(_ => v.soCd(v.chunk.get))))) else Nil
+    val filters = v.filters(level) match {
+      case Nil => Nil
+      case fs => Seq(msg(0x0B, pipelineBody(fs)))
+    }
     val attrs =
       if (isDim) Seq(
         msg(0x0C, scalarStrAttrBody("CLASS", "DIMENSION_SCALE")),

@@ -17,7 +17,10 @@ package graft.io
 object Lzf {
 
   /** Decompress exactly `expected` bytes (the chunk's nominal size). */
-  def decompress(src: Array[Byte], expected: Int): Array[Byte] = {
+  def decompress(src: Array[Byte], expected: Int): Array[Byte] = decompress(src, expected, true)
+
+  /** `exact = false`: `expected` is an upper bound ([[Codec]]'s length rule). */
+  private[io] def decompress(src: Array[Byte], expected: Int, exact: Boolean): Array[Byte] = {
     val out = new Array[Byte](expected)
     var ip = 0
     var op = 0
@@ -46,7 +49,7 @@ object Lzf {
         while (n > 0) { out(op) = out(ref); op += 1; ref += 1; n -= 1 }
       }
     }
-    require(op == expected,
+    require(op == expected || !exact,
       s"lzf stream produced $op of $expected expected bytes")
     out
   }

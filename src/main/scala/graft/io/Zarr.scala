@@ -26,16 +26,10 @@ import org.json4s.jackson.JsonMethods
   * `fill_value`), then compressed. Dimension names follow the xarray
   * convention: `_ARRAY_DIMENSIONS` in `.zattrs`.
   *
-  * Codecs: `null` (raw), `zlib` (`numcodecs.Zlib`, plain DEFLATE via
-  * `java.util.zip`), `zstd` (`numcodecs.Zstd` in v2 and the v3 `zstd`
-  * codec — zarr-python 3's default chain — via the zstd-jni Spark
-  * bundles), and `blosc` — zarr-python 2's DEFAULT — decoded pure-JVM by
-  * [[Blosc]] for the lz4/lz4hc/zstd/zlib/snappy inner codecs
-  * (no-shuffle, byte-shuffle, and bit-shuffle; blosclz is rejected
-  * with re-encode guidance). Pass compressor id "blosc:<cname>:<shuffle>"
-  * to write blosc-framed chunks. The v3 `transpose` array->array codec
-  * reads and writes at the top level of the chain (inside
-  * sharding_indexed it is rejected with guidance).
+  * Codecs: a chunk's bytes go through the codec table ([[Codec]], which
+  * lists the compressors and how the library spells them). The v3
+  * `transpose` array->array codec reads and writes at the top level of
+  * the chain (inside sharding_indexed it is rejected with guidance).
   *
   * 100 TB shape: chunks are independently decodable, so the reader maps
   * chunk files onto Spark tasks (the driver only lists them; executors
@@ -74,9 +68,20 @@ object Zarr {
                        dims: Seq[String], attrs: Map[String, String],
                        v3: Boolean = false,
                        shard: Option[ShardSpec] = None,
-                       tperm: Option[Seq[Int]] = None) {
+                       tperm: Option[Seq[Int]] = None,
+                       private[io] val fillInt: Option[BigInt] = None) {
     def integral: Boolean = kind == 'i' || kind == 'u'
     private[io] lazy val elem: Elem = Elem(kind, size, order == '>', "zarr array")
+    private[io] lazy val codec: Option[Codec] = compressor.map(Codec.ofSpelling(_, size))
+    /** The fill as a cell's value. An `i8`/`u8` fill (`fillInt`, kept
+      * exact from the metadata) is held to the 2^53 rule only here, where
+      * it becomes a cell: a fill never used so still opens. */
+    private[io] def fillCell(what: => String): Double = fillInt match {
+      case Some(i) =>
+        try Elem.exact(i.toLong, kind == 'u') catch { case e: ArithmeticException =>
+          throw new ArithmeticException(s"$what: fill_value ${e.getMessage}") }
+      case None => fillValue
+    }
     def chunkGrid: Seq[Int] =
       shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
     def chunkElems: Int = chunks.product
@@ -92,16 +97,26 @@ object Zarr {
   private def fsFor(path: String, spark: SparkSession): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private def ints(v: JValue): Seq[Int] = v match {
+    case JArray(xs) => xs.map {
+      case JInt(i) => i.toInt
+      case other => sys.error(s"bad int entry $other")
+    }
+    case other => sys.error(s"bad int array $other")
+  }
+
+  /** A `fill_value`: its double, and for a 64-bit integer array the exact
+    * integer ([[ArrayMeta.fillCell]]). JSON null and "NaN" read as NaN
+    * (unused by an integer array). */
+  private def fillOf(v: JValue, kind: Char, size: Int): (Double, Option[BigInt]) = v match {
+    case JInt(i) => (i.toDouble, Some(i).filter(_ => kind != 'f' && size == 8))
+    case JDouble(d) => (d, None)
+    case JDecimal(d) => (d.toDouble, None)
+    case _ => (Double.NaN, None)
+  }
+
   def parseMeta(zarray: String, zattrs: Option[String]): ArrayMeta = {
     val j = JsonMethods.parse(zarray)
-    def ints(field: String): Seq[Int] = (j \ field) match {
-      case JArray(xs) => xs.map {
-        case JInt(i) => i.toInt
-        case JLong(l) => l.toInt
-        case other => sys.error(s"bad $field entry $other")
-      }
-      case other => sys.error(s"bad $field $other")
-    }
     // typestr: byte order ('<' '>' '|'), kind, byte size — e.g. "<f8"
     val (ord, kind, size) = (j \ "dtype") match {
       case JString(s) if s.length >= 3 && "<>|".contains(s(0)) &&
@@ -110,36 +125,8 @@ object Zarr {
         (s(0), e.kind, e.size)
       case other => sys.error(s"bad dtype $other")
     }
-    val comp = (j \ "compressor") match {
-      case JNull | JNothing => None
-      case c =>
-        val id = (c \ "id") match { case JString(s) => s; case _ => "?" }
-        def int(field: String, dflt: Int): Int = (c \ field) match {
-          case JInt(i) => i.toInt; case JLong(l) => l.toInt; case _ => dflt
-        }
-        id match {
-          case "zlib" => Some((id, int("level", 1)))
-          case "zstd" => Some((id, int("level", 1))) // numcodecs Zstd
-          case "blosc" =>
-            // numcodecs Blosc carries cname/clevel/shuffle; pack cname and
-            // shuffle into the id ("blosc:<cname>:<shuffle>") so the
-            // (String, Int) compressor slot round-trips the write config
-            Some((s"blosc:${(c \ "cname") match {
-              case JString(s) => s; case _ => "lz4"
-            }}:${int("shuffle", 1)}", int("clevel", 5)))
-          case other => sys.error(
-            s"unsupported compressor '$other' (supported: null, zlib, " +
-              "zstd, blosc[lz4/lz4hc/zstd/zlib/snappy])")
-        }
-    }
-    val fill = (j \ "fill_value") match {
-      case JDouble(d) => d
-      case JInt(i) => i.toDouble
-      case JLong(l) => l.toDouble
-      case JDecimal(d) => d.toDouble
-      case JString("NaN") => Double.NaN
-      case _ => Double.NaN // JSON null -> NaN (float) / unused (int)
-    }
+    val comp = Codec.zarrV2(j \ "compressor", size).map(Codec.spelling)
+    val (fill, fillInt) = fillOf(j \ "fill_value", kind, size)
     val sep = (j \ "dimension_separator") match {
       case JString(s) => s
       case _ => "."
@@ -150,7 +137,7 @@ object Zarr {
     // writer always emits C like zarr-python's default)
     val forder: Option[Seq[Int]] = (j \ "order") match {
       case JString("C") | JNothing => None
-      case JString("F") => Some(ints("chunks").indices.reverse)
+      case JString("F") => Some(ints(j \ "chunks").indices.reverse)
       case other => sys.error(s"unsupported order $other (C or F)")
     }
     (j \ "filters") match {
@@ -171,8 +158,8 @@ object Zarr {
       }
       (d, rest)
     }.getOrElse((Nil, Map.empty[String, String]))
-    ArrayMeta(ints("shape"), ints("chunks"), ord, kind, size, comp, fill,
-      sep, dims, attrs, tperm = forder)
+    ArrayMeta(ints(j \ "shape"), ints(j \ "chunks"), ord, kind, size, comp, fill,
+      sep, dims, attrs, tperm = forder, fillInt = fillInt)
   }
 
   def openMeta(spark: SparkSession, store: String, name: String): ArrayMeta = {
@@ -192,10 +179,12 @@ object Zarr {
     Map('f' -> "float", 'i' -> "int", 'u' -> "uint")(m.kind) + m.size * 8
 
   /** Parse a zarr v3 array node (`zarr.json`, zarr_format 3): regular
-    * chunk grid, `default` chunk key encoding ("c/"-prefixed, "/"
-    * separated), `bytes` codec (endianness) + optional `gzip` codec.
-    * `dimension_names` and `attributes` live inline — v3 needs no
-    * `.zattrs` sidecar or `_ARRAY_DIMENSIONS` convention. */
+    * chunk grid, `default` chunk key encoding ("c/"-prefixed, "/" or "."
+    * separated), and a codec chain of an optional `transpose`, `bytes`
+    * (endianness) and one byte codec of the table ([[Codec]]) — or one
+    * `sharding_indexed` whose inner chunks carry such a chain without
+    * transpose. `dimension_names` and `attributes` live inline — v3 needs
+    * no `.zattrs` sidecar or `_ARRAY_DIMENSIONS` convention. */
   def parseMetaV3(zarrJson: String): ArrayMeta = {
     val j = JsonMethods.parse(zarrJson)
     (j \ "zarr_format") match {
@@ -205,14 +194,6 @@ object Zarr {
     (j \ "node_type") match {
       case JString("array") =>
       case other => sys.error(s"not an array node ($other)")
-    }
-    def ints(v: JValue): Seq[Int] = v match {
-      case JArray(xs) => xs.map {
-        case JInt(i) => i.toInt
-        case JLong(l) => l.toInt
-        case other => sys.error(s"bad int entry $other")
-      }
-      case other => sys.error(s"bad int array $other")
     }
     val shape = ints(j \ "shape")
     (j \ "chunk_grid" \ "name") match {
@@ -237,92 +218,38 @@ object Zarr {
         (e.kind, e.size)
       case other => sys.error(s"unsupported v3 data_type $other")
     }
-    var order: Char = '<'
-    var comp: Option[(String, Int)] = None
-    var shard: Option[ShardSpec] = None
-    var tperm: Option[Seq[Int]] = None
-    // v3 blosc codec config -> the same packed "blosc:<cname>:<shuffle>"
-    // id the v2 path uses (shuffle is a string enum in v3)
-    def bloscOf(c: JValue): (String, Int) = {
-      val cfg = c \ "configuration"
-      val cname = (cfg \ "cname") match {
-        case JString(s) => s; case _ => "lz4"
-      }
-      val shuffle = (cfg \ "shuffle") match {
-        case JString("noshuffle") => 0
-        case JString("bitshuffle") => 2
-        case _ => 1
-      }
-      val clevel = (cfg \ "clevel") match {
-        case JInt(l) => l.toInt; case JLong(l) => l.toInt; case _ => 5
-      }
-      (s"blosc:$cname:$shuffle", clevel)
-    }
-    // a plain codec chain is bytes [+ gzip|blosc]; parse into (endian, comp)
-    def parseChain(v: JValue): (Char, Option[(String, Int)]) = {
-      var o: Char = '<'; var cm: Option[(String, Int)] = None
-      v match {
-        case JArray(cs) => cs.foreach { c =>
-          (c \ "name") match {
-            case JString("bytes") => (c \ "configuration" \ "endian") match {
-              case JString("big") => o = '>'
-              case _ => o = '<'
-            }
-            case JString("gzip") => (c \ "configuration" \ "level") match {
-              case JInt(l) => cm = Some(("gzip", l.toInt))
-              case _ => cm = Some(("gzip", 1))
-            }
-            case JString("blosc") => cm = Some(bloscOf(c))
-            case JString("zstd") => (c \ "configuration" \ "level") match {
-              case JInt(l) => cm = Some(("zstd", l.toInt))
-              case _ => cm = Some(("zstd", 0))
-            }
-            case JString("transpose") =>
-              sys.error("transpose inside sharding_indexed is not " +
-                "supported — re-encode with the transpose codec at the " +
-                "top level (or without it)")
-            case JString(other) =>
-              sys.error(
-                s"unsupported v3 codec '$other' (bytes, gzip, blosc, zstd)")
-            case other => sys.error(s"bad codec $other")
-          }
-        }
+    /** One codec chain as (endianness, compressor, sharding, transpose);
+      * `inner` is a sharding_indexed's chain, which holds neither. */
+    def chain(v: JValue, inner: Boolean)
+        : (Char, Option[(String, Int)], Option[ShardSpec], Option[Seq[Int]]) = {
+      var order: Char = '<'
+      var comp: Option[(String, Int)] = None
+      var shard: Option[ShardSpec] = None
+      var tperm: Option[Seq[Int]] = None
+      val codecs = v match {
+        case JArray(cs) => cs
         case other => sys.error(s"bad codecs $other")
       }
-      (o, cm)
-    }
-    (j \ "codecs") match {
-      case JArray(cs) => cs.foreach { c =>
-        (c \ "name") match {
-          case JString("sharding_indexed") =>
+      codecs.foreach { c =>
+        (c \ "name", Codec.zarrV3(c, size)) match {
+          case (_, Some(codec)) => comp = Some(Codec.spelling(codec))
+          case (JString("bytes"), _) =>
+            order = if ((c \ "configuration" \ "endian") == JString("big")) '>' else '<'
+          case (JString(n @ ("transpose" | "sharding_indexed")), _) if inner =>
+            sys.error(s"$n inside sharding_indexed is not supported — " +
+              "re-encode with it at the top level (or without it)")
+          case (JString("sharding_indexed"), _) =>
             val cfg = c \ "configuration"
-            val inner = ints(cfg \ "chunk_shape")
-            val (io, icm) = parseChain(cfg \ "codecs")
-            order = io
+            val (innerOrder, innerComp, _, _) = chain(cfg \ "codecs", inner = true)
+            order = innerOrder
             val crc = (cfg \ "index_codecs") match {
               case JArray(ics) => ics.exists(ic =>
                 (ic \ "name") == JString("crc32c"))
               case _ => true
             }
-            val atEnd = (cfg \ "index_location") match {
-              case JString("start") => false
-              case _ => true
-            }
-            shard = Some(ShardSpec(inner, icm, atEnd, crc))
-          case JString("bytes") => (c \ "configuration" \ "endian") match {
-            case JString("big") => order = '>'
-            case _ => order = '<'
-          }
-          case JString("gzip") => (c \ "configuration" \ "level") match {
-            case JInt(l) => comp = Some(("gzip", l.toInt))
-            case _ => comp = Some(("gzip", 1))
-          }
-          case JString("blosc") => comp = Some(bloscOf(c))
-          case JString("zstd") => (c \ "configuration" \ "level") match {
-            case JInt(l) => comp = Some(("zstd", l.toInt))
-            case _ => comp = Some(("zstd", 0))
-          }
-          case JString("transpose") =>
+            shard = Some(ShardSpec(ints(cfg \ "chunk_shape"), innerComp,
+              (cfg \ "index_location") != JString("start"), crc))
+          case (JString("transpose"), _) =>
             // array->array codec (v3 spec §transpose): the encoded chunk
             // has shape chunk_shape[order[i]]; decode inverse-permutes.
             // Stacked transposes compose — reject rather than silently
@@ -336,22 +263,16 @@ object Zarr {
               s"transpose order $p is not a permutation of the " +
                 s"${chunks.length} chunk dims")
             tperm = Some(p)
-          case JString(other) =>
+          case (JString(other), _) =>
             sys.error(s"unsupported v3 codec '$other' " +
               "(bytes, gzip, blosc, zstd, transpose, sharding_indexed)")
-          case other => sys.error(s"bad codec $other")
+          case (other, _) => sys.error(s"bad codec $other")
         }
       }
-      case other => sys.error(s"bad codecs $other")
+      (order, comp, shard, tperm)
     }
-    val fill = (j \ "fill_value") match {
-      case JDouble(d) => d
-      case JInt(i) => i.toDouble
-      case JLong(l) => l.toDouble
-      case JDecimal(d) => d.toDouble
-      case JString("NaN") => Double.NaN
-      case _ => Double.NaN
-    }
+    val (order, comp, shard, tperm) = chain(j \ "codecs", inner = false)
+    val (fill, fillInt) = fillOf(j \ "fill_value", kind, size)
     val dims = (j \ "dimension_names") match {
       case JArray(xs) => xs.collect { case JString(n) => n }
       case _ => Nil
@@ -368,7 +289,7 @@ object Zarr {
         s"inner chunk shape ${sh.inner} must divide the shard shape $chunks")
     }
     ArrayMeta(shape, chunks, order, kind, size, comp, fill, sep, dims,
-      attrs, v3 = true, shard = shard, tperm = tperm)
+      attrs, v3 = true, shard = shard, tperm = tperm, fillInt = fillInt)
   }
 
   /** Open either format's metadata: a `zarr.json` array node wins (v3),
@@ -386,66 +307,29 @@ object Zarr {
   // chunk codec
   // ------------------------------------------------------------------
 
-  /** zstd frame (numcodecs Zstd in v2; the v3 `zstd` codec — zarr-python
-    * 3's default chain) via the zstd-jni Spark already bundles. */
-  private def unzstd(b: Array[Byte], expect: Int): Array[Byte] = {
-    val out = new Array[Byte](expect)
-    val n = com.github.luben.zstd.Zstd.decompressByteArray(
-      out, 0, expect, b, 0, b.length)
-    require(n == expect, s"zstd chunk decoded $n of $expect bytes")
-    out
-  }
-
-  // v3's standard byte-stream codec is gzip (RFC 1952 framing), not v2's
-  // raw zlib (RFC 1950) — java.util.zip provides both
-  private def gunzip(b: Array[Byte], expect: Int): Array[Byte] = {
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(b))
-    val out = new Array[Byte](expect)
-    var off = 0
-    try {
-      while (off < expect) {
-        val n = in.read(out, off, expect - off)
-        require(n > 0, s"gzip chunk decoded $off of $expect bytes")
-        off += n
-      }
-      require(in.read() < 0, "gzip chunk longer than expected")
-    } finally in.close()
-    out
-  }
-
-  private def gzip(b: Array[Byte], level: Int): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(b.length / 2 max 64)
-    val gz = new java.util.zip.GZIPOutputStream(bos) {
-      `def`.setLevel(level)
-    }
-    gz.write(b); gz.close()
-    bos.toByteArray
-  }
-
   /** Decode one chunk file's payload to doubles in C order over the full
     * chunk box of the chunk at the array origin. A sharded array's "chunk
     * file" is the whole SHARD; it decodes transparently to the same full
     * outer box, so every reader path is shard-agnostic. */
   def decodeChunk(raw: Array[Byte], m: ArrayMeta): Array[Double] =
-    decodeAt(raw, m, m.shape.map(_ => 0L))
+    decodeAt(raw, m, m.shape.map(_ => 0L), "a zarr chunk")
+
+  /** Names chunk `key` of array `name` in a decode failure. */
+  private def chunkOf(name: String, key: String): String =
+    s"zarr array '$name' chunk $key"
 
   /** [[decodeChunk]] for the chunk at `origin`: only its in-shape cells
-    * decode, so edge padding (which yields no row) reads as the fill. */
-  private def decodeAt(raw: Array[Byte], m: ArrayMeta,
-                       origin: Seq[Long]): Array[Double] = {
-    if (m.shard.nonEmpty) return decodeShard(raw, m, m.shard.get, origin)
+    * decode, so edge padding (which yields no row) reads as the fill. A
+    * failure names `what`. */
+  private def decodeAt(raw: Array[Byte], m: ArrayMeta, origin: Seq[Long],
+                       what: String): Array[Double] = {
+    if (m.shard.nonEmpty) return decodeShard(raw, m, m.shard.get, origin, what)
     val n = m.chunkElems
-    val plain = m.compressor match {
-      case Some(("zlib", _)) => ByteFilters.inflate(raw, n * m.size, "a chunk")
-      case Some(("gzip", _)) => gunzip(raw, n * m.size)
-      case Some(("zstd", _)) => unzstd(raw, n * m.size)
-      // the blosc frame header self-describes codec/shuffle/split — the
-      // packed id only matters for writes
-      case Some((id, _)) if id.startsWith("blosc") =>
-        Blosc.decompress(raw, n * m.size)
-      case None => { require(raw.length >= n * m.size, "short raw chunk"); raw }
-      case Some((id, _)) => sys.error(s"unsupported compressor $id")
+    val plain = m.codec match {
+      case Some(c) => c.decode(raw, n * m.size, what)
+      case None =>
+        require(raw.length >= n * m.size, s"short raw chunk: $what")
+        raw
     }
     // runs in the stored layout, whose axis i is the box's axis p(i)
     val p = m.tperm.getOrElse(m.chunks.indices)
@@ -462,18 +346,7 @@ object Zarr {
       case None => vals0
     }
     val plain = m.elem.encode(vals)
-    m.compressor match {
-      case Some(("zlib", lvl)) => ByteFilters.deflate(plain, lvl)
-      case Some(("gzip", lvl)) => gzip(plain, lvl)
-      case Some(("zstd", lvl)) =>
-        com.github.luben.zstd.Zstd.compress(plain, lvl)
-      case Some((id, lvl)) if id.startsWith("blosc") =>
-        val parts = id.split(":") // "blosc:<cname>:<shuffle>"
-        Blosc.compress(plain, m.size,
-          if (parts.length > 1) parts(1) else "lz4", lvl,
-          if (parts.length > 2) parts(2).toInt else 1)
-      case _ => plain
-    }
+    m.codec.fold(plain)(_.encode(plain))
   }
 
   // ------------------------------------------------------------------
@@ -494,8 +367,8 @@ object Zarr {
   /** Metadata for ONE inner chunk: chunks = inner box, inner compressor,
     * shard=None (so the recursive encode/decode terminates). */
   private def innerMeta(m: ArrayMeta, sh: ShardSpec): ArrayMeta =
-    ArrayMeta(m.shape, sh.inner, m.order, m.kind, m.size, sh.innerComp,
-      m.fillValue, m.separator, m.dims, Map.empty, v3 = true)
+    m.copy(chunks = sh.inner, compressor = sh.innerComp, attrs = Map.empty,
+      v3 = true, shard = None, tperm = None)
 
   /** Per-shard coordinate tables, computed ONCE (not per element — the
     * copy loops below run once per shard element and must stay primitive):
@@ -536,18 +409,18 @@ object Zarr {
   }
 
   private def decodeShard(raw: Array[Byte], m: ArrayMeta, sh: ShardSpec,
-                          origin: Seq[Long]): Array[Double] = {
+                          origin: Seq[Long], what: String): Array[Double] = {
     val innerGrid = m.chunks.zip(sh.inner).map { case (c, i) => c / i }
     val gridStride = innerGrid.scanRight(1)(_ * _).tail
     val nInner = innerGrid.product
     val idxLen = nInner * 16 + (if (sh.indexCrc) 4 else 0)
-    require(raw.length >= idxLen, "shard shorter than its index")
+    require(raw.length >= idxLen, s"shard shorter than its index: $what")
     val idxOff = if (sh.indexAtEnd) raw.length - idxLen else 0
     if (sh.indexCrc) {
       val want = ByteBuffer.wrap(raw, idxOff + nInner * 16, 4)
         .order(ByteOrder.LITTLE_ENDIAN).getInt
       require(crc32c(raw, idxOff, nInner * 16) == want,
-        "shard index crc32c mismatch")
+        s"shard index crc32c mismatch: $what")
     }
     val ib = ByteBuffer.wrap(raw, idxOff, nInner * 16)
       .order(ByteOrder.LITTLE_ENDIAN)
@@ -557,13 +430,18 @@ object Zarr {
     var g = 0
     while (g < nInner) {
       val off = ib.getLong; val len = ib.getLong
-      if (off != -1L || len != -1L) { // (2^64-1, 2^64-1) = missing chunk
+      val at = origin.indices.map(k => origin(k) +
+        (g / gridStride(k)) % innerGrid(k) * sh.inner(k).toLong)
+      val inner = s"$what inner chunk $g"
+      if (off == -1L && len == -1L) { // (2^64-1, 2^64-1) = missing chunk
+        // its in-shape cells read as the fill, which must then be exact
+        if (at.indices.forall(k => at(k) < m.shape(k))) m.fillCell(inner)
+      } else {
         require(off >= 0 && len >= 0 && off + len <= raw.length,
-          s"inner chunk $g range [$off, ${off + len}) outside shard")
+          s"$inner range [$off, ${off + len}) outside shard")
         val slice = java.util.Arrays.copyOfRange(raw, off.toInt,
           (off + len).toInt)
-        val vals = decodeAt(slice, im, origin.indices.map(k => origin(k) +
-          (g / gridStride(k)) % innerGrid(k) * sh.inner(k).toLong))
+        val vals = decodeAt(slice, im, at, inner)
         val base = baseOf(g)
         var f = 0
         while (f < vals.length) {
@@ -628,15 +506,16 @@ object Zarr {
       : (ArrayMeta, Array[Double]) = {
     val m = openMetaAny(spark, store, name)
     val fs = fsFor(store, spark)
-    // absent chunk = all fill_value (zarr contract)
-    val out = Array.fill(m.shape.product)(m.fillValue)
+    val out = new Array[Double](m.shape.product)
     gridIndices(m).foreach { ci =>
-      val p = new Path(store, s"$name/${m.chunkKey(ci)}")
-      if (fs.exists(p)) {
-        val vals = decodeAt(StoreFiles.read(fs, p), m, originOf(m, ci))
-        LongGrid.foreachCell(m.shape.map(_.toLong), originOf(m, ci),
-          m.chunks) { (i, pos) => out(pos.toInt) = vals(i) }
-      }
+      val key = m.chunkKey(ci)
+      val p = new Path(store, s"$name/$key")
+      // absent chunk = all fill_value (zarr contract)
+      val vals =
+        if (fs.exists(p)) decodeAt(StoreFiles.read(fs, p), m, originOf(m, ci), chunkOf(name, key))
+        else Array.fill(m.chunkElems)(m.fillCell(chunkOf(name, key)))
+      LongGrid.foreachCell(m.shape.map(_.toLong), originOf(m, ci),
+        m.chunks) { (i, pos) => out(pos.toInt) = vals(i) }
     }
     (m, out)
   }
@@ -699,13 +578,13 @@ object Zarr {
         else p.getName.split(java.util.regex.Pattern.quote(m.separator))
           .drop(if (m.v3) 1 else 0).map(_.toInt).toSeq
       val origin = originOf(m, ci).toArray
-      LongGrid.Task((files.name(p), origin),
+      LongGrid.Task((files.name(p), origin, chunkOf(varName, m.chunkKey(ci))),
         LongGrid.bounds(shape, origin, box, labels))
     }
     val metaB = spark.sparkContext.broadcast(m)
-    LongGrid.read(spark, schema, tasks) { case (file, origin) =>
+    LongGrid.read(spark, schema, tasks) { case (file, origin, what) =>
       LongGrid.Block(shape, origin, box,
-        decodeAt(files.read(file), metaB.value, origin), labels)
+        decodeAt(files.read(file), metaB.value, origin, what), labels)
     }
   }
 
@@ -856,29 +735,21 @@ object Zarr {
   // writers
   // ------------------------------------------------------------------
 
+  /** `fill_value` as JSON; a NaN float fill is `nan`. */
+  private def fillJson(m: ArrayMeta, nan: JValue): JValue =
+    if (m.fillValue.isNaN && m.kind == 'f') nan
+    else if (m.integral) JInt(m.fillInt.getOrElse(BigInt(m.fillValue.toLong)))
+    else JDouble(m.fillValue)
+
   private def metaJson(m: ArrayMeta): String = {
-    val comp = m.compressor match {
-      case Some((id, lvl)) if id.startsWith("blosc") =>
-        val parts = id.split(":")
-        JObject("id" -> JString("blosc"),
-          "cname" -> JString(if (parts.length > 1) parts(1) else "lz4"),
-          "clevel" -> JInt(lvl),
-          "shuffle" -> JInt(if (parts.length > 2) parts(2).toInt else 1),
-          "blocksize" -> JInt(0))
-      case Some((id, lvl)) =>
-        JObject("id" -> JString(id), "level" -> JInt(lvl))
-      case None => JNull
-    }
     val dtypeStr = s"${if (m.size == 1) '|' else m.order}${m.kind}${m.size}"
     JsonMethods.compact(JsonMethods.render(JObject(
       "zarr_format" -> JInt(2),
       "shape" -> JArray(m.shape.map(i => JInt(BigInt(i))).toList),
       "chunks" -> JArray(m.chunks.map(i => JInt(BigInt(i))).toList),
       "dtype" -> JString(dtypeStr),
-      "compressor" -> comp,
-      "fill_value" -> (if (m.fillValue.isNaN && m.kind == 'f') JNull
-                       else if (m.integral) JInt(BigInt(m.fillValue.toLong))
-                       else JDouble(m.fillValue)),
+      "compressor" -> Codec.zarrV2Json(m.codec),
+      "fill_value" -> fillJson(m, JNull),
       // a tperm equal to the dim reversal IS v2 F-order; any other
       // permutation has no v2 encoding (transpose is a v3 codec)
       "order" -> JString(m.tperm match {
@@ -897,31 +768,11 @@ object Zarr {
         m.attrs.toList.sortBy(_._1).map { case (k, v) => k -> JString(v) })))
 
   private def metaJsonV3(m: ArrayMeta): String = {
-    def chainJson(order: Char, comp: Option[(String, Int)]): List[JObject] =
+    def chainJson(order: Char, codec: Option[Codec]): List[JObject] =
       JObject("name" -> JString("bytes"), "configuration" ->
         JObject("endian" -> JString(
           if (order == '>') "big" else "little"))) ::
-      comp.toList.map { case (id, lvl) =>
-        if (id.startsWith("blosc")) {
-          val parts = id.split(":")
-          JObject("name" -> JString("blosc"), "configuration" -> JObject(
-            "cname" -> JString(if (parts.length > 1) parts(1) else "lz4"),
-            "clevel" -> JInt(lvl),
-            "shuffle" -> JString(
-              if (parts.length > 2 && parts(2) == "0") "noshuffle"
-              else "shuffle"),
-            "typesize" -> JInt(m.size),
-            "blocksize" -> JInt(0)))
-        } else if (id == "zstd") {
-          // zarr-python 3's default codec chain is bytes + zstd
-          JObject("name" -> JString("zstd"), "configuration" -> JObject(
-            "level" -> JInt(lvl), "checksum" -> JBool(false)))
-        } else {
-          require(id == "gzip", s"v3 writer supports gzip/blosc/zstd, got $id")
-          JObject("name" -> JString("gzip"), "configuration" ->
-            JObject("level" -> JInt(lvl)))
-        }
-      }
+      codec.toList.map(Codec.zarrV3Json)
     // transpose is array->array: it precedes the bytes codec in the chain
     val tJson = m.tperm.toList.map { p =>
       JObject("name" -> JString("transpose"), "configuration" ->
@@ -935,7 +786,7 @@ object Zarr {
         "name" -> JString("sharding_indexed"),
         "configuration" -> JObject(
           "chunk_shape" -> JArray(sh.inner.map(i => JInt(BigInt(i))).toList),
-          "codecs" -> JArray(chainJson(m.order, sh.innerComp)),
+          "codecs" -> JArray(chainJson(m.order, innerMeta(m, sh).codec)),
           "index_codecs" -> JArray(
             JObject("name" -> JString("bytes"), "configuration" ->
               JObject("endian" -> JString("little"))) ::
@@ -943,7 +794,7 @@ object Zarr {
              else Nil)),
           "index_location" -> JString(
             if (sh.indexAtEnd) "end" else "start"))))
-      case None => tJson ::: chainJson(m.order, m.compressor)
+      case None => tJson ::: chainJson(m.order, m.codec)
     }
     JsonMethods.compact(JsonMethods.render(JObject(
       "zarr_format" -> JInt(3),
@@ -955,9 +806,7 @@ object Zarr {
           JArray(m.chunks.map(i => JInt(BigInt(i))).toList))),
       "chunk_key_encoding" -> JObject("name" -> JString("default"),
         "configuration" -> JObject("separator" -> JString(m.separator))),
-      "fill_value" -> (if (m.fillValue.isNaN && m.kind == 'f') JString("NaN")
-                       else if (m.integral) JInt(BigInt(m.fillValue.toLong))
-                       else JDouble(m.fillValue)),
+      "fill_value" -> fillJson(m, JString("NaN")),
       "codecs" -> JArray(codecs),
       "dimension_names" -> JArray(m.dims.map(JString(_)).toList),
       "attributes" -> JObject(
@@ -1110,9 +959,11 @@ object Zarr {
     }.orElse(existing.flatMap(_.tperm))
     require(tperm.isEmpty || shardSpec.isEmpty,
       "transpose inside sharding_indexed is not supported")
+    // a region write keeps the store's exact integer fill
     val m = ArrayMeta(shape, chunks, '<', kind, size,
       if (shardSpec.isDefined) None else comp, fillValue,
-      sep, dims, Map.empty, v3 = isV3, shard = shardSpec, tperm = tperm)
+      sep, dims, Map.empty, v3 = isV3, shard = shardSpec, tperm = tperm,
+      fillInt = existing.filter(_.fillValue == fillValue).flatMap(_.fillInt))
     if (!region) {
       // writeCoords=false: an additional variable of an already-initialised
       // store — skip the store/coord rewrite, still write THIS var's meta
@@ -1148,7 +999,7 @@ object Zarr {
     }
     // InternalRows, read in place: no conversion to external Rows
     frame.queryExecution.toRdd
-      .mapPartitions(rows => chunkPartials(rows, mB.value, labelsB.value, get))
+      .mapPartitions(rows => chunkPartials(rows, mB.value, labelsB.value, get, varName))
       .repartitionAndSortWithinPartitions(byChunk)
       .foreachPartition { it =>
         val mm = mB.value
@@ -1167,8 +1018,12 @@ object Zarr {
               filled.set(o); box(o) = vals(i); i += 1
             }
           }
-          files.write(s"$dir/${mm.chunkKey(gridIndex(mm, c))}",
-            encodeChunk(box, mm))
+          val ci = gridIndex(mm, c)
+          // an absent in-shape cell takes the fill, which must then be exact
+          val inShape = ci.indices.map(k =>
+            math.min(mm.chunks(k), mm.shape(k) - ci(k) * mm.chunks(k))).product
+          if (filled.cardinality < inShape) mm.fillCell(chunkOf(varName, mm.chunkKey(ci)))
+          files.write(s"$dir/${mm.chunkKey(ci)}", encodeChunk(box, mm))
         }
       }
   }
@@ -1234,7 +1089,9 @@ object Zarr {
     * partition's end. A NULL value is stored as `fill_value`. */
   private def chunkPartials(rows: Iterator[InternalRow], m: ArrayMeta,
                             labels: Array[LabelIndex],
-                            get: Array[InternalRow => Double]): Iterator[Partial] = {
+                            get: Array[InternalRow => Double],
+                            name: String): Iterator[Partial] = {
+    lazy val nullCell = m.fillCell(s"zarr array '$name': a NULL value")
     val rank = labels.length
     val chunks = m.chunks.toArray
     val boxStride = m.chunks.scanRight(1)(_ * _).tail.toArray
@@ -1265,7 +1122,7 @@ object Zarr {
           lastChunk = chunk
         }
         last._1 += off
-        last._2 += (if (row.isNullAt(rank)) m.fillValue else get(rank)(row))
+        last._2 += (if (row.isNullAt(rank)) nullCell else get(rank)(row))
         n += 1
       }
       val out = bufs.iterator.map { case (c, (o, v)) => (c, (o.result(), v.result())) }
