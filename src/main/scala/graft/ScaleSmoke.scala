@@ -109,7 +109,7 @@ object ScaleSmoke {
                     reps: Int): Unit = {
     def rep(t: String): DataFrame =
       spark.read.parquet(s"$src/$t.parquet").crossJoin(
-        spark.range(reps.toLong).toDF("__r").hint("broadcast"))
+        spark.range(reps.toLong).toDF("__r"))
     val r = col("__r")
     def shift(c: String) = (col(c) + r * OFF).as(c)
     val tables = sys.env.get("SPARK_GRAFT_SCALE_TABLES")

@@ -117,7 +117,7 @@ object Groupers {
       .select(
         col("f").getField(t).as("__ft"), col("f").getField(lab).as("__fl"),
         col("l").getField(t).as("__lt"), col("l").getField(lab).as("__ll"))
-    df.crossJoin(broadcast(b))
+    df.crossJoin(b)
       .filter(!(col(lab) === col("__fl") &&
         month(col("__ft")) =!= month(col("__fl"))))
       .filter(!(col(lab) === col("__ll") &&

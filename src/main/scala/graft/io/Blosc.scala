@@ -122,17 +122,23 @@ object Blosc {
     out
   }
 
+  /** The inner codec code of `cname`; refuses a cname or a `shuffle` mode
+    * this writer cannot encode. */
+  private[io] def check(cname: String, shuffle: Int): Int = {
+    require(shuffle >= 0 && shuffle <= 2,
+      s"unsupported blosc shuffle mode $shuffle (0 = none, 1 = byte, " +
+        "2 = bit)")
+    cnames.getOrElse(cname, throw new IllegalArgumentException(
+      s"unsupported blosc cname '$cname' " +
+        s"(${cnames.keys.toSeq.sorted.mkString(", ")})"))
+  }
+
   /** Encode `plain` as a c-blosc v1 frame. `shuffle` follows numcodecs:
     * 0 = none, 1 = byte-shuffle, 2 = bit-shuffle. Falls back to the
     * memcpy frame when compression does not pay, like c-blosc. */
   def compress(plain: Array[Byte], typesize: Int, cname: String, level: Int,
                shuffle: Int, blocksizeReq: Int = 0): Array[Byte] = {
-    require(shuffle >= 0 && shuffle <= 2,
-      s"unsupported blosc shuffle mode $shuffle (0 = none, 1 = byte, " +
-        "2 = bit)")
-    val code = cnames.getOrElse(cname,
-      sys.error(s"unsupported blosc cname '$cname' " +
-        s"(${cnames.keys.toSeq.sorted.mkString(", ")})"))
+    val code = check(cname, shuffle)
     val stream = Codec.blosc(code, level)
     val ts = math.max(typesize, 1)
     val nbytes = plain.length

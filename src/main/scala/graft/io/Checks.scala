@@ -21,7 +21,7 @@ object Checks {
         col(key) === col(pkey), "left_anti")
       .agg(count(lit(1)).as("n_violations"))
     val tot = child.agg(count(lit(1)).as("n_total"))
-    viol.crossJoin(broadcast(tot))
+    viol.crossJoin(tot)
       .select(lit(name).as("check"), col("n_violations"), col("n_total"))
   }
 

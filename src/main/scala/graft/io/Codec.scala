@@ -294,11 +294,15 @@ private[io] object Codec {
   private val ByLevel = Map[String, Int => Leveled]("zlib" -> Zlib, "gzip" -> Gzip, "zstd" -> Zstd)
   private val BloscId = "blosc(?::([^:]+))?(?::(\\d))?".r
 
-  /** A Zarr compressor as the library spells it, for `typesize`-byte elements. */
+  /** A Zarr compressor as the library spells it, for `typesize`-byte
+    * elements; a blosc cname or shuffle the writer cannot encode is
+    * refused here, before any file names it. */
   def ofSpelling(spelled: (String, Int), typesize: Int): Codec = spelled match {
     case (id, l) if ByLevel.contains(id) => ByLevel(id)(l)
     case (BloscId(cname, shuffle), l) =>
-      Blosc(Option(cname).getOrElse("lz4"), l, Option(shuffle).fold(1)(_.toInt), typesize)
+      val b = Blosc(Option(cname).getOrElse("lz4"), l, Option(shuffle).fold(1)(_.toInt), typesize)
+      graft.io.Blosc.check(b.cname, b.shuffle)
+      b
     case (id, _) => sys.error(s"unsupported compressor $id (zlib, gzip, zstd, " +
       "blosc:<cname>:<shuffle>)")
   }

@@ -846,6 +846,7 @@ object Zarr {
   def writeArray(spark: SparkSession, store: String, name: String,
                  m: ArrayMeta, data: Array[Double]): Unit = {
     require(data.length == m.shape.product, "data length != shape product")
+    m.codec // resolved, so a bad compressor is refused before any file
     val fs = fsFor(store, spark)
     StoreFiles.mkdirs(fs, new Path(store, name))
     writeArrayMeta(fs, store, name, m)
@@ -899,6 +900,7 @@ object Zarr {
     val comp = compressor.map { case (id, lvl) =>
       if (isV3 && id == "zlib") ("gzip", lvl) else (id, lvl)
     }
+    comp.foreach(Codec.ofSpelling(_, size)) // refused before any file
     // A region write goes into an EXISTING store, so its physical layout
     // parameters must come from (or be validated against) the store's own
     // metadata — a mismatch writes blobs the store's readers misparse.

@@ -41,7 +41,7 @@ object Calibration {
     val perBp = graft.util.QueryCache.persist(perB)
     val ece = perBp.agg(
       expr("sum(n * abs(acc_ppm - conf_ppm)) div sum(n)").as("ece_ppm"))
-    perBp.crossJoin(broadcast(ece))
+    perBp.crossJoin(ece)
   }
 
   /** Isotonic (non-decreasing) fit of per-bucket rates by PAVA's

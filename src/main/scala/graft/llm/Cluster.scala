@@ -195,7 +195,7 @@ object Cluster {
     val w = Window.partitionBy(col(cluster)).orderBy(col(d2), col(id))
     a
       .withColumn("rk", row_number().over(w))
-      .crossJoin(broadcast(cap))
+      .crossJoin(cap)
       .select(col(id), col(cluster), col("rk"),
         (col("rk") <= col("__cap")).as("kept"))
   }

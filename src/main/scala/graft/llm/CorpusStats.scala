@@ -136,7 +136,7 @@ object CorpusStats {
     def sliceOf(c: Column) = // 0..nSlices-1 by id range, pure projection
       least(expr(s"((${c.toString} - lo) * $nSlices) div (hi - lo + 1)"),
         lit(nSlices - 1))
-    val withB = toks.crossJoin(broadcast(bounds))
+    val withB = toks.crossJoin(bounds)
     val tokPerSlice = withB
       .groupBy(sliceOf(col("did")).as("s"))
       .agg(count(lit(1)).as("nt"))
@@ -239,7 +239,7 @@ object CorpusStats {
     val scored = bi
       .join(uni.select(col("tok").as("t1"), col("n").as("__nx")), "t1")
       .join(uni.select(col("tok").as("t2"), col("n").as("__ny")), "t2")
-      .crossJoin(broadcast(t2))
+      .crossJoin(t2)
       .select(col("t1"), col("t2"), col("n_xy"),
         expr("""CAST((CAST(n_xy AS DECIMAL(38,0)) * n_uni * n_uni * 1000000)
                 div (CAST(n_bi AS DECIMAL(38,0)) * __nx * __ny) AS BIGINT)""")
@@ -298,7 +298,7 @@ object CorpusStats {
     // k = n div 10, above = n - below - c; its tie group contributes
     // (k - above) of its c items
     val thr = ranked
-      .crossJoin(broadcast(ranked.agg(sum(col("c")).as("nn"))))
+      .crossJoin(ranked.agg(sum(col("c")).as("nn")))
       .withColumn("above", col("nn") - col("below") - col("c"))
       .withColumn("k", expr("nn div 10"))
       .filter(col("above") < col("k") &&

@@ -800,8 +800,8 @@ object Dedup {
     val hit = truth.join(cand, Seq("x", "y"))
       .agg(count(lit(1)).as("n_hit"))
     truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_cand"))))
-      .crossJoin(broadcast(hit))
+      .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
+      .crossJoin(hit)
       .select(col("n_truth"), col("n_cand"), col("n_hit"),
         expr("""CASE WHEN n_truth = 0 THEN NULL
                 ELSE n_hit * 1000000 div n_truth END""").as("recall_ppm"),

@@ -90,7 +90,7 @@ object Drift {
     // an empty SIDE (ta or tb = 0) makes its distribution — and the
     // divergence — undefined: NULL out the ratio (ANSI division would
     // throw), which propagates to a NULL jsd_bits on the summary row
-    counts.crossJoin(broadcast(tot))
+    counts.crossJoin(tot)
       .withColumn("p",
         col("na").cast("double") / when(col("ta") =!= 0, col("ta")))
       .withColumn("q",

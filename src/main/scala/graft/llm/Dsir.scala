@@ -69,7 +69,7 @@ object Dsir {
       sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"),
       count(lit(1)).as("cr"))
     val tot = bc.agg(sum("ct").as("nt"), sum("cr").as("nr"))
-    val lam = bc.crossJoin(broadcast(tot)).select(col("b"),
+    val lam = bc.crossJoin(tot).select(col("b"),
       round(
         log((col("ct") + 1).cast("double") /
             (col("nt") + buckets).cast("double")) -

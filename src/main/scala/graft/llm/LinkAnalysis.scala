@@ -104,7 +104,7 @@ object LinkAnalysis {
       // decimal-widened numerator: score·1e6 can pass 2^63 at extreme
       // in-degrees; `div` on decimals is the same exact integral quotient
       // both engines compute (the alsoTook convention)
-      df.crossJoin(broadcast(mx))
+      df.crossJoin(mx)
         .select(df.columns.filter(_ != c).map(col) :+
           expr(s"CAST((CAST($c AS DECIMAL(38,0)) * ${M}L) div __mx AS BIGINT)")
             .as(c): _*)
@@ -212,7 +212,7 @@ object LinkAnalysis {
       .join(cnt.select(col("__i").as("item"), col("__n").as("__na")), "item")
       .join(cnt.select(col("__i").as("rec_item"), col("__n").as("__nb2")),
         "rec_item")
-      .crossJoin(broadcast(nBaskets))
+      .crossJoin(nBaskets)
       // the numerator widens to DECIMAL before the integral divide:
       // co·N·1e9 exceeds Long already at ~1e7 baskets (the pagerank
       // decimal-sum convention; `div` on decimals is the same exact

@@ -456,7 +456,7 @@ object Multimodal {
     val spark = bands.sparkSession
     import spark.implicits._
     val bandIdx = Seq(0, 1, 2, 3).toDF("bi")
-    val keyed = b.join(bandIdx.hint("broadcast"), lit(true))
+    val keyed = b.join(bandIdx, lit(true))
       .select(col(id).as("d"), col("bi"),
         element_at(array(col("b0"), col("b1"), col("b2"), col("b3")),
           col("bi") + 1).as("bv"))

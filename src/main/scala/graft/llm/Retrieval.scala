@@ -50,7 +50,7 @@ object Retrieval {
       .groupBy(col(id), col("term")).agg(count(lit(1)).as("tf"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val contrib = tf.join(broadcast(df), "term").join(docLen, Seq(id))
-      .crossJoin(broadcast(stats))
+      .crossJoin(stats)
       .withColumn("idf", round(
         log((col("n").cast("double") - col("df") + lit(0.5)) /
           (col("df") + lit(0.5)) + lit(1.0)), 8))
@@ -114,11 +114,11 @@ object Retrieval {
       .groupBy(col("term")).agg(count(lit(1)).as("cf"))
     val termTab = terms.zipWithIndex.toDF("term", "__ord")
     val grid = tf.select(col(id)).distinct()
-      .crossJoin(broadcast(termTab))
+      .crossJoin(termTab)
       .join(tf, Seq(id, "term"), "left")
       .join(broadcast(cf), "term")
       .join(docLen, Seq(id))
-      .crossJoin(broadcast(totC))
+      .crossJoin(totC)
       .withColumn("c", round(
         log((coalesce(col("tf"), lit(0L)) +
           lit(mu) * col("cf") / col("ctot")) / (col("dl") + lit(mu))), 8))
@@ -166,7 +166,7 @@ object Retrieval {
     val idcg = ideal.withColumn("__irk", row_number().over(wI))
       .agg(sum(gain(col(rel), col("__irk"))
         .cast(DecimalType(30, 8))).as("__idcg"))
-    dcg.crossJoin(broadcast(idcg))
+    dcg.crossJoin(idcg)
       .select(lit(k).as("k"),
         round(col("__dcg").cast("double"), 6).as("dcg"),
         round(col("__idcg").cast("double"), 6).as("idcg"),
@@ -208,7 +208,7 @@ object Retrieval {
                  alpha: Double, k: Int): DataFrame = {
     def norm(df: DataFrame, out: String): DataFrame = {
       val st = df.agg(min(col(score)).as("__mn"), max(col(score)).as("__mx"))
-      df.crossJoin(broadcast(st))
+      df.crossJoin(st)
         .withColumn(out, when(col("__mx") === col("__mn"), lit(1.0))
           .otherwise((col(score) - col("__mn")) /
             (col("__mx") - col("__mn"))))

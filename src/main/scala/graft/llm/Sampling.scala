@@ -65,7 +65,7 @@ object Sampling {
       .collect().map(r => (r.getString(0), r.getLong(1)))
     import spark.implicits._
     val counts = countRows.toSeq.toDF("__sk", "__N")
-    val joined = keyed.join(broadcast(counts), "__sk")
+    val joined = keyed.join(counts, "__sk")
     val cutoff = least(lit(65536.0), ceil(lit(262144.0) * n / col("__N")))
     // persist: the collect below materialises the cache; the final window
     // pass reads it. The caller's QueryCache scope releases it (eager
@@ -238,7 +238,7 @@ object Sampling {
         round(col("sigma") * 100.0).cast(dec) * col("nh"))
     val tot = m.agg(sum(col("w")).cast(dec).as("tw"))
     val based = graft.util.QueryCache.persist(
-      m.crossJoin(broadcast(tot))
+      m.crossJoin(tot)
         .withColumn("base",
           expr(s"CAST($budget AS DECIMAL(38,0)) * w div nullif(tw, 0)")
             .cast("long"))
@@ -249,7 +249,7 @@ object Sampling {
     // +1 to the `short` largest remainders — a window over the STRATUM
     // frame (bounded by stratum cardinality)
     val w2 = Window.orderBy(col("rem").desc, col("stratum"))
-    based.crossJoin(broadcast(short))
+    based.crossJoin(short)
       .withColumn("rk", row_number().over(w2))
       .select(col("stratum"), col("nh"), col("sigma"),
         (col("base") + when(col("rk") <= col("short"), 1L).otherwise(0L))
@@ -285,7 +285,7 @@ object Sampling {
           .cast(dec)))
     val tot = m.agg(sum(col("w")).cast(dec).as("tw"))
     val based = graft.util.QueryCache.persist(
-      m.crossJoin(broadcast(tot))
+      m.crossJoin(tot)
         .withColumn("base",
           expr(s"CAST($budget AS DECIMAL(38,0)) * w div nullif(tw, 0)")
             .cast("long"))
@@ -294,7 +294,7 @@ object Sampling {
     val short = based.agg((lit(budget) - sum(col("base"))).cast("long")
       .as("short"))
     val w2 = Window.orderBy(col("rem").desc, col("src"))
-    based.crossJoin(broadcast(short))
+    based.crossJoin(short)
       .withColumn("rk", row_number().over(w2))
       .select(col("src"), col("n_tokens"),
         col("w").cast("long").as("weight_e4"),

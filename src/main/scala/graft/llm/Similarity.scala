@@ -257,7 +257,7 @@ object Similarity {
       .withColumn("__res", zip_with(col(vec), col(cellVec),
         (x, y) => x.cast("double") - y.cast("double")))
     val stats = sq8Stats(withRes.select(col("__res").as("__v")), "__v")
-    val recon = withRes.crossJoin(broadcast(stats))
+    val recon = withRes.crossJoin(stats)
       .withColumn("__codes", sq8Encode(col("__res"), col("mns"), col("mxs")))
       .withColumn("__dq", sq8Decode(col("__codes"), col("mns"), col("mxs")))
       .withColumn("__recon", zip_with(col(cellVec), col("__dq"),
@@ -310,7 +310,7 @@ object Similarity {
   private def pqEncode(df: DataFrame, cbRow: DataFrame, vecCol: String,
                        m: Int, ksub: Int, sub: Int): DataFrame = {
     import graft.exprs.VectorExprs.sumSqDiff
-    df.crossJoin(broadcast(cbRow))
+    df.crossJoin(cbRow)
       .withColumn("__dists", array((0 until m).map(j =>
         array((0 until ksub).map(c =>
           sumSqDiff(pqSlice(col(vecCol), j, sub),
@@ -326,7 +326,7 @@ object Similarity {
   private def pqAdcTables(df: DataFrame, cbRow: DataFrame, vecCol: String,
                           m: Int, ksub: Int, sub: Int): DataFrame = {
     import graft.exprs.VectorExprs.dot
-    df.crossJoin(broadcast(cbRow))
+    df.crossJoin(cbRow)
       .withColumn("__t", array((0 until m).map(j =>
         array((0 until ksub).map(c =>
           dot(pqSlice(col(vecCol), j, sub),
@@ -451,7 +451,7 @@ object Similarity {
   def sq8TopK(corpus: DataFrame, probes: DataFrame, id: String,
               probeId: String, vec: String, k: Int): DataFrame = {
     val stats = sq8Stats(corpus, vec)
-    val quant = corpus.crossJoin(broadcast(stats))
+    val quant = corpus.crossJoin(stats)
       .withColumn("__codes", sq8Encode(col(vec), col("mns"), col("mxs")))
       .withColumn("__dq", sq8Decode(col("__codes"), col("mns"), col("mxs")))
       .select(col(id), col("__dq"))

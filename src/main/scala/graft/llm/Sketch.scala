@@ -140,7 +140,7 @@ object Sketch {
     val cum = bins.withColumn("cum", sum(col("cnt")).over(w))
       .withColumn("prev", col("cum") - col("cnt"))
     val tot = bins.agg(sum(col("cnt")).as("n"))
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .select(col("bin"), col("cnt"), col("cum"), col("prev"), col("n"),
         explode(array(qPcts.map(lit(_)): _*)).as("q_pct"))
       .withColumn("target", expr("(q_pct * n + 99) div 100"))

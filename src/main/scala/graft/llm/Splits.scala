@@ -39,8 +39,7 @@ object Splits {
   def groupHoldout(df: org.apache.spark.sql.DataFrame, group: String,
                    trainPct: Int = 80, valPct: Int = 10)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, count, countDistinct,
-      lit, sum}
+    import org.apache.spark.sql.functions.{count, countDistinct, lit, sum}
     val lab = df.withColumn("split",
       assignSplit(col(group), trainPct, valPct))
     val per = lab.groupBy(col("split"))
@@ -50,6 +49,6 @@ object Splits {
       .agg(countDistinct(col("split")).as("__ns"))
       .agg(coalesce(sum(when(col("__ns") > 1, 1L).otherwise(0L)), lit(0L))
         .as("straddle_groups"))
-    per.crossJoin(broadcast(straddle))
+    per.crossJoin(straddle)
   }
 }

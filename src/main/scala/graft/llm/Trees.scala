@@ -49,7 +49,7 @@ object Trees {
       agg
         .withColumn("nl", sum(col("n")).over(w).cast("long"))
         .withColumn("kl", sum(col("k")).over(w).cast("long"))
-        .crossJoin(broadcast(tot))
+        .crossJoin(tot)
         .filter(col("nl") < col("__n")) // right side must be non-empty
         .select(lit(name).as("feature"), col("v").as("threshold"),
           col("nl").as("n_left"), col("kl").as("k_left"),

@@ -47,7 +47,7 @@ object Vocab {
       .withColumn("cum", sum(col("n")).over(
         w.rowsBetween(Window.unboundedPreceding, 0)))
     val total = toks.agg(count(lit(1)).as("total"))
-    cum.crossJoin(broadcast(total))
+    cum.crossJoin(total)
       .select(col("rank"), col("cum"), col("total"),
         explode(array(targetsPct.map(lit(_)): _*)).as("target_pct"))
       .filter(col("cum") * 100 >= col("target_pct") * col("total"))

@@ -55,7 +55,7 @@ object Positions {
     }.init.zip(counts).map { case ((_, off), (pid, _)) => (pid, off) }
     import spark.implicits._
     val offDf = offsets.toSeq.toDF("__pid", "__off")
-    ranged.join(broadcast(offDf), "__pid")
+    ranged.join(offDf, "__pid")
       .withColumn(posCol,
         col("__off") + (col("__mid") - shiftleft(col("__pid").cast(LongType), 33)))
       .drop("__pid", "__mid", "__off")

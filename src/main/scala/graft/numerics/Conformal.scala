@@ -49,11 +49,11 @@ object Conformal {
     val w = Window.orderBy(col("r"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val qhat = calPv.withColumn("cum", sum(col("c")).over(w))
-      .crossJoin(broadcast(nk))
+      .crossJoin(nk)
       .filter(col("cum") >= col("k"))
       .agg(min(col("r")).as("q_hat"))
     val test = r.filter(!col("cal"))
-    test.crossJoin(broadcast(qhat)).crossJoin(broadcast(nk))
+    test.crossJoin(qhat).crossJoin(nk)
       .agg(max(col("n")).as("n_calib"),
         max(col("q_hat")).as("q_hat"),
         count(lit(1)).as("n_test"),

@@ -74,7 +74,7 @@ object Stats {
     val terms = cells
       .join(broadcast(rows), Seq(xCol))
       .join(broadcast(cols_), Seq(yCol))
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .select(col("n"),
         round(expr("""pow(CAST(o AS DOUBLE) -
             CAST(r AS DOUBLE) * CAST(c AS DOUBLE) / CAST(n AS DOUBLE), 2) /
@@ -83,7 +83,7 @@ object Stats {
     val dims = cells.agg(
       countDistinct(col(xCol)).as("nx"), countDistinct(col(yCol)).as("ny"))
     terms.groupBy(col("n")).agg(sum("term").as("__chi2"))
-      .crossJoin(broadcast(dims))
+      .crossJoin(dims)
       .select(col("n"),
         ((col("nx") - 1) * (col("ny") - 1)).as("dof"),
         col("__chi2").cast("double").as("chi2"))
@@ -109,8 +109,7 @@ object Stats {
     val cum = perValue
       .withColumn("cuma", sum(col("ca")).over(w))
       .withColumn("cumb", sum(col("cb")).over(w))
-    cum.crossJoin(broadcast(cum.agg(
-        sum(col("ca")).as("n1"), sum(col("cb")).as("n2"))))
+    cum.crossJoin(cum.agg(sum(col("ca")).as("n1"), sum(col("cb")).as("n2")))
       .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
         max(abs(col("cuma") * col("n2") - col("cumb") * col("n1")))
           .as("d_num"))
@@ -267,7 +266,7 @@ object Stats {
         sum(when(succ, 1L).otherwise(0L)).as("k"))
     val tot = g.agg(sum(col("n")).cast("long").as("__nn"),
       sum(col("k")).cast("long").as("__kk"))
-    val z = g.crossJoin(broadcast(tot))
+    val z = g.crossJoin(tot)
       .withColumn("z8", round(expr(
         """(CAST(k AS DOUBLE) / n - CAST(__kk - k AS DOUBLE) / (__nn - n)) /
            sqrt((CAST(__kk AS DOUBLE) / __nn)
@@ -325,13 +324,13 @@ object Stats {
     val m = hyp.agg(count(lit(1)).as("__m"))
     val w = Window.orderBy(col(pCol), col(idCol))
     val ranked = graft.util.QueryCache.persist(
-      hyp.crossJoin(broadcast(m))
+      hyp.crossJoin(m)
         .withColumn("rank", row_number().over(w).cast("long")))
     val kmax = ranked
       .filter(col(pCol) * lit(alphaDen) * col("__m") <=
         lit(alphaNum) * col("rank"))
       .agg(coalesce(max(col("rank")), lit(0L)).as("__kmax"))
-    ranked.crossJoin(broadcast(kmax))
+    ranked.crossJoin(kmax)
       .withColumn("rejected", col("rank") <= col("__kmax"))
       .drop("__m", "__kmax")
   }
@@ -407,7 +406,7 @@ object Stats {
         round(avg(col("mean2")), 2).as("mbar2"),
         round(avg(col("vmean2")), 2).as("vbar2"))
       .select(col("k"), col("mbar2"), col("vbar2"))
-    val withS = g.crossJoin(broadcast(hyper))
+    val withS = g.crossJoin(hyper)
       .select(col("grp"), col("n"), col("mean2"), col("k"),
         col("mbar2"), col("vbar2"),
         // per-group deviation term on the 2-dp grid (cents² magnitudes
@@ -418,7 +417,7 @@ object Stats {
     val sTot = withS.agg(sum(col("dev2")
       .cast(org.apache.spark.sql.types.DecimalType(38, 2)))
       .cast("double").as("ss"))
-    withS.crossJoin(broadcast(sTot))
+    withS.crossJoin(sTot)
       .select(col("grp"), col("n"), col("mean2"),
         expr("""CASE WHEN k <= 3 OR ss = 0 THEN 1.0 ELSE
             round(greatest(0.0, 1.0 - (k - 3) * vbar2 / ss), 8) END""")
@@ -482,7 +481,7 @@ object Stats {
     val excluded = obs.filter(col("d").isNull)
       .agg(coalesce(sum(col("o")), lit(0L)).as("n_excluded"))
     val terms = expDf.join(obs, Seq("d"), "left")
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       // the coalesce must land BEFORE the term expression sees `o` —
       // in one select the expr would read the pre-coalesce NULL and
       // silently drop every zero-count digit from the sum
@@ -494,7 +493,7 @@ object Stats {
             * (CAST(o AS DOUBLE) - CAST(n AS DOUBLE) * e8)
             / (CAST(n AS DOUBLE) * e8) END"""), 8)
           .cast(DecimalType(30, 8)).as("term"))
-    terms.crossJoin(broadcast(excluded))
+    terms.crossJoin(excluded)
       .agg(max(col("n")).as("nn"), max(col("n_excluded")).as("ne"),
         sum(col("term")).as("chi2d"))
       .select(col("nn").cast("long").as("n"),
@@ -568,7 +567,7 @@ object Stats {
     val mx = cells.groupBy(col("xx")).agg(sum(col("nxy")).as("nx"))
     val my = cells.groupBy(col("yy")).agg(sum(col("nxy")).as("ny"))
     val tot = cells.agg(sum(col("nxy")).cast("long").as("nn"))
-    cells.join(mx, "xx").join(my, "yy").crossJoin(broadcast(tot))
+    cells.join(mx, "xx").join(my, "yy").crossJoin(tot)
       .withColumn("term", round(col("nxy") *
         log2(col("nn").cast("double") * col("nxy") /
           (col("nx").cast("double") * col("ny"))), 8)

@@ -77,7 +77,7 @@ object Trend {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = sv.withColumn("cumc", sum(col("c")).over(wcum))
     val npTot = sv.agg(coalesce(sum(col("c")), lit(0L)).as("np"))
-    val med = cum.crossJoin(broadcast(npTot))
+    val med = cum.crossJoin(npTot)
       .select(col("s_e6"), col("cumc"), col("c"), col("np"))
       .agg(
         // lower middle: k1 = (np+1) div 2; upper middle: k2 = np div 2 + 1
@@ -85,7 +85,7 @@ object Trend {
           .as("m_lo"),
         min(when(col("cumc") >= expr("np div 2 + 1"), col("s_e6")))
           .as("m_hi"))
-    mk.crossJoin(broadcast(ties)).crossJoin(broadcast(med))
+    mk.crossJoin(ties).crossJoin(med)
       .select(col("n").cast("long").as("n"),
         col("np").cast("long").as("n_pairs"),
         col("s").cast("long").as("s"),
@@ -124,7 +124,7 @@ object Trend {
     val tot = s.agg(count(lit(1)).as("n"),
       coalesce(sum(col("v").cast(dec)), lit(0).cast(dec)).as("sv"))
     val base = graft.util.QueryCache.persist(
-      s.crossJoin(broadcast(tot))
+      s.crossJoin(tot)
         .select(col("t"), col("n"),
           (col("n") * col("v").cast(d18)).cast(dec).as("nv"),
           col("sv")))
@@ -135,14 +135,14 @@ object Trend {
     import spark.implicits._
     val lags = (1 to maxLag).toDF("lag")
     val nums = base.as("x")
-      .join(lags.hint("broadcast"), lit(true))
+      .join(lags, lit(true))
       .join(base.as("y"),
         col("x.t") + col("lag") === col("y.t"))
       .groupBy(col("lag"))
       .agg(sum((col("x.nv") - col("x.sv")) * (col("y.nv") - col("y.sv")))
         .as("num"), count(lit(1)).as("n_pairs"))
     val acf = lags.join(nums, Seq("lag"), "left")
-      .crossJoin(broadcast(den))
+      .crossJoin(den)
       .select(col("lag"), coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
         col("n"),
         when(col("den") === 0 || col("num").isNull, lit(null))

@@ -512,10 +512,10 @@ object QueriesNumerics extends QueryFamily {
         graft.window.Seasonal.decomposeAdditive(daily, "d", "rev_c",
           "wd", 7))
       val med = dec.agg(percentile(col("resid_xp"), lit(0.5)).as("med"))
-      val mad = dec.crossJoin(broadcast(med))
+      val mad = dec.crossJoin(med)
         .agg(max(col("med")).as("med"),
           percentile(abs(col("resid_xp") - col("med")), lit(0.5)).as("mad"))
-      dec.crossJoin(broadcast(mad))
+      dec.crossJoin(mad)
         .select(col("d"), col("rev_c"), col("resid_xp"),
           (abs(col("resid_xp") - col("med")) > lit(3.0) * col("mad"))
             .as("is_anomaly"))
@@ -563,7 +563,7 @@ object QueriesNumerics extends QueryFamily {
       val perCust = o.groupBy(col("o_custkey"))
         .agg(min(col("o_orderdate")).as("f"), max(col("o_orderdate")).as("l"))
       val mx = o.agg(max(col("o_orderdate")).as("m"))
-      val subjects = perCust.crossJoin(broadcast(mx))
+      val subjects = perCust.crossJoin(mx)
         .select(datediff(col("l"), col("f")).as("dur"),
           when(col("l") < col("m") - expr("INTERVAL 90 DAYS"), 1)
             .otherwise(0).as("ev"))
@@ -643,7 +643,7 @@ object QueriesNumerics extends QueryFamily {
         .select(col("c_custkey"), col("c_mktsegment"))
       val subjects = perCust
         .join(cust, col("o_custkey") === col("c_custkey"))
-        .crossJoin(broadcast(mx))
+        .crossJoin(mx)
         .select((col("c_mktsegment") === "BUILDING").as("grp"),
           datediff(col("l"), col("f")).as("dur"),
           when(col("l") < col("m") - expr("INTERVAL 90 DAYS"), 1)

@@ -98,7 +98,7 @@ object QueriesReshape extends QueryFamily {
         .agg(exactAvg(col("l_extendedprice")).as("avg_price"))
       val scenarios = s.createDataFrame(
         Seq(Tuple1(0.9), Tuple1(1.0), Tuple1(1.1))).toDF("scenario")
-      base.crossJoin(broadcast(scenarios))
+      base.crossJoin(scenarios)
         .select(col("l_returnflag"), col("scenario"),
           (col("avg_price") * col("scenario")).as("scaled_price"))
     })

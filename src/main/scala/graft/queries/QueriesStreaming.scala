@@ -113,14 +113,14 @@ object QueriesStreaming extends QueryFamily {
       val ev = Tables.events(s, dir)
       val mx = ev.agg(max(col("ts")).as("m")) // 1-row bound
       val old = col("ts") <= col("m") - expr("INTERVAL 6 HOURS")
-      ev.crossJoin(broadcast(mx))
+      ev.crossJoin(mx)
         .filter(col("event_type") === "error" && old)
         .select(col("user_id").as("k"), col("ts").as("e_ts"),
           col("event_id").as("e_id"))
         .unionByName(mx.select(lit(-1L).as("k"), col("m").as("e_ts"),
           lit(-1L).as("e_id")))
         .write.mode("overwrite").parquet(base + "/left")
-      ev.crossJoin(broadcast(mx))
+      ev.crossJoin(mx)
         .filter(col("event_type") === "purchase" && old)
         .select(col("user_id").as("k"), col("ts").as("p_ts"),
           col("event_id").as("p_id"), col("value").as("p_value"))

@@ -125,12 +125,11 @@ object Parallelize {
     * that width in task scheduling. The round-18 profile of the
     * iterative verbs (q294 HITS: 36 jobs of 32-task stages with ~0 task
     * time; q356 k-core rounds at 64 tasks × ~90 ms fixed cost) was
-    * exactly this; measured same-window A/B, the flip is worth 1.4–2×
-    * on the loop/persist family and byte-neutral elsewhere
-    * (OPTIMIZATION_r18.md). Scale-safe by construction: a 100 TB cached
-    * frame coalesces to advisory-sized (not tiny) partitions, and
-    * compute-heavy-tiny-byte frames keep their explicit
-    * REPARTITION_BY_NUM pins, which AQE never coalesces. */
+    * exactly this (the A/B that motivated the flip was not recorded).
+    * Scale-safe by construction: a 100 TB cached frame coalesces to
+    * advisory-sized (not tiny) partitions, and compute-heavy-tiny-byte
+    * frames keep their explicit REPARTITION_BY_NUM pins, which AQE
+    * never coalesces. */
   def tuneShuffle(spark: SparkSession, dir: String): Int =
     tuneShuffle(spark, dir, ShuffleTargetBytes)
 

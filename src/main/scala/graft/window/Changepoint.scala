@@ -39,20 +39,20 @@ object Changepoint {
     val tot = pre.agg(max(col("__t")).as("__n"),
       sum(col(valCol)).cast("decimal(38,0)").as("__tot"))
     val scored = graft.util.QueryCache.persist(pre
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col(bucketCol), col(valCol), col("cum"),
         // |n·S_t − t·S_n| on the decimal grid; the cast back to BIGINT
         // is ANSI-loud (a 100 TB caller keeps the decimal column)
         abs(col("__n") * col("cum").cast("decimal(38,0)") -
           col("__t") * col("__tot")).cast("long").as("d_stat")))
     val best = scored.agg(max(col("d_stat")).as("__mx"))
-    val flagged = scored.crossJoin(broadcast(best))
+    val flagged = scored.crossJoin(best)
       .withColumn("__isMax", col("d_stat") === col("__mx"))
     // earliest-bucket tie-break without a second global window: the min
     // bucket among max-stat rows is itself a 1-row broadcast
     val firstMax = flagged.filter(col("__isMax"))
       .agg(min(col(bucketCol)).as("__cp"))
-    flagged.crossJoin(broadcast(firstMax))
+    flagged.crossJoin(firstMax)
       .select(col(bucketCol), col(valCol), col("cum"), col("d_stat"),
         (col(bucketCol) === col("__cp")).as("is_changepoint"))
   }
@@ -85,18 +85,18 @@ object Changepoint {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = s.agg(count(lit(1)).as("n"))
     val scored = graft.util.QueryCache.persist(
-      s.join(ranks, "v").crossJoin(broadcast(tot))
+      s.join(ranks, "v").crossJoin(tot)
         .withColumn("__t", count(lit(1)).over(wt))
         .withColumn("__rsum", sum(col("r2")).over(wt))
         .select(col("b"), col("v"),
           abs(col("__t") * (col("n") + 1) - col("__rsum"))
             .as("u_abs")))
     val best = scored.agg(max(col("u_abs")).as("__mx"))
-    val flagged = scored.crossJoin(broadcast(best))
+    val flagged = scored.crossJoin(best)
       .withColumn("__isMax", col("u_abs") === col("__mx"))
     val firstMax = flagged.filter(col("__isMax"))
       .agg(min(col("b")).as("__cp"))
-    flagged.crossJoin(broadcast(firstMax))
+    flagged.crossJoin(firstMax)
       .select(col("b").as(bucketCol), col("v").as(valCol), col("u_abs"),
         (col("b") === col("__cp")).as("is_changepoint"))
   }

@@ -60,7 +60,7 @@ object Pad {
         .map(m => struct(lit(m).as("m"), srcIdx(m).as("i"))): _*)).as("mi"))
       .select(p, col("mi.m").as("__m"), col("mi.i").as("__i"))
     val src = df.select(col(pos).as("__sp"), col(valueCol).as("__sv"))
-    val padRows = src.join(broadcast(melted), col("__sp") === col("__i"))
+    val padRows = src.join(melted, col("__sp") === col("__i"))
       .groupBy(p)
       .agg(
         max(when(col("__m") === "edge", col("__sv"))).as(s"${valueCol}_edge"),

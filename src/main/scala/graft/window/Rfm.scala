@@ -30,7 +30,7 @@ object Rfm {
         coalesce(sum(when(col(typeCol) === purchaseType,
           round(col(valueCol) * 100).cast("long"))), lit(0L)).as("m"))
     val anchor = per.agg(max(col("__last")).as("__anchor"))
-    val rfm = per.crossJoin(broadcast(anchor))
+    val rfm = per.crossJoin(anchor)
       .withColumn("r", expr("(__anchor - __last) div 1000000"))
       .select(col(userCol), col("r"), col("f"), col("m"))
     val qs = rfm.agg(
@@ -47,7 +47,7 @@ object Rfm {
       lit(1) + (col(v) > col(s"${q}1")).cast("int") +
         (col(v) > col(s"${q}2")).cast("int") +
         (col(v) > col(s"${q}3")).cast("int")
-    rfm.crossJoin(broadcast(qs))
+    rfm.crossJoin(qs)
       .withColumn("rs", lit(5) - up("r", "r")) // recent = low r = high score
       .withColumn("fs", up("f", "f"))
       .withColumn("ms", up("m", "m"))

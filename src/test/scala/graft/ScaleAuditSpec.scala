@@ -1,11 +1,20 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+  BroadcastNestedLoopJoinExec, HashJoin}
+
 /** Whole-registry scale audit: every registered query's physical plan is
   * scanned for the two patterns that break at 100 TB — a Window with no
   * PARTITION BY (all rows to one task) and a cartesian/nested-loop join —
   * and must either be clean or be on the explicit whitelist below, where
   * each entry documents why the pattern is bounded (e.g. the input is a
-  * generated grid or an already-aggregated small frame).
+  * generated grid or an already-aggregated small frame). The same loop
+  * takes each query's join census at scale and compares it with the
+  * census checked in under `src/test/resources/join_census.tsv`.
   */
 class ScaleAuditSpec extends SparkSpec {
 
@@ -197,19 +206,22 @@ class ScaleAuditSpec extends SparkSpec {
       "(netcdf fixture summary x custom-engine row count)"),
     "q203_dsir_weights" -> ("broadcast of the 1-row (nt, nr) totals " +
       "aggregate onto the B-bucket λ table (B = 4096 constant)"),
-    "q204_sq8_ann" -> ("explicit broadcasts of the 1-row per-dim min/max " +
-      "codebook and the 5-probe side (the q54 ANN contract)"),
+    "q204_sq8_ann" -> ("explicit broadcast of the 5-probe side (the q54 " +
+      "ANN contract); the 1-row per-dim min/max codebook, a global " +
+      "aggregate, broadcasts by its one-row size estimate"),
     "q214_l2_topk" -> "explicit broadcast of the 5-probe side (q54 contract)",
     "q218_mrl_truncated_ann" ->
       "explicit broadcast of the 5-probe side (q54 contract)",
-    "q215_ivf_sq8" -> ("explicit broadcasts of the 8-centroid table and " +
-      "the 1-row residual codebook; candidate scoring is a cell-key " +
-      "equi-join"),
-    "q242_pq_adc" -> ("explicit broadcasts of the 1-row codebook and the " +
-      "5-probe ADC tables (the q54 ANN contract); the corpus carries " +
-      "only its integer codes"),
-    "q246_ivf_pq" -> ("explicit broadcasts of the 8-centroid table, the " +
-      "1-row residual codebook and the 5-probe ADC tables; candidate " +
+    "q215_ivf_sq8" -> ("explicit broadcast of the 8-centroid table; the " +
+      "1-row residual codebook, a global aggregate, broadcasts by its " +
+      "one-row size estimate; candidate scoring is a cell-key equi-join"),
+    "q242_pq_adc" -> ("explicit broadcast of the 5-probe ADC tables (the " +
+      "q54 ANN contract); the 1-row codebook, a global aggregate, " +
+      "broadcasts by its one-row size estimate; the corpus carries only " +
+      "its integer codes"),
+    "q246_ivf_pq" -> ("explicit broadcasts of the 8-centroid table and " +
+      "the 5-probe ADC tables; the 1-row residual codebook, a global " +
+      "aggregate, broadcasts by its one-row size estimate; candidate " +
       "scoring is a cell-key equi-join over integer codes"),
     "q248_mmr_rerank" -> ("explicit broadcasts of the 3-probe side (the " +
       "q54 candidate stage) and of the 24-row candidate list re-joined " +
@@ -218,8 +230,8 @@ class ScaleAuditSpec extends SparkSpec {
       "explicit broadcast of the 5-probe side (q54 contract)",
     "q255_ccnet_buckets" ->
       "explicit broadcast of the 1-row tertile-threshold aggregate",
-    "q262_cluster_balance" ->
-      "explicit broadcast of the 1-row min-cluster-size aggregate",
+    "q262_cluster_balance" -> ("broadcast of the 1-row min-cluster-size " +
+      "aggregate, by its one-row size estimate (a global aggregate)"),
     "q275_also_bought" ->
       "broadcast of the 1-row basket-count aggregate onto the pair scores",
     "q280_cohens_kappa" -> ("broadcast of the 1-row expected-agreement " +
@@ -316,18 +328,34 @@ class ScaleAuditSpec extends SparkSpec {
       "1-row spread aggregates onto the group frame (one row per " +
       "market segment)"))
 
-  test("no unpartitioned Window or cartesian join outside the whitelist") {
+  /** Per registered query: its executed plan at the shipped configuration
+    * (or `PLAN-ERROR <message>`) and its [[joinCensus]]. Built once, for
+    * both tests below. */
+  private lazy val registry: Seq[(String, String, String)] = {
     val skip = Set("q63_stream_resample", "q99_stream_dedup",
       "q127_stream_join", "q139_stream_sessions") // memory-table results
-    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if !skip.contains(name)) {
-      // scoped as the registry runner scopes it: a query that persists
-      // (q224's load) must not leave a cache behind for later plans
-      val plan =
-        try graft.util.QueryCache.scoped(
-          fn(spark, sf).queryExecution.executedPlan.toString)
-        catch { case e: Throwable => s"PLAN-ERROR ${e.getMessage}" }
+         if !skip.contains(name)) yield {
+      try {
+        // scoped as the registry runner scopes it: a query that persists
+        // (q224's load) must not leave a cache behind for later plans
+        val (df, plan) = graft.util.QueryCache.scoped {
+          val df = fn(spark, sf)
+          (df, df.queryExecution.executedPlan.toString)
+        }
+        // after the scope, so a frame the query persisted is planned
+        // again instead of read as a relation cached at the default size
+        (name, plan, joinCensus(df))
+      } catch {
+        case e: Throwable =>
+          (name, s"PLAN-ERROR ${e.getMessage}", "PLAN-ERROR")
+      }
+    }
+  }
+
+  test("no unpartitioned Window or cartesian join outside the whitelist") {
+    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
+    for ((name, plan, _) <- registry) {
       val globalWin = PlanShapes.unpartitionedWindow(plan)
       val cartesian = plan.contains("CartesianProduct") ||
         plan.contains("BroadcastNestedLoopJoin")
@@ -337,6 +365,62 @@ class ScaleAuditSpec extends SparkSpec {
         bad += s"$name: cartesian/nested-loop join"
     }
     assert(bad.isEmpty, "scale audit failures:\n" + bad.mkString("\n"))
+  }
+
+  // ---- join census at scale ----
+
+  /** `df`'s joins at scale: its logical plan planned again under a 1 KiB
+    * broadcast threshold, and each join of the initial physical plan
+    * (subqueries included) named with its build side and counted, e.g.
+    * `BroadcastHashJoin/BuildRight*2 SortMergeJoin*1`; `-` for none. At
+    * scale every data table exceeds any broadcast threshold, so a side
+    * broadcasts only when it is hinted or when its size estimate is tiny
+    * by construction (a global aggregate, a limit, a local relation). At
+    * the default 10 MB every side of the sf0.001 fixture broadcasts,
+    * hinted or not, so a hint that chooses a join shows only here. A join
+    * that runs while the query is built (a stream's micro-batches, an
+    * eager write) is not in the returned frame, so not in its census. */
+  private def joinCensus(df: DataFrame): String = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val plan = restoring(key) {
+      spark.conf.set(key, "1024")
+      val qe = new QueryExecution(df.queryExecution.sparkSession,
+        df.queryExecution.logical)
+      qe.executedPlan
+    }
+    def joins(p: SparkPlan): Seq[String] = {
+      val here = p match {
+        case j: HashJoin => Seq(s"${j.nodeName}/${j.buildSide}")
+        case j: BroadcastNestedLoopJoinExec => Seq(s"${j.nodeName}/${j.buildSide}")
+        case j: BaseJoinExec => Seq(j.nodeName)
+        case _ => Nil
+      }
+      val inside = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case _ => p.children
+      }
+      here ++ (inside ++ p.subqueries).flatMap(joins)
+    }
+    val counted = joins(plan).groupBy(identity).toSeq.sortBy(_._1)
+    if (counted.isEmpty) "-"
+    else counted.map { case (j, n) => s"$j*${n.size}" }.mkString(" ")
+  }
+
+  test("every query's join census at scale matches the checked-in census") {
+    val want = scala.io.Source.fromResource("join_census.tsv").getLines()
+      .map(_.split("\t", 2)).map(a => a(0) -> a(1)).toMap
+    val got = registry.map { case (name, _, census) => name -> census }.toMap
+    Files.createDirectories(Paths.get("target"))
+    Files.writeString(Paths.get("target/join_census.tsv"),
+      got.toSeq.sorted.map { case (n, c) => s"$n\t$c\n" }.mkString)
+    val diff = (want.keySet ++ got.keySet).toSeq.sorted.flatMap { n =>
+      val (was, now) = (want.get(n), got.get(n))
+      if (was == now) None
+      else Some(s"$n\n  census: ${was.getOrElse("(none)")}\n" +
+        s"  now:    ${now.getOrElse("(none)")}")
+    }
+    assert(diff.isEmpty, s"join census changed for ${diff.size} queries " +
+      "(observed census in target/join_census.tsv):\n" + diff.mkString("\n"))
   }
 
   // ---- partitions-∝-data law (round-17: engine behavior, not docs) ----

@@ -112,6 +112,36 @@ class CodecTableSpec extends SparkSpec {
     assert(e.getMessage.contains("-9223372036854775808"), e.getMessage)
   }
 
+  /** Writes a 4-cell long frame as `v` with `compressor`; returns the
+    * store path and what the write raised. */
+  private def refusedWrite(compressor: (String, Int), zarrFormat: Int) = {
+    val store = s"${scratchDir("zbadcomp")}/s.zarr"
+    val df = spark.range(4).selectExpr("cast(id as double) as x",
+      "cast(id * 1.5 as double) as v")
+    val e = intercept[IllegalArgumentException](Zarr.writeLongDF(df, store, "v",
+      Seq("x"), Seq(Array(0.0, 1.0, 2.0, 3.0)), Seq(2),
+      compressor = Some(compressor), zarrFormat = zarrFormat))
+    (store, e)
+  }
+
+  test("a Zarr write refuses an unknown blosc cname before any metadata") {
+    val (store, e) = refusedWrite(("blosc:foo:1", 5), 2)
+    assert(e.getMessage.contains("unsupported blosc cname 'foo'"), e.getMessage)
+    assert(!Files.exists(Paths.get(store)), "a refused write left files")
+    val arr = scratchDir("zbadarr")
+    val m = ArrayMeta(Seq(4), Seq(2), '<', 'f', 8, Some(("blosc:foo:1", 5)),
+      Double.NaN, ".", Seq("x"), Map())
+    intercept[IllegalArgumentException](
+      Zarr.writeArray(spark, arr, "v", m, Array(1.0, 2.0, 3.0, 4.0)))
+    assert(!Files.exists(Paths.get(arr, "v")), "a refused write left files")
+  }
+
+  test("a v3 blosc shuffle beyond 2 is refused by name, not by index") {
+    val (store, e) = refusedWrite(("blosc:lz4:3", 5), 3)
+    assert(e.getMessage.contains("unsupported blosc shuffle mode 3"), e.getMessage)
+    assert(!Files.exists(Paths.get(store)), "a refused write left files")
+  }
+
   test("only the codec table calls a compression library") {
     def scalaFiles(dir: File): Seq[File] =
       Option(dir.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
